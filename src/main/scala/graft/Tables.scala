@@ -20,9 +20,15 @@ object Tables {
     * (what a metastore would serve), not data or results: the scan
     * itself still reads the parquet files on every run, and a
     * regenerated file changes the listing key, so a stale schema can
-    * never be served. */
-  private val schemaCache = new scala.collection.concurrent.TrieMap[
-    String, (String, org.apache.spark.sql.types.StructType)]
+    * never be served.
+    *
+    * The same entry also holds the bounded driver-side row snapshots
+    * [[collectCached]] takes of a small table (the warehouse manifest's
+    * span index): they are derived from exactly the files the listing
+    * key names, so they share its identity and its invalidation. */
+  private final class Listed(val key: String, val schema: org.apache.spark.sql.types.StructType,
+                             val rows: Map[(Seq[String], Int), Option[IndexedSeq[org.apache.spark.sql.Row]]])
+  private val schemaCache = new scala.collection.concurrent.TrieMap[String, Listed]
 
   /** One level of the path's file listing (driver metadata op). */
   private def listDir(spark: SparkSession, path: String): Seq[org.apache.hadoop.fs.FileStatus] = {
@@ -51,17 +57,51 @@ object Tables {
     * same name+length within mtime granularity could serve a stale
     * schema — all writers here are Spark (new part-UUID filenames per
     * write), so the listing key always moves. */
-  def parquetCached(spark: SparkSession, path: String): DataFrame = {
+  def parquetCached(spark: SparkSession, path: String): DataFrame = cachedRead(spark, path)._2()
+
+  /** The rows of `columns` in the unpartitioned table at `path`,
+    * collected to the driver once per listing key, or None when the
+    * table holds more than `max` rows (the caller then stays on a
+    * distributed plan). One `limit(max + 1)` collect decides both, so
+    * a table past the bound costs one bounded job per listing key, not
+    * a count plus a collect. A memo hit costs the listing and nothing
+    * else (no relation is resolved). Partitioned paths bypass the memo
+    * as in [[parquetCached]] and collect on every call. */
+  def collectCached(spark: SparkSession, path: String, columns: Seq[String],
+                    max: Int): Option[IndexedSeq[org.apache.spark.sql.Row]] = {
+    val (entry, read) = cachedRead(spark, path)
+    def bounded() = {
+      val rows = read().select(columns.map(org.apache.spark.sql.functions.col): _*)
+        .limit(max + 1).collect()
+      if (rows.length > max) None else Some(rows.toIndexedSeq)
+    }
+    entry match {
+      case None => bounded()
+      case Some(e) => e.rows.getOrElse((columns, max), {
+        val r = bounded()
+        // compare-and-set: an entry already replaced under a newer
+        // listing key is left alone
+        schemaCache.replace(path, e, new Listed(e.key, e.schema, e.rows + ((columns, max) -> r)))
+        r
+      })
+    }
+  }
+
+  /** The memo entry for the path's current listing (None for a
+    * partitioned path) and a reader of the table under it; a miss
+    * infers the schema, stores it, and hands back the inferred read. */
+  private def cachedRead(spark: SparkSession, path: String): (Option[Listed], () => DataFrame) = {
     val listing = listDir(spark, path)
     if (listing.exists(s => s.isDirectory && s.getPath.getName.contains("=")))
-      return spark.read.parquet(path)
+      return (None, () => spark.read.parquet(path))
     val key = listingKey(listing)
     schemaCache.get(path) match {
-      case Some((`key`, schema)) => spark.read.schema(schema).parquet(path)
+      case Some(e) if e.key == key => (Some(e), () => spark.read.schema(e.schema).parquet(path))
       case _ =>
         val df = spark.read.parquet(path)
-        schemaCache.put(path, (key, df.schema))
-        df
+        val e = new Listed(key, df.schema, Map.empty)
+        schemaCache.put(path, e)
+        (Some(e), () => df)
     }
   }
 
@@ -79,17 +119,22 @@ object Tables {
   def rowGroupCount(spark: SparkSession, file: String): Int = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(file)
-    val st = p.getFileSystem(conf).getFileStatus(p)
-    val key = s"${st.getLen}:${st.getModificationTime}"
-    rowGroupMemo.get(file) match {
-      case Some((`key`, n)) => n
-      case _ =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        val n = try reader.getRowGroups.size finally reader.close()
-        rowGroupMemo.put(file, (key, n))
-        n
-    }
+    // a file deleted since the caller listed it (a concurrent rewrite)
+    // counts as one row group: the width guess only sizes a spread,
+    // and the scan itself reports the missing file loudly
+    try {
+      val st = p.getFileSystem(conf).getFileStatus(p)
+      val key = s"${st.getLen}:${st.getModificationTime}"
+      rowGroupMemo.get(file) match {
+        case Some((`key`, n)) => n
+        case _ =>
+          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
+          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          val n = try reader.getRowGroups.size finally reader.close()
+          rowGroupMemo.put(file, (key, n))
+          n
+      }
+    } catch { case _: java.io.FileNotFoundException => 1 }
   }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =

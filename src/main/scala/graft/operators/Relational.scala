@@ -60,7 +60,9 @@ object Relational {
     val width =
       if (files.length >= p) files.length
       else files.iterator.map(Tables.rowGroupCount(spark, _)).sum
-    if (width < p) df.repartition(p, key) else df
+    // no input files (an empty table): nothing to spread, and a
+    // repartition would only add an exchange over zero rows
+    if (files.nonEmpty && width < p) df.repartition(p, key) else df
   }
 
   def q1Agg(spark: SparkSession, dir: String): DataFrame =

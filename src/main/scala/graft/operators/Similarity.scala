@@ -1886,12 +1886,13 @@ object Similarity {
     // SparkSession/SQLConf InheritableThreadLocals are guaranteed to
     // flow (the global pool spawns workers lazily from arbitrary
     // parents); setActiveSession makes it explicit. Both legs run
-    // under one job group, and a failed first leg CANCELS the
-    // sibling's jobs and awaits it before rethrowing, so no stray
-    // jobs overlap the next harness entry's timing.
+    // under one job group, and a failed first leg makes a best-effort
+    // cancel of the sibling's jobs and awaits it before rethrowing, so
+    // a sibling the cancel reaches cannot overlap the next harness
+    // entry's timing.
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    import scala.util.{Failure, Success, Try}
+    import scala.util.{Success, Try}
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     val group = s"ann_recall_legs_${System.nanoTime()}"
@@ -1905,6 +1906,7 @@ object Similarity {
       val ivfLeg = spawn("ivf", annIvfProbe(spark, dir), RecallFloorIvf)
       val lshLeg = spawn("lsh", annTopkLsh(spark, dir), RecallFloorLsh)
       val first = Try(Await.result(ivfLeg, Duration.Inf))
+      // best-effort cancel, then await
       if (first.isFailure) spark.sparkContext.cancelJobGroup(group)
       val second = Try(Await.result(lshLeg, Duration.Inf))
       (first, second) match {

@@ -2,8 +2,9 @@ package graft.sinks
 
 import graft.sources.{LayoutSpec, Sdf}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The 100 TB sink: a parquet warehouse with an idempotent,
   * file-granularity ingest manifest.
@@ -56,105 +57,141 @@ object Warehouse {
     else spark.emptyDataFrame
   }
 
+  /** Span-matching files above which the lookup stops pruning the
+    * scan to the matching partition directories: on a healthy
+    * warehouse the per-file [lowest, highest] spans barely overlap
+    * and a pk matches O(1) files, but a pathologically interleaved
+    * ingest history could match the whole manifest — listing millions
+    * of directories and building a million-term predicate would hurt
+    * both driver memory and planning. Past the cap the lookup falls
+    * back to the pushed pk filter alone (row-group stats still skip
+    * most of the corpus); the static partition prune is an
+    * optimization, never a correctness dependency. */
+  val MaxLookupPruneFiles = 10000
+
   /** Point lookup by primary key — the reference's headline query
     * (indexed cid lookup: the SQLite pk + WITH_INDEX role,
     * utils.py:181,334) at warehouse scale. The manifest's per-file
-    * [lowest_cid, highest_cid] spans ARE the index: a driver-side
-    * scan of the manifest (file-count-sized — the same bounded table
-    * the ingest skip-set reads) picks candidate source files, the
-    * isin predicate on the PARTITION column prunes the compounds
-    * scan to those directories statically, and the pushed pk filter
-    * plus parquet row-group stats finish inside them. At 100 TB the
-    * data touched is O(one partition), not O(corpus); plan-pinned
-    * (partition filters present, pk pushed). */
-  /** Span-matching files above which the lookup stops inlining the
-    * prune set as an `isin` literal: on a healthy warehouse the
-    * per-file [lowest, highest] spans barely overlap and a pk
-    * matches O(1) files, but a pathologically interleaved ingest
-    * history could match the whole manifest — collecting millions of
-    * names to build a million-term predicate would hurt both driver
-    * memory and planning. Past the cap the lookup falls back to the
-    * pushed pk filter alone (row-group stats still skip most of the
-    * corpus); the static partition prune is an optimization, never a
-    * correctness dependency. */
-  val MaxLookupPruneFiles = 10000
-
+    * [lowest_cid, highest_cid] spans ARE the index.
+    *
+    * One Spark job per lookup: the spans come from the driver-side
+    * manifest snapshot ([[manifestSpans]] — collected once per
+    * manifest listing key, the same snapshot the ingest skip set
+    * reads), so picking the candidate files is a loop over at most
+    * `ManifestCollectMax` rows, not a job. The scan then reads ONLY
+    * the candidate `src_filename=` directories (`basePath` = the
+    * compounds dir) under a schema derived from `layout` plus
+    * `src_filename: string` — no schema-inference job, no listing of
+    * every partition, and an all-digit filename keeps its lexical
+    * form. The isin predicate on the partition column and the pushed
+    * pk filter (plus parquet row-group stats) finish inside those
+    * directories; at 100 TB the data touched is O(one partition),
+    * not O(corpus). Plan-pinned in LookupSpec and SinksSpec
+    * (partition filters present, pk pushed, one job).
+    *
+    * A candidate whose directory is gone — a retract that crashed
+    * after deleting an emptied partition but before repairing its
+    * manifest row (see [[retract]]) — holds no rows and is dropped
+    * before the read. Past `ManifestCollectMax` manifest rows the
+    * candidates come from a distributed filter over the manifest
+    * instead; past `MaxLookupPruneFiles` candidates the scan covers
+    * the whole table under the pk filter alone. */
   def lookup(spark: SparkSession, warehouseDir: String, cid: Long,
              layout: LayoutSpec = LayoutSpec.default): DataFrame = {
     val pk = layout.columns.find(_.primaryKey).map(_.name)
       .getOrElse(layout.columns.head.name)
-    val files = manifest(spark, warehouseDir)
-      .filter(col("lowest_cid") <= cid && col("highest_cid") >= cid)
-      .select("filename").limit(MaxLookupPruneFiles + 1)
-      .collect().map(_.getString(0)).toSeq
-    val compounds = spark.read.parquet(compoundsDir(warehouseDir))
-    if (files.isEmpty) compounds.filter(lit(false))
-    else if (files.length > MaxLookupPruneFiles) compounds.filter(col(pk) === cid)
-    else compounds.filter(col("src_filename").isin(files: _*) && col(pk) === cid)
+    val files = manifestSpans(spark, warehouseDir) match {
+      case Some(spans) => spans.collect {
+        case r if !r.isNullAt(1) && !r.isNullAt(2) && r.getLong(1) <= cid && r.getLong(2) >= cid =>
+          r.getString(0)
+      }
+      case None => manifest(spark, warehouseDir)
+        .filter(col("lowest_cid") <= cid && col("highest_cid") >= cid)
+        .select("filename").limit(MaxLookupPruneFiles + 1)
+        .collect().map(_.getString(0)).toSeq
+    }
+    if (files.length > MaxLookupPruneFiles)
+      return spark.read.parquet(compoundsDir(warehouseDir)).filter(col(pk) === cid)
+    val dataDir = new Path(compoundsDir(warehouseDir))
+    val fs = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dirs = files.map(f => f -> partitionDir(dataDir, f)).filter { case (_, d) => fs.exists(d) }
+    val schema = StructType(layout.columns.map(c => StructField(c.name, c.sparkType)) :+
+      StructField("src_filename", StringType))
+    if (dirs.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else spark.read.schema(schema).option("basePath", dataDir.toString)
+      .parquet(dirs.map(_._2.toString): _*)
+      .filter(col("src_filename").isin(dirs.map(_._1): _*) && col(pk) === cid)
   }
 
   /** Secondary-index lookup — the reference's OTHER headline query
     * (WITH_INDEX columns like InChIKey, utils.py:334): no manifest
     * span exists for a non-pk key, so the index is a BUCKETED
     * published table ([[publishBucketed]] with `key` = the indexed
-    * column). An equality filter on the bucket column lets Spark's
-    * bucket pruning select ONE bucket's files statically
-    * (SelectedBucketsCount: 1 out of N in the scan), the pushed
-    * filter plus the per-bucket sortBy's row-group stats finish
-    * inside it — at 100 TB the read is corpus/N-buckets, sized by
-    * the bucket count chosen at publish time (thousands at
-    * warehouse scale). Plan-pinned in SinksSpec.
+    * column). An equality filter on the bucket column gives the scan
+    * a bucket set of ONE of the N buckets, and the scan reads only
+    * that bucket's files; the pushed filter plus the per-bucket
+    * sortBy's row-group stats finish inside it — at 100 TB the read
+    * is corpus/N-buckets, sized by the bucket count chosen at publish
+    * time (thousands at warehouse scale).
     *
-    * Spark's autoBucketedScan heuristic only credits bucketing that
-    * AVOIDS A SHUFFLE, so it disables the bucketed scan under a pure
-    * filter — discarding exactly the bucket PRUNING this lookup is
-    * for. The plan is therefore forced (queryExecution.executedPlan
-    * is memoized) under a THREAD-LOCAL conf override
-    * ([[org.apache.spark.sql.graftbridge.ConfBridge]]): planner
-    * rules read `SQLConf.get`, which consults the thread-local
-    * first, so concurrent planning on the same session never
-    * observes the flipped value (ADVICE r13 — the previous
-    * set/restore on the shared session conf was racy and re-wrote
-    * an explicit value even when the conf had been unset). */
+    * The plan is left to Spark's own choice. Under a pure filter the
+    * autoBucketedScan rule turns the bucketed scan off (bucketing
+    * avoids no shuffle here), and on Spark 4.1 the non-bucketed scan
+    * still prunes files by the bucket set: measured on the
+    * 16-bucket serve warehouse, one InChIKey reads the same single
+    * bucket (274.8 rows examined per result) as 1 task, where the
+    * forced bucketed scan planned one task per bucket, 16. Pinned
+    * structurally in LookupSpec and SinksSpec (1 of N bucket-set
+    * bits, exactly that bucket's files read, in 1 task). */
   def lookupIndexed(spark: SparkSession, table: String, key: String,
-                    value: String): DataFrame = {
-    val df = spark.table(table).filter(col(key) === value)
-    org.apache.spark.sql.graftbridge.ConfBridge.withConfOverrides(spark,
-      "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") {
-      df.queryExecution.executedPlan
-    }
-    df
-  }
+                    value: String): DataFrame =
+    spark.table(table).filter(col(key) === value)
 
-  /** Manifest rows above which the skip set is no longer collected
-    * to the driver: beyond it, pending files come from a distributed
-    * anti-join instead (only the PENDING names — bounded by the new
-    * work per run — ever reach the driver). */
+  /** Manifest rows above which neither the skip set nor the span
+    * index is held on the driver: beyond it, pending files come from a
+    * distributed anti-join (only the PENDING names — bounded by the
+    * new work per run — ever reach the driver) and lookup candidates
+    * from a distributed span filter. */
   val ManifestCollectMax = 100000
+
+  /** The manifest's (filename, lowest_cid, highest_cid) rows on the
+    * driver, or None past `ManifestCollectMax` rows. Read once per
+    * manifest listing key and held in the listing-keyed memo of
+    * [[graft.Tables.collectCached]]: every ingest append and every
+    * retract swap writes new part-file names, so the next call after
+    * any manifest write re-reads it and no stale span or skip set is
+    * ever served. Throws if the warehouse has no manifest. */
+  private def manifestSpans(spark: SparkSession, warehouseDir: String): Option[IndexedSeq[Row]] =
+    graft.Tables.collectCached(spark, manifestDir(warehouseDir),
+      Seq("filename", "lowest_cid", "highest_cid"), ManifestCollectMax)
+
+  private def partitionDir(dataDir: Path, filename: String): Path = new Path(dataDir,
+    "src_filename=" + org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(filename))
 
   /** Files under `all` not yet recorded in the manifest. Small
     * manifests (the PubChem scale the reference documents —
-    * thousands of files) use a driver-side Set, one collect, same as
+    * thousands of files) use a driver-side Set over the manifest
+    * snapshot (the same read that serves the lookup's span index), as
     * the reference's `get_sdf_files_not_in_db`. A manifest past
     * `ManifestCollectMax` rows switches to a left-anti join of the
     * listing against the manifest table, so a million-file warehouse
-    * never materializes its full history on the driver. The probe
-    * `limit(max + 1)` makes the choice without a separate count
-    * job. */
+    * never materializes its full history on the driver. The
+    * snapshot's `limit(max + 1)` makes the choice without a separate
+    * count job. */
   private def pendingFiles(spark: SparkSession, warehouseDir: String,
                            all: Seq[String]): Seq[String] = {
-    val m = manifest(spark, warehouseDir)
-    if (!m.columns.contains("filename")) return all.sorted
-    val probe = m.select("filename").limit(ManifestCollectMax + 1)
-      .collect().map(_.getString(0))
-    if (probe.length <= ManifestCollectMax) {
-      val done = probe.toSet
-      all.filterNot(f => done.contains(basename(f))).sorted
-    } else {
-      import spark.implicits._
-      all.map(p => (p, basename(p))).toDF("path", "filename")
-        .join(m.select("filename"), Seq("filename"), "left_anti")
-        .select("path").as[String].collect().toSeq.sorted
+    val path = new Path(manifestDir(warehouseDir))
+    if (!path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path))
+      return all.sorted
+    manifestSpans(spark, warehouseDir) match {
+      case Some(spans) =>
+        val done = spans.map(_.getString(0)).toSet
+        all.filterNot(f => done.contains(basename(f))).sorted
+      case None =>
+        import spark.implicits._
+        all.map(p => (p, basename(p))).toDF("path", "filename")
+          .join(manifest(spark, warehouseDir).select("filename"), Seq("filename"), "left_anti")
+          .select("path").as[String].collect().toSeq.sorted
     }
   }
 
@@ -559,10 +596,7 @@ object Warehouse {
     val staleEmpty = m.filter(col("filename").isin(cand: _*) && col("n_compounds") > 0)
       .select("filename").as[String].collect().toSeq
       .filterNot(hitNames)
-      .filterNot { f =>
-        val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(f)
-        fs.exists(new Path(dataDir, s"src_filename=$esc"))
-      }
+      .filterNot(f => fs.exists(partitionDir(dataDir, f)))
       .map(f => (f, 0L, 0L, Option.empty[Long], Option.empty[Long]))
     val stats = hitStats ++ staleEmpty
     if (stats.isEmpty) return RetractResult(Nil, Nil, 0L)
@@ -610,10 +644,7 @@ object Warehouse {
           .parquet(dataDir.toString)
         fs.delete(stage, true)
       }
-      emptied.foreach { case (f, _, _, _, _) =>
-        val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(f)
-        fs.delete(new Path(dataDir, s"src_filename=$esc"), true)
-      }
+      emptied.foreach { case (f, _, _, _, _) => fs.delete(partitionDir(dataDir, f), true) }
       // manifest repair through the tmp + swap pattern
       val repairs = stats.map { case (f, _, kept, lo, hi) =>
         (f, lo.map(long2Long).orNull, hi.map(long2Long).orNull, long2Long(kept))

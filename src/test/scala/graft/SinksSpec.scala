@@ -219,13 +219,10 @@ class SinksSpec extends AnyFunSuite {
     assert(rows.length == 1 && rows(0).getAs[Long]("cid") == 34517L)
     assert(Warehouse.lookupIndexed(spark, "graft_ik_spec_table", "InChIKey",
       "NOSUCHKEYAAAAA-UHFFFAOYSA-N").isEmpty)
-    // the scale contract: the scan is bucketed and pruned to ONE of
-    // the 4 buckets — corpus/N read, not a corpus scan
-    val plan = hit.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert(plan.contains("Bucketed: true"), s"scan not bucketed:\n$plan")
-    assert(plan.contains("SelectedBucketsCount: 1 out of 4"),
-      s"bucket pruning did not select one bucket:\n$plan")
+    // the scale contract: the scan's bucket set selects ONE of the 4
+    // buckets and reads only that bucket's files, in one task —
+    // corpus/N read, not a corpus scan
+    LookupSpec.assertOneBucketOneTask(spark, hit, s"$wh/bucketed_graft_ik_spec_table", buckets = 4)
   }
 
   test("jdbc sink: Derby round-trip with post-load indexes") {

@@ -93,4 +93,16 @@ class TablesSpec extends AnyFunSuite {
       assert(bad == 0L, s"$d: $bad documents violate n_chars == length(text)")
     }
   }
+
+  test("collectCached reads once per listing key, re-reads after a write; a vanished file has 1 row group") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_collect_cached").toString + "/t"
+    Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(dir)
+    val first = Tables.collectCached(spark, dir, Seq("k"), 10).get
+    assert(first.map(_.getLong(0)).sorted == Seq(1L, 2L))
+    assert(Tables.collectCached(spark, dir, Seq("k"), 10).get eq first, "a memo hit must not re-read")
+    Seq((3L, "c")).toDF("k", "v").write.mode("append").parquet(dir)
+    assert(Tables.collectCached(spark, dir, Seq("k"), 10).get.map(_.getLong(0)).sorted == Seq(1L, 2L, 3L))
+    assert(Tables.collectCached(spark, dir, Seq("k"), 2).isEmpty, "a table past the bound is not held")
+    assert(Tables.rowGroupCount(spark, s"$dir/no-such-file.parquet") == 1)
+  }
 }
