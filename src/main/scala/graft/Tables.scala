@@ -95,10 +95,18 @@ object Tables {
     if (listing.exists(s => s.isDirectory && s.getPath.getName.contains("=")))
       return (None, () => spark.read.parquet(path))
     val key = listingKey(listing)
+    // A root whose own name Spark treats as hidden (the warehouse's
+    // `_manifest`) is read through its listed visible files: read as a
+    // directory, Spark scans it anyway but logs "All paths were
+    // ignored" on every read.
+    val hidden = (n: String) => n.startsWith("_") || n.startsWith(".")
+    val visible = listing.map(_.getPath).filterNot(f => hidden(f.getName))
+    val paths = if (hidden(new org.apache.hadoop.fs.Path(path).getName) && visible.nonEmpty)
+      visible.map(_.toString) else Seq(path)
     schemaCache.get(path) match {
-      case Some(e) if e.key == key => (Some(e), () => spark.read.schema(e.schema).parquet(path))
+      case Some(e) if e.key == key => (Some(e), () => spark.read.schema(e.schema).parquet(paths: _*))
       case _ =>
-        val df = spark.read.parquet(path)
+        val df = spark.read.parquet(paths: _*)
         val e = new Listed(key, df.schema, Map.empty)
         schemaCache.put(path, e)
         (Some(e), () => df)

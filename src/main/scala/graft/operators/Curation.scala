@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.{Exact, GraftQuery, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Corpus-curation operators a training-data pipeline runs AFTER the
   * signals exist: duplicate-cluster resolution (pairs → components →
@@ -14,43 +15,119 @@ object Curation {
 
   // ---- dedup_clusters: pair list → connected components ----
 
-  /** Minimum-label connected components over an (a, b) edge list via
-    * label propagation WITH POINTER JUMPING: every vertex starts
-    * labeled min(self, min neighbor); each round takes the min label
-    * in its neighborhood (propagate) and then shortcuts through its
-    * own label's label (jump: lab(v) := lab(lab(v)) — safe because a
-    * label is always a same-component vertex id, so composing labels
-    * never leaves the component and never raises the min). The jump
-    * is the doubling trick a graph library uses: distance-to-root
-    * halves per round, so convergence needs ~log2(diameter) rounds
-    * instead of diameter — a 200-vertex chain resolves in 8 rounds
-    * where plain propagation needs 199. Fixpoint = per-component min
-    * vertex id, identical to plain propagation (the jump cannot
-    * change the fixpoint, only reach it sooner).
+  /** Edge count at or below which [[connectedComponents]] resolves on
+    * the driver. It covers the largest pair graph measured, the sf100
+    * cluster signal (277,845 edges, BASELINE.md "Clusters decade
+    * row"), with room to spare. Driver memory at the bound: the
+    * collected edges are packed longs, 8 MiB per copy and three
+    * copies while sorting; the distinct vertex ids and union-find
+    * parents at most 12 MiB; the labelled local relation at most
+    * 2^20 rows (a perfect matching) of two boxed longs, about
+    * 110 MiB while its rows convert and 70 MiB held by the plan. Real
+    * dup graphs repeat vertices, so they sit well below that. A
+    * constant, not a conf: the crossover is a property of the two
+    * algorithms (milliseconds of single-threaded union-find against a
+    * loop of ~15 Spark jobs), not of a deployment. */
+  val DriverClosureMaxEdges: Long = 1L << 19
+
+  /** Minimum-label connected components over an (a, b) edge list:
+    * (v, lab) for every vertex of the edge list, lab the minimum
+    * vertex id of v's component. Vertex ids are bigint (every pair
+    * list in the library); vertices without an edge are not emitted,
+    * and a null vertex id fails loudly.
     *
-    * Scale design: the edge list is DUP PAIRS — proportional to the
-    * duplicate volume, orders of magnitude below the corpus — and
-    * each round is two shuffle joins on vertex-cardinality labels
-    * (neighbor min, then the jump's label self-join). The per-round
-    * driver work is ONE observed metric (the convergence test);
-    * labels never collect. `maxIters` caps rounds, and with the
-    * jump's log-convergence the default covers diameters up to
-    * ~2^20 — the cap exists to fail loudly on a logic regression,
-    * not to bound real inputs. */
-  def connectedComponents(edges: DataFrame, maxIters: Int = 20): DataFrame = {
-    // Both edge directions come from a single explode over `edges`,
-    // so the (possibly expensive) upstream pair pipeline is
-    // referenced exactly once per plan; the round-3 union referenced
-    // it from both branches. ONE eager checkpoint materializes the
-    // pipeline up front; every round (and every reference within a
-    // round — seed aggregate, neighbor join, change comparison)
-    // iterates over the checkpointed edges. A lazy-first variant
-    // that only checkpointed when a second round was needed saved
-    // one small job on single-round inputs but re-executed the
-    // WHOLE pair pipeline to materialize sym on multi-round ones —
-    // measured +20 s at sf1, where dup CHAINS (dup-of-dup texts)
-    // make a second round the norm, against ~0.2 s saved at sf0.1.
-    val sym = edges.select(explode(array(
+    * The edge relation is materialized once by an eager
+    * localCheckpoint whose observed row count picks the route, so the
+    * upstream pair pipeline runs exactly once on either route.
+    *
+    * - Driver route, at most [[DriverClosureMaxEdges]] edges: one
+    *   more job collects the edges and a union-find that always links
+    *   to the smaller root resolves them, returned as a local
+    *   relation. Two jobs per call. Dup-pair graphs are proportional to the
+    *   duplicate volume, orders of magnitude below the corpus, and a
+    *   distributed iteration over a graph this size loses to one core
+    *   (McSherry, Isard and Murray, "Scalability! But at what COST?").
+    * - Past the bound, label propagation WITH POINTER JUMPING: every
+    *   vertex starts labeled min(self, min neighbor); each round takes
+    *   the min label in its neighborhood (propagate) and then
+    *   shortcuts through its own label's label (jump: lab(v) :=
+    *   lab(lab(v)) — safe because a label is always a same-component
+    *   vertex id). On a chain whose ids ascend along it,
+    *   distance-to-root halves per round: 200 vertices resolve in 8
+    *   rounds where plain propagation needs 199. The jump only helps
+    *   as far as labels point toward the root, though: a 100-vertex
+    *   chain in shuffled id order does not converge within the
+    *   default 20 rounds. Each round is two shuffle joins on
+    *   vertex-cardinality labels and one observed metric (the
+    *   convergence test); labels never collect. Past `maxIters`
+    *   rounds it fails loudly rather than return a partial fixpoint.
+    *
+    * Both routes reach the same fixpoint, the per-component min vertex
+    * id, with the same schema; CurationSpec pins their equality. */
+  def connectedComponents(edges: DataFrame, maxIters: Int = 20): DataFrame =
+    connectedComponents(edges, maxIters, DriverClosureMaxEdges)
+
+  /** [[connectedComponents]] with the driver route's edge bound as a
+    * parameter, so specs can run both routes on one input. */
+  private[graft] def connectedComponents(edges: DataFrame, maxIters: Int,
+                                         driverMaxEdges: Long): DataFrame = {
+    val obs = org.apache.spark.sql.Observation("graft_cc_edges")
+    val ck = edges.select(col("a"), col("b"))
+      .observe(obs, count(lit(1)).as("n"),
+        count(when(col("a").isNull || col("b").isNull, 1)).as("nulls"))
+      .localCheckpoint(true)
+    val seen = obs.get
+    if (seen("nulls") != 0L)
+      throw new IllegalArgumentException(
+        s"connectedComponents: ${seen("nulls")} edges with a null vertex id")
+    require(ck.schema.forall(_.dataType == LongType),
+      s"connectedComponents takes bigint vertex ids, got ${ck.schema.simpleString}")
+    if (seen("n").asInstanceOf[Long] <= driverMaxEdges) closeOnDriver(ck)
+    else propagate(ck, maxIters)
+  }
+
+  /** Union-find over the checkpointed bigint edges: vertex ids are
+    * sorted, so linking the larger root index under the smaller one
+    * leaves every component rooted at its minimum id. */
+  private def closeOnDriver(ck: DataFrame): DataFrame = {
+    val ends = ck.queryExecution.toRdd.mapPartitions { rows =>
+      val out = new scala.collection.mutable.ArrayBuilder.ofLong
+      rows.foreach { r => out += r.getLong(0); out += r.getLong(1) }
+      Iterator.single(out.result())
+    }.collect().flatten
+    val sorted = ends.clone()
+    java.util.Arrays.sort(sorted)
+    var n = 0
+    for (x <- sorted if n == 0 || x != sorted(n - 1)) { sorted(n) = x; n += 1 }
+    val ids = java.util.Arrays.copyOf(sorted, n)
+    val parent = Array.range(0, n)
+    def find(v: Int): Int = {
+      var x = v
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    var e = 0
+    while (e < ends.length) {
+      val ra = find(java.util.Arrays.binarySearch(ids, ends(e)))
+      val rb = find(java.util.Arrays.binarySearch(ids, ends(e + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      e += 2
+    }
+    val labels = new java.util.ArrayList[Row](n)
+    for (i <- 0 until n) labels.add(Row(ids(i), ids(find(i))))
+    val nullable = ck.schema.exists(_.nullable)
+    ck.sparkSession.createDataFrame(labels, StructType(Seq(
+      StructField("v", LongType, nullable), StructField("lab", LongType, nullable))))
+  }
+
+  /** The distributed route of [[connectedComponents]]: pointer-jumping
+    * label propagation over the checkpointed edges. */
+  private def propagate(ck: DataFrame, maxIters: Int): DataFrame = {
+    // Both edge directions come from a single explode over the
+    // checkpointed edges, checkpointed in turn: every round (and
+    // every reference within a round — seed aggregate, neighbor join,
+    // change comparison) iterates over the materialized sym.
+    val sym = ck.select(explode(array(
         struct(col("a"), col("b")),
         struct(col("b").as("a"), col("a").as("b")))).as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))

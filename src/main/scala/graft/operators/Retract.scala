@@ -236,10 +236,10 @@ object Retract {
 
   /** The cluster-repair decomposition shared by [[repairedState]]
     * and the `retract_clusters` entry. `touchedEdges` is the
-    * PRE-checkpoint edge relation handed to connectedComponents —
-    * the auditable lineage proving the closure's input is bounded by
-    * the staged pair graph (connectedComponents eagerly
-    * localCheckpoints, so the final plan cannot show it). */
+    * edge relation handed to connectedComponents — the auditable
+    * lineage proving the closure's input is bounded by the staged
+    * pair graph (connectedComponents returns a local relation or a
+    * checkpoint, so the final plan cannot show it). */
   private[graft] final case class RelabelParts(
       touchedRoots: DataFrame, members: DataFrame, newLabels: DataFrame,
       touchedEdges: DataFrame)

@@ -696,7 +696,14 @@ object Warehouse {
   def publishBucketed(spark: SparkSession, warehouseDir: String, table: String,
                       buckets: Int = 16, key: String = "cid"): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS $table")
+    // Repartitioned by the bucket key first: Spark's bucket id and
+    // hash partitioning are the same Murmur3 pmod, so each write task
+    // holds exactly one bucket and writes it as one file. A bucketed
+    // write writes a file per bucket per task, so without the shuffle
+    // a bucket is split over as many files as the input has
+    // partitions, and a key lookup opens all of them.
     compounds(spark, warehouseDir)
+      .repartition(buckets, col(key))
       .write.mode("overwrite")
       .bucketBy(buckets, key).sortBy(key)
       .option("path", s"$warehouseDir/bucketed_$table")

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
 class CurationSpec extends AnyFunSuite {
@@ -25,12 +28,114 @@ class CurationSpec extends AnyFunSuite {
     // plain min-label propagation needs diameter-1 = 199 rounds — far
     // past the default cap of 20; the jump (lab(v) := lab(lab(v)))
     // halves distance-to-root per round, so ~log2(200) rounds
-    // suffice. This pins the doubling behavior, not just the answer.
+    // suffice. This pins the doubling behavior, not just the answer,
+    // so the chain is forced onto the distributed loop (bound -1).
     val chain = (0L until 199L).map(i => (i, i + 1)).toDF("a", "b")
-    val labels = Curation.connectedComponents(chain)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val out = Curation.connectedComponents(chain, 20, -1L)
+    assert(!onDriver(out))
+    val labels = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.size == 200)
     assert(labels.values.forall(_ == 0L), "chain must resolve to the single min root")
+  }
+
+  /** Whether a components frame came from the driver route (a local
+    * relation) rather than the loop (a checkpoint). */
+  private def onDriver(labels: DataFrame): Boolean = labels.queryExecution.logical
+    .collectFirst { case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l }.nonEmpty
+
+  private def edgeFrame(edges: Seq[(Long, Long)], nullable: Boolean): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(edges.map { case (a, b) => Row(a, b) }.asJava, StructType(Seq(
+      StructField("a", LongType, nullable), StructField("b", LongType, nullable))))
+  }
+
+  private def labelSet(df: DataFrame): Set[(Long, Long)] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+
+  /** Edge lists of disjoint components (chains up to 200, stars,
+    * cliques, self-loops, random graphs) under shuffled ids, some
+    * negative, with duplicated and reversed edges mixed in; zero
+    * components is the empty list. A chain's ids ascend or descend
+    * along it: on a long chain in shuffled id order the loop does not
+    * converge within its 20-round cap, and the loop is the reference
+    * here (the driver route's answer on such a chain is pinned by its
+    * own test below). */
+  private val edgeLists: Gen[(Seq[(Long, Long)], Boolean)] = {
+    // (edges over local vertex ids, whether ids follow vertex order)
+    val shape: Gen[(Seq[(Int, Int)], Boolean)] = Gen.oneOf(
+      Gen.chooseNum(1, 200).map(n => ((0 until n).map(i => (i, i + 1)), true)),
+      Gen.chooseNum(1, 30).map(n => ((1 to n).map(i => (0, i)), false)),
+      Gen.chooseNum(2, 8).map(n => (for (i <- 0 until n; j <- i + 1 until n) yield (i, j), false)),
+      Gen.const((Seq((0, 0)), false)),
+      Gen.chooseNum(2, 40).flatMap(n =>
+        Gen.listOfN(n, Gen.zip(Gen.chooseNum(0, n), Gen.chooseNum(0, n))).map(e => (e, false))))
+    for {
+      comps <- Gen.chooseNum(0, 4).flatMap(Gen.listOfN(_, shape))
+      seed <- Gen.long
+      nullable <- Gen.oneOf(true, false)
+    } yield {
+      val rnd = new scala.util.Random(seed)
+      val pool = rnd.shuffle((-1000L to 1000L).toVector)
+      var used = 0
+      val edges = comps.flatMap { case (c, ordered) =>
+        val local = c.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+        val drawn = pool.slice(used, used + local.size)
+        val ids = if (!ordered) drawn
+          else if (rnd.nextBoolean()) drawn.sorted else drawn.sorted.reverse
+        used += local.size
+        val id = local.zip(ids).toMap
+        c.map { case (x, y) => (id(x), id(y)) }
+      }
+      val extra = edges.filter(_ => rnd.nextInt(4) == 0)
+        .map(e => if (rnd.nextBoolean()) e else e.swap)
+      (rnd.shuffle(edges ++ extra), nullable)
+    }
+  }
+
+  test("the driver route equals the distributed loop on generated edge lists") {
+    PropertySpec.forAllSampled(edgeLists, trials = 24) { case (edges, nullable) =>
+      val df = edgeFrame(edges, nullable)
+      val driver = Curation.connectedComponents(df)
+      val loop = Curation.connectedComponents(df, 20, -1L)
+      assert(onDriver(driver) && !onDriver(loop))
+      assert(driver.schema == loop.schema)
+      assert(labelSet(driver) == labelSet(loop), s"edges $edges")
+    }
+    val empty = edgeFrame(Nil, nullable = true)
+    assert(Curation.connectedComponents(empty).collect().isEmpty)
+    assert(Curation.connectedComponents(empty, 20, -1L).collect().isEmpty)
+  }
+
+  test("the driver bound: exactly bound edges on the driver, one more on the loop") {
+    val bound = 40
+    val chain = (0L to bound.toLong).map(i => (i * 3 + 7, i * 3 + 10))
+    val atBound = Curation.connectedComponents(edgeFrame(chain.take(bound), false), 20, bound)
+    val past = Curation.connectedComponents(edgeFrame(chain, false), 20, bound)
+    assert(onDriver(atBound) && !onDriver(past))
+    assert(labelSet(atBound) == chain.take(bound).flatMap(e => Seq(e._1, e._2)).map(_ -> 7L).toSet)
+    assert(labelSet(past) == chain.flatMap(e => Seq(e._1, e._2)).map(_ -> 7L).toSet)
+    // a null vertex id fails loudly on either route
+    val withNull = spark.createDataFrame(java.util.List.of(Row(1L, 2L), Row(2L, null)),
+      StructType(Seq(StructField("a", LongType), StructField("b", LongType))))
+    Seq(bound.toLong, -1L).foreach { b =>
+      intercept[IllegalArgumentException](Curation.connectedComponents(withNull, 20, b))
+    }
+  }
+
+  test("the driver route resolves a 200-vertex chain in shuffled id order") {
+    val rnd = new scala.util.Random(7)
+    val ids = rnd.shuffle((1L to 200L).toVector)
+    val chain = ids.zip(ids.tail)
+    val out = Curation.connectedComponents(edgeFrame(chain, nullable = false))
+    assert(onDriver(out))
+    assert(labelSet(out) == ids.map(_ -> 1L).toSet)
+  }
+
+  test("dedup_clusters resolves its components on the driver in at most 2 jobs") {
+    Curation.dedupClusters(spark, dir) // stages the pair signal and its schema memo
+    val (labels, jobs) = LookupSpec.jobsOf(spark)(Curation.dedupClusters(spark, dir))
+    assert(jobs <= 2, s"$jobs jobs to resolve components")
+    assert(onDriver(labels))
   }
 
   test("dedup_clusters: every near-dup pair lands in one cluster rooted at its min doc") {

@@ -50,8 +50,8 @@ class LookupSpec extends AnyFunSuite {
     // the route: one job for a hit (the snapshot is warm), none for a
     // cid no span covers; the scan reads only the spanning partition
     // and keeps both the partition filter and the pushed pk filter
-    assert(jobsOf(Warehouse.lookup(spark, wh, 301L).collect())._2 == 1)
-    assert(jobsOf(Warehouse.lookup(spark, wh, 5000L).collect())._2 == 0)
+    assert(LookupSpec.jobsOf(spark)(Warehouse.lookup(spark, wh, 301L).collect())._2 == 1)
+    assert(LookupSpec.jobsOf(spark)(Warehouse.lookup(spark, wh, 5000L).collect())._2 == 0)
     val df = Warehouse.lookup(spark, wh, 300L)
     assert(df.inputFiles.nonEmpty &&
       df.inputFiles.forall(_.contains("/src_filename=Compound_00001.sdf/")), df.inputFiles.toSeq)
@@ -129,20 +129,46 @@ class LookupSpec extends AnyFunSuite {
     assert(rows.length == 1 && rows(0).getAs[String]("src_filename") == "00123")
   }
 
+  test("manifest reads after an ingest log no hidden-path WARN") {
+    val (_, glob, wh) = corpus()
+    Warehouse.ingest(spark, glob, wh)
+    val ds = "org.apache.spark.sql.execution.datasources.DataSource"
+    val reads = LookupSpec.logged(ds) {
+      Warehouse.manifest(spark, wh).collect()
+      Warehouse.lookup(spark, wh, 300L).collect()
+      Warehouse.ingest(spark, glob, wh) // the no-op re-ingest reads the skip set
+    }
+    assert(!reads.exists(_.contains("All paths were ignored")), reads)
+    // the capture is live: a bare read of the directory still logs it
+    val bare = LookupSpec.logged(ds)(spark.read.parquet(Warehouse.manifestDir(wh)).collect())
+    assert(bare.exists(_.contains("All paths were ignored")), bare)
+  }
+
   test("InChIKey lookup: one of N buckets, exactly that bucket's files, one task") {
     val (_, glob, wh) = corpus()
     Warehouse.ingest(spark, glob, wh)
     Warehouse.publishBucketed(spark, wh, "graft_lookup_spec_ik", buckets = 4, key = "InChIKey")
     val key = Warehouse.compounds(spark, wh).filter("cid = 300").select("InChIKey").head().getString(0)
+    // one file per bucket: the publish shuffles by the bucket key, so
+    // no bucket is split over the input's partitions
+    val tableDir = new Path(s"$wh/bucketed_graft_lookup_spec_ik")
+    val perBucket = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(tableDir).map(_.getPath.getName).filter(_.endsWith(".parquet"))
+      .groupBy(BucketingUtils.getBucketId).view.mapValues(_.length).toMap
+    assert(perBucket == (0 until 4).map(b => Some(b) -> 1).toMap, perBucket)
     val hit = Warehouse.lookupIndexed(spark, "graft_lookup_spec_ik", "InChIKey", key)
-    LookupSpec.assertOneBucketOneTask(spark, hit, s"$wh/bucketed_graft_lookup_spec_ik", buckets = 4)
+    LookupSpec.assertOneBucketOneTask(spark, hit, tableDir.toString, buckets = 4)
     assert(cids(hit) == Seq(300L))
     assert(Warehouse.lookupIndexed(spark, "graft_lookup_spec_ik", "InChIKey",
       "NOSUCHKEYAAAAA-UHFFFAOYSA-N").collect().isEmpty)
   }
+}
+
+object LookupSpec {
+  import org.scalatest.Assertions._
 
   /** (result, jobs started while computing it). */
-  private def jobsOf[A](f: => A): (A, Int) = {
+  def jobsOf[A](spark: org.apache.spark.sql.SparkSession)(f: => A): (A, Int) = {
     val sc = spark.sparkContext
     val n = new java.util.concurrent.atomic.AtomicInteger
     val l = new SparkListener {
@@ -156,10 +182,23 @@ class LookupSpec extends AnyFunSuite {
       (r, n.get)
     } finally sc.removeSparkListener(l)
   }
-}
 
-object LookupSpec {
-  import org.scalatest.Assertions._
+  /** The messages `logger` emitted while `f` ran. */
+  def logged(logger: String)(f: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    val target = org.apache.logging.log4j.LogManager.getLogger(logger).asInstanceOf[Logger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "graft-spec-capture", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    target.addAppender(capture)
+    try f finally { target.removeAppender(capture); capture.stop() }
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
 
   /** The secondary-index scale contract, pinned on the physical scan
     * rather than on explain strings: the bucket set of `df`'s file scan

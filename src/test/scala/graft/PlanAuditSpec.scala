@@ -661,18 +661,19 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("retract_clusters: label propagation sees pair-graph relations only (no text, no corpus scan)") {
-    // Final-plan half: connectedComponents eagerly localCheckpoints
-    // its edge relation (lineage truncates to Scan ExistingRDD), so
-    // the staged inputs are audited on the PRE-checkpoint edge plan
-    // below; here we pin only what survives the checkpoint — the
-    // full-label scan and the absence of any text-bearing read.
+    // Final-plan half: connectedComponents returns its labels as a
+    // local relation (or, past the driver bound, a checkpoint), so
+    // the lineage of its edges is gone from the final plan and the
+    // staged inputs are audited on the edge plan below; here we pin
+    // only what survives — the full-label scan and the absence of
+    // any text-bearing read.
     val plan = formatted(operators.Retract.retractClusters(spark, dir))
     assert(!plan.contains("ReadSchema: struct<doc_id:bigint,text"),
       s"retract_clusters reads document text:\n$plan")
     assert(plan.contains("cluster_labels_full"),
       s"expected the staged full labels as an input:\n$plan")
 
-    // Pre-checkpoint half: the edge relation handed to the closure
+    // Edge half: the edge relation handed to the closure
     // must derive from the staged pair list + full labels + a
     // doc_id-pruned documents scan — never document text. This is
     // the pair-graph-only property at the lineage point where it is

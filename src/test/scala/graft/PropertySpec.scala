@@ -11,19 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * scalatestplus bridge is not in the offline cache, so scalacheck
   * generators are sampled directly with a fixed seed. */
 class PropertySpec extends AnyFunSuite {
-
-  private def forAllSampled[A](gen: Gen[A], trials: Int = 100)(f: A => Unit): Unit = {
-    val params = Gen.Parameters.default
-    var seed = org.scalacheck.rng.Seed(42L)
-    var done = 0
-    var attempts = 0
-    while (done < trials && attempts < trials * 20) {
-      gen.apply(params, seed).foreach { a => f(a); done += 1 }
-      seed = seed.next
-      attempts += 1
-    }
-    assert(done == trials, s"generator too restrictive: $done/$trials")
-  }
+  import PropertySpec.forAllSampled
 
   test("stub codec round-trips any payload and dimensions") {
     val gen = for {
@@ -129,4 +117,22 @@ class TestGroupState[S] extends org.apache.spark.sql.streaming.GroupState[S] {
   override def setTimeoutTimestamp(timestamp: java.sql.Date): Unit = ()
   override def getCurrentWatermarkMs(): Long = 0L
   override def getCurrentProcessingTimeMs(): Long = 0L
+}
+
+object PropertySpec {
+  import org.scalatest.Assertions._
+
+  /** Runs `f` on `trials` values drawn from `gen` under a fixed seed. */
+  def forAllSampled[A](gen: Gen[A], trials: Int = 100)(f: A => Unit): Unit = {
+    val params = Gen.Parameters.default
+    var seed = org.scalacheck.rng.Seed(42L)
+    var done = 0
+    var attempts = 0
+    while (done < trials && attempts < trials * 20) {
+      gen.apply(params, seed).foreach { a => f(a); done += 1 }
+      seed = seed.next
+      attempts += 1
+    }
+    assert(done == trials, s"generator too restrictive: $done/$trials")
+  }
 }
