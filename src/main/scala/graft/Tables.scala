@@ -10,26 +10,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Catalyst pushes filters/projections down to the file source.
   */
 object Tables {
-  /** Inferred-schema memo, keyed by the file listing (name:len:mtime
-    * per file — the same identity [[fingerprint]] hashes). Spark runs
-    * a one-task JOB per `spark.read.parquet` to read footers for
-    * schema inference; at bench scale that job plus its scheduling
-    * gap (~25 ms) is re-paid on EVERY entry invocation for EVERY
-    * table it touches — measured 10 such jobs inside one
-    * warehouse_sql run (r20 profile). The schema is table METADATA
-    * (what a metastore would serve), not data or results: the scan
-    * itself still reads the parquet files on every run, and a
-    * regenerated file changes the listing key, so a stale schema can
-    * never be served.
-    *
-    * The same entry also holds the bounded driver-side row snapshots
-    * [[collectCached]] takes of a small table (the warehouse manifest's
-    * span index): they are derived from exactly the files the listing
-    * key names, so they share its identity and its invalidation. */
-  private final class Listed(val key: String, val schema: org.apache.spark.sql.types.StructType,
-                             val rows: Map[(Seq[String], Int), Option[IndexedSeq[org.apache.spark.sql.Row]]])
-  private val schemaCache = new scala.collection.concurrent.TrieMap[String, Listed]
-
   /** One level of the path's file listing (driver metadata op). */
   private def listDir(spark: SparkSession, path: String): Seq[org.apache.hadoop.fs.FileStatus] = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -39,62 +19,70 @@ object Tables {
     else stats.toSeq
   }
 
-  /** Cheap listing key for one table path (driver metadata op). */
+  /** The listing's identity (name:len:mtime per file): the version key
+    * of everything derived from the table's files, here and in
+    * [[fingerprint]]. */
   private def listingKey(listing: Seq[org.apache.hadoop.fs.FileStatus]): String =
     listing.map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
       .sorted.mkString("|")
 
-  /** `spark.read.parquet(path)` with the schema memo above. For
-    * UNPARTITIONED paths only — a partitioned table's inferred schema
-    * carries partition-column type inference that must stay live.
-    * That contract is enforced at runtime, not just by this comment
-    * (ADVICE r20): a listing containing `key=value` subdirectories
-    * bypasses the memo entirely, so a future call site on a
-    * partitioned dir gets live inference instead of a silently pinned
-    * partition-column type (directory entries also carry len 0 and
-    * unreliable mtimes, which would poison the key). Known residual
-    * accepted: a NON-Spark writer replacing a file in-place with the
-    * same name+length within mtime granularity could serve a stale
-    * schema — all writers here are Spark (new part-UUID filenames per
-    * write), so the listing key always moves. */
-  def parquetCached(spark: SparkSession, path: String): DataFrame = cachedRead(spark, path)._2()
+  /** A listing with `key=value` subdirectories: a partitioned table. */
+  private def partitioned(listing: Seq[org.apache.hadoop.fs.FileStatus]): Boolean =
+    listing.exists(s => s.isDirectory && s.getPath.getName.contains("="))
+
+  /** `spark.read.parquet(path)` with the inferred schema held in
+    * [[StateCache]] under the path's listing key. Spark runs a
+    * one-task JOB per `spark.read.parquet` to read footers for schema
+    * inference; at bench scale that job plus its scheduling gap
+    * (~25 ms) is re-paid on EVERY entry invocation for EVERY table it
+    * touches — measured 10 such jobs inside one warehouse_sql run
+    * (r20 profile). The schema is table METADATA (what a metastore
+    * would serve), not data or results: the scan itself still reads
+    * the parquet files on every run, and a regenerated file changes
+    * the listing key, so a stale schema can never be served.
+    *
+    * For UNPARTITIONED paths only — a partitioned table's inferred
+    * schema carries partition-column type inference that must stay
+    * live. That contract is enforced at runtime, not just by this
+    * comment (ADVICE r20): a listing containing `key=value`
+    * subdirectories bypasses the cache entirely, so a future call
+    * site on a partitioned dir gets live inference instead of a
+    * silently pinned partition-column type (directory entries also
+    * carry len 0 and unreliable mtimes, which would poison the key).
+    * Known residual accepted: a NON-Spark writer replacing a file
+    * in-place with the same name+length within mtime granularity
+    * could serve a stale schema — all writers here are Spark (new
+    * part-UUID filenames per write), so the listing key always
+    * moves. */
+  def parquetCached(spark: SparkSession, path: String): DataFrame =
+    listedRead(spark, path, listDir(spark, path))
 
   /** The rows of `columns` in the unpartitioned table at `path`,
     * collected to the driver once per listing key, or None when the
     * table holds more than `max` rows (the caller then stays on a
     * distributed plan). One `limit(max + 1)` collect decides both, so
     * a table past the bound costs one bounded job per listing key, not
-    * a count plus a collect. A memo hit costs the listing and nothing
-    * else (no relation is resolved). Partitioned paths bypass the memo
+    * a count plus a collect. A cache hit costs the listing and nothing
+    * else (no relation is resolved). Partitioned paths bypass the cache
     * as in [[parquetCached]] and collect on every call. */
   def collectCached(spark: SparkSession, path: String, columns: Seq[String],
                     max: Int): Option[IndexedSeq[org.apache.spark.sql.Row]] = {
-    val (entry, read) = cachedRead(spark, path)
+    val listing = listDir(spark, path)
     def bounded() = {
-      val rows = read().select(columns.map(org.apache.spark.sql.functions.col): _*)
+      val rows = listedRead(spark, path, listing)
+        .select(columns.map(org.apache.spark.sql.functions.col): _*)
         .limit(max + 1).collect()
       if (rows.length > max) None else Some(rows.toIndexedSeq)
     }
-    entry match {
-      case None => bounded()
-      case Some(e) => e.rows.getOrElse((columns, max), {
-        val r = bounded()
-        // compare-and-set: an entry already replaced under a newer
-        // listing key is left alone
-        schemaCache.replace(path, e, new Listed(e.key, e.schema, e.rows + ((columns, max) -> r)))
-        r
-      })
-    }
+    if (partitioned(listing)) bounded()
+    else StateCache(("Tables.rows", path, columns, max), listingKey(listing))(bounded())
   }
 
-  /** The memo entry for the path's current listing (None for a
-    * partitioned path) and a reader of the table under it; a miss
-    * infers the schema, stores it, and hands back the inferred read. */
-  private def cachedRead(spark: SparkSession, path: String): (Option[Listed], () => DataFrame) = {
-    val listing = listDir(spark, path)
-    if (listing.exists(s => s.isDirectory && s.getPath.getName.contains("=")))
-      return (None, () => spark.read.parquet(path))
-    val key = listingKey(listing)
+  /** A reader of the table at `path` under `listing`; a schema miss
+    * hands back the inferring read itself. */
+  private def listedRead(spark: SparkSession, path: String,
+                         listing: Seq[org.apache.hadoop.fs.FileStatus]): DataFrame = {
+    if (partitioned(listing)) return spark.read.parquet(path)
     // A root whose own name Spark treats as hidden (the warehouse's
     // `_manifest`) is read through its listed visible files: read as a
     // directory, Spark scans it anyway but logs "All paths were
@@ -103,27 +91,25 @@ object Tables {
     val visible = listing.map(_.getPath).filterNot(f => hidden(f.getName))
     val paths = if (hidden(new org.apache.hadoop.fs.Path(path).getName) && visible.nonEmpty)
       visible.map(_.toString) else Seq(path)
-    schemaCache.get(path) match {
-      case Some(e) if e.key == key => (Some(e), () => spark.read.schema(e.schema).parquet(paths: _*))
-      case _ =>
-        val df = spark.read.parquet(paths: _*)
-        val e = new Listed(key, df.schema, Map.empty)
-        schemaCache.put(path, e)
-        (Some(e), () => df)
+    var inferred: Option[DataFrame] = None
+    val schema = StateCache(("Tables.schema", path), listingKey(listing)) {
+      val df = spark.read.parquet(paths: _*)
+      inferred = Some(df)
+      df.schema
     }
+    inferred.getOrElse(spark.read.schema(schema).parquet(paths: _*))
   }
 
   /** Row-group count of one parquet file — parquet's REAL scan
     * concurrency unit (a byte-ranged split over a row group it does
     * not start cannot produce rows). Footer-only read on the driver,
-    * memoized on len:mtime so repeat bench invocations pay a single
-    * `getFileStatus` (the same class of metadata op every scan's
-    * file listing already does). Used by the scale-adaptive spreads
-    * to decide whether a scan can occupy the machine; call sites
-    * bound the number of files they probe by `defaultParallelism`,
-    * so at warehouse scale (file count >= cores) no footer is ever
-    * read. */
-  private val rowGroupMemo = new scala.collection.concurrent.TrieMap[String, (String, Int)]
+    * held in [[StateCache]] under len:mtime so repeat bench
+    * invocations pay a single `getFileStatus` (the same class of
+    * metadata op every scan's file listing already does). Used by the
+    * scale-adaptive spreads to decide whether a scan can occupy the
+    * machine; call sites bound the number of files they probe by
+    * `defaultParallelism`, so at warehouse scale (file count >= cores)
+    * no footer is ever read. */
   def rowGroupCount(spark: SparkSession, file: String): Int = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(file)
@@ -132,15 +118,10 @@ object Tables {
     // and the scan itself reports the missing file loudly
     try {
       val st = p.getFileSystem(conf).getFileStatus(p)
-      val key = s"${st.getLen}:${st.getModificationTime}"
-      rowGroupMemo.get(file) match {
-        case Some((`key`, n)) => n
-        case _ =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          val n = try reader.getRowGroups.size finally reader.close()
-          rowGroupMemo.put(file, (key, n))
-          n
+      StateCache(("Tables.rowGroups", file), s"${st.getLen}:${st.getModificationTime}") {
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try reader.getRowGroups.size finally reader.close()
       }
     } catch { case _: java.io.FileNotFoundException => 1 }
   }
@@ -221,16 +202,8 @@ object Tables {
     * state. Full SHA-256, not hashCode — a 32-bit collision would
     * silently serve stale persisted state for a changed corpus, and
     * persisted artifacts can outlive the JVM that built them. */
-  def fingerprint(spark: SparkSession, dir: String, name: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stats = fs.globStatus(new org.apache.hadoop.fs.Path(p, "*"))
-    val listing =
-      if (stats == null || stats.isEmpty) Seq(fs.getFileStatus(p))
-      else stats.toSeq
-    val s = listing.map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString("|")
+  def fingerprint(spark: SparkSession, dir: String, name: String): String =
     java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
+      .digest(listingKey(listDir(spark, s"$dir/$name.parquet")).getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
 }

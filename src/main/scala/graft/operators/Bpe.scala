@@ -93,8 +93,6 @@ object Bpe {
   val BpeMergesStagePath: String =
     graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "bpe_merges.parquet"
 
-  private val stagedMerges = new graft.StagedVersion[(String, String)]
-
   /** Learn ≤ `maxMerges` merges from weighted word counts — the
     * classic BPE loop: count adjacent symbol pairs (weighted by word
     * frequency; overlapping positions each count, the standard
@@ -150,7 +148,7 @@ object Bpe {
     * sort), collapsed to word counts before collecting (vocabulary-
     * bounded, ≪ sample text volume). */
   def bpeMergesTable(spark: SparkSession, dir: String): DataFrame = {
-    stagedMerges((dir, Tables.fingerprint(spark, dir, "documents"))) {
+    graft.StateCache.stage("Bpe.merges", (dir, Tables.fingerprint(spark, dir, "documents"))) {
       val docs = Tables.documents(spark, dir)
       val wordCounts = docs
         .select(col("doc_id"), cleanedCol(col("text")).as("c"))

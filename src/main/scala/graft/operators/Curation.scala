@@ -30,6 +30,12 @@ object Curation {
     * loop of ~15 Spark jobs), not of a deployment. */
   val DriverClosureMaxEdges: Long = 1L << 19
 
+  /** Round cap of the distributed route past [[DriverClosureMaxEdges]]:
+    * with pointer jumping it covers ascending-id chains to ~2^20
+    * vertices (see [[connectedComponents]] for the chains it does not
+    * cover). */
+  private val PropagateMaxRounds: Int = 20
+
   /** Minimum-label connected components over an (a, b) edge list:
     * (v, lab) for every vertex of the edge list, lab the minimum
     * vertex id of v's component. Vertex ids are bigint (every pair
@@ -56,21 +62,21 @@ object Curation {
     *   distance-to-root halves per round: 200 vertices resolve in 8
     *   rounds where plain propagation needs 199. The jump only helps
     *   as far as labels point toward the root, though: a 100-vertex
-    *   chain in shuffled id order does not converge within the
-    *   default 20 rounds. Each round is two shuffle joins on
+    *   chain in shuffled id order does not converge within the 20
+    *   rounds. Each round is two shuffle joins on
     *   vertex-cardinality labels and one observed metric (the
-    *   convergence test); labels never collect. Past `maxIters`
-    *   rounds it fails loudly rather than return a partial fixpoint.
+    *   convergence test); labels never collect. Past
+    *   [[PropagateMaxRounds]] rounds it fails loudly rather than
+    *   return a partial fixpoint.
     *
     * Both routes reach the same fixpoint, the per-component min vertex
     * id, with the same schema; CurationSpec pins their equality. */
-  def connectedComponents(edges: DataFrame, maxIters: Int = 20): DataFrame =
-    connectedComponents(edges, maxIters, DriverClosureMaxEdges)
+  def connectedComponents(edges: DataFrame): DataFrame =
+    connectedComponents(edges, DriverClosureMaxEdges)
 
   /** [[connectedComponents]] with the driver route's edge bound as a
     * parameter, so specs can run both routes on one input. */
-  private[graft] def connectedComponents(edges: DataFrame, maxIters: Int,
-                                         driverMaxEdges: Long): DataFrame = {
+  private[graft] def connectedComponents(edges: DataFrame, driverMaxEdges: Long): DataFrame = {
     val obs = org.apache.spark.sql.Observation("graft_cc_edges")
     val ck = edges.select(col("a"), col("b"))
       .observe(obs, count(lit(1)).as("n"),
@@ -83,7 +89,7 @@ object Curation {
     require(ck.schema.forall(_.dataType == LongType),
       s"connectedComponents takes bigint vertex ids, got ${ck.schema.simpleString}")
     if (seen("n").asInstanceOf[Long] <= driverMaxEdges) closeOnDriver(ck)
-    else propagate(ck, maxIters)
+    else propagate(ck)
   }
 
   /** Union-find over the checkpointed bigint edges: vertex ids are
@@ -122,7 +128,7 @@ object Curation {
 
   /** The distributed route of [[connectedComponents]]: pointer-jumping
     * label propagation over the checkpointed edges. */
-  private def propagate(ck: DataFrame, maxIters: Int): DataFrame = {
+  private def propagate(ck: DataFrame): DataFrame = {
     // Both edge directions come from a single explode over the
     // checkpointed edges, checkpointed in turn: every round (and
     // every reference within a round — seed aggregate, neighbor join,
@@ -142,7 +148,7 @@ object Curation {
       .select(col("a").as("v"), col("lab"))
     var iters = 0
     var converged = false
-    while (!converged && iters < maxIters) {
+    while (!converged && iters < PropagateMaxRounds) {
       // The convergence signal rides INSIDE the round's one
       // materializing action via observe(): CollectMetrics is a real
       // plan node (never constant-folded), codegen'd, and
@@ -181,11 +187,12 @@ object Curation {
     // fail loudly: returning a partial fixpoint would silently emit
     // wrong cluster roots (and diverge from the exact recursive-CTE
     // oracle). With pointer jumping the cap covers diameters to
-    // ~2^maxIters, so tripping it signals a regression, not data.
+    // ~2^PropagateMaxRounds, so tripping it signals a regression,
+    // not data.
     if (!converged)
       throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIters doubling rounds " +
-          s"(covers component diameters to ~2^$maxIters) — logic regression likely")
+        s"connectedComponents did not converge in $PropagateMaxRounds doubling rounds " +
+          s"(covers component diameters to ~2^$PropagateMaxRounds) — logic regression likely")
     labels
   }
 
@@ -246,15 +253,13 @@ object Curation {
   val ClusterLabelStagePath: String =
     graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "cluster_labels.parquet"
 
-  private val stagedLabels = new graft.StagedVersion[(String, String)]
-
   /** Read (staging if this corpus version is not yet built) the
     * persisted old-corpus component labels. Built from the SAME
     * staged pair list the full entry resolves (restricted to old-old
     * pairs: doc_a < doc_b, so "doc_b below the split" is exactly
     * "neither endpoint is fresh"). */
   def clusterLabelsTable(spark: SparkSession, dir: String): DataFrame = {
-    stagedLabels((dir, Tables.fingerprint(spark, dir, "documents"))) {
+    graft.StateCache.stage("Curation.labels", (dir, Tables.fingerprint(spark, dir, "documents"))) {
       val split = Dedup.incrementalSplit(Tables.documents(spark, dir))
         .getOrElse(Long.MaxValue)
       val oldPairs = Dedup.clusterPairSignal(spark, dir)
@@ -604,12 +609,10 @@ object Curation {
   val TfidfStatePath: String =
     graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "tfidf_tf.parquet"
 
-  private val stagedTfidf = new graft.StagedVersion[(String, String)]
-
   /** Read (staging once per corpus version) the persisted old-corpus
     * (doc_id, term, tf) table. */
   def tfidfStateTable(spark: SparkSession, dir: String): DataFrame = {
-    stagedTfidf((dir, Tables.fingerprint(spark, dir, "documents"))) {
+    graft.StateCache.stage("Curation.tfidf", (dir, Tables.fingerprint(spark, dir, "documents"))) {
       val docs = Tables.documents(spark, dir)
       val split = Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
       TextOps.whitespaceTokens(docs.filter(col("doc_id") < lit(split)))
@@ -1219,14 +1222,13 @@ object Curation {
   val SplitSidesPath: String =
     graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "split_sides.parquet"
 
-  private val stagedSplitSides = new graft.StagedVersion[(String, String)]
-
   /** Read (staging once per corpus version) the persisted old-corpus
     * split sides: component roots over the OLD-OLD pair subgraph
     * (doc_b below the incremental split implies both endpoints are),
     * md5(root) side rule, singletons to themselves. */
   def splitSidesTable(spark: SparkSession, dir: String): DataFrame = {
-    stagedSplitSides((dir, Tables.fingerprint(spark, dir, "documents"))) {
+    graft.StateCache.stage("Curation.splitSides",
+        (dir, Tables.fingerprint(spark, dir, "documents"))) {
       val docs = Tables.documents(spark, dir)
       val split = Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
       val oldLabels = connectedComponents(

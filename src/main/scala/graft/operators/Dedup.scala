@@ -1263,8 +1263,6 @@ object Dedup {
   val CorpusHashPath: String =
     graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "corpus_hashes.parquet"
 
-  private val stagedCorpusHashes = new graft.StagedVersion[(String, String)]
-
   /** Read (building once per corpus version) the persisted old-corpus
     * exact-hash set for `dir`.
     *
@@ -1278,7 +1276,8 @@ object Dedup {
     * drop rows at zero. Every consumer joins on `h` only (the
     * stream gates' left_anti), so the extra column is free. */
   def corpusHashTable(spark: SparkSession, dir: String): DataFrame = {
-    stagedCorpusHashes((dir, Tables.fingerprint(spark, dir, "documents"))) {
+    graft.StateCache.stage("Dedup.corpusHashes",
+        (dir, Tables.fingerprint(spark, dir, "documents"))) {
       val docs = Tables.documents(spark, dir)
       val split = incrementalSplit(docs).getOrElse(Long.MaxValue)
       docs.filter(col("doc_id") < lit(split))
@@ -1297,12 +1296,10 @@ object Dedup {
   val ShingleCmsPath: String =
     graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "shingle_cms.bin"
 
-  private val stagedSketch = new graft.StagedVersion[(String, String)]
-
   /** Read (building if this corpus version is not yet staged) the
     * persisted sketch table for `dir`. */
   def minhashSketchTable(spark: SparkSession, dir: String): DataFrame = {
-    stagedSketch((dir, Tables.fingerprint(spark, dir, "documents"))) {
+    graft.StateCache.stage("Dedup.sketch", (dir, Tables.fingerprint(spark, dir, "documents"))) {
       val hashed = sharedShingleArrays(Tables.documents(spark, dir))
       // per-row kernel signature computed IN the write projection —
       // one shingle pass, no signature shuffle, no build join at all
@@ -1466,10 +1463,8 @@ object Dedup {
   val DeconFuzzyPairStagePath: String =
     graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "decon_fuzzy_pairs.parquet"
 
-  private val stagedDeconPairs = new graft.StagedVersion[String]
-
   def decontaminateFuzzyStaged(spark: SparkSession, dir: String): DataFrame = {
-    stagedDeconPairs(dir) {
+    graft.StateCache.stage("Dedup.deconPairs", dir) {
       decontaminateFuzzy(spark, dir).write.mode("overwrite").parquet(DeconFuzzyPairStagePath)
     }
     decontaminateFuzzy(spark, dir)
@@ -1603,14 +1598,12 @@ object Dedup {
   val SimhashSigPath: String =
     graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "simhash_sigs.parquet"
 
-  private val stagedSimhash = new graft.StagedVersion[(String, String)]
-
   /** Read (building once per corpus version) the persisted simhash
     * signature table for `dir`. Deterministic: the staged rows equal
     * what the live pipeline computes, so consumers are identical
     * either way (spec-pinned). */
   def simhashSigTable(spark: SparkSession, dir: String): DataFrame = {
-    stagedSimhash((dir, Tables.fingerprint(spark, dir, "documents"))) {
+    graft.StateCache.stage("Dedup.simhash", (dir, Tables.fingerprint(spark, dir, "documents"))) {
       simhashSignatures(Tables.documents(spark, dir))
         .write.mode("overwrite").parquet(SimhashSigPath)
     }
@@ -1797,14 +1790,12 @@ object Dedup {
   val NgramPairStagePath: String =
     graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "ngram_pairs.parquet"
 
-  private val stagedNgramPairs = new graft.StagedVersion[String]
-
   /** Materialize the exact-Jaccard pair list once per corpus dir and
     * return the read-back frame. Deterministic (exact arithmetic, no
     * hashing randomness), so the staging and any later run's live
     * pipeline are identical — pinned by DedupSpec. */
   def ngramPairsStaged(spark: SparkSession, dir: String): DataFrame = {
-    stagedNgramPairs(dir) {
+    graft.StateCache.stage("Dedup.ngramPairs", dir) {
       dedupNgramJaccardPairs(spark, dir)
         .write.mode("overwrite").parquet(NgramPairStagePath)
     }
@@ -1820,8 +1811,6 @@ object Dedup {
   val ClusterSignalStagePath: String =
     graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") +
       "cluster_signal_pairs.parquet"
-
-  private val stagedClusterSignal = new graft.StagedVersion[String]
 
   /** Last routing decision of [[clusterPairSignal]] — observability
     * for the routing spec only (specs run serially). */
@@ -1893,7 +1882,7 @@ object Dedup {
     }
     require(route == "ngram" || route == "minhash",
       s"graft.clusters.signalRoute must be ngram|minhash, got $route")
-    stagedClusterSignal(s"$dir|$route") {
+    graft.StateCache.stage("Dedup.clusterSignal", s"$dir|$route") {
       lastClusterSignalRoute = route
       val src =
         if (route == "ngram") ngramPairsStaged(spark, dir)
@@ -1907,20 +1896,14 @@ object Dedup {
   /** The staged minhash pair list WITHOUT re-running the live
     * pipeline (the signal router only needs the table; the
     * dedup_minhash_lsh ENTRY keeps returning the live plan so bench
-    * repeats time real work). Shares [[stagedPairs]] with the entry,
-    * so whichever runs first stages for both. */
+    * repeats time real work). Shares the `Dedup.pairs` staging with
+    * the entry, so whichever runs first stages for both. */
   private def minhashPairsStagedOnly(spark: SparkSession, dir: String): DataFrame = {
-    stagedPairs(dir) {
+    graft.StateCache.stage("Dedup.pairs", dir) {
       dedupMinhashLsh(spark, dir).write.mode("overwrite").parquet(MinhashPairStagePath)
     }
     graft.Tables.parquetCached(spark, MinhashPairStagePath)
   }
-
-  // stage once per corpus dir (VERDICT r8 item 3: the per-run
-  // result write was the one oracle-staging cost left inside a
-  // timed path after the r8 StagedVersion sweep)
-  private val stagedPairs = new graft.StagedVersion[String]
-  private val stagedPairsIncr = new graft.StagedVersion[String]
 
   /** The driver entry for dedup_minhash_lsh: stage the verified
     * pairs ONCE per corpus dir for the DuckDB oracle, then return
@@ -1932,7 +1915,7 @@ object Dedup {
     * pipeline is deterministic (fixed hash seeds), so the staged
     * parquet and any later run's frame are identical. */
   def dedupMinhashLshStaged(spark: SparkSession, dir: String): DataFrame = {
-    stagedPairs(dir) {
+    graft.StateCache.stage("Dedup.pairs", dir) {
       dedupMinhashLsh(spark, dir).write.mode("overwrite").parquet(MinhashPairStagePath)
     }
     dedupMinhashLsh(spark, dir).orderBy(col("doc_a"), col("doc_b"))
@@ -1942,7 +1925,7 @@ object Dedup {
     * memoized pair staging for the DuckDB oracle, same live-pipeline
     * return. */
   def dedupMinhashIncrementalStaged(spark: SparkSession, dir: String): DataFrame = {
-    stagedPairsIncr(dir) {
+    graft.StateCache.stage("Dedup.pairsIncr", dir) {
       dedupMinhashLshIncremental(spark, dir)
         .write.mode("overwrite").parquet(MinhashIncrPairStagePath)
     }
@@ -2088,12 +2071,10 @@ object Dedup {
   val SubstringTablePath: String =
     graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "substring_windows.parquet"
 
-  private val stagedWindows = new graft.StagedVersion[(String, String)]
-
   /** Read (building if this corpus version is not yet staged) the
     * persisted per-window total table for `dir`. */
   def substringWindowTable(spark: SparkSession, dir: String): DataFrame = {
-    stagedWindows((dir, Tables.fingerprint(spark, dir, "documents"))) {
+    graft.StateCache.stage("Dedup.windows", (dir, Tables.fingerprint(spark, dir, "documents"))) {
       graft.functions.GraftFunctions.register(spark)
       val p = spark.sparkContext.defaultParallelism
       Tables.documents(spark, dir).filter(col("n_chars") >= SubstringK)

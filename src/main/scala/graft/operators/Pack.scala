@@ -310,13 +310,11 @@ object Pack {
   val ShardMeasurePath: String =
     graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "shard_measure.parquet"
 
-  private val stagedMeasure = new graft.StagedVersion[(String, String)]
-
   /** Read (building once per corpus version) the persisted measure
     * table for `dir`. Deterministic — the staged rows equal what the
     * live kernel computes, so consumers are identical either way. */
   def shardMeasureTable(spark: SparkSession, dir: String): DataFrame = {
-    stagedMeasure((dir, Tables.fingerprint(spark, dir, "documents"))) {
+    graft.StateCache.stage("Pack.measure", (dir, Tables.fingerprint(spark, dir, "documents"))) {
       graft.functions.GraftFunctions.register(spark)
       Tables.documents(spark, dir).select(
         col("doc_id"),

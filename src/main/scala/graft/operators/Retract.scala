@@ -101,10 +101,9 @@ object Retract {
     * direction repairs). Fingerprint-keyed like every state table. */
   val FullClusterLabelPath: String = stage("cluster_labels_full.parquet")
 
-  private val stagedFullLabels = new graft.StagedVersion[(String, String)]
-
   def fullClusterLabels(spark: SparkSession, dir: String): DataFrame = {
-    stagedFullLabels((dir, Tables.fingerprint(spark, dir, "documents"))) {
+    graft.StateCache.stage("Retract.fullLabels",
+        (dir, Tables.fingerprint(spark, dir, "documents"))) {
       Curation.connectedComponents(
           Dedup.clusterPairSignal(spark, dir)
             .select(col("doc_a").as("a"), col("doc_b").as("b")))
@@ -123,10 +122,9 @@ object Retract {
     * Takedown-sized, fingerprint-keyed like every state table. */
   val TombstonePath: String = stage("takedown_tombstones.parquet")
 
-  private val stagedTombstones = new graft.StagedVersion[(String, String)]
-
   def tombstoneTable(spark: SparkSession, dir: String): DataFrame = {
-    stagedTombstones((dir, Tables.fingerprint(spark, dir, "documents"))) {
+    graft.StateCache.stage("Retract.tombstones",
+        (dir, Tables.fingerprint(spark, dir, "documents"))) {
       Tables.documents(spark, dir).filter(takedownPred).select(col("doc_id"))
         .write.mode("overwrite").parquet(TombstonePath)
     }
@@ -145,8 +143,6 @@ object Retract {
   val RetSplitSidesPath: String = stage("retract_split_sides.parquet")
   val RetMeasurePath: String    = stage("retract_shard_measure.parquet")
 
-  private val stagedRepair = new graft.StagedVersion[(String, String)]
-
   /** Run the takedown repair of EVERY persisted state table, once per
     * corpus version. Each job is bounded by (state-table size +
     * takedown-slice size): anti joins broadcast the takedown list;
@@ -154,7 +150,7 @@ object Retract {
     * docs' text ONLY; the cluster repair's label propagation sees
     * touched-component edges only. No surviving text is re-read. */
   def repairedState(spark: SparkSession, dir: String): Unit =
-    stagedRepair((dir, Tables.fingerprint(spark, dir, "documents"))) {
+    graft.StateCache.stage("Retract.repair", (dir, Tables.fingerprint(spark, dir, "documents"))) {
       graft.functions.GraftFunctions.register(spark)
       val p = spark.sparkContext.defaultParallelism
       val docs = Tables.documents(spark, dir)

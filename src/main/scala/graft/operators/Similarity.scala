@@ -486,26 +486,6 @@ object Similarity {
     * storage — at warehouse scale this layout IS the inverted file. */
   final case class IvfIndex(cells: Int, centroids: Seq[(Int, Seq[Double])], listsPath: String)
 
-  private val ivfIndexCache =
-    new scala.collection.concurrent.TrieMap[(String, String), IvfIndex]
-
-  // the loaded posting-list DataFrame per (session, index version):
-  // partition discovery + footer reads are driver-side metadata work
-  // that would otherwise be re-paid on EVERY probe batch (measured
-  // ~100 ms against 128 partition dirs) — exactly the steady-state
-  // cost ann_ivf_probe exists to measure honestly. A DataFrame is
-  // session-bound, so entries are keyed per session (identity — no
-  // hashCode/equals override on SparkSession) and evicted
-  // DETERMINISTICALLY: every access sweeps entries whose owning
-  // context has stopped, so a same-JVM session restart cannot
-  // accumulate plans. (The r5 WeakHashMap keyed by the session never
-  // collected anything — the cached DataFrames strongly reference
-  // their session through QueryExecution, the exact value→key path
-  // the WeakHashMap javadoc warns voids weak-key semantics.
-  // ADVICE r5.)
-  private val ivfListsCache = new scala.collection.concurrent.TrieMap[SparkSession,
-    scala.collection.concurrent.TrieMap[(String, String), DataFrame]]
-
   /** Fingerprint of the embeddings table's file listing (names,
     * sizes, mtimes) — a driver metadata op. The index memo keys on
     * it so a regenerated/appended corpus triggers a rebuild instead
@@ -513,14 +493,6 @@ object Similarity {
   private def corpusFingerprint(spark: SparkSession, dir: String): String =
     graft.Tables.fingerprint(spark, dir, "embeddings")
 
-  /** Build (or fetch the already-built) index for a corpus dir. The
-    * memo holds only bounded centroid arrays + a path; the
-    * corpus-sized lists live in the parquet index, never on the
-    * driver. Build cost is paid once per corpus VERSION (see
-    * [[corpusFingerprint]]) and amortizes across every subsequent
-    * probe batch — `ann_ivf` times build+probe fused;
-    * `ann_ivf_probe` times the steady-state regime. A superseded
-    * index's temp directory is deleted on rebuild. */
   /** Root directory for persisted IVF indexes. The harness defaults
     * to a temp dir; a DEPLOYMENT should point this at the warehouse
     * root (e.g. `<warehouse>/_ivf_index/embeddings`) so the inverted
@@ -598,15 +570,15 @@ object Similarity {
   }
 
   /** Serializes build/GC per index root within this JVM. The
-    * ivfIndexCache memo only serializes per (corpus, fingerprint)
-    * key, so two threads building indexes for DIFFERENT corpora
-    * under the same root would otherwise interleave the manifest
-    * read-modify-write — each writing a manifest missing the other's
-    * entry, and the GC pass then deleting the other's freshly built
-    * live version dir. Keyed by the qualified root URI so `file:/x`
-    * and `/x` share a lock. Cross-JVM writers are fenced by the
-    * [[graft.FsLease]] lease file (round 8) — a second driver fails
-    * loudly instead of corrupting. */
+    * [[graft.StateCache]] slot behind [[ivfIndex]] only serializes
+    * builds per corpus dir, so two threads building indexes for
+    * DIFFERENT corpora under the same root would otherwise interleave
+    * the manifest read-modify-write — each writing a manifest missing
+    * the other's entry, and the GC pass then deleting the other's
+    * freshly built live version dir. Keyed by the qualified root URI
+    * so `file:/x` and `/x` share a lock. Cross-JVM writers are fenced
+    * by the [[graft.FsLease]] lease file (round 8) — a second driver
+    * fails loudly instead of corrupting. */
   private val ivfRootLocks =
     new scala.collection.concurrent.TrieMap[String, Object]
 
@@ -718,50 +690,39 @@ object Similarity {
     }
   }
 
-  /** Test hook: drop the in-memory index/lists memos WITHOUT
-    * touching on-disk state — simulates a fresh process probing a
-    * persisted root (the reuse path the manifest exists for). */
-  private[graft] def dropInMemoryIndexState(): Unit = {
-    ivfIndexCache.clear()
-    ivfListsCache.clear()
-    ivfPqBaseCache.clear()
-    pqCodebookCache.clear()
-  }
-
+  /** Build (or fetch the already-built) index for a corpus dir. The
+    * cache holds only bounded centroid arrays + a path; the
+    * corpus-sized lists live in the parquet index, never on the
+    * driver. Build cost is paid once per corpus VERSION (see
+    * [[corpusFingerprint]]) and amortizes across every subsequent
+    * probe batch — `ann_ivf` times build+probe fused;
+    * `ann_ivf_probe` times the steady-state regime. A superseded
+    * index's temp directory is deleted on rebuild. */
   def ivfIndex(spark: SparkSession, dir: String): IvfIndex = {
-    val key = (dir, corpusFingerprint(spark, dir))
-    ivfIndexCache.getOrElseUpdate(key, {
-      // drop superseded in-memory versions of this corpus (and, for
-      // temp-dir indexes, their on-disk lists — manifest-managed
-      // roots are cleaned by persistedIndex's GC instead)
-      ivfIndexCache.keys.filter(_._1 == dir).foreach { k =>
-        ivfIndexCache.remove(k).foreach { idx =>
-          ivfListsCache.values.foreach(_.remove(k))
-          if (ivfIndexRoot.isEmpty) {
-            val p = new org.apache.hadoop.fs.Path(idx.listsPath)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          }
-        }
+    val fp = corpusFingerprint(spark, dir)
+    graft.StateCache.superseding[IvfIndex](("Similarity.ivfIndex", dir), fp) { superseded =>
+      // a superseded temp-dir index's on-disk lists go with it;
+      // manifest-managed roots are cleaned by persistedIndex's GC
+      if (ivfIndexRoot.isEmpty) superseded.foreach { idx =>
+        val p = new org.apache.hadoop.fs.Path(idx.listsPath)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
       }
       ivfIndexRoot match {
-        case Some(root) => persistedIndex(spark, dir, key._2, root)
+        case Some(root) => persistedIndex(spark, dir, fp, root)
         case None => buildIndex(spark, dir,
           java.nio.file.Files.createTempDirectory("graft_ivf_index").toString)
       }
-    })
+    }
   }
 
-  /** The memoized posting-list frame for an index (see
-    * [[ivfListsCache]]). */
-  private def ivfLists(spark: SparkSession, dir: String, idx: IvfIndex): DataFrame = {
-    // deterministic eviction: drop every entry whose session has been
-    // stopped (same-JVM restarts) before touching the live one
-    ivfListsCache.filterInPlace { case (sess, _) => !sess.sparkContext.isStopped }
-    val perSession = ivfListsCache.getOrElseUpdate(spark,
-      new scala.collection.concurrent.TrieMap[(String, String), DataFrame])
-    perSession.getOrElseUpdate((dir, corpusFingerprint(spark, dir)),
+  /** The loaded posting-list frame of an index, held per session:
+    * partition discovery + footer reads are driver-side metadata work
+    * that would otherwise be re-paid on EVERY probe batch (measured
+    * ~100 ms against 128 partition dirs) — exactly the steady-state
+    * cost ann_ivf_probe exists to measure honestly. */
+  private def ivfLists(spark: SparkSession, dir: String, idx: IvfIndex): DataFrame =
+    graft.StateCache.session(spark, ("Similarity.ivfLists", dir), idx.listsPath)(
       spark.read.parquet(idx.listsPath))
-  }
 
   /** The kernel's exact accumulation order (VectorOps.sqDist:
     * acc += d*d left-to-right), so driver-side centroid ranking
@@ -802,10 +763,8 @@ object Similarity {
   // skip re-staging while the staged index version hasn't changed —
   // the write is tiny but would otherwise tax every timed probe run
   // (last-version semantics: a version change re-stages)
-  private val stagedCentroids = new graft.StagedVersion[String]
-
   private def stageCentroids(spark: SparkSession, idx: IvfIndex): Unit =
-    stagedCentroids(idx.listsPath) {
+    graft.StateCache.stage("Similarity.centroids", idx.listsPath) {
       import spark.implicits._
       idx.centroids.toDF("cid", "cv").coalesce(1)
         .write.mode("overwrite").parquet(CentroidStagePath)
@@ -1197,8 +1156,6 @@ object Similarity {
       .sortWithinPartitions(col("pg"), col("cid"))
       .write.mode("overwrite").partitionBy("pg").parquet(path)
 
-  private val stagedIvfPqCodes = new graft.StagedVersion[String]
-
   /** IVFADC with exact re-ranking (Jégou, Douze, Schmid 2011 — the
     * IVFADC-R layout FAISS ships as IVFPQ): the serving-tier ANN
     * this library's scale story converges on.
@@ -1240,7 +1197,7 @@ object Similarity {
     * bounded sample, encode the posting lists, persist both. Shared
     * by the fused entry and the append-maintenance entry. */
   private def ensureIvfPqArtifacts(spark: SparkSession, dir: String, idx: IvfIndex): Unit =
-    stagedIvfPqCodes(idx.listsPath) {
+    graft.StateCache.stage("Similarity.ivfPqCodes", idx.listsPath) {
       import spark.implicits._
       val e = Dedup.embeddingsWithNorm(spark, dir)
       val n = e.count()
@@ -1274,16 +1231,9 @@ object Similarity {
   // key the codes staging uses): the bytes are deterministic per
   // version, so steady-state probe runs skip the re-collect job +
   // plan. Bounded (m x k x subdim doubles), pure driver data — not a
-  // DataFrame, so no session binding needed; superseded versions are
-  // dropped so the map never grows past live indexes.
-  private val pqCodebookCache =
-    new scala.collection.concurrent.TrieMap[String, Seq[Seq[Seq[Double]]]]
-
+  // DataFrame, so no session binding needed.
   private def readIvfPqCodebooksCached(spark: SparkSession, version: String): Seq[Seq[Seq[Double]]] =
-    pqCodebookCache.getOrElseUpdate(version, {
-      pqCodebookCache.clear() // superseded versions never probe again
-      readIvfPqCodebooks(spark)
-    })
+    graft.StateCache("Similarity.pqCodebooks", version)(readIvfPqCodebooks(spark))
 
   /** The PQ encoder as one codegen'd projection over a `v` vector
     * column: per subspace, argmin over the codeword literals (ties
@@ -1445,26 +1395,14 @@ object Similarity {
   val IvfPqCodesBasePath: String =
     graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "ivfpq_codes_base.parquet"
 
-  private val stagedIvfPqBase = new graft.StagedVersion[String]
-
   // the resolved base-codes DataFrame per (session, index version) —
   // partition discovery + footer reads over the CodesPartGroups
   // directories are driver metadata work that would otherwise be
-  // re-paid on EVERY append run (the same steady-state cost the
-  // ivfListsCache removes for the posting lists; same deterministic
-  // session-keyed eviction, ADVICE r5)
-  private val ivfPqBaseCache = new scala.collection.concurrent.TrieMap[SparkSession,
-    scala.collection.concurrent.TrieMap[String, DataFrame]]
-
-  private def ivfPqBaseCodes(spark: SparkSession, version: String): DataFrame = {
-    ivfPqBaseCache.filterInPlace { case (sess, _) => !sess.sparkContext.isStopped }
-    val perSession = ivfPqBaseCache.getOrElseUpdate(spark,
-      new scala.collection.concurrent.TrieMap[String, DataFrame])
-    perSession.getOrElseUpdate(version, {
-      perSession.clear() // superseded versions never probe again
-      spark.read.parquet(IvfPqCodesBasePath)
-    })
-  }
+  // re-paid on EVERY append run (the same steady-state cost
+  // [[ivfLists]] removes for the posting lists)
+  private def ivfPqBaseCodes(spark: SparkSession, version: String): DataFrame =
+    graft.StateCache.session(spark, "Similarity.ivfPqBaseCodes", version)(
+      spark.read.parquet(IvfPqCodesBasePath))
 
   /** Encode ONLY the fresh slice against the persisted artifacts:
     * assignment by the broadcast-centroid argmin (the posting lists'
@@ -1506,7 +1444,7 @@ object Similarity {
     val split = semanticSplit(Tables.embeddings(spark, dir)).getOrElse(Long.MaxValue)
     // the base table is staged once per index version — the steady
     // state READS it; only the slice is encoded per run
-    stagedIvfPqBase(idx.listsPath) {
+    graft.StateCache.stage("Similarity.ivfPqBase", idx.listsPath) {
       writeCodes(spark.read.parquet(IvfPqCodesStagePath)
         .filter(col("vec_id") < lit(split)), IvfPqCodesBasePath)
     }
@@ -1648,11 +1586,9 @@ object Similarity {
   val SemanticMultiStagePath: String =
     graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "semantic_multi.parquet"
 
-  private val stagedMulti = new graft.StagedVersion[(String, Int)]
-
   private def persistedMulti(spark: SparkSession, e: DataFrame,
                              idx: IvfIndex, p: Int): DataFrame = {
-    stagedMulti((idx.listsPath, p)) {
+    graft.StateCache.stage("Similarity.multi", (idx.listsPath, p)) {
       assignMultiKernel(e, idx.centroids, p)
         .write.mode("overwrite").parquet(SemanticMultiStagePath)
     }
@@ -1878,9 +1814,9 @@ object Similarity {
     // other's idle cores (guide §2.6). Results are order-pinned by
     // construction (fixed Seq order, then the presentation sort), and
     // a floor violation in either leg still fails the entry.
-    // annIvfProbe's index staging is memo-guarded (StagedVersion/
-    // TrieMap) and annTopkLsh is a pure lazy plan, so the two threads
-    // share no mutable state. A DEDICATED 2-thread pool, not the
+    // annIvfProbe's index staging is memo-guarded (StateCache) and
+    // annTopkLsh is a pure lazy plan, so the two threads share no
+    // mutable state. A DEDICATED 2-thread pool, not the
     // global ForkJoinPool (ADVICE r20): both worker threads are
     // created during the submit calls ON THIS THREAD, so the
     // SparkSession/SQLConf InheritableThreadLocals are guaranteed to
@@ -1938,8 +1874,6 @@ object Similarity {
     graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "retract_ivf_lists.parquet"
   val RetractedCodesPath: String =
     graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "retract_ivfpq_codes.parquet"
-
-  private val stagedVecRetract = new graft.StagedVersion[String]
 
   private def copyDir(spark: SparkSession, from: String, to: String): Unit = {
     import org.apache.hadoop.fs.{FileUtil, Path}
@@ -2000,7 +1934,7 @@ object Similarity {
     * warehouse runs the same dynamic overwrite against the table in
     * place. */
   private def repairVectorState(spark: SparkSession, dir: String, idx: IvfIndex): Unit =
-    stagedVecRetract(idx.listsPath) {
+    graft.StateCache.stage("Similarity.vecRetract", idx.listsPath) {
       ensureIvfPqArtifacts(spark, dir, idx)
       val retv = Tables.embeddings(spark, dir)
         .filter(Retract.takedownPredOn(col("vec_id"))).select(col("vec_id"))

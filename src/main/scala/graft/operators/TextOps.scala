@@ -297,12 +297,11 @@ object TextOps {
   val NgramFreqStatePath: String =
     graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "ngram_freq.parquet"
 
-  private val stagedNgramFreq = new graft.StagedVersion[(String, String)]
-
   /** Read (staging once per corpus version) the persisted old-corpus
     * bigram counts. */
   def ngramFreqStateTable(spark: SparkSession, dir: String): DataFrame = {
-    stagedNgramFreq((dir, graft.Tables.fingerprint(spark, dir, "documents"))) {
+    graft.StateCache.stage("TextOps.ngramFreq",
+        (dir, graft.Tables.fingerprint(spark, dir, "documents"))) {
       graft.functions.GraftFunctions.register(spark)
       val docs = Tables.documents(spark, dir)
       val split = graft.operators.Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)

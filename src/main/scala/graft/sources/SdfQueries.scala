@@ -39,7 +39,7 @@ object SdfQueries {
     // caller guarantees no concurrent JVM stages into the same root
     // (same single-writer contract the per-JVM default gets for
     // free); artifacts re-stage in place (mode overwrite) when a
-    // fresh JVM's StagedVersion memo is cold.
+    // fresh JVM's StateCache is cold.
     case Some(d) =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
       s"$d/records.parquet"
@@ -202,8 +202,6 @@ object SdfQueries {
   val CsvStagePath: String = StagePath.stripSuffix("records.parquet") + "tabular_csv"
   val JsonStagePath: String = StagePath.stripSuffix("records.parquet") + "tabular_json"
 
-  private val stagedTabular = new graft.StagedVersion[Unit]
-
   /** All distinct SD_TAG source columns of the layout as raw strings
     * from the reference SDFs — the export both tabular entries
     * ingest. */
@@ -223,7 +221,7 @@ object SdfQueries {
   private val CsvNullStr = "\\N"
 
   private def stageTabular(s: org.apache.spark.sql.SparkSession): Unit =
-    stagedTabular(()) {
+    graft.StateCache.stage("SdfQueries.tabular", ()) {
       val df = rawTagFrame(s, LayoutSpec.default)
       df.coalesce(1).write.mode("overwrite").option("header", "true")
         .option("nullValue", CsvNullStr).csv(CsvStagePath)
@@ -281,8 +279,6 @@ object SdfQueries {
   // write DuckDB then reads in milliseconds (VERDICT r7 item 1).
   // Per-process is exactly the staged data's lifecycle: the oracle
   // SQL embedding these paths is dumped by this same process.
-  private val stagedRead = new graft.StagedVersion[Unit]
-  private val stagedRaw = new graft.StagedVersion[Unit]
 
   /** Stage (sdf, filename) as read/split by Spark — shared by the
     * sdf_read AND warehouse_ingest oracles. Called from BOTH entries
@@ -290,14 +286,14 @@ object SdfQueries {
     * (ADVICE r7: warehouse_ingest previously depended on sdf_read
     * having run first in the same process). */
   private def stageReadRecords(s: org.apache.spark.sql.SparkSession): Unit =
-    stagedRead(()) {
+    graft.StateCache.stage("SdfQueries.read", ()) {
       Sdf.read(s, TestSdfGlob)
         .select(col("sdf"), element_at(split(col("src_file"), "/"), -1).as("filename"))
         .write.mode("overwrite").parquet(ReadStagePath)
     }
 
   private def stageRawRecords(raw: org.apache.spark.sql.DataFrame): Unit =
-    stagedRaw(()) {
+    graft.StateCache.stage("SdfQueries.raw", ()) {
       raw.select(col("sdf")).write.mode("overwrite").parquet(StagePath)
     }
 
@@ -408,10 +404,8 @@ object SdfQueries {
   private[graft] val WhSqlReadStagePath: String =
     StagePath.stripSuffix("records.parquet") + "whsql_read_records.parquet"
 
-  private val stagedWhSql = new graft.StagedVersion[Unit]
-
   private def stageWhSql(s: org.apache.spark.sql.SparkSession): Unit =
-    stagedWhSql(()) {
+    graft.StateCache.stage("SdfQueries.whSql", ()) {
       val dir = java.nio.file.Paths.get(WhSqlSdfDir)
       java.nio.file.Files.createDirectories(dir)
       val rec = (cid: Long) =>

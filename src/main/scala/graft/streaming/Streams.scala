@@ -520,12 +520,10 @@ object Streams {
     graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") +
       "stream_doc_pairs.parquet"
 
-  private val stagedStreamDocPairs = new graft.StagedVersion[String]
-
   /** Ensure `dir`'s stream-gate pair list is staged (the oracle
     * convention shared by the pair gate and the curation gate). */
   private def ensureStreamDocPairsStaged(spark: SparkSession, dir: String): Unit =
-    stagedStreamDocPairs(dir) {
+    graft.StateCache.stage("Streams.streamDocPairs", dir) {
       streamDedupDocs(spark, dir)
         .write.mode("overwrite").parquet(StreamDocPairStagePath)
     }

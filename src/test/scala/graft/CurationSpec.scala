@@ -26,12 +26,12 @@ class CurationSpec extends AnyFunSuite {
   test("pointer jumping resolves a 200-vertex chain inside the round cap") {
     import spark.implicits._
     // plain min-label propagation needs diameter-1 = 199 rounds — far
-    // past the default cap of 20; the jump (lab(v) := lab(lab(v)))
+    // past the cap of 20 rounds; the jump (lab(v) := lab(lab(v)))
     // halves distance-to-root per round, so ~log2(200) rounds
     // suffice. This pins the doubling behavior, not just the answer,
     // so the chain is forced onto the distributed loop (bound -1).
     val chain = (0L until 199L).map(i => (i, i + 1)).toDF("a", "b")
-    val out = Curation.connectedComponents(chain, 20, -1L)
+    val out = Curation.connectedComponents(chain, -1L)
     assert(!onDriver(out))
     val labels = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.size == 200)
@@ -96,21 +96,21 @@ class CurationSpec extends AnyFunSuite {
     PropertySpec.forAllSampled(edgeLists, trials = 24) { case (edges, nullable) =>
       val df = edgeFrame(edges, nullable)
       val driver = Curation.connectedComponents(df)
-      val loop = Curation.connectedComponents(df, 20, -1L)
+      val loop = Curation.connectedComponents(df, -1L)
       assert(onDriver(driver) && !onDriver(loop))
       assert(driver.schema == loop.schema)
       assert(labelSet(driver) == labelSet(loop), s"edges $edges")
     }
     val empty = edgeFrame(Nil, nullable = true)
     assert(Curation.connectedComponents(empty).collect().isEmpty)
-    assert(Curation.connectedComponents(empty, 20, -1L).collect().isEmpty)
+    assert(Curation.connectedComponents(empty, -1L).collect().isEmpty)
   }
 
   test("the driver bound: exactly bound edges on the driver, one more on the loop") {
     val bound = 40
     val chain = (0L to bound.toLong).map(i => (i * 3 + 7, i * 3 + 10))
-    val atBound = Curation.connectedComponents(edgeFrame(chain.take(bound), false), 20, bound)
-    val past = Curation.connectedComponents(edgeFrame(chain, false), 20, bound)
+    val atBound = Curation.connectedComponents(edgeFrame(chain.take(bound), false), bound)
+    val past = Curation.connectedComponents(edgeFrame(chain, false), bound)
     assert(onDriver(atBound) && !onDriver(past))
     assert(labelSet(atBound) == chain.take(bound).flatMap(e => Seq(e._1, e._2)).map(_ -> 7L).toSet)
     assert(labelSet(past) == chain.flatMap(e => Seq(e._1, e._2)).map(_ -> 7L).toSet)
@@ -118,7 +118,7 @@ class CurationSpec extends AnyFunSuite {
     val withNull = spark.createDataFrame(java.util.List.of(Row(1L, 2L), Row(2L, null)),
       StructType(Seq(StructField("a", LongType), StructField("b", LongType))))
     Seq(bound.toLong, -1L).foreach { b =>
-      intercept[IllegalArgumentException](Curation.connectedComponents(withNull, 20, b))
+      intercept[IllegalArgumentException](Curation.connectedComponents(withNull, b))
     }
   }
 

@@ -78,7 +78,7 @@ class FsLeaseSpec extends AnyFunSuite {
     val out = fs.create(lock, false)
     out.write("second-driver@elsewhere 0\n".getBytes("UTF-8")); out.close()
     try {
-      Similarity.dropInMemoryIndexState()
+      StateCache.dropAll()
       Similarity.ivfIndexRoot = Some(s"file:$root")
       val e = intercept[IllegalStateException](Similarity.ivfIndex(spark, dataDir))
       assert(e.getMessage.contains(Similarity.IvfLockName))
@@ -87,12 +87,12 @@ class FsLeaseSpec extends AnyFunSuite {
       // after the other writer releases, the build goes through and
       // releases its own lease
       fs.delete(lock, false)
-      Similarity.dropInMemoryIndexState()
+      StateCache.dropAll()
       val idx = Similarity.ivfIndex(spark, dataDir)
       assert(idx.centroids.nonEmpty && !fs.exists(lock))
     } finally {
       Similarity.ivfIndexRoot = None
-      Similarity.dropInMemoryIndexState()
+      StateCache.dropAll()
     }
   }
 

@@ -307,6 +307,26 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
+  test("temp-dir index: a fingerprint change deletes the superseded lists and serves a rebuild") {
+    import java.nio.file.{Files, Paths}
+    val corpus = Files.createTempDirectory("graft_ivf_corpus_tmp")
+    val emb = corpus.resolve("embeddings.parquet").toFile
+    Files.copy(Paths.get(dir, "embeddings.parquet"), emb.toPath)
+    assert(Similarity.ivfIndexRoot.isEmpty)
+    val first = Similarity.ivfIndex(spark, corpus.toString)
+    val probed = Similarity.annIvfProbe(spark, corpus.toString).collect().toSeq
+    assert(Similarity.ivfIndex(spark, corpus.toString) eq first, "an unchanged corpus must hit")
+
+    assert(emb.setLastModified(emb.lastModified + 5000))
+    val second = Similarity.ivfIndex(spark, corpus.toString)
+    assert(second.listsPath != first.listsPath, "a moved fingerprint must rebuild")
+    assert(!Files.exists(Paths.get(first.listsPath)), "superseded temp lists dir not deleted")
+    assert(second.centroids == first.centroids, "same data, same deterministic k-means")
+    // the session's posting-list frame must follow the rebuild: a
+    // frame over the deleted lists would fail the scan
+    assert(Similarity.annIvfProbe(spark, corpus.toString).collect().toSeq == probed)
+  }
+
   test("persisted root: fresh-process reuse without rebuild, fingerprint-change GC") {
     import java.nio.file.{Files, Paths}
     val root = Files.createTempDirectory("graft_ivf_root")
@@ -317,7 +337,7 @@ class SimilaritySpec extends AnyFunSuite {
     def maxMtime(d: java.io.File): Long =
       Files.walk(d.toPath).toArray.map(p => p.asInstanceOf[java.nio.file.Path].toFile.lastModified).max
     try {
-      Similarity.dropInMemoryIndexState()
+      StateCache.dropAll()
       // `file:` scheme: the manifest/version-dir lifecycle must run
       // through the Hadoop FileSystem API, not java.nio — the root's
       // documented deployment target is an hdfs:// or s3a:// warehouse
@@ -330,7 +350,7 @@ class SimilaritySpec extends AnyFunSuite {
 
       // fresh process: in-memory memos gone, on-disk root intact —
       // the index must be REUSED from the manifest, not rebuilt
-      Similarity.dropInMemoryIndexState()
+      StateCache.dropAll()
       val second = Similarity.ivfIndex(spark, corpus.toString)
       assert(second.cells == first.cells && second.centroids == first.centroids,
         "reloaded index differs from the built one")
@@ -340,14 +360,14 @@ class SimilaritySpec extends AnyFunSuite {
       // version dir, superseded dir garbage-collected
       assert(corpus.resolve("embeddings.parquet").toFile
         .setLastModified(corpus.resolve("embeddings.parquet").toFile.lastModified + 5000))
-      Similarity.dropInMemoryIndexState()
+      StateCache.dropAll()
       val third = Similarity.ivfIndex(spark, corpus.toString)
       assert(verDirs().size == 1, s"superseded version dir not GC'd: ${verDirs()}")
       assert(verDirs().head.getName != v1.getName, "fingerprint change did not produce a new version dir")
       assert(third.centroids == first.centroids, "same data, same deterministic k-means — centroids must match")
     } finally {
       Similarity.ivfIndexRoot = None
-      Similarity.dropInMemoryIndexState()
+      StateCache.dropAll()
     }
   }
 
@@ -367,7 +387,7 @@ class SimilaritySpec extends AnyFunSuite {
       c.toString
     }
     try {
-      Similarity.dropInMemoryIndexState()
+      StateCache.dropAll()
       Similarity.ivfIndexRoot = Some(root.toString)
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration._
@@ -380,14 +400,14 @@ class SimilaritySpec extends AnyFunSuite {
       val versions = root.toFile.listFiles().filter(_.getName.startsWith("ivf_v")).map(_.getName)
       assert(versions.length == 2, s"expected both version dirs, got ${versions.toSeq}")
       // a fresh process resolves BOTH corpora from the one manifest
-      Similarity.dropInMemoryIndexState()
+      StateCache.dropAll()
       corpora.zip(built).foreach { case (c, first) =>
         val again = Similarity.ivfIndex(spark, c)
         assert(again.listsPath == first.listsPath && again.centroids == first.centroids)
       }
     } finally {
       Similarity.ivfIndexRoot = None
-      Similarity.dropInMemoryIndexState()
+      StateCache.dropAll()
     }
   }
 
