@@ -10,9 +10,10 @@ import org.apache.spark.sql.{Column, DataFrame}
   * reads the aggregate's materialized shuffle (cheap); for a
   * projection-shaped entry there is NO exchange below the sort, so
   * the sampling pass re-runs the scan + kernel wholesale. Measured
-  * at sf10 (ProfileText): `text_langid` computes in 2.79 s but the
-  * entry took 8.09 s; `text_pii` 1.29 vs 3.82 s — the "per-entry
-  * scan + sort floor" r12 recorded was mostly this double pass.
+  * at sf10 with a stage-level listener: `text_langid` computes in
+  * 2.79 s but the entry took 8.09 s; `text_pii` 1.29 vs 3.82 s —
+  * the "per-entry scan + sort floor" r12 recorded was mostly this
+  * double pass.
   *
   * Fix: one cheap hash exchange of the RESULT rows (kernel outputs,
   * no text column) right below the sort. AQE materializes it once;

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 
 /** The one memo for derived state: inferred schemas and bounded row
@@ -13,6 +14,13 @@ import org.apache.spark.sql.SparkSession
   * while the single staged output still holds B's data. The builder
   * is handed the superseded value, for callers that release what it
   * holds (a temp-dir index deletes its superseded posting lists).
+  *
+  * Derived state names what it reads ([[derived]], [[stage]]): the
+  * cache versions it on each read path's listing [[identity]], plus
+  * any non-file parameter that changes it. A staging that reads
+  * another staging's output first calls that upstream (which stages
+  * it if needed) and names the upstream's output path, so a re-stage
+  * upstream moves every downstream version with it.
   *
   * A scope is the JVM or one `SparkSession`; session-scoped values
   * (DataFrames, which are bound to their session) are dropped on the
@@ -28,17 +36,46 @@ object StateCache {
 
   private val slots = new java.util.concurrent.ConcurrentHashMap[(Option[SparkSession], Any), Slot]
 
+  /** One level of `path`'s file listing (driver metadata op); a plain
+    * file lists as itself. */
+  private[graft] def listing(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stats = fs.globStatus(new Path(p, "*"))
+    if (stats == null || stats.isEmpty) Seq(fs.getFileStatus(p))
+    else stats.toSeq
+  }
+
+  /** A listing's identity (name:len:mtime per file): the version of
+    * everything derived from those files. Every Spark write names its
+    * part files afresh, so an overwrite moves the identity even when
+    * it writes the same rows. The one accepted residual: a non-Spark
+    * writer that rewrites a file in place under the same name, length
+    * and mtime goes unseen. */
+  private[graft] def identity(listing: Seq[FileStatus]): String =
+    listing.map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
+      .sorted.mkString("|")
+
   /** The JVM-wide value of `artifact` at `version`, built once. */
   def apply[V](artifact: Any, version: Any)(build: => V): V =
     lookup[V](None, artifact, version)(_ => build)
 
-  /** [[apply]] for staging bodies run only for their side effect. */
-  def stage(artifact: Any, version: Any)(body: => Unit): Unit =
-    apply[Unit](artifact, version)(body)
+  /** The value of `artifact` derived from the files at `reads` and
+    * from `params`, built once per version: each read's path and
+    * listing identity, plus `params`. */
+  def derived[V](spark: SparkSession, artifact: Any, reads: Seq[String], params: Any = ())
+                (build: => V): V =
+    lookup[V](None, artifact, versionOf(spark, reads, params))(_ => build)
 
-  /** [[apply]] whose build receives the superseded value, if any. */
-  def superseding[V](artifact: Any, version: Any)(build: Option[V] => V): V =
-    lookup[V](None, artifact, version)(build)
+  /** [[derived]] for staging bodies run only for their side effect. */
+  def stage(spark: SparkSession, artifact: Any, reads: Seq[String], params: Any = ())
+           (body: => Unit): Unit =
+    derived[Unit](spark, artifact, reads, params)(body)
+
+  /** [[derived]] whose build receives the superseded value, if any. */
+  def superseding[V](spark: SparkSession, artifact: Any, reads: Seq[String])
+                    (build: Option[V] => V): V =
+    lookup[V](None, artifact, versionOf(spark, reads, ()))(build)
 
   /** The value of `artifact` at `version` for `spark`'s session. */
   def session[V](spark: SparkSession, artifact: Any, version: Any)(build: => V): V =
@@ -46,6 +83,9 @@ object StateCache {
 
   /** Drop every value in every scope. */
   def dropAll(): Unit = slots.clear()
+
+  private def versionOf(spark: SparkSession, reads: Seq[String], params: Any): Any =
+    (reads.map(p => p -> identity(listing(spark, p))), params)
 
   private def lookup[V](scope: Option[SparkSession], artifact: Any, version: Any)
                        (build: Option[V] => V): V = {

@@ -10,22 +10,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Catalyst pushes filters/projections down to the file source.
   */
 object Tables {
-  /** One level of the path's file listing (driver metadata op). */
-  private def listDir(spark: SparkSession, path: String): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stats = fs.globStatus(new org.apache.hadoop.fs.Path(p, "*"))
-    if (stats == null || stats.isEmpty) Seq(fs.getFileStatus(p))
-    else stats.toSeq
-  }
-
-  /** The listing's identity (name:len:mtime per file): the version key
-    * of everything derived from the table's files, here and in
-    * [[fingerprint]]. */
-  private def listingKey(listing: Seq[org.apache.hadoop.fs.FileStatus]): String =
-    listing.map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString("|")
-
   /** A listing with `key=value` subdirectories: a partitioned table. */
   private def partitioned(listing: Seq[org.apache.hadoop.fs.FileStatus]): Boolean =
     listing.exists(s => s.isDirectory && s.getPath.getName.contains("="))
@@ -39,7 +23,8 @@ object Tables {
     * (r20 profile). The schema is table METADATA (what a metastore
     * would serve), not data or results: the scan itself still reads
     * the parquet files on every run, and a regenerated file changes
-    * the listing key, so a stale schema can never be served.
+    * the listing's [[StateCache.identity]], so a stale schema is not
+    * served.
     *
     * For UNPARTITIONED paths only — a partitioned table's inferred
     * schema carries partition-column type inference that must stay
@@ -48,14 +33,9 @@ object Tables {
     * subdirectories bypasses the cache entirely, so a future call
     * site on a partitioned dir gets live inference instead of a
     * silently pinned partition-column type (directory entries also
-    * carry len 0 and unreliable mtimes, which would poison the key).
-    * Known residual accepted: a NON-Spark writer replacing a file
-    * in-place with the same name+length within mtime granularity
-    * could serve a stale schema — all writers here are Spark (new
-    * part-UUID filenames per write), so the listing key always
-    * moves. */
+    * carry len 0 and unreliable mtimes, which would poison the key). */
   def parquetCached(spark: SparkSession, path: String): DataFrame =
-    listedRead(spark, path, listDir(spark, path))
+    listedRead(spark, path, StateCache.listing(spark, path))
 
   /** The rows of `columns` in the unpartitioned table at `path`,
     * collected to the driver once per listing key, or None when the
@@ -67,7 +47,7 @@ object Tables {
     * as in [[parquetCached]] and collect on every call. */
   def collectCached(spark: SparkSession, path: String, columns: Seq[String],
                     max: Int): Option[IndexedSeq[org.apache.spark.sql.Row]] = {
-    val listing = listDir(spark, path)
+    val listing = StateCache.listing(spark, path)
     def bounded() = {
       val rows = listedRead(spark, path, listing)
         .select(columns.map(org.apache.spark.sql.functions.col): _*)
@@ -75,7 +55,7 @@ object Tables {
       if (rows.length > max) None else Some(rows.toIndexedSeq)
     }
     if (partitioned(listing)) bounded()
-    else StateCache(("Tables.rows", path, columns, max), listingKey(listing))(bounded())
+    else StateCache(("Tables.rows", path, columns, max), StateCache.identity(listing))(bounded())
   }
 
   /** A reader of the table at `path` under `listing`; a schema miss
@@ -92,7 +72,7 @@ object Tables {
     val paths = if (hidden(new org.apache.hadoop.fs.Path(path).getName) && visible.nonEmpty)
       visible.map(_.toString) else Seq(path)
     var inferred: Option[DataFrame] = None
-    val schema = StateCache(("Tables.schema", path), listingKey(listing)) {
+    val schema = StateCache(("Tables.schema", path), StateCache.identity(listing)) {
       val df = spark.read.parquet(paths: _*)
       inferred = Some(df)
       df.schema
@@ -126,8 +106,11 @@ object Tables {
     } catch { case _: java.io.FileNotFoundException => 1 }
   }
 
+  /** Where table `name` of the corpus at `dir` lives. */
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    parquetCached(spark, s"$dir/$name.parquet")
+    parquetCached(spark, path(dir, name))
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
@@ -194,16 +177,12 @@ object Tables {
     case n        => table(s, d, n).createOrReplaceTempView(n)
   }
 
-  /** Fingerprint of one table's parquet file listing (names, sizes,
-    * mtimes) — a driver metadata op, no data read. Version key for
-    * anything persisted FROM a table (IVF indexes, minhash sketch
-    * tables): a regenerated or appended corpus changes the listing,
-    * so consumers rebuild instead of silently serving stale derived
-    * state. Full SHA-256, not hashCode — a 32-bit collision would
-    * silently serve stale persisted state for a changed corpus, and
-    * persisted artifacts can outlive the JVM that built them. */
+  /** SHA-256 of one table's listing [[StateCache.identity]]: the
+    * version of the persisted IVF index, which outlives the JVM that
+    * built it, so it is stored in full (a 32-bit hash could collide
+    * and serve a stale index for a changed corpus). */
   def fingerprint(spark: SparkSession, dir: String, name: String): String =
     java.security.MessageDigest.getInstance("SHA-256")
-      .digest(listingKey(listDir(spark, s"$dir/$name.parquet")).getBytes("UTF-8"))
+      .digest(StateCache.identity(StateCache.listing(spark, path(dir, name))).getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
 }

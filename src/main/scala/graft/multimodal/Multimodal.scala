@@ -775,7 +775,7 @@ object Multimodal {
   // deterministic synthetic corpus (fixed MediaCount), so repeat
   // timed runs must not re-pay the decode+write (VERDICT r7 item 1)
   private def stageFeatures(spark: SparkSession): Unit =
-    graft.StateCache.stage("Multimodal.features", MediaCount) {
+    graft.StateCache.stage(spark, "Multimodal.features", Nil, MediaCount) {
       decodeFeatures(syntheticMedia(spark, MediaCount))
         .write.mode("overwrite").parquet(FeatureStagePath)
     }

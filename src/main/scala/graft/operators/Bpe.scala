@@ -148,7 +148,7 @@ object Bpe {
     * sort), collapsed to word counts before collecting (vocabulary-
     * bounded, ≪ sample text volume). */
   def bpeMergesTable(spark: SparkSession, dir: String): DataFrame = {
-    graft.StateCache.stage("Bpe.merges", (dir, Tables.fingerprint(spark, dir, "documents"))) {
+    graft.StateCache.stage(spark, "Bpe.merges", Seq(Tables.path(dir, "documents"))) {
       val docs = Tables.documents(spark, dir)
       val wordCounts = docs
         .select(col("doc_id"), cleanedCol(col("text")).as("c"))

@@ -244,8 +244,8 @@ object Curation {
 
   /** Where the corpus COMPONENT LABELS — (doc_id, cluster_root) over
     * the OLD corpus's pair graph (pairs with doc_b below the
-    * incremental split) — are persisted, fingerprint-keyed like the
-    * minhash sketch table. This is the nightly pipeline's carried
+    * incremental split) — are persisted, versioned on the documents
+    * and the staged cluster signal. This is the nightly pipeline's carried
     * state: component resolution over yesterday's pairs is paid once
     * per corpus version, and each fresh crawl folds its new pairs
     * into these labels instead of recomputing the closure over the
@@ -259,7 +259,9 @@ object Curation {
     * pairs: doc_a < doc_b, so "doc_b below the split" is exactly
     * "neither endpoint is fresh"). */
   def clusterLabelsTable(spark: SparkSession, dir: String): DataFrame = {
-    graft.StateCache.stage("Curation.labels", (dir, Tables.fingerprint(spark, dir, "documents"))) {
+    Dedup.stageClusterSignal(spark, dir)
+    graft.StateCache.stage(spark, "Curation.labels",
+        Seq(Tables.path(dir, "documents"), Dedup.ClusterSignalStagePath)) {
       val split = Dedup.incrementalSplit(Tables.documents(spark, dir))
         .getOrElse(Long.MaxValue)
       val oldPairs = Dedup.clusterPairSignal(spark, dir)
@@ -612,7 +614,7 @@ object Curation {
   /** Read (staging once per corpus version) the persisted old-corpus
     * (doc_id, term, tf) table. */
   def tfidfStateTable(spark: SparkSession, dir: String): DataFrame = {
-    graft.StateCache.stage("Curation.tfidf", (dir, Tables.fingerprint(spark, dir, "documents"))) {
+    graft.StateCache.stage(spark, "Curation.tfidf", Seq(Tables.path(dir, "documents"))) {
       val docs = Tables.documents(spark, dir)
       val split = Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
       TextOps.whitespaceTokens(docs.filter(col("doc_id") < lit(split)))
@@ -1215,7 +1217,8 @@ object Curation {
 
   /** Where the OLD corpus's split sides — (doc_id, side) under
     * [[splitLeakageFree]]'s rule restricted to old-old pairs — are
-    * persisted, fingerprint-keyed. This is the carried state a
+    * persisted, versioned on the documents and the staged cluster
+    * signal. This is the carried state a
     * release pipeline must respect: a doc that shipped in val must
     * not silently move to train next release (the trained model's
     * eval would quietly become contaminated-by-history). */
@@ -1227,8 +1230,9 @@ object Curation {
     * (doc_b below the incremental split implies both endpoints are),
     * md5(root) side rule, singletons to themselves. */
   def splitSidesTable(spark: SparkSession, dir: String): DataFrame = {
-    graft.StateCache.stage("Curation.splitSides",
-        (dir, Tables.fingerprint(spark, dir, "documents"))) {
+    Dedup.stageClusterSignal(spark, dir)
+    graft.StateCache.stage(spark, "Curation.splitSides",
+        Seq(Tables.path(dir, "documents"), Dedup.ClusterSignalStagePath)) {
       val docs = Tables.documents(spark, dir)
       val split = Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
       val oldLabels = connectedComponents(

@@ -1237,18 +1237,17 @@ object Dedup {
 
   /** Where the corpus minhash SKETCH TABLE — (doc_id, ghs, n, sig),
     * the per-document hashed shingle set plus its 64-perm signature
-    * — is persisted, keyed on the documents table's file-listing
-    * fingerprint (Tables.fingerprint, the IVF index's version
-    * convention). This is the "signatures persisted alongside the
-    * corpus" column BASELINE.md promised: the steady-state
-    * incremental operator READS it instead of re-sketching the
+    * — is persisted, versioned on the documents table's listing
+    * (StateCache.identity). This is the "signatures persisted
+    * alongside the corpus" column BASELINE.md promised: the
+    * steady-state incremental operator READS it instead of re-sketching the
     * full corpus every run, so the nightly cost is slice-sized
     * sketching + the banded join + candidate verification against
     * persisted arrays. At warehouse scale this lives next to the
     * manifest as a bucketed-by-doc_id table; here it shares the
     * oracle stage-dir lifecycle. Build cost is paid once per corpus
-    * VERSION (regenerated/appended data re-stages via the
-    * fingerprint key) and is deterministic — the staged rows equal
+    * VERSION (regenerated/appended data moves the listing and
+    * re-stages) and is deterministic — the staged rows equal
     * what any later live pipeline would compute, so consumers'
     * outputs are identical either way (spec-pinned). */
   val MinhashSketchPath: String =
@@ -1276,8 +1275,7 @@ object Dedup {
     * drop rows at zero. Every consumer joins on `h` only (the
     * stream gates' left_anti), so the extra column is free. */
   def corpusHashTable(spark: SparkSession, dir: String): DataFrame = {
-    graft.StateCache.stage("Dedup.corpusHashes",
-        (dir, Tables.fingerprint(spark, dir, "documents"))) {
+    graft.StateCache.stage(spark, "Dedup.corpusHashes", Seq(Tables.path(dir, "documents"))) {
       val docs = Tables.documents(spark, dir)
       val split = incrementalSplit(docs).getOrElse(Long.MaxValue)
       docs.filter(col("doc_id") < lit(split))
@@ -1299,7 +1297,7 @@ object Dedup {
   /** Read (building if this corpus version is not yet staged) the
     * persisted sketch table for `dir`. */
   def minhashSketchTable(spark: SparkSession, dir: String): DataFrame = {
-    graft.StateCache.stage("Dedup.sketch", (dir, Tables.fingerprint(spark, dir, "documents"))) {
+    graft.StateCache.stage(spark, "Dedup.sketch", Seq(Tables.path(dir, "documents"))) {
       val hashed = sharedShingleArrays(Tables.documents(spark, dir))
       // per-row kernel signature computed IN the write projection —
       // one shingle pass, no signature shuffle, no build join at all
@@ -1458,13 +1456,13 @@ object Dedup {
   }
 
   /** Staged-pairs path + entry, the [[dedupMinhashLshStaged]]
-    * convention: pairs staged once per corpus dir for the oracle,
+    * convention: pairs staged once per corpus version for the oracle,
     * the returned frame is the live pipeline. */
   val DeconFuzzyPairStagePath: String =
     graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "decon_fuzzy_pairs.parquet"
 
   def decontaminateFuzzyStaged(spark: SparkSession, dir: String): DataFrame = {
-    graft.StateCache.stage("Dedup.deconPairs", dir) {
+    graft.StateCache.stage(spark, "Dedup.deconPairs", Seq(Tables.path(dir, "documents"))) {
       decontaminateFuzzy(spark, dir).write.mode("overwrite").parquet(DeconFuzzyPairStagePath)
     }
     decontaminateFuzzy(spark, dir)
@@ -1603,7 +1601,7 @@ object Dedup {
     * what the live pipeline computes, so consumers are identical
     * either way (spec-pinned). */
   def simhashSigTable(spark: SparkSession, dir: String): DataFrame = {
-    graft.StateCache.stage("Dedup.simhash", (dir, Tables.fingerprint(spark, dir, "documents"))) {
+    graft.StateCache.stage(spark, "Dedup.simhash", Seq(Tables.path(dir, "documents"))) {
       simhashSignatures(Tables.documents(spark, dir))
         .write.mode("overwrite").parquet(SimhashSigPath)
     }
@@ -1790,17 +1788,20 @@ object Dedup {
   val NgramPairStagePath: String =
     graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "ngram_pairs.parquet"
 
-  /** Materialize the exact-Jaccard pair list once per corpus dir and
+  /** Materialize the exact-Jaccard pair list once per corpus version and
     * return the read-back frame. Deterministic (exact arithmetic, no
     * hashing randomness), so the staging and any later run's live
     * pipeline are identical — pinned by DedupSpec. */
   def ngramPairsStaged(spark: SparkSession, dir: String): DataFrame = {
-    graft.StateCache.stage("Dedup.ngramPairs", dir) {
+    stageNgramPairs(spark, dir)
+    graft.Tables.parquetCached(spark, NgramPairStagePath)
+  }
+
+  private def stageNgramPairs(spark: SparkSession, dir: String): Unit =
+    graft.StateCache.stage(spark, "Dedup.ngramPairs", Seq(Tables.path(dir, "documents"))) {
       dedupNgramJaccardPairs(spark, dir)
         .write.mode("overwrite").parquet(NgramPairStagePath)
     }
-    graft.Tables.parquetCached(spark, NgramPairStagePath)
-  }
 
   // ---- corpus-adaptive pair signal for the clusters/split family ----
 
@@ -1815,11 +1816,6 @@ object Dedup {
   /** Last routing decision of [[clusterPairSignal]] — observability
     * for the routing spec only (specs run serially). */
   @volatile private[graft] var lastClusterSignalRoute: String = ""
-
-  /** One DERIVED route per corpus dir per session (ADVICE r18: the
-    * disk-budget input is live, the decision must not be). */
-  private val signalRouteMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
 
   /** Predicted lower bound on the exact-ngram verify grid's shuffle:
     * the docs-side (2B−1)-fold replication of the corpus shingle
@@ -1861,52 +1857,54 @@ object Dedup {
     * routing spec does); the driver corpora are all far below the
     * budget line, so the gate always exercises the ngram route. */
   def clusterPairSignal(spark: SparkSession, dir: String): DataFrame = {
+    stageClusterSignal(spark, dir)
+    graft.Tables.parquetCached(spark, ClusterSignalStagePath)
+  }
+
+  /** Stage [[clusterPairSignal]] at [[ClusterSignalStagePath]]. */
+  private[graft] def stageClusterSignal(spark: SparkSession, dir: String): Unit = {
     val route = spark.conf.getOption("graft.clusters.signalRoute").getOrElse {
-      // memoized per corpus dir (ADVICE r18): getUsableSpace is live
-      // state, so near the budget line the AUTO-derived route could
-      // flip MID-SESSION between calls — and label tables staged
+      // derived once per corpus version (ADVICE r18): getUsableSpace
+      // is live state, so near the budget line the AUTO-derived route
+      // could flip MID-SESSION between calls — and label tables staged
       // under the earlier route would then join against slice pairs
-      // from the other. One session resolves every consumer over one
-      // signal. Only the live-disk derivation memoizes: an EXPLICIT
-      // budget conf is deterministic (no disk-state input) and
-      // setting it mid-session is a deliberate re-route, like the
-      // force flag — both re-stage coherently through the
-      // route-keyed staging version below.
+      // from the other. Only the live-disk derivation is held: an
+      // EXPLICIT budget conf is deterministic (no disk-state input) and
+      // setting it mid-session is a deliberate re-route, like the force
+      // flag. A reroute re-stages the signal (it reads the other pair
+      // list) and, through the signal's listing, every staging that
+      // reads it.
       def derive() = {
         val vol = shingleVolumeBytes(Tables.documents(spark, dir))
         if (gridShuffleLowerBoundBytes(spark, vol) <= shuffleDiskBudgetBytes(spark))
           "ngram" else "minhash"
       }
       if (spark.conf.getOption("graft.clusters.gridShuffleBudgetBytes").isDefined) derive()
-      else signalRouteMemo.computeIfAbsent(dir, _ => derive())
+      else graft.StateCache.derived(spark, ("Dedup.signalRoute", dir),
+        Seq(Tables.path(dir, "documents")))(derive())
     }
     require(route == "ngram" || route == "minhash",
       s"graft.clusters.signalRoute must be ngram|minhash, got $route")
-    graft.StateCache.stage("Dedup.clusterSignal", s"$dir|$route") {
+    val pairs =
+      if (route == "ngram") { stageNgramPairs(spark, dir); NgramPairStagePath }
+      else { stageMinhashPairs(spark, dir); MinhashPairStagePath }
+    graft.StateCache.stage(spark, "Dedup.clusterSignal", Seq(pairs)) {
       lastClusterSignalRoute = route
-      val src =
-        if (route == "ngram") ngramPairsStaged(spark, dir)
-        else minhashPairsStagedOnly(spark, dir)
-      src.select(col("doc_a"), col("doc_b"))
+      graft.Tables.parquetCached(spark, pairs).select(col("doc_a"), col("doc_b"))
         .write.mode("overwrite").parquet(ClusterSignalStagePath)
     }
-    graft.Tables.parquetCached(spark, ClusterSignalStagePath)
   }
 
-  /** The staged minhash pair list WITHOUT re-running the live
-    * pipeline (the signal router only needs the table; the
-    * dedup_minhash_lsh ENTRY keeps returning the live plan so bench
-    * repeats time real work). Shares the `Dedup.pairs` staging with
-    * the entry, so whichever runs first stages for both. */
-  private def minhashPairsStagedOnly(spark: SparkSession, dir: String): DataFrame = {
-    graft.StateCache.stage("Dedup.pairs", dir) {
+  /** The staged minhash pair list, shared by the dedup_minhash_lsh
+    * entry and the signal router (which only needs the table), so
+    * whichever runs first stages for both. */
+  private def stageMinhashPairs(spark: SparkSession, dir: String): Unit =
+    graft.StateCache.stage(spark, "Dedup.pairs", Seq(Tables.path(dir, "documents"))) {
       dedupMinhashLsh(spark, dir).write.mode("overwrite").parquet(MinhashPairStagePath)
     }
-    graft.Tables.parquetCached(spark, MinhashPairStagePath)
-  }
 
   /** The driver entry for dedup_minhash_lsh: stage the verified
-    * pairs ONCE per corpus dir for the DuckDB oracle, then return
+    * pairs ONCE per corpus version for the DuckDB oracle, then return
     * the live pipeline. The returned frame is the pipeline itself —
     * NOT the staged read-back — so repeat bench runs still time the
     * full minhash/banding/verify computation (memoizing the
@@ -1915,9 +1913,7 @@ object Dedup {
     * pipeline is deterministic (fixed hash seeds), so the staged
     * parquet and any later run's frame are identical. */
   def dedupMinhashLshStaged(spark: SparkSession, dir: String): DataFrame = {
-    graft.StateCache.stage("Dedup.pairs", dir) {
-      dedupMinhashLsh(spark, dir).write.mode("overwrite").parquet(MinhashPairStagePath)
-    }
+    stageMinhashPairs(spark, dir)
     dedupMinhashLsh(spark, dir).orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -1925,7 +1921,7 @@ object Dedup {
     * memoized pair staging for the DuckDB oracle, same live-pipeline
     * return. */
   def dedupMinhashIncrementalStaged(spark: SparkSession, dir: String): DataFrame = {
-    graft.StateCache.stage("Dedup.pairsIncr", dir) {
+    graft.StateCache.stage(spark, "Dedup.pairsIncr", Seq(Tables.path(dir, "documents"))) {
       dedupMinhashLshIncremental(spark, dir)
         .write.mode("overwrite").parquet(MinhashIncrPairStagePath)
     }
@@ -2074,7 +2070,7 @@ object Dedup {
   /** Read (building if this corpus version is not yet staged) the
     * persisted per-window total table for `dir`. */
   def substringWindowTable(spark: SparkSession, dir: String): DataFrame = {
-    graft.StateCache.stage("Dedup.windows", (dir, Tables.fingerprint(spark, dir, "documents"))) {
+    graft.StateCache.stage(spark, "Dedup.windows", Seq(Tables.path(dir, "documents"))) {
       graft.functions.GraftFunctions.register(spark)
       val p = spark.sparkContext.defaultParallelism
       Tables.documents(spark, dir).filter(col("n_chars") >= SubstringK)

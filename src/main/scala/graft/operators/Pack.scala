@@ -314,7 +314,7 @@ object Pack {
     * table for `dir`. Deterministic — the staged rows equal what the
     * live kernel computes, so consumers are identical either way. */
   def shardMeasureTable(spark: SparkSession, dir: String): DataFrame = {
-    graft.StateCache.stage("Pack.measure", (dir, Tables.fingerprint(spark, dir, "documents"))) {
+    graft.StateCache.stage(spark, "Pack.measure", Seq(Tables.path(dir, "documents"))) {
       graft.functions.GraftFunctions.register(spark)
       Tables.documents(spark, dir).select(
         col("doc_id"),

@@ -98,12 +98,12 @@ object Retract {
     * component state a pipeline that has processed every crawl
     * carries (the old-old table [[Curation.ClusterLabelStagePath]]
     * serves the GROW direction; this is the base the SHRINK
-    * direction repairs). Fingerprint-keyed like every state table. */
+    * direction repairs). Versioned on the staged cluster signal. */
   val FullClusterLabelPath: String = stage("cluster_labels_full.parquet")
 
   def fullClusterLabels(spark: SparkSession, dir: String): DataFrame = {
-    graft.StateCache.stage("Retract.fullLabels",
-        (dir, Tables.fingerprint(spark, dir, "documents"))) {
+    Dedup.stageClusterSignal(spark, dir)
+    graft.StateCache.stage(spark, "Retract.fullLabels", Seq(Dedup.ClusterSignalStagePath)) {
       Curation.connectedComponents(
           Dedup.clusterPairSignal(spark, dir)
             .select(col("doc_a").as("a"), col("doc_b").as("b")))
@@ -123,8 +123,7 @@ object Retract {
   val TombstonePath: String = stage("takedown_tombstones.parquet")
 
   def tombstoneTable(spark: SparkSession, dir: String): DataFrame = {
-    graft.StateCache.stage("Retract.tombstones",
-        (dir, Tables.fingerprint(spark, dir, "documents"))) {
+    graft.StateCache.stage(spark, "Retract.tombstones", Seq(Tables.path(dir, "documents"))) {
       Tables.documents(spark, dir).filter(takedownPred).select(col("doc_id"))
         .write.mode("overwrite").parquet(TombstonePath)
     }
@@ -149,8 +148,22 @@ object Retract {
     * the subtractive repairs run their kernel over the retracted
     * docs' text ONLY; the cluster repair's label propagation sees
     * touched-component edges only. No surviving text is re-read. */
-  def repairedState(spark: SparkSession, dir: String): Unit =
-    graft.StateCache.stage("Retract.repair", (dir, Tables.fingerprint(spark, dir, "documents"))) {
+  def repairedState(spark: SparkSession, dir: String): Unit = {
+    val tfidf = Curation.tfidfStateTable(spark, dir)
+    val sketch = Dedup.minhashSketchTable(spark, dir)
+    val simhash = Dedup.simhashSigTable(spark, dir)
+    val sides = Curation.splitSidesTable(spark, dir)
+    val measure = Pack.shardMeasureTable(spark, dir)
+    val ngramFreq = TextOps.ngramFreqStateTable(spark, dir)
+    val windows = Dedup.substringWindowTable(spark, dir)
+    val hashes = Dedup.corpusHashTable(spark, dir)
+    val full = fullClusterLabels(spark, dir)
+    Dedup.stageClusterSignal(spark, dir)
+    graft.StateCache.stage(spark, "Retract.repair", Seq(Tables.path(dir, "documents"),
+        Curation.TfidfStatePath, Dedup.MinhashSketchPath, Dedup.SimhashSigPath,
+        Curation.SplitSidesPath, Pack.ShardMeasurePath, TextOps.NgramFreqStatePath,
+        Dedup.SubstringTablePath, Dedup.CorpusHashPath, FullClusterLabelPath,
+        Dedup.ClusterSignalStagePath)) {
       graft.functions.GraftFunctions.register(spark)
       val p = spark.sparkContext.defaultParallelism
       val docs = Tables.documents(spark, dir)
@@ -161,16 +174,11 @@ object Retract {
         state.join(broadcast(ret), Seq("doc_id"), "left_anti")
 
       // per-doc tables: plain deletes
-      minus(Curation.tfidfStateTable(spark, dir))
-        .write.mode("overwrite").parquet(RetTfidfPath)
-      minus(Dedup.minhashSketchTable(spark, dir))
-        .write.mode("overwrite").parquet(RetSketchPath)
-      minus(Dedup.simhashSigTable(spark, dir))
-        .write.mode("overwrite").parquet(RetSimhashPath)
-      minus(Curation.splitSidesTable(spark, dir))
-        .write.mode("overwrite").parquet(RetSplitSidesPath)
-      minus(Pack.shardMeasureTable(spark, dir))
-        .write.mode("overwrite").parquet(RetMeasurePath)
+      minus(tfidf).write.mode("overwrite").parquet(RetTfidfPath)
+      minus(sketch).write.mode("overwrite").parquet(RetSketchPath)
+      minus(simhash).write.mode("overwrite").parquet(RetSimhashPath)
+      minus(sides).write.mode("overwrite").parquet(RetSplitSidesPath)
+      minus(measure).write.mode("overwrite").parquet(RetMeasurePath)
 
       // CMS: rebuilt from the repaired sketch table's arrays — a
       // state-table scan (no text), same aggregate as the builder
@@ -187,8 +195,7 @@ object Retract {
         .repartition(p, col("doc_id"))
         .select(explode(expr("graft_word_bigrams(text)")).as("bigram"))
         .groupBy(col("bigram")).agg(count(lit(1)).as("sub"))
-      TextOps.ngramFreqStateTable(spark, dir)
-        .join(subBigrams, Seq("bigram"), "left")
+      ngramFreq.join(subBigrams, Seq("bigram"), "left")
         .select(col("bigram"),
           (col("freq") - coalesce(col("sub"), lit(0L))).as("freq"))
         .filter(col("freq") > 0)
@@ -199,8 +206,7 @@ object Retract {
         .repartition(p, col("doc_id"))
         .select(explode(expr(s"graft_window_hashes(text, ${Dedup.SubstringK})")).as("wh"))
         .groupBy(col("wh")).agg(count(lit(1)).as("sub"))
-      Dedup.substringWindowTable(spark, dir)
-        .join(subWin, Seq("wh"), "left")
+      windows.join(subWin, Seq("wh"), "left")
         .select(col("wh"),
           (col("total") - coalesce(col("sub"), lit(0L))).as("total"))
         .filter(col("total") > 0)
@@ -211,8 +217,7 @@ object Retract {
       // cnt column is what makes this takedown-sized)
       val subHash = retOld.select(md5(col("text")).as("h"))
         .groupBy(col("h")).agg(count(lit(1)).as("sub"))
-      Dedup.corpusHashTable(spark, dir)
-        .join(subHash, Seq("h"), "left")
+      hashes.join(subHash, Seq("h"), "left")
         .select(col("h"), (col("cnt") - coalesce(col("sub"), lit(0L))).as("cnt"))
         .filter(col("cnt") > 0)
         .write.mode("overwrite").parquet(RetHashPath)
@@ -222,13 +227,13 @@ object Retract {
       // The repaired table, like the builder, holds only docs that
       // appear in a surviving pair — survivors that lost every pair
       // leave the table (they are singletons again).
-      val full = fullClusterLabels(spark, dir)
       val parts = touchedRelabel(full, Dedup.clusterPairSignal(spark, dir), ret)
       full.join(broadcast(parts.touchedRoots), Seq("cluster_root"), "left_anti")
         .select(col("doc_id"), col("cluster_root"))
         .unionByName(parts.newLabels)
         .write.mode("overwrite").parquet(RetLabelPath)
     }
+  }
 
   /** The cluster-repair decomposition shared by [[repairedState]]
     * and the `retract_clusters` entry. `touchedEdges` is the

@@ -486,13 +486,6 @@ object Similarity {
     * storage — at warehouse scale this layout IS the inverted file. */
   final case class IvfIndex(cells: Int, centroids: Seq[(Int, Seq[Double])], listsPath: String)
 
-  /** Fingerprint of the embeddings table's file listing (names,
-    * sizes, mtimes) — a driver metadata op. The index memo keys on
-    * it so a regenerated/appended corpus triggers a rebuild instead
-    * of silently serving stale centroids and posting lists. */
-  private def corpusFingerprint(spark: SparkSession, dir: String): String =
-    graft.Tables.fingerprint(spark, dir, "embeddings")
-
   /** Root directory for persisted IVF indexes. The harness defaults
     * to a temp dir; a DEPLOYMENT should point this at the warehouse
     * root (e.g. `<warehouse>/_ivf_index/embeddings`) so the inverted
@@ -693,14 +686,16 @@ object Similarity {
   /** Build (or fetch the already-built) index for a corpus dir. The
     * cache holds only bounded centroid arrays + a path; the
     * corpus-sized lists live in the parquet index, never on the
-    * driver. Build cost is paid once per corpus VERSION (see
-    * [[corpusFingerprint]]) and amortizes across every subsequent
-    * probe batch — `ann_ivf` times build+probe fused;
-    * `ann_ivf_probe` times the steady-state regime. A superseded
-    * index's temp directory is deleted on rebuild. */
+    * driver. Build cost is paid once per corpus VERSION (the
+    * embeddings table's listing: a regenerated or appended corpus
+    * rebuilds instead of serving stale centroids and posting lists)
+    * and amortizes across every subsequent probe batch — `ann_ivf`
+    * times build+probe fused; `ann_ivf_probe` times the steady-state
+    * regime. A superseded index's temp directory is deleted on
+    * rebuild. */
   def ivfIndex(spark: SparkSession, dir: String): IvfIndex = {
-    val fp = corpusFingerprint(spark, dir)
-    graft.StateCache.superseding[IvfIndex](("Similarity.ivfIndex", dir), fp) { superseded =>
+    graft.StateCache.superseding[IvfIndex](spark, ("Similarity.ivfIndex", dir),
+        Seq(graft.Tables.path(dir, "embeddings"))) { superseded =>
       // a superseded temp-dir index's on-disk lists go with it;
       // manifest-managed roots are cleaned by persistedIndex's GC
       if (ivfIndexRoot.isEmpty) superseded.foreach { idx =>
@@ -708,7 +703,8 @@ object Similarity {
         p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
       }
       ivfIndexRoot match {
-        case Some(root) => persistedIndex(spark, dir, fp, root)
+        case Some(root) =>
+          persistedIndex(spark, dir, graft.Tables.fingerprint(spark, dir, "embeddings"), root)
         case None => buildIndex(spark, dir,
           java.nio.file.Files.createTempDirectory("graft_ivf_index").toString)
       }
@@ -764,7 +760,7 @@ object Similarity {
   // the write is tiny but would otherwise tax every timed probe run
   // (last-version semantics: a version change re-stages)
   private def stageCentroids(spark: SparkSession, idx: IvfIndex): Unit =
-    graft.StateCache.stage("Similarity.centroids", idx.listsPath) {
+    graft.StateCache.stage(spark, "Similarity.centroids", Seq(idx.listsPath)) {
       import spark.implicits._
       idx.centroids.toDF("cid", "cv").coalesce(1)
         .write.mode("overwrite").parquet(CentroidStagePath)
@@ -1197,7 +1193,7 @@ object Similarity {
     * bounded sample, encode the posting lists, persist both. Shared
     * by the fused entry and the append-maintenance entry. */
   private def ensureIvfPqArtifacts(spark: SparkSession, dir: String, idx: IvfIndex): Unit =
-    graft.StateCache.stage("Similarity.ivfPqCodes", idx.listsPath) {
+    graft.StateCache.stage(spark, "Similarity.ivfPqCodes", Seq(idx.listsPath)) {
       import spark.implicits._
       val e = Dedup.embeddingsWithNorm(spark, dir)
       val n = e.count()
@@ -1444,7 +1440,7 @@ object Similarity {
     val split = semanticSplit(Tables.embeddings(spark, dir)).getOrElse(Long.MaxValue)
     // the base table is staged once per index version — the steady
     // state READS it; only the slice is encoded per run
-    graft.StateCache.stage("Similarity.ivfPqBase", idx.listsPath) {
+    graft.StateCache.stage(spark, "Similarity.ivfPqBase", Seq(idx.listsPath)) {
       writeCodes(spark.read.parquet(IvfPqCodesStagePath)
         .filter(col("vec_id") < lit(split)), IvfPqCodesBasePath)
     }
@@ -1588,7 +1584,7 @@ object Similarity {
 
   private def persistedMulti(spark: SparkSession, e: DataFrame,
                              idx: IvfIndex, p: Int): DataFrame = {
-    graft.StateCache.stage("Similarity.multi", (idx.listsPath, p)) {
+    graft.StateCache.stage(spark, "Similarity.multi", Seq(idx.listsPath), p) {
       assignMultiKernel(e, idx.centroids, p)
         .write.mode("overwrite").parquet(SemanticMultiStagePath)
     }
@@ -1934,7 +1930,7 @@ object Similarity {
     * warehouse runs the same dynamic overwrite against the table in
     * place. */
   private def repairVectorState(spark: SparkSession, dir: String, idx: IvfIndex): Unit =
-    graft.StateCache.stage("Similarity.vecRetract", idx.listsPath) {
+    graft.StateCache.stage(spark, "Similarity.vecRetract", Seq(idx.listsPath)) {
       ensureIvfPqArtifacts(spark, dir, idx)
       val retv = Tables.embeddings(spark, dir)
         .filter(Retract.takedownPredOn(col("vec_id"))).select(col("vec_id"))

@@ -300,8 +300,7 @@ object TextOps {
   /** Read (staging once per corpus version) the persisted old-corpus
     * bigram counts. */
   def ngramFreqStateTable(spark: SparkSession, dir: String): DataFrame = {
-    graft.StateCache.stage("TextOps.ngramFreq",
-        (dir, graft.Tables.fingerprint(spark, dir, "documents"))) {
+    graft.StateCache.stage(spark, "TextOps.ngramFreq", Seq(Tables.path(dir, "documents"))) {
       graft.functions.GraftFunctions.register(spark)
       val docs = Tables.documents(spark, dir)
       val split = graft.operators.Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)

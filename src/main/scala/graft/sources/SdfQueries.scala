@@ -221,7 +221,7 @@ object SdfQueries {
   private val CsvNullStr = "\\N"
 
   private def stageTabular(s: org.apache.spark.sql.SparkSession): Unit =
-    graft.StateCache.stage("SdfQueries.tabular", ()) {
+    graft.StateCache.stage(s, "SdfQueries.tabular", Nil) {
       val df = rawTagFrame(s, LayoutSpec.default)
       df.coalesce(1).write.mode("overwrite").option("header", "true")
         .option("nullValue", CsvNullStr).csv(CsvStagePath)
@@ -286,14 +286,14 @@ object SdfQueries {
     * (ADVICE r7: warehouse_ingest previously depended on sdf_read
     * having run first in the same process). */
   private def stageReadRecords(s: org.apache.spark.sql.SparkSession): Unit =
-    graft.StateCache.stage("SdfQueries.read", ()) {
+    graft.StateCache.stage(s, "SdfQueries.read", Nil) {
       Sdf.read(s, TestSdfGlob)
         .select(col("sdf"), element_at(split(col("src_file"), "/"), -1).as("filename"))
         .write.mode("overwrite").parquet(ReadStagePath)
     }
 
   private def stageRawRecords(raw: org.apache.spark.sql.DataFrame): Unit =
-    graft.StateCache.stage("SdfQueries.raw", ()) {
+    graft.StateCache.stage(raw.sparkSession, "SdfQueries.raw", Nil) {
       raw.select(col("sdf")).write.mode("overwrite").parquet(StagePath)
     }
 
@@ -405,7 +405,7 @@ object SdfQueries {
     StagePath.stripSuffix("records.parquet") + "whsql_read_records.parquet"
 
   private def stageWhSql(s: org.apache.spark.sql.SparkSession): Unit =
-    graft.StateCache.stage("SdfQueries.whSql", ()) {
+    graft.StateCache.stage(s, "SdfQueries.whSql", Nil) {
       val dir = java.nio.file.Paths.get(WhSqlSdfDir)
       java.nio.file.Files.createDirectories(dir)
       val rec = (cid: Long) =>

@@ -523,7 +523,8 @@ object Streams {
   /** Ensure `dir`'s stream-gate pair list is staged (the oracle
     * convention shared by the pair gate and the curation gate). */
   private def ensureStreamDocPairsStaged(spark: SparkSession, dir: String): Unit =
-    graft.StateCache.stage("Streams.streamDocPairs", dir) {
+    graft.StateCache.stage(spark, "Streams.streamDocPairs",
+        Seq(graft.Tables.path(dir, "documents"))) {
       streamDedupDocs(spark, dir)
         .write.mode("overwrite").parquet(StreamDocPairStagePath)
     }

@@ -232,6 +232,78 @@ class CurationSpec extends AnyFunSuite {
     assert(pairsOf(operators.Dedup.clusterPairSignal(spark, dir)) == ngram)
   }
 
+  /** The file names of a staged output: new on every re-stage. */
+  private def listingOf(path: String): Seq[String] = new java.io.File(path).list().toSeq.sorted
+
+  test("a reroute re-stages every staging that reads the cluster signal") {
+    import operators.{Dedup, Retract}
+    def stageAll(): Unit = {
+      Curation.clusterLabelsTable(spark, dir)
+      Curation.splitSidesTable(spark, dir)
+      Retract.fullClusterLabels(spark, dir)
+    }
+    val outputs = Seq(Curation.ClusterLabelStagePath, Curation.SplitSidesPath,
+      Retract.FullClusterLabelPath)
+    stageAll()
+    val before = outputs.map(listingOf)
+    stageAll()
+    assert(outputs.map(listingOf) == before, "a warm call must not re-stage")
+    // both routes give the same rows on this corpus, so only the
+    // outputs' listings can show that the downstream stagings re-ran
+    val signal = listingOf(Dedup.ClusterSignalStagePath)
+    try {
+      spark.conf.set("graft.clusters.signalRoute", "minhash")
+      stageAll()
+      assert(listingOf(Dedup.ClusterSignalStagePath) != signal, "the signal did not re-stage")
+      outputs.zip(before).foreach { case (out, was) =>
+        assert(listingOf(out) != was, s"$out was not re-staged after the reroute")
+      }
+    } finally spark.conf.unset("graft.clusters.signalRoute")
+  }
+
+  test("rewriting documents in place re-stages every staging that reads it") {
+    import operators.{Dedup, Retract}
+    def rows(df: DataFrame): Set[String] = df.collect().map(_.toString).toSet
+    def staged(path: String): Set[String] = rows(spark.read.parquet(path))
+    def snapshot(d: String): Map[String, Set[String]] = Map(
+      "ngramPairsStaged" -> rows(Dedup.ngramPairsStaged(spark, d)),
+      "clusterPairSignal" -> rows(Dedup.clusterPairSignal(spark, d)),
+      "clusterLabelsTable" -> rows(Curation.clusterLabelsTable(spark, d)),
+      "splitSidesTable" -> rows(Curation.splitSidesTable(spark, d)),
+      "fullClusterLabels" -> rows(Retract.fullClusterLabels(spark, d)),
+      "decontaminateFuzzyStaged" -> {
+        Dedup.decontaminateFuzzyStaged(spark, d); staged(Dedup.DeconFuzzyPairStagePath)
+      },
+      "dedupMinhashLshStaged" -> {
+        Dedup.dedupMinhashLshStaged(spark, d); staged(Dedup.MinhashPairStagePath)
+      },
+      "dedupMinhashIncrementalStaged" -> {
+        Dedup.dedupMinhashIncrementalStaged(spark, d); staged(Dedup.MinhashIncrPairStagePath)
+      },
+      "streamDedupDocsStaged" -> {
+        streaming.Streams.streamDedupDocsStaged(spark, d)
+        staged(streaming.Streams.StreamDocPairStagePath)
+      },
+      "dedupClusters" -> rows(Curation.dedupClusters(spark, d)))
+    val tmp = java.nio.file.Files.createTempDirectory("graft_rewrite")
+    val corpus = tmp.resolve("corpus")
+    val docs = corpus.resolve("documents.parquet")
+    java.nio.file.Files.createDirectories(corpus)
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/documents.parquet"), docs)
+    val first = snapshot(corpus.toString)
+    // rewrite the one-file table in place, keeping the even doc_ids
+    val even = tmp.resolve("even").toString
+    spark.read.parquet(docs.toString).filter(col("doc_id") % 2 === 0)
+      .coalesce(1).write.parquet(even)
+    val part = new java.io.File(even).listFiles().filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.move(part.toPath, docs, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val served = snapshot(corpus.toString)
+    StateCache.dropAll()
+    val live = snapshot(corpus.toString)
+    assert(live("ngramPairsStaged") != first("ngramPairsStaged"), "the rewrite moved no pairs")
+    live.keys.foreach(k => assert(served(k) == live(k), s"$k served its pre-rewrite state"))
+  }
+
   test("sticky split: old sides kept, fresh clusters md5-ruled, cross-side merge flags flipped") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

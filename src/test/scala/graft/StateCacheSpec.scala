@@ -23,10 +23,19 @@ class StateCacheSpec extends AnyFunSuite {
     } finally pool.shutdownNow()
   }
 
+  /** A fresh temp dir holding `name`. */
+  private def tempPath(name: String): String =
+    java.nio.file.Files.createTempDirectory("graft_statecache").resolve(name).toString
+
   test("a version flip-flop A -> B -> A rebuilds each time and hands over the superseded value") {
     val builds = new AtomicInteger
     val seen = Seq.newBuilder[Option[String]]
-    def at(v: String) = StateCache.superseding[String]("spec.flipflop", v) { old =>
+    val paths = Seq("A", "B").map { v =>
+      val p = tempPath(v)
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(p), v)
+      v -> p
+    }.toMap
+    def at(v: String) = StateCache.superseding[String](spark, "spec.flipflop", Seq(paths(v))) { old =>
       seen += old
       builds.incrementAndGet()
       s"built-$v"
@@ -53,18 +62,31 @@ class StateCacheSpec extends AnyFunSuite {
 
   test("a build that throws leaves nothing to serve") {
     val builds = new AtomicInteger
-    intercept[IllegalStateException](StateCache.stage("spec.throws", 1) {
+    intercept[IllegalStateException](StateCache.stage(spark, "spec.throws", Nil) {
       builds.incrementAndGet(); throw new IllegalStateException("half-written")
     })
-    StateCache.stage("spec.throws", 1)(builds.incrementAndGet())
+    StateCache.stage(spark, "spec.throws", Nil)(builds.incrementAndGet())
     assert(builds.get == 2, "the version whose build failed must build again")
+  }
+
+  test("a stage over a parquet path hits while its listing holds and rebuilds once after an overwrite") {
+    val table = tempPath("t.parquet")
+    spark.range(10).toDF("doc_id").write.parquet(table)
+    val builds = new AtomicInteger
+    def stage(): Unit = StateCache.stage(spark, "spec.reads", Seq(table))(builds.incrementAndGet())
+    stage(); stage()
+    assert(builds.get == 1, "an unchanged listing must hit")
+    // the same rows, written again: new part-file names move the listing
+    spark.range(10).toDF("doc_id").write.mode("overwrite").parquet(table)
+    stage(); stage()
+    assert(builds.get == 2, "an overwrite must rebuild once, then hit")
   }
 
   test("a build that reads through the cache completes when two threads race on it") {
     // the ivfIndex -> Tables.parquetCached shape: the outer build
     // infers a schema through the cache while another thread waits on
     // the outer slot
-    val table = java.nio.file.Files.createTempDirectory("graft_statecache").resolve("t.parquet").toString
+    val table = tempPath("t.parquet")
     spark.range(10).toDF("doc_id").write.parquet(table)
     val builds = new AtomicInteger
     val got = race(2) {
