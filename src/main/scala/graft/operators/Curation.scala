@@ -614,6 +614,12 @@ object Curation {
   /** Read (staging once per corpus version) the persisted old-corpus
     * (doc_id, term, tf) table. */
   def tfidfStateTable(spark: SparkSession, dir: String): DataFrame = {
+    stageTfidfState(spark, dir)
+    graft.Tables.parquetCached(spark, TfidfStatePath)
+  }
+
+  /** Stage [[tfidfStateTable]] at [[TfidfStatePath]]. */
+  private[graft] def stageTfidfState(spark: SparkSession, dir: String): Unit =
     graft.StateCache.stage(spark, "Curation.tfidf", Seq(Tables.path(dir, "documents"))) {
       val docs = Tables.documents(spark, dir)
       val split = Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
@@ -621,8 +627,6 @@ object Curation {
         .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
         .write.mode("overwrite").parquet(TfidfStatePath)
     }
-    graft.Tables.parquetCached(spark, TfidfStatePath)
-  }
 
   /** Corpus DRIFT monitor — the release-gating signal a pipeline
     * checks before shipping a grown corpus: which terms' rates moved
@@ -1230,6 +1234,12 @@ object Curation {
     * (doc_b below the incremental split implies both endpoints are),
     * md5(root) side rule, singletons to themselves. */
   def splitSidesTable(spark: SparkSession, dir: String): DataFrame = {
+    stageSplitSides(spark, dir)
+    graft.Tables.parquetCached(spark, SplitSidesPath)
+  }
+
+  /** Stage [[splitSidesTable]] at [[SplitSidesPath]]. */
+  private[graft] def stageSplitSides(spark: SparkSession, dir: String): Unit = {
     Dedup.stageClusterSignal(spark, dir)
     graft.StateCache.stage(spark, "Curation.splitSides",
         Seq(Tables.path(dir, "documents"), Dedup.ClusterSignalStagePath)) {
@@ -1247,7 +1257,6 @@ object Curation {
         .select(col("doc_id"), when(prefix % 10 < 9, "train").otherwise("val").as("side"))
         .write.mode("overwrite").parquet(SplitSidesPath)
     }
-    graft.Tables.parquetCached(spark, SplitSidesPath)
   }
 
   /** STICKY split maintenance for a grown corpus — the release-time

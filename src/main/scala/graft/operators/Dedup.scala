@@ -1275,6 +1275,12 @@ object Dedup {
     * drop rows at zero. Every consumer joins on `h` only (the
     * stream gates' left_anti), so the extra column is free. */
   def corpusHashTable(spark: SparkSession, dir: String): DataFrame = {
+    stageCorpusHashes(spark, dir)
+    graft.Tables.parquetCached(spark, CorpusHashPath)
+  }
+
+  /** Stage [[corpusHashTable]] at [[CorpusHashPath]]. */
+  private[graft] def stageCorpusHashes(spark: SparkSession, dir: String): Unit =
     graft.StateCache.stage(spark, "Dedup.corpusHashes", Seq(Tables.path(dir, "documents"))) {
       val docs = Tables.documents(spark, dir)
       val split = incrementalSplit(docs).getOrElse(Long.MaxValue)
@@ -1283,8 +1289,6 @@ object Dedup {
         .groupBy(col("h")).agg(count(lit(1)).as("cnt"))
         .write.mode("overwrite").parquet(CorpusHashPath)
     }
-    graft.Tables.parquetCached(spark, CorpusHashPath)
-  }
 
   /** The corpus shingle-rarity count-min sketch, persisted next to
     * the sketch table by the same staging (one corpus pass writes
@@ -1297,6 +1301,13 @@ object Dedup {
   /** Read (building if this corpus version is not yet staged) the
     * persisted sketch table for `dir`. */
   def minhashSketchTable(spark: SparkSession, dir: String): DataFrame = {
+    stageMinhashSketch(spark, dir)
+    graft.Tables.parquetCached(spark, MinhashSketchPath)
+  }
+
+  /** Stage [[minhashSketchTable]] at [[MinhashSketchPath]], with the
+    * CMS at [[ShingleCmsPath]]. */
+  private[graft] def stageMinhashSketch(spark: SparkSession, dir: String): Unit =
     graft.StateCache.stage(spark, "Dedup.sketch", Seq(Tables.path(dir, "documents"))) {
       val hashed = sharedShingleArrays(Tables.documents(spark, dir))
       // per-row kernel signature computed IN the write projection —
@@ -1314,8 +1325,6 @@ object Dedup {
         .head.getAs[Array[Byte]](0)
       java.nio.file.Files.write(java.nio.file.Paths.get(ShingleCmsPath), cms)
     }
-    graft.Tables.parquetCached(spark, MinhashSketchPath)
-  }
 
   /** Candidate pairs from banded buckets, verified with EXACT
     * Jaccard on the shingle sets — only candidates pay the
@@ -1601,12 +1610,16 @@ object Dedup {
     * what the live pipeline computes, so consumers are identical
     * either way (spec-pinned). */
   def simhashSigTable(spark: SparkSession, dir: String): DataFrame = {
+    stageSimhashSigs(spark, dir)
+    graft.Tables.parquetCached(spark, SimhashSigPath)
+  }
+
+  /** Stage [[simhashSigTable]] at [[SimhashSigPath]]. */
+  private[graft] def stageSimhashSigs(spark: SparkSession, dir: String): Unit =
     graft.StateCache.stage(spark, "Dedup.simhash", Seq(Tables.path(dir, "documents"))) {
       simhashSignatures(Tables.documents(spark, dir))
         .write.mode("overwrite").parquet(SimhashSigPath)
     }
-    graft.Tables.parquetCached(spark, SimhashSigPath)
-  }
 
   /** The pigeonhole band relation of a (doc_id, sim) signature frame
     * — ONE definition for both sides of every simhash band join. */
@@ -2070,6 +2083,12 @@ object Dedup {
   /** Read (building if this corpus version is not yet staged) the
     * persisted per-window total table for `dir`. */
   def substringWindowTable(spark: SparkSession, dir: String): DataFrame = {
+    stageSubstringWindows(spark, dir)
+    graft.Tables.parquetCached(spark, SubstringTablePath)
+  }
+
+  /** Stage [[substringWindowTable]] at [[SubstringTablePath]]. */
+  private[graft] def stageSubstringWindows(spark: SparkSession, dir: String): Unit =
     graft.StateCache.stage(spark, "Dedup.windows", Seq(Tables.path(dir, "documents"))) {
       graft.functions.GraftFunctions.register(spark)
       val p = spark.sparkContext.defaultParallelism
@@ -2080,8 +2099,6 @@ object Dedup {
         .groupBy(col("wh")).agg(count(lit(1)).as("total"))
         .write.mode("overwrite").parquet(SubstringTablePath)
     }
-    graft.Tables.parquetCached(spark, SubstringTablePath)
-  }
 
   /** Fresh-crawl form of the substring profile: the per-doc
     * duplication profile of the NEW slice (doc_id >= the 90% split,

@@ -314,6 +314,12 @@ object Pack {
     * table for `dir`. Deterministic — the staged rows equal what the
     * live kernel computes, so consumers are identical either way. */
   def shardMeasureTable(spark: SparkSession, dir: String): DataFrame = {
+    stageShardMeasure(spark, dir)
+    graft.Tables.parquetCached(spark, ShardMeasurePath)
+  }
+
+  /** Stage [[shardMeasureTable]] at [[ShardMeasurePath]]. */
+  private[graft] def stageShardMeasure(spark: SparkSession, dir: String): Unit =
     graft.StateCache.stage(spark, "Pack.measure", Seq(Tables.path(dir, "documents"))) {
       graft.functions.GraftFunctions.register(spark)
       Tables.documents(spark, dir).select(
@@ -321,8 +327,6 @@ object Pack {
         element_at(expr("graft_text_stats(text)"), 1).as("n_tokens"))
         .write.mode("overwrite").parquet(ShardMeasurePath)
     }
-    graft.Tables.parquetCached(spark, ShardMeasurePath)
-  }
 
   /** Steady-state shard placement for a GROWN corpus — the
     * incremental twin ([[shardShuffle]]'s regime argument): appends

@@ -102,6 +102,12 @@ object Retract {
   val FullClusterLabelPath: String = stage("cluster_labels_full.parquet")
 
   def fullClusterLabels(spark: SparkSession, dir: String): DataFrame = {
+    stageFullClusterLabels(spark, dir)
+    graft.Tables.parquetCached(spark, FullClusterLabelPath)
+  }
+
+  /** Stage [[fullClusterLabels]] at [[FullClusterLabelPath]]. */
+  private def stageFullClusterLabels(spark: SparkSession, dir: String): Unit = {
     Dedup.stageClusterSignal(spark, dir)
     graft.StateCache.stage(spark, "Retract.fullLabels", Seq(Dedup.ClusterSignalStagePath)) {
       Curation.connectedComponents(
@@ -110,7 +116,6 @@ object Retract {
         .select(col("v").as("doc_id"), col("lab").as("cluster_root"))
         .write.mode("overwrite").parquet(FullClusterLabelPath)
     }
-    graft.Tables.parquetCached(spark, FullClusterLabelPath)
   }
 
   /** The tombstone REGISTRY — the takedown set persisted as the
@@ -147,18 +152,19 @@ object Retract {
     * takedown-slice size): anti joins broadcast the takedown list;
     * the subtractive repairs run their kernel over the retracted
     * docs' text ONLY; the cluster repair's label propagation sees
-    * touched-component edges only. No surviving text is re-read. */
+    * touched-component edges only. No surviving text is re-read.
+    * The upstream tables are staged first, without reading them back,
+    * so a warm call builds no frame before its own stage check. */
   def repairedState(spark: SparkSession, dir: String): Unit = {
-    val tfidf = Curation.tfidfStateTable(spark, dir)
-    val sketch = Dedup.minhashSketchTable(spark, dir)
-    val simhash = Dedup.simhashSigTable(spark, dir)
-    val sides = Curation.splitSidesTable(spark, dir)
-    val measure = Pack.shardMeasureTable(spark, dir)
-    val ngramFreq = TextOps.ngramFreqStateTable(spark, dir)
-    val windows = Dedup.substringWindowTable(spark, dir)
-    val hashes = Dedup.corpusHashTable(spark, dir)
-    val full = fullClusterLabels(spark, dir)
-    Dedup.stageClusterSignal(spark, dir)
+    Curation.stageTfidfState(spark, dir)
+    Dedup.stageMinhashSketch(spark, dir)
+    Dedup.stageSimhashSigs(spark, dir)
+    Curation.stageSplitSides(spark, dir)
+    Pack.stageShardMeasure(spark, dir)
+    TextOps.stageNgramFreqState(spark, dir)
+    Dedup.stageSubstringWindows(spark, dir)
+    Dedup.stageCorpusHashes(spark, dir)
+    stageFullClusterLabels(spark, dir)
     graft.StateCache.stage(spark, "Retract.repair", Seq(Tables.path(dir, "documents"),
         Curation.TfidfStatePath, Dedup.MinhashSketchPath, Dedup.SimhashSigPath,
         Curation.SplitSidesPath, Pack.ShardMeasurePath, TextOps.NgramFreqStatePath,
@@ -169,16 +175,17 @@ object Retract {
       val docs = Tables.documents(spark, dir)
       val split = Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
       val ret = docs.filter(takedownPred).select(col("doc_id"))
+      val read = (path: String) => graft.Tables.parquetCached(spark, path)
 
       def minus(state: DataFrame): DataFrame =
         state.join(broadcast(ret), Seq("doc_id"), "left_anti")
 
       // per-doc tables: plain deletes
-      minus(tfidf).write.mode("overwrite").parquet(RetTfidfPath)
-      minus(sketch).write.mode("overwrite").parquet(RetSketchPath)
-      minus(simhash).write.mode("overwrite").parquet(RetSimhashPath)
-      minus(sides).write.mode("overwrite").parquet(RetSplitSidesPath)
-      minus(measure).write.mode("overwrite").parquet(RetMeasurePath)
+      minus(read(Curation.TfidfStatePath)).write.mode("overwrite").parquet(RetTfidfPath)
+      minus(read(Dedup.MinhashSketchPath)).write.mode("overwrite").parquet(RetSketchPath)
+      minus(read(Dedup.SimhashSigPath)).write.mode("overwrite").parquet(RetSimhashPath)
+      minus(read(Curation.SplitSidesPath)).write.mode("overwrite").parquet(RetSplitSidesPath)
+      minus(read(Pack.ShardMeasurePath)).write.mode("overwrite").parquet(RetMeasurePath)
 
       // CMS: rebuilt from the repaired sketch table's arrays — a
       // state-table scan (no text), same aggregate as the builder
@@ -195,7 +202,7 @@ object Retract {
         .repartition(p, col("doc_id"))
         .select(explode(expr("graft_word_bigrams(text)")).as("bigram"))
         .groupBy(col("bigram")).agg(count(lit(1)).as("sub"))
-      ngramFreq.join(subBigrams, Seq("bigram"), "left")
+      read(TextOps.NgramFreqStatePath).join(subBigrams, Seq("bigram"), "left")
         .select(col("bigram"),
           (col("freq") - coalesce(col("sub"), lit(0L))).as("freq"))
         .filter(col("freq") > 0)
@@ -206,7 +213,7 @@ object Retract {
         .repartition(p, col("doc_id"))
         .select(explode(expr(s"graft_window_hashes(text, ${Dedup.SubstringK})")).as("wh"))
         .groupBy(col("wh")).agg(count(lit(1)).as("sub"))
-      windows.join(subWin, Seq("wh"), "left")
+      read(Dedup.SubstringTablePath).join(subWin, Seq("wh"), "left")
         .select(col("wh"),
           (col("total") - coalesce(col("sub"), lit(0L))).as("total"))
         .filter(col("total") > 0)
@@ -217,7 +224,7 @@ object Retract {
       // cnt column is what makes this takedown-sized)
       val subHash = retOld.select(md5(col("text")).as("h"))
         .groupBy(col("h")).agg(count(lit(1)).as("sub"))
-      hashes.join(subHash, Seq("h"), "left")
+      read(Dedup.CorpusHashPath).join(subHash, Seq("h"), "left")
         .select(col("h"), (col("cnt") - coalesce(col("sub"), lit(0L))).as("cnt"))
         .filter(col("cnt") > 0)
         .write.mode("overwrite").parquet(RetHashPath)
@@ -227,7 +234,8 @@ object Retract {
       // The repaired table, like the builder, holds only docs that
       // appear in a surviving pair — survivors that lost every pair
       // leave the table (they are singletons again).
-      val parts = touchedRelabel(full, Dedup.clusterPairSignal(spark, dir), ret)
+      val full = read(FullClusterLabelPath)
+      val parts = touchedRelabel(full, read(Dedup.ClusterSignalStagePath), ret)
       full.join(broadcast(parts.touchedRoots), Seq("cluster_root"), "left_anti")
         .select(col("doc_id"), col("cluster_root"))
         .unionByName(parts.newLabels)

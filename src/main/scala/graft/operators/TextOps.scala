@@ -300,6 +300,12 @@ object TextOps {
   /** Read (staging once per corpus version) the persisted old-corpus
     * bigram counts. */
   def ngramFreqStateTable(spark: SparkSession, dir: String): DataFrame = {
+    stageNgramFreqState(spark, dir)
+    graft.Tables.parquetCached(spark, NgramFreqStatePath)
+  }
+
+  /** Stage [[ngramFreqStateTable]] at [[NgramFreqStatePath]]. */
+  private[graft] def stageNgramFreqState(spark: SparkSession, dir: String): Unit =
     graft.StateCache.stage(spark, "TextOps.ngramFreq", Seq(Tables.path(dir, "documents"))) {
       graft.functions.GraftFunctions.register(spark)
       val docs = Tables.documents(spark, dir)
@@ -310,8 +316,6 @@ object TextOps {
         .groupBy(col("bigram")).agg(count(lit(1)).as("freq"))
         .write.mode("overwrite").parquet(NgramFreqStatePath)
     }
-    graft.Tables.parquetCached(spark, NgramFreqStatePath)
-  }
 
   /** Steady-state n-gram census for a grown corpus: old docs'
     * bigram counts come from the persisted table (metadata-sized —

@@ -1,10 +1,21 @@
 package graft.sinks
 
 import graft.sources.{LayoutSpec, Sdf}
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.FilterApi
+import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.CatalogTableType
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+
+import scala.jdk.CollectionConverters._
 
 /** The 100 TB sink: a parquet warehouse with an idempotent,
   * file-granularity ingest manifest.
@@ -69,35 +80,66 @@ object Warehouse {
     * optimization, never a correctness dependency. */
   val MaxLookupPruneFiles = 10000
 
+  /** Candidate parquet bytes up to which a point lookup reads its
+    * candidate files on the driver ([[readOnDriver]]) instead of
+    * scanning them in a Spark job. The read runs on one driver thread
+    * and, when no row group or page is pruned, decodes every candidate
+    * row, so the bound caps driver time and memory per lookup. It is a
+    * constant, like `Curation.DriverClosureMaxEdges`, because that cap
+    * is a property of the driver, not of a workload: a conf key could
+    * turn one lookup into a single-threaded read of a whole table. At
+    * 64 MiB it sits below Spark's default 128 MiB split, where the scan
+    * would read the same bytes in one task as well. */
+  val DriverReadMaxBytes: Long = 64L << 20
+
   /** Point lookup by primary key — the reference's headline query
     * (indexed cid lookup: the SQLite pk + WITH_INDEX role,
     * utils.py:181,334) at warehouse scale. The manifest's per-file
     * [lowest_cid, highest_cid] spans ARE the index.
     *
-    * One Spark job per lookup: the spans come from the driver-side
-    * manifest snapshot ([[manifestSpans]] — collected once per
-    * manifest listing key, the same snapshot the ingest skip set
-    * reads), so picking the candidate files is a loop over at most
-    * `ManifestCollectMax` rows, not a job. The scan then reads ONLY
-    * the candidate `src_filename=` directories (`basePath` = the
-    * compounds dir) under a schema derived from `layout` plus
-    * `src_filename: string` — no schema-inference job, no listing of
-    * every partition, and an all-digit filename keeps its lexical
-    * form. The isin predicate on the partition column and the pushed
-    * pk filter (plus parquet row-group stats) finish inside those
-    * directories; at 100 TB the data touched is O(one partition),
-    * not O(corpus). Plan-pinned in LookupSpec and SinksSpec
-    * (partition filters present, pk pushed, one job).
+    * The candidates are known before any job runs: the spans come
+    * from the driver-side manifest snapshot ([[manifestSpans]] —
+    * collected once per manifest listing key, the same snapshot the
+    * ingest skip set reads), so picking the candidate files is a loop
+    * over at most `ManifestCollectMax` rows, and one `listStatus` per
+    * candidate `src_filename=` directory names its files. A candidate
+    * whose directory is gone — a retract that crashed after deleting
+    * an emptied partition but before repairing its manifest row (see
+    * [[retract]]) — holds no rows.
     *
-    * A candidate whose directory is gone — a retract that crashed
-    * after deleting an emptied partition but before repairing its
-    * manifest row (see [[retract]]) — holds no rows and is dropped
-    * before the read. Past `ManifestCollectMax` manifest rows the
-    * candidates come from a distributed filter over the manifest
-    * instead; past `MaxLookupPruneFiles` candidates the scan covers
-    * the whole table under the pk filter alone. */
+    * Driver route, candidates of at most [[DriverReadMaxBytes]]: the
+    * files are read on the driver under a parquet record filter on the
+    * pk, which also skips row groups by statistics and pages by column
+    * index, and the matching rows come back as a local relation.
+    * `collect()`, and a projection such as `drop`, run no Spark job
+    * and compile no codegen class. Same schema and rows as the scan
+    * (LookupSpec pins the equivalence), including null for a layout
+    * column an older file lacks and the string `src_filename`; but the
+    * frame is local, so `inputFiles` is empty and there is no
+    * `_metadata` column.
+    *
+    * Scan route, past the bound (or for a column the driver read does
+    * not decode): one Spark job reads ONLY the candidate directories
+    * (`basePath` = the compounds dir) under a schema derived from
+    * `layout` plus `src_filename: string` — no schema-inference job,
+    * no listing of every partition, and an all-digit filename keeps
+    * its lexical form — with the isin partition filter and the pushed
+    * pk filter. That scan inlines the pk literal into its generated
+    * code, so each distinct cid compiles a class. Plan-pinned in
+    * LookupSpec and SinksSpec.
+    *
+    * Past `ManifestCollectMax` manifest rows the candidates come from
+    * a distributed filter over the manifest instead; past
+    * `MaxLookupPruneFiles` candidates the lookup scans [[compounds]]
+    * under the pk filter alone. */
   def lookup(spark: SparkSession, warehouseDir: String, cid: Long,
-             layout: LayoutSpec = LayoutSpec.default): DataFrame = {
+             layout: LayoutSpec = LayoutSpec.default): DataFrame =
+    lookup(spark, warehouseDir, cid, layout, DriverReadMaxBytes)
+
+  /** [[lookup]] with the driver route's byte bound as a parameter, so
+    * specs can run both routes on one warehouse. */
+  private[graft] def lookup(spark: SparkSession, warehouseDir: String, cid: Long,
+                            layout: LayoutSpec, driverMaxBytes: Long): DataFrame = {
     val pk = layout.columns.find(_.primaryKey).map(_.name)
       .getOrElse(layout.columns.head.name)
     val files = manifestSpans(spark, warehouseDir) match {
@@ -111,41 +153,180 @@ object Warehouse {
         .collect().map(_.getString(0)).toSeq
     }
     if (files.length > MaxLookupPruneFiles)
-      return spark.read.parquet(compoundsDir(warehouseDir)).filter(col(pk) === cid)
+      return compounds(spark, warehouseDir).filter(col(pk) === cid)
     val dataDir = new Path(compoundsDir(warehouseDir))
     val fs = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = files.map(f => f -> partitionDir(dataDir, f)).filter { case (_, d) => fs.exists(d) }
+    val dirs = files.flatMap { f =>
+      val d = partitionDir(dataDir, f)
+      try Some((f, d, dataFiles(fs, d)))
+      catch { case _: java.io.FileNotFoundException => None }
+    }
     val schema = StructType(layout.columns.map(c => StructField(c.name, c.sparkType)) :+
       StructField("src_filename", StringType))
     if (dirs.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-    else spark.read.schema(schema).option("basePath", dataDir.toString)
-      .parquet(dirs.map(_._2.toString): _*)
-      .filter(col("src_filename").isin(dirs.map(_._1): _*) && col(pk) === cid)
+    else readOnDriver(spark, dirs.flatMap { case (f, _, st) => st.map(_ -> Seq(f)) }, schema,
+        pk, cid, driverMaxBytes)
+      .getOrElse(spark.read.schema(schema).option("basePath", dataDir.toString)
+        .parquet(dirs.map(_._2.toString): _*)
+        .filter(col("src_filename").isin(dirs.map(_._1): _*) && col(pk) === cid))
   }
 
   /** Secondary-index lookup — the reference's OTHER headline query
     * (WITH_INDEX columns like InChIKey, utils.py:334): no manifest
     * span exists for a non-pk key, so the index is a BUCKETED
     * published table ([[publishBucketed]] with `key` = the indexed
-    * column). An equality filter on the bucket column gives the scan
-    * a bucket set of ONE of the N buckets, and the scan reads only
-    * that bucket's files; the pushed filter plus the per-bucket
-    * sortBy's row-group stats finish inside it — at 100 TB the read
-    * is corpus/N-buckets, sized by the bucket count chosen at publish
-    * time (thousands at warehouse scale).
+    * column). The key's bucket id (Spark's Murmur3 pmod, computed on
+    * the driver from the value) picks one of the N buckets, and the
+    * bucket id in each file name picks that bucket's files — at 100 TB
+    * the read is corpus/N-buckets, sized by the bucket count chosen at
+    * publish time (thousands at warehouse scale).
     *
-    * The plan is left to Spark's own choice. Under a pure filter the
-    * autoBucketedScan rule turns the bucketed scan off (bucketing
-    * avoids no shuffle here), and on Spark 4.1 the non-bucketed scan
-    * still prunes files by the bucket set: measured on the
-    * 16-bucket serve warehouse, one InChIKey reads the same single
-    * bucket (274.8 rows examined per result) as 1 task, where the
-    * forced bucketed scan planned one task per bucket, 16. Pinned
-    * structurally in LookupSpec and SinksSpec (1 of N bucket-set
-    * bits, exactly that bucket's files read, in 1 task). */
+    * Driver route, when the catalog names an unpartitioned parquet
+    * table (not a view) bucketed on `key` alone, `key` is a string
+    * column and the bucket's files hold at most [[DriverReadMaxBytes]]:
+    * the catalog entry and one listing of the table location name the
+    * files, which are read on the driver under a parquet record filter
+    * on the key (the per-bucket sortBy makes its row-group and page
+    * statistics selective), and the rows come back as a local relation
+    * with the table's schema. `collect()` runs no Spark job. The frame
+    * is local: `inputFiles` is empty and there is no `_metadata`
+    * column. The listing is live, so files a writer adds behind the
+    * catalog's back show here before the scan's cached file index
+    * sees them.
+    *
+    * Otherwise Spark plans a plain filter on the table. Under a pure
+    * filter the autoBucketedScan rule turns the bucketed scan off
+    * (bucketing avoids no shuffle here), and on Spark 4.1 the
+    * non-bucketed scan still prunes files by the bucket set: one
+    * InChIKey reads one bucket as 1 task, where the forced bucketed
+    * scan planned one task per bucket. Pinned structurally in
+    * LookupSpec and SinksSpec (1 of N bucket-set bits, exactly that
+    * bucket's files read, in 1 task). */
   def lookupIndexed(spark: SparkSession, table: String, key: String,
                     value: String): DataFrame =
-    spark.table(table).filter(col(key) === value)
+    lookupIndexed(spark, table, key, value, DriverReadMaxBytes)
+
+  /** [[lookupIndexed]] with the driver route's byte bound as a
+    * parameter, so specs can run both routes on one table. */
+  private[graft] def lookupIndexed(spark: SparkSession, table: String, key: String,
+                                   value: String, driverMaxBytes: Long): DataFrame = {
+    val catalog = spark.sessionState.catalog
+    val resolver = spark.sessionState.conf.resolver
+    val driverRead = for {
+      ident <- scala.util.Try(spark.sessionState.sqlParser.parseTableIdentifier(table)).toOption
+      if value != null && !catalog.isTempView(ident) && catalog.tableExists(ident)
+      meta = catalog.getTableMetadata(ident)
+      if meta.tableType != CatalogTableType.VIEW && meta.partitionColumnNames.isEmpty &&
+        meta.provider.exists(_.equalsIgnoreCase("parquet"))
+      b <- meta.bucketSpec if b.bucketColumnNames.length == 1 && resolver(b.bucketColumnNames.head, key)
+      k <- meta.schema.find(f => resolver(f.name, key)) if k.dataType == StringType
+      location <- meta.storage.locationUri
+      // BucketingUtils.getBucketIdFromValue's expression, interpreted:
+      // its generated projection costs about 1 ms per call
+      bucket = HashPartitioning(Seq(Literal(value)), b.numBuckets).partitionIdExpression.eval()
+      dir = new Path(location)
+      files = dataFiles(dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
+        .filter(f => BucketingUtils.getBucketId(f.getPath.getName).contains(bucket))
+      df <- readOnDriver(spark, files.map(_ -> Nil), meta.schema, k.name, value, driverMaxBytes)
+    } yield df
+    driverRead.getOrElse(spark.table(table).filter(col(key) === value))
+  }
+
+  /** The files a Spark file scan of `dir` reads: visible and non-empty.
+    * Throws FileNotFoundException when `dir` is gone. */
+  private def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.filter(s => s.isFile && s.getLen > 0 && !graft.Tables.hidden(s.getPath.getName))
+
+  /** The rows of `files` whose `key` column equals `value`, read on the
+    * driver and returned as a local relation of `schema`. Each file
+    * pairs with its constants (partition values), which fill the last
+    * columns of `schema`; the leading columns are read from the file by
+    * name, null where the file lacks one, as Spark's scan reads them.
+    * The parquet record filter on `key` skips row groups by statistics
+    * and dictionaries and pages by column index, and each surviving
+    * row is checked against `value` again. None, and the caller scans,
+    * when the files hold more than `maxBytes`, or a column is not a
+    * bigint, double or string stored as such. Every file is opened
+    * through [[graft.Tables.openParquet]]. */
+  private def readOnDriver(spark: SparkSession, files: Seq[(FileStatus, Seq[Any])],
+                           schema: StructType, key: String, value: Any,
+                           maxBytes: Long): Option[DataFrame] = {
+    import PrimitiveType.PrimitiveTypeName.{BINARY, DOUBLE, INT64}
+    val data = schema.fields.dropRight(files.headOption.fold(0)(_._2.length))
+    val physical = data.map(_.dataType match {
+      case LongType => Some(INT64)
+      case DoubleType => Some(DOUBLE)
+      case StringType => Some(BINARY)
+      case _ => None
+    })
+    if (files.map(_._1.getLen).sum > maxBytes || key.contains('.') || physical.contains(None))
+      return None
+    val filter = FilterCompat.get(value match {
+      case v: Long => FilterApi.eq(FilterApi.longColumn(key), java.lang.Long.valueOf(v))
+      case v: String => FilterApi.eq(FilterApi.binaryColumn(key), Binary.fromString(v))
+    })
+    val keySlot = data.indexWhere(_.name == key)
+    val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
+    val decoded = files.forall { case (st, constants) =>
+      val reader = graft.Tables.openParquet(spark, st, filter)
+      try {
+        val fileSchema = reader.getFooter.getFileMetaData.getSchema
+        val names = fileSchema.getFields.asScala.map(_.getName).toSet
+        def field(i: Int) = fileSchema.getType(fileSchema.getFieldIndex(data(i).name))
+        val slots = data.indices.filter(i => names.contains(data(i).name))
+        val decodable = data.forall(f => names.contains(f.name) || !names.exists(_.equalsIgnoreCase(f.name))) &&
+          slots.forall { i =>
+            val t = field(i)
+            val annotation = t.getLogicalTypeAnnotation
+            t.isPrimitive && !t.isRepetition(Type.Repetition.REPEATED) &&
+              physical(i).contains(t.asPrimitiveType.getPrimitiveTypeName) &&
+              (annotation == null ||
+                data(i).dataType == StringType && annotation == LogicalTypeAnnotation.stringType())
+          }
+        if (decodable && slots.contains(keySlot)) {
+          val requested = new MessageType(fileSchema.getName,
+            slots.map(field): _*)
+          reader.setRequestedSchema(requested)
+          val io = new ColumnIOFactory(reader.getFooter.getFileMetaData.getCreatedBy)
+            .getColumnIO(requested, fileSchema, true)
+          var pages = reader.readNextFilteredRowGroup()
+          while (pages != null) {
+            val records = io.getRecordReader(pages, new SlotMaterializer(slots, data.length), filter)
+            var n = 0L
+            while (n < pages.getRowCount) {
+              val r = records.read()
+              if (r != null && !records.shouldSkipCurrentRecord && r(keySlot) == value)
+                rows += Row.fromSeq(r.toSeq ++ constants)
+              n += 1
+            }
+            pages = reader.readNextFilteredRowGroup()
+          }
+        }
+        decodable
+      } finally reader.close()
+    }
+    if (decoded) Some(spark.createDataFrame(rows.asJava, schema)) else None
+  }
+
+  /** Materializes one parquet record of a driver read: field `j` of the
+    * requested schema lands in slot `slots(j)` of a `width`-wide array,
+    * and a slot no field fills stays null. */
+  private final class SlotMaterializer(slots: IndexedSeq[Int], width: Int)
+      extends RecordMaterializer[Array[Any]] {
+    private var current: Array[Any] = _
+    private val root = new GroupConverter {
+      private val fields: IndexedSeq[Converter] = slots.map(slot => new PrimitiveConverter {
+        override def addLong(v: Long): Unit = current(slot) = v
+        override def addDouble(v: Double): Unit = current(slot) = v
+        override def addBinary(v: Binary): Unit = current(slot) = v.toStringUsingUTF8
+      })
+      override def getConverter(i: Int): Converter = fields(i)
+      override def start(): Unit = current = new Array[Any](width)
+      override def end(): Unit = ()
+    }
+    override def getCurrentRecord: Array[Any] = current
+    override def getRootConverter: GroupConverter = root
+  }
 
   /** Manifest rows above which neither the skip set nor the span
     * index is held on the driver: beyond it, pending files come from a

@@ -196,9 +196,10 @@ class SinksSpec extends AnyFunSuite {
     assert(Warehouse.lookup(spark, wh, 999999L).isEmpty)
     // key inside a span but absent from the file: empty after the scan
     assert(Warehouse.lookup(spark, wh, 34519L).isEmpty)
-    // the scale contract: the pruned scan reads only the spanning
-    // partition and pushes the pk filter
-    val plan = Warehouse.lookup(spark, wh, 34517L)
+    // the scale contract past the driver route's byte bound: the
+    // pruned scan reads only the spanning partition and pushes the pk
+    // filter
+    val plan = Warehouse.lookup(spark, wh, 34517L, graft.sources.LayoutSpec.default, -1L)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     assert(plan.contains("PartitionFilters") && plan.contains("src_filename"),
@@ -219,10 +220,13 @@ class SinksSpec extends AnyFunSuite {
     assert(rows.length == 1 && rows(0).getAs[Long]("cid") == 34517L)
     assert(Warehouse.lookupIndexed(spark, "graft_ik_spec_table", "InChIKey",
       "NOSUCHKEYAAAAA-UHFFFAOYSA-N").isEmpty)
-    // the scale contract: the scan's bucket set selects ONE of the 4
-    // buckets and reads only that bucket's files, in one task —
-    // corpus/N read, not a corpus scan
-    LookupSpec.assertOneBucketOneTask(spark, hit, s"$wh/bucketed_graft_ik_spec_table", buckets = 4)
+    // the scale contract past the driver route's byte bound: the
+    // scan's bucket set selects ONE of the 4 buckets and reads only
+    // that bucket's files, in one task — corpus/N read, not a corpus
+    // scan
+    LookupSpec.assertOneBucketOneTask(spark,
+      Warehouse.lookupIndexed(spark, "graft_ik_spec_table", "InChIKey", key, -1L),
+      s"$wh/bucketed_graft_ik_spec_table", buckets = 4)
   }
 
   test("jdbc sink: Derby round-trip with post-load indexes") {
