@@ -43,6 +43,8 @@ echo "[preflight] DuckDB oracle compare..."
 python3 scripts/check_oracle.py "$SMOKE_SF" "$OUT/verify"
 
 echo "[preflight] OK — suite green, registry smoke green."
+# ROADMAP aim 2 tracks the size of the library the way it tracks the suite
+echo "[preflight] src/main Scala LoC: $(find src/main -name '*.scala' -exec cat {} + | wc -l)"
 
 if [[ -n "$COMMIT_MSG" ]]; then
   git add -A

@@ -30,10 +30,10 @@ object Catalog {
     * parquet path). Absent tables are skipped, not errors — state
     * exists only after its producing operator has run. */
   private def stateTables: Seq[(String, String)] = Seq(
-    "graft_cluster_labels" -> operators.Curation.ClusterLabelStagePath,
-    "graft_split_sides" -> operators.Curation.SplitSidesPath,
-    "graft_tfidf_state" -> operators.Curation.TfidfStatePath,
-    "graft_ngram_freq_state" -> operators.TextOps.NgramFreqStatePath)
+    "graft_cluster_labels" -> operators.Curation.ClusterLabels.path,
+    "graft_split_sides" -> operators.Curation.SplitSides.path,
+    "graft_tfidf_state" -> operators.Curation.TfidfState.path,
+    "graft_ngram_freq_state" -> operators.TextOps.NgramFreqState.path)
 
   /** Register the sf corpus tables (those present under `sfDir`),
     * the compounds warehouse (live table + ingest manifest) when

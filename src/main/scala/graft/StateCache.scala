@@ -15,12 +15,13 @@ import org.apache.spark.sql.SparkSession
   * is handed the superseded value, for callers that release what it
   * holds (a temp-dir index deletes its superseded posting lists).
   *
-  * Derived state names what it reads ([[derived]], [[stage]]): the
-  * cache versions it on each read path's listing [[identity]], plus
-  * any non-file parameter that changes it. A staging that reads
-  * another staging's output first calls that upstream (which stages
-  * it if needed) and names the upstream's output path, so a re-stage
-  * upstream moves every downstream version with it.
+  * Derived state names what it reads ([[stage]], [[superseding]]):
+  * the cache versions it on each read path's listing [[identity]],
+  * plus any non-file parameter that changes it. A staged corpus table
+  * ([[Staged]]) names the stagings it reads rather than their output
+  * paths: its version carries the versions they were staged at, so a
+  * re-stage upstream moves every downstream version with it, and one
+  * call lists each source table once.
   *
   * A scope is the JVM or one `SparkSession`; session-scoped values
   * (DataFrames, which are bound to their session) are dropped on the
@@ -49,9 +50,11 @@ object StateCache {
   /** A listing's identity (name:len:mtime per file): the version of
     * everything derived from those files. Every Spark write names its
     * part files afresh, so an overwrite moves the identity even when
-    * it writes the same rows. The one accepted residual: a non-Spark
+    * it writes the same rows. The accepted residuals: a non-Spark
     * writer that rewrites a file in place under the same name, length
-    * and mtime goes unseen. */
+    * and mtime goes unseen, and so does a [[Staged]] output rewritten
+    * by anything other than its own staging (downstream versions carry
+    * the upstream's version, not its output listing). */
   private[graft] def identity(listing: Seq[FileStatus]): String =
     listing.map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
       .sorted.mkString("|")
@@ -60,19 +63,16 @@ object StateCache {
   def apply[V](artifact: Any, version: Any)(build: => V): V =
     lookup[V](None, artifact, version)(_ => build)
 
-  /** The value of `artifact` derived from the files at `reads` and
-    * from `params`, built once per version: each read's path and
-    * listing identity, plus `params`. */
-  def derived[V](spark: SparkSession, artifact: Any, reads: Seq[String], params: Any = ())
-                (build: => V): V =
-    lookup[V](None, artifact, versionOf(spark, reads, params))(_ => build)
-
-  /** [[derived]] for staging bodies run only for their side effect. */
+  /** Run `body` for `artifact` once per version of the files at
+    * `reads` and of `params`: each read's path and listing identity,
+    * plus `params`. */
   def stage(spark: SparkSession, artifact: Any, reads: Seq[String], params: Any = ())
            (body: => Unit): Unit =
-    derived[Unit](spark, artifact, reads, params)(body)
+    lookup[Unit](None, artifact, versionOf(spark, reads, params))(_ => body)
 
-  /** [[derived]] whose build receives the superseded value, if any. */
+  /** The value of `artifact` built from the files at `reads`, once per
+    * version as in [[stage]]; its build receives the superseded value,
+    * if any. */
   def superseding[V](spark: SparkSession, artifact: Any, reads: Seq[String])
                     (build: Option[V] => V): V =
     lookup[V](None, artifact, versionOf(spark, reads, ()))(build)

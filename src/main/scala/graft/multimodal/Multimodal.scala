@@ -766,8 +766,7 @@ object Multimodal {
     * (process-unique; must outlive this JVM for the driver's
     * post-exit oracle run; that file's creation-time GC already
     * bounds accumulation for both stage roots). */
-  val FeatureStagePath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "media_features.parquet"
+  val FeatureStagePath: String = graft.Staged.at("media_features.parquet")
 
   private val MediaCount = 500
 

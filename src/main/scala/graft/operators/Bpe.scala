@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, Staged, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,8 +32,8 @@ import org.apache.spark.sql.functions._
   *    convention) collapsed to word counts, learned driver-side in
   *    milliseconds; the PQ-codebook pattern (constant-size training
   *    input regardless of corpus size).
-  *  - The MERGES TABLE is persisted once per corpus version
-  *    (fingerprint-keyed like the minhash sketch) — ≤ [[BpeMerges]]
+  *  - The MERGES TABLE ([[MergeTable]]) is staged once per corpus
+  *    version, like the minhash sketch — ≤ [[BpeMerges]]
   *    rows, broadcast-trivial; steady-state tokenization reads it,
   *    never retrains.
   *  - TOKENIZATION is one codegen'd projection over the scan — no
@@ -87,12 +87,6 @@ object Bpe {
     lower(regexp_replace(text, "[^A-Za-z0-9]+", " "))
   private val CleanedSql = "lower(regexp_replace(text, '[^A-Za-z0-9]+', ' ', 'g'))"
 
-  /** Where the merges table — (rank, lhs, rhs), rank 0-based — is
-    * persisted, fingerprint-keyed per corpus version (the minhash
-    * sketch's lifecycle). */
-  val BpeMergesStagePath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "bpe_merges.parquet"
-
   /** Learn ≤ `maxMerges` merges from weighted word counts — the
     * classic BPE loop: count adjacent symbol pairs (weighted by word
     * frequency; overlapping positions each count, the standard
@@ -142,38 +136,34 @@ object Bpe {
     out.toArray
   }
 
-  /** Stage (once per corpus version) and read the merges table. The
-    * sample is the first [[BpeSampleDocs]] documents in the md5
-    * permutation order (TakeOrderedAndProject — never a corpus
-    * sort), collapsed to word counts before collecting (vocabulary-
-    * bounded, ≪ sample text volume). */
-  def bpeMergesTable(spark: SparkSession, dir: String): DataFrame = {
-    graft.StateCache.stage(spark, "Bpe.merges", Seq(Tables.path(dir, "documents"))) {
-      val docs = Tables.documents(spark, dir)
-      val wordCounts = docs
-        .select(col("doc_id"), cleanedCol(col("text")).as("c"))
-        .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
-        .limit(BpeSampleDocs)
-        .select(explode(split(col("c"), " ")).as("w"))
-        .filter(length(col("w")) > 0)
-        .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq
-      val merges = trainMerges(wordCounts, BpeMerges)
-      import spark.implicits._
-      merges.zipWithIndex
-        .map { case ((l, r), rank) => (rank, l, r) }
-        .toDF("rank", "lhs", "rhs")
-        .coalesce(1).write.mode("overwrite").parquet(BpeMergesStagePath)
-    }
-    graft.Tables.parquetCached(spark, BpeMergesStagePath)
+  /** The merges table — (rank, lhs, rhs), rank 0-based — staged once
+    * per corpus version. The sample is the first [[BpeSampleDocs]]
+    * documents in the md5 permutation order (TakeOrderedAndProject —
+    * never a corpus sort), collapsed to word counts before collecting
+    * (vocabulary-bounded, ≪ sample text volume). */
+  val MergeTable: Staged = Staged("bpe_merges.parquet") { c =>
+    val wordCounts = c.docs
+      .select(col("doc_id"), cleanedCol(col("text")).as("c"))
+      .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
+      .limit(BpeSampleDocs)
+      .select(explode(split(col("c"), " ")).as("w"))
+      .filter(length(col("w")) > 0)
+      .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
+      .collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
+    val merges = trainMerges(wordCounts, BpeMerges)
+    import c.spark.implicits._
+    merges.zipWithIndex
+      .map { case ((l, r), rank) => (rank, l, r) }
+      .toDF("rank", "lhs", "rhs")
+      .coalesce(1).write.mode("overwrite").parquet(MergeTable.path)
   }
 
   /** The staged merges as a rank-ordered driver-side list — ≤
     * [[BpeMerges]] rows, the bounded collect class (centroids,
     * codebooks). */
   private[graft] def mergesList(spark: SparkSession, dir: String): Seq[(String, String)] =
-    bpeMergesTable(spark, dir).orderBy(col("rank")).collect()
+    MergeTable.table(spark, dir).orderBy(col("rank")).collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
 
   /** REFERENCE form: token count as a fold of literal `replace`
@@ -248,7 +238,7 @@ object Bpe {
     * [[SubVocabRanks]] prefix — one recursion, two read points. */
   private[graft] lazy val bpeTokenCtes: String =
     s"""m AS (
-       |  SELECT rank, lhs, rhs FROM read_parquet('$BpeMergesStagePath/*.parquet')
+       |  SELECT rank, lhs, rhs FROM read_parquet('${MergeTable.path}/*.parquet')
        |), nm AS (SELECT COUNT(*) AS n FROM m
        |), dc AS (
        |  SELECT doc_id, $CleanedSql AS c FROM documents

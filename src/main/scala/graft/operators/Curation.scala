@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Exact, GraftQuery, Tables}
+import graft.{Exact, GraftQuery, Staged, Tables}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -30,10 +30,12 @@ object Curation {
     * loop of ~15 Spark jobs), not of a deployment. */
   val DriverClosureMaxEdges: Long = 1L << 19
 
-  /** Round cap of the distributed route past [[DriverClosureMaxEdges]]:
-    * with pointer jumping it covers ascending-id chains to ~2^20
-    * vertices (see [[connectedComponents]] for the chains it does not
-    * cover). */
+  /** Round cap of the distributed route past [[DriverClosureMaxEdges]].
+    * What it is known to cover: chains whose ids ascend along them, to
+    * ~2^20 vertices, because pointer jumping halves their
+    * distance-to-root each round. Other shapes are not covered: a
+    * 100-vertex chain in shuffled id order does not converge within
+    * it (see [[connectedComponents]]). */
   private val PropagateMaxRounds: Int = 20
 
   /** Minimum-label connected components over an (a, b) edge list:
@@ -88,8 +90,9 @@ object Curation {
         s"connectedComponents: ${seen("nulls")} edges with a null vertex id")
     require(ck.schema.forall(_.dataType == LongType),
       s"connectedComponents takes bigint vertex ids, got ${ck.schema.simpleString}")
-    if (seen("n").asInstanceOf[Long] <= driverMaxEdges) closeOnDriver(ck)
-    else propagate(ck)
+    val n = seen("n").asInstanceOf[Long]
+    if (n <= driverMaxEdges) closeOnDriver(ck)
+    else propagate(ck, n)
   }
 
   /** Union-find over the checkpointed bigint edges: vertex ids are
@@ -128,7 +131,7 @@ object Curation {
 
   /** The distributed route of [[connectedComponents]]: pointer-jumping
     * label propagation over the checkpointed edges. */
-  private def propagate(ck: DataFrame): DataFrame = {
+  private def propagate(ck: DataFrame, edges: Long): DataFrame = {
     // Both edge directions come from a single explode over the
     // checkpointed edges, checkpointed in turn: every round (and
     // every reference within a round — seed aggregate, neighbor join,
@@ -186,13 +189,13 @@ object Curation {
     }
     // fail loudly: returning a partial fixpoint would silently emit
     // wrong cluster roots (and diverge from the exact recursive-CTE
-    // oracle). With pointer jumping the cap covers diameters to
-    // ~2^PropagateMaxRounds, so tripping it signals a regression,
-    // not data.
+    // oracle). The cap is known to cover ascending-id chains only, so
+    // tripping it may be the data's shape, not a regression.
     if (!converged)
       throw new IllegalStateException(
-        s"connectedComponents did not converge in $PropagateMaxRounds doubling rounds " +
-          s"(covers component diameters to ~2^$PropagateMaxRounds) — logic regression likely")
+        s"connectedComponents did not converge in $PropagateMaxRounds pointer-jumping rounds " +
+          s"over $edges edges: the cap covers chains whose ids ascend along them, to " +
+          s"~2^$PropagateMaxRounds vertices, not long chains in other id orders")
     labels
   }
 
@@ -205,7 +208,7 @@ object Curation {
     * keep/drop decision. */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
     // Pair signals come from the MATERIALIZED routed list (staged
-    // once per corpus by Dedup.clusterPairSignal — exact ngram below
+    // once per corpus by Dedup.ClusterSignal — exact ngram below
     // the grid's disk-budget line, the minhash sweep above it), not
     // a recomputation of the pair pipeline: pair generation is the
     // generating entry's priced work, and a pipeline that re-derived
@@ -215,7 +218,7 @@ object Curation {
     // recursive CTE reads the same staged parquet). DedupSpec pins
     // staged == live-pipeline equality, and CurationSpec pins the
     // composed form (live pairs → components) against this entry.
-    val pairs = Dedup.clusterPairSignal(spark, dir)
+    val pairs = Dedup.ClusterSignal.table(spark, dir)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
     connectedComponents(pairs)
       .select(col("v").as("doc_id"), col("lab").as("cluster_root"))
@@ -228,7 +231,7 @@ object Curation {
   private lazy val dedupClustersSql: String =
     s"""WITH RECURSIVE pairs AS (
        |  SELECT doc_a, doc_b
-       |  FROM read_parquet('${Dedup.ClusterSignalStagePath}/*.parquet')
+       |  FROM read_parquet('${Dedup.ClusterSignal.path}/*.parquet')
        |), sym AS MATERIALIZED (
        |  SELECT doc_a AS a, doc_b AS b FROM pairs
        |  UNION SELECT doc_b, doc_a FROM pairs
@@ -242,37 +245,26 @@ object Curation {
 
   // ---- dedup_clusters_incremental: fold fresh pairs into persisted labels ----
 
-  /** Where the corpus COMPONENT LABELS — (doc_id, cluster_root) over
-    * the OLD corpus's pair graph (pairs with doc_b below the
-    * incremental split) — are persisted, versioned on the documents
-    * and the staged cluster signal. This is the nightly pipeline's carried
-    * state: component resolution over yesterday's pairs is paid once
-    * per corpus version, and each fresh crawl folds its new pairs
-    * into these labels instead of recomputing the closure over the
-    * whole pair history. */
-  val ClusterLabelStagePath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "cluster_labels.parquet"
-
-  /** Read (staging if this corpus version is not yet built) the
-    * persisted old-corpus component labels. Built from the SAME
-    * staged pair list the full entry resolves (restricted to old-old
-    * pairs: doc_a < doc_b, so "doc_b below the split" is exactly
-    * "neither endpoint is fresh"). */
-  def clusterLabelsTable(spark: SparkSession, dir: String): DataFrame = {
-    Dedup.stageClusterSignal(spark, dir)
-    graft.StateCache.stage(spark, "Curation.labels",
-        Seq(Tables.path(dir, "documents"), Dedup.ClusterSignalStagePath)) {
-      val split = Dedup.incrementalSplit(Tables.documents(spark, dir))
-        .getOrElse(Long.MaxValue)
-      val oldPairs = Dedup.clusterPairSignal(spark, dir)
+  /** The corpus COMPONENT LABELS — (doc_id, cluster_root) over the
+    * OLD corpus's pair graph (pairs with doc_b below the incremental
+    * split), staged once per version of the documents and the cluster
+    * signal. This is the nightly pipeline's carried state: component
+    * resolution over yesterday's pairs is paid once per corpus
+    * version, and each fresh crawl folds its new pairs into these
+    * labels instead of recomputing the closure over the whole pair
+    * history. Built from the SAME staged pair list the full entry
+    * resolves (restricted to old-old pairs: doc_a < doc_b, so "doc_b
+    * below the split" is exactly "neither endpoint is fresh"). */
+  val ClusterLabels: Staged =
+    Staged("cluster_labels.parquet", upstream = _ => Seq(Dedup.ClusterSignal)) { c =>
+      val split = Dedup.incrementalSplit(c.docs).getOrElse(Long.MaxValue)
+      val oldPairs = c.read(Dedup.ClusterSignal)
         .filter(col("doc_b") < lit(split))
         .select(col("doc_a").as("a"), col("doc_b").as("b"))
       connectedComponents(oldPairs)
         .select(col("v").as("doc_id"), col("lab").as("cluster_root"))
-        .write.mode("overwrite").parquet(ClusterLabelStagePath)
+        .write.mode("overwrite").parquet(ClusterLabels.path)
     }
-    graft.Tables.parquetCached(spark, ClusterLabelStagePath)
-  }
 
   /** Incremental cluster maintenance (VERDICT r11 item 3): fold the
     * fresh crawl's near-dup pairs into the PERSISTED component
@@ -303,8 +295,8 @@ object Curation {
   def dedupClustersIncremental(spark: SparkSession, dir: String): DataFrame = {
     val split = Dedup.incrementalSplit(Tables.documents(spark, dir))
       .getOrElse(Long.MaxValue)
-    val labels = clusterLabelsTable(spark, dir)
-    val slicePairs = Dedup.clusterPairSignal(spark, dir)
+    val labels = ClusterLabels.table(spark, dir)
+    val slicePairs = Dedup.ClusterSignal.table(spark, dir)
       .filter(col("doc_b") >= lit(split))
       .select(col("doc_a"), col("doc_b"))
     // contract: endpoint -> persisted root (itself when unlabeled).
@@ -339,7 +331,7 @@ object Curation {
   private lazy val dedupClustersIncrementalSql: String =
     s"""WITH RECURSIVE pairs AS (
        |  SELECT doc_a, doc_b
-       |  FROM read_parquet('${Dedup.ClusterSignalStagePath}/*.parquet')
+       |  FROM read_parquet('${Dedup.ClusterSignal.path}/*.parquet')
        |), s AS (SELECT MAX(doc_id) * 9 // 10 AS v FROM documents
        |), sym AS MATERIALIZED (
        |  SELECT doc_a AS a, doc_b AS b FROM pairs
@@ -602,31 +594,18 @@ object Curation {
       .orderBy(col("doc_id"), col("term_rank"))
   }
 
-  /** Where the OLD corpus's per-doc term counts — (doc_id, term, tf)
-    * — are persisted, fingerprint-keyed. Term counts over DISJOINT
-    * doc sets are ADDITIVE, which is what makes tf/idf exactly
+  /** The OLD corpus's per-doc term counts — (doc_id, term, tf) —
+    * staged once per corpus version. Term counts over DISJOINT doc
+    * sets are ADDITIVE, which is what makes tf/idf exactly
     * incrementalizable: the fresh slice's counts union with the
     * persisted table and every downstream number (df, n_docs,
     * scores, ranks) is identical to the full recompute. */
-  val TfidfStatePath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "tfidf_tf.parquet"
-
-  /** Read (staging once per corpus version) the persisted old-corpus
-    * (doc_id, term, tf) table. */
-  def tfidfStateTable(spark: SparkSession, dir: String): DataFrame = {
-    stageTfidfState(spark, dir)
-    graft.Tables.parquetCached(spark, TfidfStatePath)
+  val TfidfState: Staged = Staged("tfidf_tf.parquet") { c =>
+    val split = Dedup.incrementalSplit(c.docs).getOrElse(Long.MaxValue)
+    TextOps.whitespaceTokens(c.docs.filter(col("doc_id") < lit(split)))
+      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
+      .write.mode("overwrite").parquet(TfidfState.path)
   }
-
-  /** Stage [[tfidfStateTable]] at [[TfidfStatePath]]. */
-  private[graft] def stageTfidfState(spark: SparkSession, dir: String): Unit =
-    graft.StateCache.stage(spark, "Curation.tfidf", Seq(Tables.path(dir, "documents"))) {
-      val docs = Tables.documents(spark, dir)
-      val split = Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
-      TextOps.whitespaceTokens(docs.filter(col("doc_id") < lit(split)))
-        .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-        .write.mode("overwrite").parquet(TfidfStatePath)
-    }
 
   /** Corpus DRIFT monitor — the release-gating signal a pipeline
     * checks before shipping a grown corpus: which terms' rates moved
@@ -642,7 +621,7 @@ object Curation {
   def corpusDrift(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val split = Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
-    val old = tfidfStateTable(spark, dir)
+    val old = TfidfState.table(spark, dir)
       .groupBy(col("term")).agg(sum(col("tf")).as("old_n"))
     val fresh = TextOps.whitespaceTokens(docs.filter(col("doc_id") >= lit(split)))
       .groupBy(col("term")).agg(count(lit(1)).as("fresh_n"))
@@ -704,7 +683,7 @@ object Curation {
     val split = Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
     val freshTf = TextOps.whitespaceTokens(docs.filter(col("doc_id") >= lit(split)))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-    tfidfFrom(tfidfStateTable(spark, dir).unionByName(freshTf), docs)
+    tfidfFrom(TfidfState.table(spark, dir).unionByName(freshTf), docs)
   }
 
   private val tfidfTopTermsSql: String =
@@ -1140,7 +1119,7 @@ object Curation {
        |    FROM q) t WHERE rk = 1
        |), pairs AS (
        |  SELECT doc_a, doc_b
-       |  FROM read_parquet('${Dedup.ClusterSignalStagePath}/*.parquet')
+       |  FROM read_parquet('${Dedup.ClusterSignal.path}/*.parquet')
        |), sym AS MATERIALIZED (
        |  SELECT doc_a AS a, doc_b AS b FROM pairs
        |  UNION SELECT doc_b, doc_a FROM pairs
@@ -1182,7 +1161,7 @@ object Curation {
     * or a second engine reproduces the split bit-for-bit. */
   def splitLeakageFree(spark: SparkSession, dir: String): DataFrame = {
     val labels = connectedComponents(
-      Dedup.clusterPairSignal(spark, dir)
+      Dedup.ClusterSignal.table(spark, dir)
         .select(col("doc_a").as("a"), col("doc_b").as("b")))
       .select(col("v").as("doc_id"), col("lab").as("root"))
     val withRoot = Tables.documents(spark, dir).select(col("doc_id"))
@@ -1200,7 +1179,7 @@ object Curation {
   private lazy val splitLeakageFreeSql: String =
     s"""WITH RECURSIVE pairs AS (
        |  SELECT doc_a, doc_b
-       |  FROM read_parquet('${Dedup.ClusterSignalStagePath}/*.parquet')
+       |  FROM read_parquet('${Dedup.ClusterSignal.path}/*.parquet')
        |), sym AS MATERIALIZED (
        |  SELECT doc_a AS a, doc_b AS b FROM pairs
        |  UNION SELECT doc_b, doc_a FROM pairs
@@ -1219,44 +1198,24 @@ object Curation {
        |FROM documents d LEFT JOIN roots r ON d.doc_id = r.doc_id
        |ORDER BY d.doc_id""".stripMargin
 
-  /** Where the OLD corpus's split sides — (doc_id, side) under
-    * [[splitLeakageFree]]'s rule restricted to old-old pairs — are
-    * persisted, versioned on the documents and the staged cluster
-    * signal. This is the carried state a
-    * release pipeline must respect: a doc that shipped in val must
-    * not silently move to train next release (the trained model's
-    * eval would quietly become contaminated-by-history). */
-  val SplitSidesPath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "split_sides.parquet"
-
-  /** Read (staging once per corpus version) the persisted old-corpus
-    * split sides: component roots over the OLD-OLD pair subgraph
-    * (doc_b below the incremental split implies both endpoints are),
-    * md5(root) side rule, singletons to themselves. */
-  def splitSidesTable(spark: SparkSession, dir: String): DataFrame = {
-    stageSplitSides(spark, dir)
-    graft.Tables.parquetCached(spark, SplitSidesPath)
-  }
-
-  /** Stage [[splitSidesTable]] at [[SplitSidesPath]]. */
-  private[graft] def stageSplitSides(spark: SparkSession, dir: String): Unit = {
-    Dedup.stageClusterSignal(spark, dir)
-    graft.StateCache.stage(spark, "Curation.splitSides",
-        Seq(Tables.path(dir, "documents"), Dedup.ClusterSignalStagePath)) {
-      val docs = Tables.documents(spark, dir)
-      val split = Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
-      val oldLabels = connectedComponents(
-        Dedup.clusterPairSignal(spark, dir).filter(col("doc_b") < lit(split))
-          .select(col("doc_a").as("a"), col("doc_b").as("b")))
-        .select(col("v").as("doc_id"), col("lab").as("root"))
-      val withRoot = docs.filter(col("doc_id") < lit(split)).select(col("doc_id"))
-        .join(oldLabels, Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("root"), col("doc_id")).as("r"))
-      val prefix = conv(substring(md5(col("r").cast("string")), 1, 8), 16, 10).cast("long")
-      withRoot
-        .select(col("doc_id"), when(prefix % 10 < 9, "train").otherwise("val").as("side"))
-        .write.mode("overwrite").parquet(SplitSidesPath)
-    }
+  /** The OLD corpus's split sides — (doc_id, side) under
+    * [[splitLeakageFree]]'s rule restricted to old-old pairs — staged
+    * once per version of the documents and the cluster signal: the
+    * md5(root) side rule over the staged [[ClusterLabels]] (the
+    * components of the OLD-OLD pair subgraph), singletons to
+    * themselves. This is the carried state a release pipeline must
+    * respect: a doc that shipped in val must not silently move to
+    * train next release (the trained model's eval would quietly
+    * become contaminated-by-history). */
+  val SplitSides: Staged = Staged("split_sides.parquet", upstream = _ => Seq(ClusterLabels)) { c =>
+    val split = Dedup.incrementalSplit(c.docs).getOrElse(Long.MaxValue)
+    val withRoot = c.docs.filter(col("doc_id") < lit(split)).select(col("doc_id"))
+      .join(c.read(ClusterLabels), Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("cluster_root"), col("doc_id")).as("r"))
+    val prefix = conv(substring(md5(col("r").cast("string")), 1, 8), 16, 10).cast("long")
+    withRoot
+      .select(col("doc_id"), when(prefix % 10 < 9, "train").otherwise("val").as("side"))
+      .write.mode("overwrite").parquet(SplitSides.path)
   }
 
   /** STICKY split maintenance for a grown corpus — the release-time
@@ -1277,9 +1236,9 @@ object Curation {
     * all-fresh clusters, the pair property, and a constructed
     * cross-side merge raising the flag. */
   def splitLeakageFreeIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val old = splitSidesTable(spark, dir)
+    val old = SplitSides.table(spark, dir)
     val labels = connectedComponents(
-      Dedup.clusterPairSignal(spark, dir)
+      Dedup.ClusterSignal.table(spark, dir)
         .select(col("doc_a").as("a"), col("doc_b").as("b")))
       .select(col("v").as("doc_id"), col("lab").as("root"))
     val withRoot = Tables.documents(spark, dir).select(col("doc_id"))
@@ -1311,7 +1270,7 @@ object Curation {
   private lazy val splitLeakageFreeIncrementalSql: String =
     s"""WITH RECURSIVE pairs AS (
        |  SELECT doc_a, doc_b
-       |  FROM read_parquet('${Dedup.ClusterSignalStagePath}/*.parquet')
+       |  FROM read_parquet('${Dedup.ClusterSignal.path}/*.parquet')
        |), sym AS MATERIALIZED (
        |  SELECT doc_a AS a, doc_b AS b FROM pairs
        |  UNION SELECT doc_b, doc_a FROM pairs
@@ -1325,7 +1284,7 @@ object Curation {
        |  SELECT d.doc_id, COALESCE(r.root, d.doc_id) AS cluster_root
        |  FROM documents d LEFT JOIN roots r ON d.doc_id = r.doc_id
        |), old AS (
-       |  SELECT doc_id, side FROM read_parquet('$SplitSidesPath/*.parquet')
+       |  SELECT doc_id, side FROM read_parquet('${SplitSides.path}/*.parquet')
        |), reps AS (
        |  SELECT w.cluster_root, min_by(o.side, o.doc_id) AS old_side
        |  FROM wr w JOIN old o ON w.doc_id = o.doc_id

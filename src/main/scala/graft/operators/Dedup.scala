@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, Staged, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
@@ -965,7 +965,7 @@ object Dedup {
     // way (spec-pinned).
     val (hashed, sketch) = bRestrict match {
       case Some(_) =>
-        val sk = minhashSketchTable(spark, dir).select(col("doc_id"), col("ghs"), col("n"))
+        val sk = MinhashSketch.table(spark, dir).select(col("doc_id"), col("ghs"), col("n"))
         (sk, org.apache.spark.util.sketch.CountMinSketch.readFrom(
           java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(ShingleCmsPath))))
       case None =>
@@ -1235,35 +1235,51 @@ object Dedup {
     if (shuffle) bands.repartition(p, col("band"), col("bh")) else bands
   }
 
-  /** Where the corpus minhash SKETCH TABLE — (doc_id, ghs, n, sig),
-    * the per-document hashed shingle set plus its 64-perm signature
-    * — is persisted, versioned on the documents table's listing
-    * (StateCache.identity). This is the "signatures persisted
-    * alongside the corpus" column BASELINE.md promised: the
-    * steady-state incremental operator READS it instead of re-sketching the
-    * full corpus every run, so the nightly cost is slice-sized
-    * sketching + the banded join + candidate verification against
-    * persisted arrays. At warehouse scale this lives next to the
-    * manifest as a bucketed-by-doc_id table; here it shares the
-    * oracle stage-dir lifecycle. Build cost is paid once per corpus
-    * VERSION (regenerated/appended data moves the listing and
-    * re-stages) and is deterministic — the staged rows equal
-    * what any later live pipeline would compute, so consumers'
-    * outputs are identical either way (spec-pinned). */
-  val MinhashSketchPath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "minhash_sketch.parquet"
+  /** The corpus minhash SKETCH TABLE — (doc_id, ghs, n, sig), the
+    * per-document hashed shingle set plus its 64-perm signature. This
+    * is the "signatures persisted alongside the corpus" column
+    * BASELINE.md promised: the steady-state incremental operator READS
+    * it instead of re-sketching the full corpus every run, so the
+    * nightly cost is slice-sized sketching + the banded join +
+    * candidate verification against persisted arrays. At warehouse
+    * scale this lives next to the manifest as a bucketed-by-doc_id
+    * table; here it shares the oracle stage-dir lifecycle. Build cost
+    * is paid once per corpus VERSION (regenerated/appended data moves
+    * the listing and re-stages) and is deterministic — the staged rows
+    * equal what any later live pipeline would compute, so consumers'
+    * outputs are identical either way (spec-pinned).
+    *
+    * The same staging writes the corpus shingle-rarity count-min
+    * sketch at [[ShingleCmsPath]] (one corpus pass writes both). */
+  val MinhashSketch: Staged = Staged("minhash_sketch.parquet") { c =>
+    val hashed = sharedShingleArrays(c.docs)
+    // per-row kernel signature computed IN the write projection —
+    // one shingle pass, no signature shuffle, no build join at all
+    hashed
+      .select(col("doc_id"), col("ghs"), col("n"), rowMinhashSig(col("ghs")).as("sig"))
+      .write.mode("overwrite").parquet(MinhashSketch.path)
+    // CMS over the STAGED table, not the live pipeline: same
+    // counts (the staged rows ARE the pipeline's output), and the
+    // aggregate's input is a parquet scan instead of a second
+    // kernel pass
+    val cms = c.read(MinhashSketch)
+      .select(explode(col("ghs")).as("gh"))
+      .select(expr(s"count_min_sketch(gh, ${CmsParams._1}d, ${CmsParams._2}d, ${CmsParams._3})"))
+      .head.getAs[Array[Byte]](0)
+    java.nio.file.Files.write(java.nio.file.Paths.get(ShingleCmsPath), cms)
+  }
 
-  /** Where the corpus EXACT-HASH set — distinct md5(text) of every
-    * OLD-corpus document (below the incremental split) — is
-    * persisted, fingerprint-keyed like the sketch table. The exact-
-    * duplication twin of the minhash gate's state: the ingest-time
-    * exact gate is one stream-static anti join against it, ~32 B
-    * per distinct text at warehouse scale. */
-  val CorpusHashPath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "corpus_hashes.parquet"
+  /** The corpus shingle-rarity count-min sketch that [[MinhashSketch]]
+    * stages: the incremental ngram entry reads it instead of paying a
+    * corpus-wide aggregate per run. ~300 KB — a driver-side file
+    * read, not a data job. */
+  val ShingleCmsPath: String = Staged.at("shingle_cms.bin")
 
-  /** Read (building once per corpus version) the persisted old-corpus
-    * exact-hash set for `dir`.
+  /** The corpus EXACT-HASH set — md5(text) of every OLD-corpus
+    * document (below the incremental split) with its refcount. The
+    * exact-duplication twin of the minhash gate's state: the
+    * ingest-time exact gate is one stream-static anti join against
+    * it, ~32 B per distinct text at warehouse scale.
     *
     * The table carries a REFCOUNT (`cnt` = how many old docs share
     * the hash), not just the distinct set (round 17, for
@@ -1274,57 +1290,13 @@ object Dedup {
     * and takedown-sized: subtract the retracted docs' hash counts,
     * drop rows at zero. Every consumer joins on `h` only (the
     * stream gates' left_anti), so the extra column is free. */
-  def corpusHashTable(spark: SparkSession, dir: String): DataFrame = {
-    stageCorpusHashes(spark, dir)
-    graft.Tables.parquetCached(spark, CorpusHashPath)
+  val CorpusHashes: Staged = Staged("corpus_hashes.parquet") { c =>
+    val split = incrementalSplit(c.docs).getOrElse(Long.MaxValue)
+    c.docs.filter(col("doc_id") < lit(split))
+      .select(md5(col("text")).as("h"))
+      .groupBy(col("h")).agg(count(lit(1)).as("cnt"))
+      .write.mode("overwrite").parquet(CorpusHashes.path)
   }
-
-  /** Stage [[corpusHashTable]] at [[CorpusHashPath]]. */
-  private[graft] def stageCorpusHashes(spark: SparkSession, dir: String): Unit =
-    graft.StateCache.stage(spark, "Dedup.corpusHashes", Seq(Tables.path(dir, "documents"))) {
-      val docs = Tables.documents(spark, dir)
-      val split = incrementalSplit(docs).getOrElse(Long.MaxValue)
-      docs.filter(col("doc_id") < lit(split))
-        .select(md5(col("text")).as("h"))
-        .groupBy(col("h")).agg(count(lit(1)).as("cnt"))
-        .write.mode("overwrite").parquet(CorpusHashPath)
-    }
-
-  /** The corpus shingle-rarity count-min sketch, persisted next to
-    * the sketch table by the same staging (one corpus pass writes
-    * both): the incremental ngram entry reads it instead of paying
-    * a corpus-wide aggregate per run. ~300 KB — a driver-side file
-    * read, not a data job. */
-  val ShingleCmsPath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "shingle_cms.bin"
-
-  /** Read (building if this corpus version is not yet staged) the
-    * persisted sketch table for `dir`. */
-  def minhashSketchTable(spark: SparkSession, dir: String): DataFrame = {
-    stageMinhashSketch(spark, dir)
-    graft.Tables.parquetCached(spark, MinhashSketchPath)
-  }
-
-  /** Stage [[minhashSketchTable]] at [[MinhashSketchPath]], with the
-    * CMS at [[ShingleCmsPath]]. */
-  private[graft] def stageMinhashSketch(spark: SparkSession, dir: String): Unit =
-    graft.StateCache.stage(spark, "Dedup.sketch", Seq(Tables.path(dir, "documents"))) {
-      val hashed = sharedShingleArrays(Tables.documents(spark, dir))
-      // per-row kernel signature computed IN the write projection —
-      // one shingle pass, no signature shuffle, no build join at all
-      hashed
-        .select(col("doc_id"), col("ghs"), col("n"), rowMinhashSig(col("ghs")).as("sig"))
-        .write.mode("overwrite").parquet(MinhashSketchPath)
-      // CMS over the STAGED table, not the live pipeline: same
-      // counts (the staged rows ARE the pipeline's output), and the
-      // aggregate's input is a parquet scan instead of a second
-      // kernel pass
-      val cms = graft.Tables.parquetCached(spark, MinhashSketchPath)
-        .select(explode(col("ghs")).as("gh"))
-        .select(expr(s"count_min_sketch(gh, ${CmsParams._1}d, ${CmsParams._2}d, ${CmsParams._3})"))
-        .head.getAs[Array[Byte]](0)
-      java.nio.file.Files.write(java.nio.file.Paths.get(ShingleCmsPath), cms)
-    }
 
   /** Candidate pairs from banded buckets, verified with EXACT
     * Jaccard on the shingle sets — only candidates pay the
@@ -1368,7 +1340,7 @@ object Dedup {
     * and `dedup_semantic_incremental` (embedding/IVF).
     *
     * The a side reads the PERSISTED sketch table
-    * ([[minhashSketchTable]]): band hashes derive from stored
+    * ([[MinhashSketch]]): band hashes derive from stored
     * signatures and verification joins stored shingle arrays, so the
     * full corpus is never re-shingled in the steady state — the
     * amortization BASELINE.md promised, now built. The b side runs
@@ -1388,7 +1360,7 @@ object Dedup {
       .map(split => col("doc_id") >= lit(split))
       .getOrElse(lit(false))
     val p = spark.sparkContext.defaultParallelism
-    val sk = minhashSketchTable(spark, dir)
+    val sk = MinhashSketch.table(spark, dir)
     val bands = lshBandsOf(sk.select(col("doc_id"), col("n"), col("sig")), p, carry = Seq("n"))
     val hb = sharedShingleArrays(docs.filter(restrict))
     val bandsB = lshBandsOf(kernelSignatures(hb), p, carry = Seq("n"))
@@ -1417,7 +1389,7 @@ object Dedup {
     *
     * Regime and scale shape: decontamination RECURS (every new eval
     * suite, every corpus release), so the corpus side reads the
-    * PERSISTED minhash sketch table ([[minhashSketchTable]] — built
+    * PERSISTED minhash sketch table ([[MinhashSketch]] — built
     * once per corpus version by the dedup campaign) and the corpus
     * TEXT is never rescanned: band hashes derive from stored
     * signatures, verification joins stored shingle arrays. Only the
@@ -1437,7 +1409,7 @@ object Dedup {
                          gridInputOnly: Boolean = false): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val split = incrementalSplit(docs).getOrElse(Long.MaxValue)
-    val sk = minhashSketchTable(spark, dir)
+    val sk = MinhashSketch.table(spark, dir)
     val corpusBands = lshBandsOf(
       sk.filter(col("doc_id") < lit(split)).select(col("doc_id"), col("n"), col("sig")),
       0, carry = Seq("n"), shuffle = false)
@@ -1467,13 +1439,12 @@ object Dedup {
   /** Staged-pairs path + entry, the [[dedupMinhashLshStaged]]
     * convention: pairs staged once per corpus version for the oracle,
     * the returned frame is the live pipeline. */
-  val DeconFuzzyPairStagePath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "decon_fuzzy_pairs.parquet"
+  val DeconFuzzyPairs: Staged = Staged("decon_fuzzy_pairs.parquet") { c =>
+    decontaminateFuzzy(c.spark, c.dir).write.mode("overwrite").parquet(DeconFuzzyPairs.path)
+  }
 
   def decontaminateFuzzyStaged(spark: SparkSession, dir: String): DataFrame = {
-    graft.StateCache.stage(spark, "Dedup.deconPairs", Seq(Tables.path(dir, "documents"))) {
-      decontaminateFuzzy(spark, dir).write.mode("overwrite").parquet(DeconFuzzyPairStagePath)
-    }
+    DeconFuzzyPairs.ensure(spark, dir)
     decontaminateFuzzy(spark, dir)
   }
 
@@ -1484,7 +1455,7 @@ object Dedup {
     * in-corpus pairs produces rows the oracle drops, failing the
     * hash check). */
   private val decontaminateFuzzySql: String = minhashLshSqlOver(
-    DeconFuzzyPairStagePath,
+    DeconFuzzyPairs.path,
     """
       |  WHERE doc_a < (SELECT MAX(doc_id) * 9 // 10 FROM documents)
       |    AND doc_b >= (SELECT MAX(doc_id) * 9 // 10 FROM documents)""".stripMargin)
@@ -1596,30 +1567,16 @@ object Dedup {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** Where the corpus SIMHASH SIGNATURE table — (doc_id, sim), 16
-    * bytes a document — is persisted, fingerprint-keyed like the
-    * minhash sketch table. The simhash family's persisted column is
-    * even cheaper than minhash's: one long per doc, so at 100 TB the
-    * whole table is a few GB — trivially bucketable by (band, bits)
-    * for the incremental probe. */
-  val SimhashSigPath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "simhash_sigs.parquet"
-
-  /** Read (building once per corpus version) the persisted simhash
-    * signature table for `dir`. Deterministic: the staged rows equal
-    * what the live pipeline computes, so consumers are identical
-    * either way (spec-pinned). */
-  def simhashSigTable(spark: SparkSession, dir: String): DataFrame = {
-    stageSimhashSigs(spark, dir)
-    graft.Tables.parquetCached(spark, SimhashSigPath)
+  /** The corpus SIMHASH SIGNATURE table — (doc_id, sim), 16 bytes a
+    * document — staged once per corpus version. The simhash family's
+    * persisted column is even cheaper than minhash's: one long per
+    * doc, so at 100 TB the whole table is a few GB — trivially
+    * bucketable by (band, bits) for the incremental probe.
+    * Deterministic: the staged rows equal what the live pipeline
+    * computes, so consumers are identical either way (spec-pinned). */
+  val SimhashSigs: Staged = Staged("simhash_sigs.parquet") { c =>
+    simhashSignatures(c.docs).write.mode("overwrite").parquet(SimhashSigs.path)
   }
-
-  /** Stage [[simhashSigTable]] at [[SimhashSigPath]]. */
-  private[graft] def stageSimhashSigs(spark: SparkSession, dir: String): Unit =
-    graft.StateCache.stage(spark, "Dedup.simhash", Seq(Tables.path(dir, "documents"))) {
-      simhashSignatures(Tables.documents(spark, dir))
-        .write.mode("overwrite").parquet(SimhashSigPath)
-    }
 
   /** The pigeonhole band relation of a (doc_id, sim) signature frame
     * — ONE definition for both sides of every simhash band join. */
@@ -1642,7 +1599,7 @@ object Dedup {
     val restrict = incrementalSplit(docs)
       .map(split => col("doc_id") >= lit(split))
       .getOrElse(lit(false))
-    val bandsA = simhashBandsOf(simhashSigTable(spark, dir))
+    val bandsA = simhashBandsOf(SimhashSigs.table(spark, dir))
     val bandsB = simhashBandsOf(simhashSignatures(docs.filter(restrict)))
     val cand = bandsA.as("a")
       .join(bandsB.as("b"),
@@ -1778,55 +1735,39 @@ object Dedup {
        |      (x, y) -> x + y) / (a.nrm * b.nrm) >= $CosineThreshold
        |ORDER BY vec_a, vec_b""".stripMargin
 
-  /** Where the LSH entry's verified pairs are staged for its oracle
-    * (same stage-dir lifecycle as the SDF/centroid stagings). The
-    * write IS the entry's terminal action — the pipeline runs once,
-    * the returned frame is the read-back — so staging adds only a
-    * tiny result-sized parquet write to the timed path. */
-  val MinhashPairStagePath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "minhash_pairs.parquet"
-
-  val MinhashIncrPairStagePath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") +
-      "minhash_pairs_incr.parquet"
-
-  /** Where the exact ngram-Jaccard pair SIGNALS are materialized for
-    * downstream consumers (cluster resolution today; any keep/drop
-    * policy tomorrow). A pipeline computes pair signals once and
-    * every consumer reads the materialized list — recomputing the
-    * full pair pipeline inside each consumer would re-price the same
-    * corpus pass N times. `dedup_ngram_jaccard` remains the entry
-    * that times (and oracle-checks, from raw text) pair GENERATION;
-    * `dedup_clusters` times component RESOLUTION over this staging. */
-  val NgramPairStagePath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "ngram_pairs.parquet"
-
-  /** Materialize the exact-Jaccard pair list once per corpus version and
-    * return the read-back frame. Deterministic (exact arithmetic, no
-    * hashing randomness), so the staging and any later run's live
-    * pipeline are identical — pinned by DedupSpec. */
-  def ngramPairsStaged(spark: SparkSession, dir: String): DataFrame = {
-    stageNgramPairs(spark, dir)
-    graft.Tables.parquetCached(spark, NgramPairStagePath)
+  /** The LSH entry's verified pairs, staged for its oracle once per
+    * corpus version; the entry itself returns the live pipeline, so
+    * staging adds only a result-sized parquet write. Shared by the
+    * dedup_minhash_lsh entry and the signal router (which only needs
+    * the table), so whichever runs first stages for both. */
+  val MinhashPairs: Staged = Staged("minhash_pairs.parquet") { c =>
+    dedupMinhashLsh(c.spark, c.dir).write.mode("overwrite").parquet(MinhashPairs.path)
   }
 
-  private def stageNgramPairs(spark: SparkSession, dir: String): Unit =
-    graft.StateCache.stage(spark, "Dedup.ngramPairs", Seq(Tables.path(dir, "documents"))) {
-      dedupNgramJaccardPairs(spark, dir)
-        .write.mode("overwrite").parquet(NgramPairStagePath)
-    }
+  /** The incremental entry's pairs, staged like [[MinhashPairs]]. */
+  val MinhashIncrPairs: Staged = Staged("minhash_pairs_incr.parquet") { c =>
+    dedupMinhashLshIncremental(c.spark, c.dir)
+      .write.mode("overwrite").parquet(MinhashIncrPairs.path)
+  }
+
+  /** The exact ngram-Jaccard pair SIGNALS, materialized once per
+    * corpus version for downstream consumers (cluster resolution
+    * today; any keep/drop policy tomorrow). A pipeline computes pair
+    * signals once and every consumer reads the materialized list —
+    * recomputing the full pair pipeline inside each consumer would
+    * re-price the same corpus pass N times. `dedup_ngram_jaccard`
+    * remains the entry that times (and oracle-checks, from raw text)
+    * pair GENERATION; `dedup_clusters` times component RESOLUTION
+    * over this staging. Deterministic (exact arithmetic, no hashing
+    * randomness), so the staging and any later run's live pipeline
+    * are identical — pinned by DedupSpec. */
+  val NgramPairs: Staged = Staged("ngram_pairs.parquet") { c =>
+    dedupNgramJaccardPairs(c.spark, c.dir).write.mode("overwrite").parquet(NgramPairs.path)
+  }
 
   // ---- corpus-adaptive pair signal for the clusters/split family ----
 
-  /** Where the ROUTED cluster signal stages — the one pair list
-    * every downstream component consumer (clusters, splits, retract
-    * relabel) resolves over, and the one path their DuckDB twins
-    * read, whatever source the router picked. */
-  val ClusterSignalStagePath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") +
-      "cluster_signal_pairs.parquet"
-
-  /** Last routing decision of [[clusterPairSignal]] — observability
+  /** Last routing decision of [[ClusterSignal]] — observability
     * for the routing spec only (specs run serially). */
   @volatile private[graft] var lastClusterSignalRoute: String = ""
 
@@ -1851,32 +1792,21 @@ object Dedup {
         new java.io.File(dir).getUsableSpace / 2
       }
 
-  /** The pair signal the component-resolution family consumes,
-    * routed by the exact-ngram grid's OWN sizing model one level up
-    * (the [[verifyJaccardAuto]] pattern applied to signal choice,
-    * VERDICT r17 item 4): when the grid's predicted replication
-    * shuffle fits the disk budget, the signal is the exact-Jaccard
-    * ngram pair list (the precision choice); when the sizing model
-    * says disk-DNF — sf100 on a 252 GB box: ~12 GB of shingles,
-    * B≈16, a 0.26-0.5 TB docs-side shuffle before the TB-class
-    * candidate relation lands — the signal comes from the minhash
-    * sweep instead, whose banded candidates verify on the sparse
-    * pair join and COMPUTE at that scale. Both sources emit the
-    * same (doc_a, doc_b) shape; the routed list stages once per
-    * corpus (pair-graph-sized write) at ONE path that every
-    * consumer and every DuckDB twin reads, so the engine and the
-    * oracle always resolve components over the same signal.
-    * Force with `graft.clusters.signalRoute` = ngram|minhash (the
-    * routing spec does); the driver corpora are all far below the
-    * budget line, so the gate always exercises the ngram route. */
-  def clusterPairSignal(spark: SparkSession, dir: String): DataFrame = {
-    stageClusterSignal(spark, dir)
-    graft.Tables.parquetCached(spark, ClusterSignalStagePath)
-  }
-
-  /** Stage [[clusterPairSignal]] at [[ClusterSignalStagePath]]. */
-  private[graft] def stageClusterSignal(spark: SparkSession, dir: String): Unit = {
-    val route = spark.conf.getOption("graft.clusters.signalRoute").getOrElse {
+  /** The pair list [[ClusterSignal]] reads, routed by the exact-ngram
+    * grid's OWN sizing model one level up (the [[verifyJaccardAuto]]
+    * pattern applied to signal choice, VERDICT r17 item 4): when the
+    * grid's predicted replication shuffle fits the disk budget, the
+    * signal is the exact-Jaccard ngram pair list (the precision
+    * choice); when the sizing model says disk-DNF — sf100 on a 252 GB
+    * box: ~12 GB of shingles, B≈16, a 0.26-0.5 TB docs-side shuffle
+    * before the TB-class candidate relation lands — the signal comes
+    * from the minhash sweep instead, whose banded candidates verify on
+    * the sparse pair join and COMPUTE at that scale. Force with
+    * `graft.clusters.signalRoute` = ngram|minhash (the routing spec
+    * does); the driver corpora are all far below the budget line, so
+    * the gate always exercises the ngram route. */
+  private def signalSource(c: Staged.Call): Staged = {
+    val route = c.spark.conf.getOption("graft.clusters.signalRoute").getOrElse {
       // derived once per corpus version (ADVICE r18): getUsableSpace
       // is live state, so near the budget line the AUTO-derived route
       // could flip MID-SESSION between calls — and label tables staged
@@ -1885,35 +1815,33 @@ object Dedup {
       // EXPLICIT budget conf is deterministic (no disk-state input) and
       // setting it mid-session is a deliberate re-route, like the force
       // flag. A reroute re-stages the signal (it reads the other pair
-      // list) and, through the signal's listing, every staging that
+      // list) and, through the signal's version, every staging that
       // reads it.
       def derive() = {
-        val vol = shingleVolumeBytes(Tables.documents(spark, dir))
-        if (gridShuffleLowerBoundBytes(spark, vol) <= shuffleDiskBudgetBytes(spark))
+        val vol = shingleVolumeBytes(c.docs)
+        if (gridShuffleLowerBoundBytes(c.spark, vol) <= shuffleDiskBudgetBytes(c.spark))
           "ngram" else "minhash"
       }
-      if (spark.conf.getOption("graft.clusters.gridShuffleBudgetBytes").isDefined) derive()
-      else graft.StateCache.derived(spark, ("Dedup.signalRoute", dir),
-        Seq(Tables.path(dir, "documents")))(derive())
+      if (c.spark.conf.getOption("graft.clusters.gridShuffleBudgetBytes").isDefined) derive()
+      else graft.StateCache(("Dedup.signalRoute", c.dir), c.source("documents"))(derive())
     }
     require(route == "ngram" || route == "minhash",
       s"graft.clusters.signalRoute must be ngram|minhash, got $route")
-    val pairs =
-      if (route == "ngram") { stageNgramPairs(spark, dir); NgramPairStagePath }
-      else { stageMinhashPairs(spark, dir); MinhashPairStagePath }
-    graft.StateCache.stage(spark, "Dedup.clusterSignal", Seq(pairs)) {
-      lastClusterSignalRoute = route
-      graft.Tables.parquetCached(spark, pairs).select(col("doc_a"), col("doc_b"))
-        .write.mode("overwrite").parquet(ClusterSignalStagePath)
-    }
+    if (route == "ngram") NgramPairs else MinhashPairs
   }
 
-  /** The staged minhash pair list, shared by the dedup_minhash_lsh
-    * entry and the signal router (which only needs the table), so
-    * whichever runs first stages for both. */
-  private def stageMinhashPairs(spark: SparkSession, dir: String): Unit =
-    graft.StateCache.stage(spark, "Dedup.pairs", Seq(Tables.path(dir, "documents"))) {
-      dedupMinhashLsh(spark, dir).write.mode("overwrite").parquet(MinhashPairStagePath)
+  /** The ROUTED cluster signal — the one pair list every downstream
+    * component consumer (clusters, splits, retract relabel) resolves
+    * over, and the one path their DuckDB twins read, whatever source
+    * [[signalSource]] picked. Both sources emit the same (doc_a,
+    * doc_b) shape, so the engine and the oracle always resolve
+    * components over the same signal. */
+  val ClusterSignal: Staged =
+    Staged("cluster_signal_pairs.parquet", sources = Nil, upstream = c => Seq(signalSource(c))) { c =>
+      val source = signalSource(c)
+      lastClusterSignalRoute = if (source == NgramPairs) "ngram" else "minhash"
+      c.read(source).select(col("doc_a"), col("doc_b"))
+        .write.mode("overwrite").parquet(ClusterSignal.path)
     }
 
   /** The driver entry for dedup_minhash_lsh: stage the verified
@@ -1926,7 +1854,7 @@ object Dedup {
     * pipeline is deterministic (fixed hash seeds), so the staged
     * parquet and any later run's frame are identical. */
   def dedupMinhashLshStaged(spark: SparkSession, dir: String): DataFrame = {
-    stageMinhashPairs(spark, dir)
+    MinhashPairs.ensure(spark, dir)
     dedupMinhashLsh(spark, dir).orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -1934,10 +1862,7 @@ object Dedup {
     * memoized pair staging for the DuckDB oracle, same live-pipeline
     * return. */
   def dedupMinhashIncrementalStaged(spark: SparkSession, dir: String): DataFrame = {
-    graft.StateCache.stage(spark, "Dedup.pairsIncr", Seq(Tables.path(dir, "documents"))) {
-      dedupMinhashLshIncremental(spark, dir)
-        .write.mode("overwrite").parquet(MinhashIncrPairStagePath)
-    }
+    MinhashIncrPairs.ensure(spark, dir)
     dedupMinhashLshIncremental(spark, dir)
   }
 
@@ -1955,7 +1880,7 @@ object Dedup {
     * asserted set equality with the full sweep — green builds could
     * turn red with no code change once corpus regeneration raised
     * the cumulative ~2e-4-per-true-pair miss probability.) */
-  private val dedupMinhashLshSql: String = minhashLshSqlOver(MinhashPairStagePath, "")
+  private val dedupMinhashLshSql: String = minhashLshSqlOver(MinhashPairs.path, "")
 
   /** The incremental twin re-scores the incremental staging AND
     * re-applies the slice restriction itself (same integer-division
@@ -1964,7 +1889,7 @@ object Dedup {
     * hash check catches a broken restriction, not just a broken
     * score. */
   private val dedupMinhashIncrementalSql: String = minhashLshSqlOver(
-    MinhashIncrPairStagePath,
+    MinhashIncrPairs.path,
     "\n  WHERE doc_b >= (SELECT MAX(doc_id) * 9 // 10 FROM documents)")
 
   private[graft] def minhashLshSqlOver(stagePath: String, pPredicate: String): String =
@@ -2068,37 +1993,25 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
-  /** Where the corpus WINDOW-TOTAL table — (wh, total), occurrence
-    * count of every k-char window (as its rolling hash) across the
-    * whole corpus — is persisted, fingerprint-keyed like the minhash
-    * sketch. The incremental entry reads it instead of re-hashing
-    * the old corpus's text per run; at warehouse scale it would be
-    * written bucketed by wh so the slice join needs no corpus-side
-    * exchange (here the table re-shuffles per run — the saving is
-    * the text pass + window aggregate, the same honest trade the
-    * minhash incremental makes on its band relation). */
-  val SubstringTablePath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "substring_windows.parquet"
-
-  /** Read (building if this corpus version is not yet staged) the
-    * persisted per-window total table for `dir`. */
-  def substringWindowTable(spark: SparkSession, dir: String): DataFrame = {
-    stageSubstringWindows(spark, dir)
-    graft.Tables.parquetCached(spark, SubstringTablePath)
+  /** The corpus WINDOW-TOTAL table — (wh, total), occurrence count of
+    * every k-char window (as its rolling hash) across the whole
+    * corpus — staged once per corpus version. The incremental entry
+    * reads it instead of re-hashing the old corpus's text per run; at
+    * warehouse scale it would be written bucketed by wh so the slice
+    * join needs no corpus-side exchange (here the table re-shuffles
+    * per run — the saving is the text pass + window aggregate, the
+    * same honest trade the minhash incremental makes on its band
+    * relation). */
+  val SubstringWindows: Staged = Staged("substring_windows.parquet") { c =>
+    graft.functions.GraftFunctions.register(c.spark)
+    val p = c.spark.sparkContext.defaultParallelism
+    c.docs.filter(col("n_chars") >= SubstringK)
+      .repartition(p, col("doc_id"))
+      .select(col("doc_id"),
+        explode(expr(s"graft_window_hashes(text, $SubstringK)")).as("wh"))
+      .groupBy(col("wh")).agg(count(lit(1)).as("total"))
+      .write.mode("overwrite").parquet(SubstringWindows.path)
   }
-
-  /** Stage [[substringWindowTable]] at [[SubstringTablePath]]. */
-  private[graft] def stageSubstringWindows(spark: SparkSession, dir: String): Unit =
-    graft.StateCache.stage(spark, "Dedup.windows", Seq(Tables.path(dir, "documents"))) {
-      graft.functions.GraftFunctions.register(spark)
-      val p = spark.sparkContext.defaultParallelism
-      Tables.documents(spark, dir).filter(col("n_chars") >= SubstringK)
-        .repartition(p, col("doc_id"))
-        .select(col("doc_id"),
-          explode(expr(s"graft_window_hashes(text, $SubstringK)")).as("wh"))
-        .groupBy(col("wh")).agg(count(lit(1)).as("total"))
-        .write.mode("overwrite").parquet(SubstringTablePath)
-    }
 
   /** Fresh-crawl form of the substring profile: the per-doc
     * duplication profile of the NEW slice (doc_id >= the 90% split,
@@ -2117,7 +2030,7 @@ object Dedup {
     val restrict = incrementalSplit(docs)
       .map(split => col("doc_id") >= lit(split))
       .getOrElse(lit(false))
-    val wt = substringWindowTable(spark, dir)
+    val wt = SubstringWindows.table(spark, dir)
     sliceProfileAgainst(docs.filter(col("n_chars") >= SubstringK && restrict), wt)
   }
 
@@ -2232,7 +2145,7 @@ object Dedup {
       .map(split => col("doc_id") >= lit(split))
       .getOrElse(lit(false))
     val p = spark.sparkContext.defaultParallelism
-    val wt = substringWindowTable(spark, dir).filter(col("total") >= 2)
+    val wt = SubstringWindows.table(spark, dir).filter(col("total") >= 2)
     val sliceDocs = docs.filter(restrict)
     val w = sliceDocs.filter(col("n_chars") >= SubstringK)
       .repartition(p, col("doc_id"))

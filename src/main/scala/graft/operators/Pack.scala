@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, Staged, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -303,30 +303,17 @@ object Pack {
         col("n_tokens"), col("token_offset"))
   }
 
-  /** Where the per-document token-measure table — (doc_id,
-    * n_tokens), the expensive half of shard placement — is persisted,
-    * keyed on the documents table's file-listing fingerprint (the
-    * minhash-sketch convention). */
-  val ShardMeasurePath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "shard_measure.parquet"
-
-  /** Read (building once per corpus version) the persisted measure
-    * table for `dir`. Deterministic — the staged rows equal what the
-    * live kernel computes, so consumers are identical either way. */
-  def shardMeasureTable(spark: SparkSession, dir: String): DataFrame = {
-    stageShardMeasure(spark, dir)
-    graft.Tables.parquetCached(spark, ShardMeasurePath)
+  /** The per-document token-measure table — (doc_id, n_tokens), the
+    * expensive half of shard placement — staged once per corpus
+    * version. Deterministic — the staged rows equal what the live
+    * kernel computes, so consumers are identical either way. */
+  val ShardMeasure: Staged = Staged("shard_measure.parquet") { c =>
+    graft.functions.GraftFunctions.register(c.spark)
+    c.docs.select(
+      col("doc_id"),
+      element_at(expr("graft_text_stats(text)"), 1).as("n_tokens"))
+      .write.mode("overwrite").parquet(ShardMeasure.path)
   }
-
-  /** Stage [[shardMeasureTable]] at [[ShardMeasurePath]]. */
-  private[graft] def stageShardMeasure(spark: SparkSession, dir: String): Unit =
-    graft.StateCache.stage(spark, "Pack.measure", Seq(Tables.path(dir, "documents"))) {
-      graft.functions.GraftFunctions.register(spark)
-      Tables.documents(spark, dir).select(
-        col("doc_id"),
-        element_at(expr("graft_text_stats(text)"), 1).as("n_tokens"))
-        .write.mode("overwrite").parquet(ShardMeasurePath)
-    }
 
   /** Steady-state shard placement for a GROWN corpus — the
     * incremental twin ([[shardShuffle]]'s regime argument): appends
@@ -335,7 +322,7 @@ object Pack {
     * refresh corpus-wide on every release. What must NOT re-run is
     * the expensive half — the token measure over the text (at real
     * scale: BPE tokenization of 100 TB): existing docs read their
-    * persisted (doc_id, n_tokens) row ([[shardMeasureTable]] — 16
+    * persisted (doc_id, n_tokens) row ([[ShardMeasure]] — 16
     * bytes/doc, no text), only the fresh slice (doc_id >= the 90%
     * split, the shared convention) pays the kernel behind a pushed
     * scan predicate. The window then re-lays out metadata-sized
@@ -346,7 +333,7 @@ object Pack {
     graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val split = Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
-    val old = shardMeasureTable(spark, dir).filter(col("doc_id") < lit(split))
+    val old = ShardMeasure.table(spark, dir).filter(col("doc_id") < lit(split))
     val fresh = docs.filter(col("doc_id") >= lit(split)).select(
       col("doc_id"),
       element_at(expr("graft_text_stats(text)"), 1).as("n_tokens"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, Staged, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,20 +27,20 @@ import org.apache.spark.sql.functions._
   * from-scratch rebuild on the reduced corpus would produce",
   * spec-pinned in RetractSpec):
   *
-  *  - (doc_id, term, tf) term counts [Curation.tfidfStateTable]:
+  *  - (doc_id, term, tf) term counts [Curation.TfidfState]:
   *    per-doc rows over disjoint doc sets — DELETE the retracted
   *    docs' rows; df/n_docs recompute downstream, so every tf-idf
   *    score and rank equals the reduced-corpus recompute.
-  *  - (bigram, freq) census [TextOps.ngramFreqStateTable]: corpus-
+  *  - (bigram, freq) census [TextOps.NgramFreqState]: corpus-
   *    level ADDITIVE counts — SUBTRACT the retracted old docs'
   *    bigram counts (kernel over the takedown slice only), drop rows
   *    at zero. Additive over disjoint doc sets ⇒ subtraction exact.
-  *  - (wh, total) substring window totals [Dedup.substringWindowTable]:
+  *  - (wh, total) substring window totals [Dedup.SubstringWindows]:
   *    same subtraction, over the rolling-hash window kernel.
   *  - minhash sketch / simhash signature tables: per-doc rows —
   *    DELETE. The shingle-rarity CMS is rebuilt from the repaired
   *    sketch table's own arrays (a state-table scan, no text).
-  *  - (h, cnt) exact-hash set [Dedup.corpusHashTable]: a distinct
+  *  - (h, cnt) exact-hash set [Dedup.CorpusHashes]: a distinct
   *    SET does not subtract (a surviving duplicate may own the same
   *    hash), so the table carries a refcount since round 17 —
   *    subtract the retracted docs' hash counts, drop rows at zero.
@@ -49,14 +49,14 @@ import org.apache.spark.sql.functions._
   *    (those containing a retracted doc) recompute over their
   *    surviving pairs — touched-component-sized work, label
   *    propagation never sees the untouched history.
-  *  - (doc_id, side) split sides [Curation.splitSidesTable]: DELETE
+  *  - (doc_id, side) split sides [Curation.SplitSides]: DELETE
   *    retracted rows ONLY — surviving docs keep their shipped side
   *    (the sticky doctrine: a takedown must not silently migrate a
   *    doc a model was already evaluated on). Deletion cannot create
   *    a cross-side pair: members of one component shared one side,
   *    and removing docs only splits components, each fragment
   *    inheriting that same side (spec-pinned).
-  *  - (doc_id, n_tokens) shard measures [Pack.shardMeasureTable]:
+  *  - (doc_id, n_tokens) shard measures [Pack.ShardMeasure]:
   *    per-doc rows — DELETE.
   *
   * Three driver entries price and oracle the path end to end, each
@@ -91,159 +91,129 @@ object Retract {
   /** DuckDB twin of [[takedownPred]] (unqualified `doc_id`). */
   val TakedownPredSql: String = takedownPredSqlOn("doc_id")
 
-  private def stage(name: String): String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + name
-
-  /** Labels over the FULL staged pair graph — the "as of now"
+/** Labels over the FULL staged pair graph — the "as of now"
     * component state a pipeline that has processed every crawl
-    * carries (the old-old table [[Curation.ClusterLabelStagePath]]
-    * serves the GROW direction; this is the base the SHRINK
-    * direction repairs). Versioned on the staged cluster signal. */
-  val FullClusterLabelPath: String = stage("cluster_labels_full.parquet")
-
-  def fullClusterLabels(spark: SparkSession, dir: String): DataFrame = {
-    stageFullClusterLabels(spark, dir)
-    graft.Tables.parquetCached(spark, FullClusterLabelPath)
-  }
-
-  /** Stage [[fullClusterLabels]] at [[FullClusterLabelPath]]. */
-  private def stageFullClusterLabels(spark: SparkSession, dir: String): Unit = {
-    Dedup.stageClusterSignal(spark, dir)
-    graft.StateCache.stage(spark, "Retract.fullLabels", Seq(Dedup.ClusterSignalStagePath)) {
+    * carries (the old-old table [[Curation.ClusterLabels]] serves
+    * the GROW direction; this is the base the SHRINK direction
+    * repairs). Versioned on the staged cluster signal. */
+  val FullClusterLabels: Staged =
+    Staged("cluster_labels_full.parquet", sources = Nil, upstream = _ => Seq(Dedup.ClusterSignal)) { c =>
       Curation.connectedComponents(
-          Dedup.clusterPairSignal(spark, dir)
-            .select(col("doc_a").as("a"), col("doc_b").as("b")))
+          c.read(Dedup.ClusterSignal).select(col("doc_a").as("a"), col("doc_b").as("b")))
         .select(col("v").as("doc_id"), col("lab").as("cluster_root"))
-        .write.mode("overwrite").parquet(FullClusterLabelPath)
+        .write.mode("overwrite").parquet(FullClusterLabels.path)
     }
-  }
 
   /** The tombstone REGISTRY — the takedown set persisted as the
     * small id table a compliance system maintains (round 18, the
     * streaming gate's static side). The serving gate re-reads it
     * every micro-batch (stream-static join semantics), so an id
     * appended here gates every later read without a query restart;
-    * the batch repair ([[repairedState]]) consumes the same set.
-    * Takedown-sized, fingerprint-keyed like every state table. */
-  val TombstonePath: String = stage("takedown_tombstones.parquet")
-
-  def tombstoneTable(spark: SparkSession, dir: String): DataFrame = {
-    graft.StateCache.stage(spark, "Retract.tombstones", Seq(Tables.path(dir, "documents"))) {
-      Tables.documents(spark, dir).filter(takedownPred).select(col("doc_id"))
-        .write.mode("overwrite").parquet(TombstonePath)
-    }
-    graft.Tables.parquetCached(spark, TombstonePath)
+    * the batch repair ([[Repair]]) consumes the same set.
+    * Takedown-sized, staged once per corpus version like every state
+    * table. */
+  val Tombstones: Staged = Staged("takedown_tombstones.parquet") { c =>
+    c.docs.filter(takedownPred).select(col("doc_id"))
+      .write.mode("overwrite").parquet(Tombstones.path)
   }
 
-  // Repaired state table paths — one per persisted table above.
-  val RetTfidfPath: String      = stage("retract_tfidf_tf.parquet")
-  val RetNgramFreqPath: String  = stage("retract_ngram_freq.parquet")
-  val RetWindowPath: String     = stage("retract_substring_windows.parquet")
-  val RetSketchPath: String     = stage("retract_minhash_sketch.parquet")
-  val RetCmsPath: String        = stage("retract_shingle_cms.bin")
-  val RetSimhashPath: String    = stage("retract_simhash_sigs.parquet")
-  val RetHashPath: String       = stage("retract_corpus_hashes.parquet")
-  val RetLabelPath: String      = stage("retract_cluster_labels.parquet")
-  val RetSplitSidesPath: String = stage("retract_split_sides.parquet")
-  val RetMeasurePath: String    = stage("retract_shard_measure.parquet")
-
-  /** Run the takedown repair of EVERY persisted state table, once per
-    * corpus version. Each job is bounded by (state-table size +
+  /** The takedown repair of EVERY persisted state table, staged once
+    * per corpus version. Each job is bounded by (state-table size +
     * takedown-slice size): anti joins broadcast the takedown list;
     * the subtractive repairs run their kernel over the retracted
     * docs' text ONLY; the cluster repair's label propagation sees
     * touched-component edges only. No surviving text is re-read.
-    * The upstream tables are staged first, without reading them back,
-    * so a warm call builds no frame before its own stage check. */
-  def repairedState(spark: SparkSession, dir: String): Unit = {
-    Curation.stageTfidfState(spark, dir)
-    Dedup.stageMinhashSketch(spark, dir)
-    Dedup.stageSimhashSigs(spark, dir)
-    Curation.stageSplitSides(spark, dir)
-    Pack.stageShardMeasure(spark, dir)
-    TextOps.stageNgramFreqState(spark, dir)
-    Dedup.stageSubstringWindows(spark, dir)
-    Dedup.stageCorpusHashes(spark, dir)
-    stageFullClusterLabels(spark, dir)
-    graft.StateCache.stage(spark, "Retract.repair", Seq(Tables.path(dir, "documents"),
-        Curation.TfidfStatePath, Dedup.MinhashSketchPath, Dedup.SimhashSigPath,
-        Curation.SplitSidesPath, Pack.ShardMeasurePath, TextOps.NgramFreqStatePath,
-        Dedup.SubstringTablePath, Dedup.CorpusHashPath, FullClusterLabelPath,
-        Dedup.ClusterSignalStagePath)) {
-      graft.functions.GraftFunctions.register(spark)
-      val p = spark.sparkContext.defaultParallelism
-      val docs = Tables.documents(spark, dir)
-      val split = Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
-      val ret = docs.filter(takedownPred).select(col("doc_id"))
-      val read = (path: String) => graft.Tables.parquetCached(spark, path)
+    * Its file is the repaired term counts ([[RetTfidfPath]]); the
+    * other repaired tables are written beside it. */
+  val Repair: Staged = Staged("retract_tfidf_tf.parquet", upstream = _ => Seq(
+      Curation.TfidfState, Dedup.MinhashSketch, Dedup.SimhashSigs, Curation.SplitSides,
+      Pack.ShardMeasure, TextOps.NgramFreqState, Dedup.SubstringWindows, Dedup.CorpusHashes,
+      FullClusterLabels, Dedup.ClusterSignal)) { c =>
+    val spark = c.spark
+    graft.functions.GraftFunctions.register(spark)
+    val p = spark.sparkContext.defaultParallelism
+    val docs = c.docs
+    val split = Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
+    val ret = docs.filter(takedownPred).select(col("doc_id"))
 
-      def minus(state: DataFrame): DataFrame =
-        state.join(broadcast(ret), Seq("doc_id"), "left_anti")
+    def minus(state: DataFrame): DataFrame =
+      state.join(broadcast(ret), Seq("doc_id"), "left_anti")
 
-      // per-doc tables: plain deletes
-      minus(read(Curation.TfidfStatePath)).write.mode("overwrite").parquet(RetTfidfPath)
-      minus(read(Dedup.MinhashSketchPath)).write.mode("overwrite").parquet(RetSketchPath)
-      minus(read(Dedup.SimhashSigPath)).write.mode("overwrite").parquet(RetSimhashPath)
-      minus(read(Curation.SplitSidesPath)).write.mode("overwrite").parquet(RetSplitSidesPath)
-      minus(read(Pack.ShardMeasurePath)).write.mode("overwrite").parquet(RetMeasurePath)
+    // per-doc tables: plain deletes
+    minus(c.read(Curation.TfidfState)).write.mode("overwrite").parquet(RetTfidfPath)
+    minus(c.read(Dedup.MinhashSketch)).write.mode("overwrite").parquet(RetSketchPath)
+    minus(c.read(Dedup.SimhashSigs)).write.mode("overwrite").parquet(RetSimhashPath)
+    minus(c.read(Curation.SplitSides)).write.mode("overwrite").parquet(RetSplitSidesPath)
+    minus(c.read(Pack.ShardMeasure)).write.mode("overwrite").parquet(RetMeasurePath)
 
-      // CMS: rebuilt from the repaired sketch table's arrays — a
-      // state-table scan (no text), same aggregate as the builder
-      val cms = graft.Tables.parquetCached(spark, RetSketchPath)
-        .select(explode(col("ghs")).as("gh"))
-        .select(expr(s"count_min_sketch(gh, ${Dedup.CmsParams._1}d, " +
-          s"${Dedup.CmsParams._2}d, ${Dedup.CmsParams._3})"))
-        .head.getAs[Array[Byte]](0)
-      java.nio.file.Files.write(java.nio.file.Paths.get(RetCmsPath), cms)
+    // CMS: rebuilt from the repaired sketch table's arrays — a
+    // state-table scan (no text), same aggregate as the builder
+    val cms = graft.Tables.parquetCached(spark, RetSketchPath)
+      .select(explode(col("ghs")).as("gh"))
+      .select(expr(s"count_min_sketch(gh, ${Dedup.CmsParams._1}d, " +
+        s"${Dedup.CmsParams._2}d, ${Dedup.CmsParams._3})"))
+      .head.getAs[Array[Byte]](0)
+    java.nio.file.Files.write(java.nio.file.Paths.get(RetCmsPath), cms)
 
-      // additive counts: subtract the takedown slice's contribution
-      val retOld = docs.filter(takedownPred && col("doc_id") < lit(split))
-      val subBigrams = retOld
-        .repartition(p, col("doc_id"))
-        .select(explode(expr("graft_word_bigrams(text)")).as("bigram"))
-        .groupBy(col("bigram")).agg(count(lit(1)).as("sub"))
-      read(TextOps.NgramFreqStatePath).join(subBigrams, Seq("bigram"), "left")
-        .select(col("bigram"),
-          (col("freq") - coalesce(col("sub"), lit(0L))).as("freq"))
-        .filter(col("freq") > 0)
-        .write.mode("overwrite").parquet(RetNgramFreqPath)
+    // additive counts: subtract the takedown slice's contribution
+    val retOld = docs.filter(takedownPred && col("doc_id") < lit(split))
+    val subBigrams = retOld
+      .repartition(p, col("doc_id"))
+      .select(explode(expr("graft_word_bigrams(text)")).as("bigram"))
+      .groupBy(col("bigram")).agg(count(lit(1)).as("sub"))
+    c.read(TextOps.NgramFreqState).join(subBigrams, Seq("bigram"), "left")
+      .select(col("bigram"),
+        (col("freq") - coalesce(col("sub"), lit(0L))).as("freq"))
+      .filter(col("freq") > 0)
+      .write.mode("overwrite").parquet(RetNgramFreqPath)
 
-      val subWin = docs
-        .filter(takedownPred && col("n_chars") >= Dedup.SubstringK)
-        .repartition(p, col("doc_id"))
-        .select(explode(expr(s"graft_window_hashes(text, ${Dedup.SubstringK})")).as("wh"))
-        .groupBy(col("wh")).agg(count(lit(1)).as("sub"))
-      read(Dedup.SubstringTablePath).join(subWin, Seq("wh"), "left")
-        .select(col("wh"),
-          (col("total") - coalesce(col("sub"), lit(0L))).as("total"))
-        .filter(col("total") > 0)
-        .write.mode("overwrite").parquet(RetWindowPath)
+    val subWin = docs
+      .filter(takedownPred && col("n_chars") >= Dedup.SubstringK)
+      .repartition(p, col("doc_id"))
+      .select(explode(expr(s"graft_window_hashes(text, ${Dedup.SubstringK})")).as("wh"))
+      .groupBy(col("wh")).agg(count(lit(1)).as("sub"))
+    c.read(Dedup.SubstringWindows).join(subWin, Seq("wh"), "left")
+      .select(col("wh"),
+        (col("total") - coalesce(col("sub"), lit(0L))).as("total"))
+      .filter(col("total") > 0)
+      .write.mode("overwrite").parquet(RetWindowPath)
 
-      // refcounted hash set: subtract, drop rows at zero (a distinct
-      // set would need a corpus re-hash to decide evictions — the
-      // cnt column is what makes this takedown-sized)
-      val subHash = retOld.select(md5(col("text")).as("h"))
-        .groupBy(col("h")).agg(count(lit(1)).as("sub"))
-      read(Dedup.CorpusHashPath).join(subHash, Seq("h"), "left")
-        .select(col("h"), (col("cnt") - coalesce(col("sub"), lit(0L))).as("cnt"))
-        .filter(col("cnt") > 0)
-        .write.mode("overwrite").parquet(RetHashPath)
+    // refcounted hash set: subtract, drop rows at zero (a distinct
+    // set would need a corpus re-hash to decide evictions — the
+    // cnt column is what makes this takedown-sized)
+    val subHash = retOld.select(md5(col("text")).as("h"))
+      .groupBy(col("h")).agg(count(lit(1)).as("sub"))
+    c.read(Dedup.CorpusHashes).join(subHash, Seq("h"), "left")
+      .select(col("h"), (col("cnt") - coalesce(col("sub"), lit(0L))).as("cnt"))
+      .filter(col("cnt") > 0)
+      .write.mode("overwrite").parquet(RetHashPath)
 
-      // cluster labels: untouched components keep their rows; touched
-      // ones re-close over surviving pairs (which may SPLIT them).
-      // The repaired table, like the builder, holds only docs that
-      // appear in a surviving pair — survivors that lost every pair
-      // leave the table (they are singletons again).
-      val full = read(FullClusterLabelPath)
-      val parts = touchedRelabel(full, read(Dedup.ClusterSignalStagePath), ret)
-      full.join(broadcast(parts.touchedRoots), Seq("cluster_root"), "left_anti")
-        .select(col("doc_id"), col("cluster_root"))
-        .unionByName(parts.newLabels)
-        .write.mode("overwrite").parquet(RetLabelPath)
-    }
+    // cluster labels: untouched components keep their rows; touched
+    // ones re-close over surviving pairs (which may SPLIT them).
+    // The repaired table, like the builder, holds only docs that
+    // appear in a surviving pair — survivors that lost every pair
+    // leave the table (they are singletons again).
+    val full = c.read(FullClusterLabels)
+    val parts = touchedRelabel(full, c.read(Dedup.ClusterSignal), ret)
+    full.join(broadcast(parts.touchedRoots), Seq("cluster_root"), "left_anti")
+      .select(col("doc_id"), col("cluster_root"))
+      .unionByName(parts.newLabels)
+      .write.mode("overwrite").parquet(RetLabelPath)
   }
 
-  /** The cluster-repair decomposition shared by [[repairedState]]
+  // Repaired state table paths — one per persisted table above.
+  val RetTfidfPath: String      = Repair.path
+  val RetNgramFreqPath: String  = Staged.at("retract_ngram_freq.parquet")
+  val RetWindowPath: String     = Staged.at("retract_substring_windows.parquet")
+  val RetSketchPath: String     = Staged.at("retract_minhash_sketch.parquet")
+  val RetCmsPath: String        = Staged.at("retract_shingle_cms.bin")
+  val RetSimhashPath: String    = Staged.at("retract_simhash_sigs.parquet")
+  val RetHashPath: String       = Staged.at("retract_corpus_hashes.parquet")
+  val RetLabelPath: String      = Staged.at("retract_cluster_labels.parquet")
+  val RetSplitSidesPath: String = Staged.at("retract_split_sides.parquet")
+  val RetMeasurePath: String    = Staged.at("retract_shard_measure.parquet")
+
+  /** The cluster-repair decomposition shared by [[Repair]]
     * and the `retract_clusters` entry. `touchedEdges` is the
     * edge relation handed to connectedComponents — the auditable
     * lineage proving the closure's input is bounded by the staged
@@ -286,7 +256,7 @@ object Retract {
     * re-ranks). The oracle recomputes from scratch on
     * `documents WHERE NOT takedown` — full-recompute-minus-the-set. */
   def retractDocs(spark: SparkSession, dir: String): DataFrame = {
-    repairedState(spark, dir)
+    Repair.ensure(spark, dir)
     val docs = Tables.documents(spark, dir)
     val split = Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
     val kept = docs.filter(!takedownPred)
@@ -330,7 +300,7 @@ object Retract {
     val docs = Tables.documents(spark, dir)
     val ret = docs.filter(takedownPred).select(col("doc_id"))
     val parts = touchedRelabel(
-      fullClusterLabels(spark, dir), Dedup.clusterPairSignal(spark, dir), ret)
+      FullClusterLabels.table(spark, dir), Dedup.ClusterSignal.table(spark, dir), ret)
     parts.members
       .join(broadcast(ret), Seq("doc_id"), "left_anti")
       .join(parts.newLabels.withColumnRenamed("cluster_root", "nroot"),
@@ -342,7 +312,7 @@ object Retract {
   private lazy val retractClustersSql: String =
     s"""WITH RECURSIVE pairs AS (
        |  SELECT doc_a, doc_b
-       |  FROM read_parquet('${Dedup.ClusterSignalStagePath}/*.parquet')
+       |  FROM read_parquet('${Dedup.ClusterSignal.path}/*.parquet')
        |), ret AS (
        |  SELECT doc_id FROM documents WHERE $TakedownPredSql
        |), sym AS MATERIALIZED (
@@ -385,7 +355,7 @@ object Retract {
     * again). Oracle re-derives totals from the retained corpus's
     * window STRINGS — full-recompute-minus-the-set. */
   def retractSubstringProfile(spark: SparkSession, dir: String): DataFrame = {
-    repairedState(spark, dir)
+    Repair.ensure(spark, dir)
     graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val restrict = Dedup.incrementalSplit(docs)

@@ -456,8 +456,7 @@ object Similarity {
     * memoized stagings this one is version-less by nature). This is
     * the same self-staging move ann_ivf_probe made in r7; it closes
     * the last rows-only driver entry (VERDICT r7 item 5). */
-  val FreshCentroidStagePath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "ivf_fresh_centroids.parquet"
+  val FreshCentroidStagePath: String = graft.Staged.at("ivf_fresh_centroids.parquet")
 
   def annIvf(spark: SparkSession, dir: String): DataFrame = {
     val e = Dedup.embeddingsWithNorm(spark, dir)
@@ -753,8 +752,7 @@ object Similarity {
     * the probe's Spark output is computed FROM the very same staged
     * values the SQL reads, so there is no cross-engine FP-divergence
     * channel. */
-  val CentroidStagePath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "ivf_centroids.parquet"
+  val CentroidStagePath: String = graft.Staged.at("ivf_centroids.parquet")
 
   // skip re-staging while the staged index version hasn't changed —
   // the write is tiny but would otherwise tax every timed probe run
@@ -895,8 +893,7 @@ object Similarity {
     * version-less like [[FreshCentroidStagePath]]: a fresh k-means's
     * avg() merge order is not pinned across runs, so every call
     * re-stages the codebooks its own output was computed from. */
-  val PqCodebookStagePath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "pq_codebooks.parquet"
+  val PqCodebookStagePath: String = graft.Staged.at("pq_codebooks.parquet")
 
   /** Subspace boundaries for dimension `dim`: balanced integer
     * split, subspace j covers [starts(j), starts(j+1)). Driver-side
@@ -1124,10 +1121,8 @@ object Similarity {
     * the CODES table (vec_id, codes) partitioned by cid — the
     * 5-byte-per-vector column a 100 TB vector warehouse actually
     * scans. Both also feed the DuckDB twin. */
-  val IvfPqCodebookStagePath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "ivfpq_codebooks.parquet"
-  val IvfPqCodesStagePath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "ivfpq_codes.parquet"
+  val IvfPqCodebookStagePath: String = graft.Staged.at("ivfpq_codebooks.parquet")
+  val IvfPqCodesStagePath: String = graft.Staged.at("ivfpq_codes.parquet")
 
   /** Directory-group count for the codes tables (r13, VERDICT item
     * 6). Partitioning by RAW cid makes ~sqrt(n) directories of one
@@ -1388,8 +1383,7 @@ object Similarity {
     * split) cid-partitioned codes table, i.e. what yesterday's build
     * would have persisted — are staged, keyed on the index version
     * like the full codes table. */
-  val IvfPqCodesBasePath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "ivfpq_codes_base.parquet"
+  val IvfPqCodesBasePath: String = graft.Staged.at("ivfpq_codes_base.parquet")
 
   // the resolved base-codes DataFrame per (session, index version) —
   // partition discovery + footer reads over the CodesPartGroups
@@ -1579,8 +1573,7 @@ object Similarity {
     * the same broadcast centroids; doubles round-trip parquet
     * losslessly), so persisted and live assignments are identical —
     * the incremental==restricted-full spec pins it. */
-  val SemanticMultiStagePath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "semantic_multi.parquet"
+  val SemanticMultiStagePath: String = graft.Staged.at("semantic_multi.parquet")
 
   private def persistedMulti(spark: SparkSession, e: DataFrame,
                              idx: IvfIndex, p: Int): DataFrame = {
@@ -1866,10 +1859,8 @@ object Similarity {
     * byte-for-byte (spec-pinned via file listings). At 100 TB that
     * is the difference between a takedown costing a corpus rewrite
     * and costing a few posting lists. */
-  val RetractedListsPath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "retract_ivf_lists.parquet"
-  val RetractedCodesPath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "retract_ivfpq_codes.parquet"
+  val RetractedListsPath: String = graft.Staged.at("retract_ivf_lists.parquet")
+  val RetractedCodesPath: String = graft.Staged.at("retract_ivfpq_codes.parquet")
 
   private def copyDir(spark: SparkSession, from: String, to: String): Unit = {
     import org.apache.hadoop.fs.{FileUtil, Path}

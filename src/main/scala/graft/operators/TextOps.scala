@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, Staged, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -289,33 +289,20 @@ object TextOps {
       .limit(20)
   }
 
-  /** Where the OLD corpus's bigram counts — (bigram, freq) — are
-    * persisted, fingerprint-keyed. Bigrams are intra-document
-    * (graft_word_bigrams never crosses doc boundaries), so counts
-    * over disjoint doc sets are additive — the tfidf/unigram-LM
-    * incrementality argument applied to the n-gram census. */
-  val NgramFreqStatePath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") + "ngram_freq.parquet"
-
-  /** Read (staging once per corpus version) the persisted old-corpus
-    * bigram counts. */
-  def ngramFreqStateTable(spark: SparkSession, dir: String): DataFrame = {
-    stageNgramFreqState(spark, dir)
-    graft.Tables.parquetCached(spark, NgramFreqStatePath)
+  /** The OLD corpus's bigram counts — (bigram, freq) — staged once per
+    * corpus version. Bigrams are intra-document (graft_word_bigrams
+    * never crosses doc boundaries), so counts over disjoint doc sets
+    * are additive — the tfidf/unigram-LM incrementality argument
+    * applied to the n-gram census. */
+  val NgramFreqState: Staged = Staged("ngram_freq.parquet") { c =>
+    graft.functions.GraftFunctions.register(c.spark)
+    val split = graft.operators.Dedup.incrementalSplit(c.docs).getOrElse(Long.MaxValue)
+    c.docs.filter(col("doc_id") < lit(split))
+      .repartition(c.spark.sparkContext.defaultParallelism, col("doc_id"))
+      .select(explode(expr("graft_word_bigrams(text)")).as("bigram"))
+      .groupBy(col("bigram")).agg(count(lit(1)).as("freq"))
+      .write.mode("overwrite").parquet(NgramFreqState.path)
   }
-
-  /** Stage [[ngramFreqStateTable]] at [[NgramFreqStatePath]]. */
-  private[graft] def stageNgramFreqState(spark: SparkSession, dir: String): Unit =
-    graft.StateCache.stage(spark, "TextOps.ngramFreq", Seq(Tables.path(dir, "documents"))) {
-      graft.functions.GraftFunctions.register(spark)
-      val docs = Tables.documents(spark, dir)
-      val split = graft.operators.Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
-      docs.filter(col("doc_id") < lit(split))
-        .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-        .select(explode(expr("graft_word_bigrams(text)")).as("bigram"))
-        .groupBy(col("bigram")).agg(count(lit(1)).as("freq"))
-        .write.mode("overwrite").parquet(NgramFreqStatePath)
-    }
 
   /** Steady-state n-gram census for a grown corpus: old docs'
     * bigram counts come from the persisted table (metadata-sized —
@@ -332,7 +319,7 @@ object TextOps {
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
       .select(explode(expr("graft_word_bigrams(text)")).as("bigram"))
       .groupBy(col("bigram")).agg(count(lit(1)).as("freq"))
-    ngramFreqStateTable(spark, dir).unionByName(fresh)
+    NgramFreqState.table(spark, dir).unionByName(fresh)
       .groupBy(col("bigram")).agg(sum(col("freq")).as("freq"))
       .orderBy(col("freq").desc, col("bigram"))
       .limit(20)
@@ -472,7 +459,7 @@ object TextOps {
 
   /** Steady-state corpus-LM scoring for a grown corpus: the SAME
     * persisted (doc_id, term, tf) state table the incremental tf-idf
-    * reads ([[Curation.tfidfStateTable]] — one count table serves
+    * reads ([[Curation.TfidfState]] — one count table serves
     * every term-statistics consumer), unioned with the fresh slice's
     * counts (tokenize behind the pushed predicate), through the
     * identical scoring core. Counts over disjoint doc sets are
@@ -484,7 +471,7 @@ object TextOps {
     val split = graft.operators.Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
     val freshTf = whitespaceTokens(docs.filter(col("doc_id") >= lit(split)))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-    val tf = graft.operators.Curation.tfidfStateTable(spark, dir)
+    val tf = graft.operators.Curation.TfidfState.table(spark, dir)
       .unionByName(freshTf)
       .repartition(p)
     unigramLmFrom(tf)

@@ -80,12 +80,15 @@ object SdfQueries {
       s"$dir/records.parquet"
   }
 
+  /** The stage dir [[StagePath]] lives in: every staged table and
+    * scratch warehouse of this process is a file under it. */
+  val StageDir: String = StagePath.stripSuffix("records.parquet")
+
   /** Second scratch table for the sdf_read oracle: (sdf, filename)
     * as read/split/normalized by Spark, from which DuckDB re-derives
     * cid and n_chars with its own regex/length semantics. Separate
     * from [[StagePath]] — sdf_extract stages a different schema. */
-  val ReadStagePath: String =
-    StagePath.stripSuffix("records.parquet") + "read_records.parquet"
+  val ReadStagePath: String = StageDir + "read_records.parquet"
 
   private def duckdbType(dtype: String): String = dtype.toLowerCase match {
     case "integer" | "int"                           => "BIGINT"
@@ -199,8 +202,8 @@ object SdfQueries {
     * CREATE_LIKE and NOT_NULL over a file format each parses with
     * its OWN reader (Spark csv/json source vs DuckDB
     * read_csv/read_json — a genuinely independent parse path). */
-  val CsvStagePath: String = StagePath.stripSuffix("records.parquet") + "tabular_csv"
-  val JsonStagePath: String = StagePath.stripSuffix("records.parquet") + "tabular_json"
+  val CsvStagePath: String = StageDir + "tabular_csv"
+  val JsonStagePath: String = StageDir + "tabular_json"
 
   /** All distinct SD_TAG source columns of the layout as raw strings
     * from the reference SDFs — the export both tabular entries
@@ -321,8 +324,7 @@ object SdfQueries {
     * tableExists, so best-of-N prices the steady-state LOOKUP — a
     * user queries an existing index, they don't rebuild it per
     * query. */
-  private[graft] val LookupWhDir: String =
-    StagePath.stripSuffix("records.parquet") + "lookup_wh"
+  private[graft] val LookupWhDir: String = StageDir + "lookup_wh"
 
   private def lookupWarehouse(s: org.apache.spark.sql.SparkSession): Unit =
     graft.sinks.Warehouse.ingest(s, TestSdfGlob, LookupWhDir)
@@ -346,8 +348,7 @@ object SdfQueries {
     * their oracles re-derive. Idempotent across bench repeats —
     * re-ingest is a manifest no-op (the repaired rows must NOT
     * resurrect) and re-retract finds no spans covering the set. */
-  private[graft] val RetractWhDir: String =
-    StagePath.stripSuffix("records.parquet") + "retract_wh"
+  private[graft] val RetractWhDir: String = StageDir + "retract_wh"
 
   /** Oracle: full recompute minus the takedown set — DuckDB
     * re-derives the whole extraction from the staged raw records
@@ -399,10 +400,8 @@ object SdfQueries {
     * consistency report must keep that file visible. CIDs sit far
     * above the reference set so no manifest span or lookup key can
     * collide. */
-  private[graft] val WhSqlSdfDir: String =
-    StagePath.stripSuffix("records.parquet") + "whsql_sdf"
-  private[graft] val WhSqlReadStagePath: String =
-    StagePath.stripSuffix("records.parquet") + "whsql_read_records.parquet"
+  private[graft] val WhSqlSdfDir: String = StageDir + "whsql_sdf"
+  private[graft] val WhSqlReadStagePath: String = StageDir + "whsql_read_records.parquet"
 
   private def stageWhSql(s: org.apache.spark.sql.SparkSession): Unit =
     graft.StateCache.stage(s, "SdfQueries.whSql", Nil) {
@@ -425,8 +424,7 @@ object SdfQueries {
     * the lookup warehouses: the first run pays the streamed ingest,
     * repeats price the steady state (a drained AvailableNow pass
     * over already-manifested files → no writes). */
-  private[graft] val StreamIngestWhDir: String =
-    StagePath.stripSuffix("records.parquet") + "stream_ingest_wh"
+  private[graft] val StreamIngestWhDir: String = StageDir + "stream_ingest_wh"
 
   def queries: Seq[GraftQuery] = Seq(
     // Streaming twin of warehouse_ingest (file ARRIVAL → extract →

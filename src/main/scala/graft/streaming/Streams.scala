@@ -304,7 +304,7 @@ object Streams {
   /** Near-dup detection ON INGEST: the fresh-crawl document stream is
     * minhash-sketched per row, banded, and stream-static-joined
     * against the PERSISTED corpus sketch table
-    * ([[graft.operators.Dedup.minhashSketchTable]] — the round-11
+    * ([[graft.operators.Dedup.MinhashSketch]] — the round-11
     * warehouse column), emitting each arriving document's verified
     * near-dup pairs continuously. This is the streaming regime of
     * `dedup_minhash_incremental`: same slice convention (doc_id >=
@@ -367,9 +367,9 @@ object Streams {
     graft.functions.GraftFunctions.register(spark)
     val p = spark.sparkContext.defaultParallelism
     // persisted corpus side: (doc_id, ghs, n, sig), built once per
-    // corpus version (fingerprint-keyed) — reading it here is what
+    // corpus version (Dedup.MinhashSketch) — reading it here is what
     // makes the gate affordable: no full-corpus re-sketch per batch
-    val sk = Dedup.minhashSketchTable(spark, dir)
+    val sk = Dedup.MinhashSketch.table(spark, dir)
     // carry `n` so the band join can apply the batch path's length
     // prefilter (J <= min(n)/max(n): a length mismatch disqualifies a
     // pair before the array_intersect verify ever runs on it)
@@ -448,7 +448,7 @@ object Streams {
     graft.functions.GraftFunctions.register(spark)
     val docsBatch = graft.Tables.documents(spark, dir)
     val schema = docsBatch.schema
-    val wt = Dedup.substringWindowTable(spark, dir)
+    val wt = Dedup.SubstringWindows.table(spark, dir)
     val freshAll = spark.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
     val fresh = Dedup.incrementalSplit(docsBatch)
@@ -497,7 +497,7 @@ object Streams {
                                     fresh: DataFrame, delay: String): DataFrame = {
     import graft.operators.Dedup
     graft.functions.GraftFunctions.register(spark)
-    val wt = Dedup.substringWindowTable(spark, dir)
+    val wt = Dedup.SubstringWindows.table(spark, dir)
     val marked = fresh
       .filter(length(col("text")).cast("long") >= Dedup.SubstringK)
       .withWatermark("ingest_ts", delay)
@@ -514,23 +514,15 @@ object Streams {
           .as("dup_frac"))
   }
 
-  /** Stage path + memo for the entry's oracle (the usual
-    * once-per-corpus staged-pairs convention). */
-  val StreamDocPairStagePath: String =
-    graft.sources.SdfQueries.StagePath.stripSuffix("records.parquet") +
-      "stream_doc_pairs.parquet"
-
-  /** Ensure `dir`'s stream-gate pair list is staged (the oracle
-    * convention shared by the pair gate and the curation gate). */
-  private def ensureStreamDocPairsStaged(spark: SparkSession, dir: String): Unit =
-    graft.StateCache.stage(spark, "Streams.streamDocPairs",
-        Seq(graft.Tables.path(dir, "documents"))) {
-      streamDedupDocs(spark, dir)
-        .write.mode("overwrite").parquet(StreamDocPairStagePath)
-    }
+  /** The stream-gate pair list, staged once per corpus version for
+    * the entry's oracle (the oracle convention shared by the pair gate
+    * and the curation gate). */
+  val StreamDocPairs: graft.Staged = graft.Staged("stream_doc_pairs.parquet") { c =>
+    streamDedupDocs(c.spark, c.dir).write.mode("overwrite").parquet(StreamDocPairs.path)
+  }
 
   def streamDedupDocsStaged(spark: SparkSession, dir: String): DataFrame = {
-    ensureStreamDocPairsStaged(spark, dir)
+    StreamDocPairs.ensure(spark, dir)
     streamDedupDocs(spark, dir)
   }
 
@@ -540,7 +532,7 @@ object Streams {
     * incremental twin (wrong score, below-threshold emission, or an
     * out-of-slice pair all fail the hash). */
   private val streamDedupDocsSql: String =
-    graft.operators.Dedup.minhashLshSqlOver(StreamDocPairStagePath,
+    graft.operators.Dedup.minhashLshSqlOver(StreamDocPairs.path,
       "\n  WHERE doc_b >= (SELECT MAX(doc_id) * 9 // 10 FROM documents)")
 
   // ---- streaming curation gate (curate_pipeline at ingest) ----
@@ -552,7 +544,7 @@ object Streams {
     *     stay the oracle's form) — stateless filter;
     *  2. exact-duplication gate: stream-static LEFT ANTI join
     *     against the persisted corpus hash set
-    *     ([[graft.operators.Dedup.corpusHashTable]] — the exact twin
+    *     ([[graft.operators.Dedup.CorpusHashes]] — the exact twin
     *     of the minhash gate's sketch state);
     *  3. near-duplication gate: the shared scored-pair pipeline
     *     ([[gateScoredPairs]], corpus side static) flags fresh docs
@@ -576,7 +568,7 @@ object Streams {
   def streamCurateGate(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Curation, Dedup}
     graft.functions.GraftFunctions.register(spark)
-    ensureStreamDocPairsStaged(spark, dir)
+    StreamDocPairs.ensure(spark, dir)
     val docsBatch = graft.Tables.documents(spark, dir)
     val schema = docsBatch.schema
     val freshAll = spark.readStream.schema(schema)
@@ -590,7 +582,7 @@ object Streams {
       nChars >= lit(Curation.CurateMinChars) && nChars <= lit(Curation.CurateMaxChars) &&
         element_at(st, 3) / nChars < lit(Curation.CurateMaxPunctRatio) &&
         element_at(st, 5) / element_at(st, 1) < lit(Curation.CurateMaxMeanWordLen))
-    val afterExact = q.join(Dedup.corpusHashTable(spark, dir),
+    val afterExact = q.join(Dedup.CorpusHashes.table(spark, dir),
       md5(col("text")) === col("h"), "left_anti")
     val passTok = afterExact.select(col("doc_id"), col("lang"), lit(0).as("flag"))
     val dupTok = gateScoredPairs(spark, dir, afterExact, carry = Nil)
@@ -621,7 +613,7 @@ object Streams {
        |      AND md5(o.text) = md5(q.text))
        |), flagged AS (
        |  SELECT DISTINCT doc_b FROM (
-       |${Dedup.minhashLshSqlOver(StreamDocPairStagePath, "")}
+       |${Dedup.minhashLshSqlOver(StreamDocPairs.path, "")}
        |  ) p
        |)
        |SELECT lang, doc_id FROM e
@@ -660,7 +652,7 @@ object Streams {
       nChars >= lit(Curation.CurateMinChars) && nChars <= lit(Curation.CurateMaxChars) &&
         element_at(st, 3) / nChars < lit(Curation.CurateMaxPunctRatio) &&
         element_at(st, 5) / element_at(st, 1) < lit(Curation.CurateMaxMeanWordLen))
-    val afterExact = q.join(Dedup.corpusHashTable(spark, dir),
+    val afterExact = q.join(Dedup.CorpusHashes.table(spark, dir),
       md5(col("text")) === col("h"), "left_anti")
     val passTok = afterExact.select(col("doc_id"), col("ingest_ts"), lit(0).as("flag"))
     val dupTok = gateScoredPairs(spark, dir, afterExact, carry = Seq("ingest_ts"))
@@ -864,7 +856,7 @@ object Streams {
   /** Serving-side takedown enforcement — the streaming half of the
     * [[graft.operators.Retract]] family (round 18, VERDICT r17 item
     * 6). Serving reads flow as the stream; the tombstone REGISTRY
-    * ([[graft.operators.Retract.tombstoneTable]], the takedown-sized
+    * ([[graft.operators.Retract.Tombstones]], the takedown-sized
     * id table a compliance system maintains) sits on the STATIC side
     * of a stream-static anti join, which Structured Streaming
     * re-evaluates every micro-batch — a tombstone appended between
@@ -875,7 +867,7 @@ object Streams {
     * traffic). Serving correctness therefore never waits on the
     * heavier state-table repair, which consumes the SAME registry
     * asynchronously: [[streamTakedownQueue]] is the repair feed, and
-    * [[graft.operators.Retract.repairedState]] the batch consumer —
+    * [[graft.operators.Retract.Repair]] the batch consumer —
     * the spec pins the stream gate, the queue, and the repaired
     * state to the one batch retraction semantics. */
   def streamTakedownGate(spark: SparkSession, dir: String): DataFrame = {
@@ -885,7 +877,7 @@ object Streams {
     val reads = spark.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
     val served = reads
-      .join(broadcast(Retract.tombstoneTable(spark, dir)), Seq("doc_id"), "left_anti")
+      .join(broadcast(Retract.Tombstones.table(spark, dir)), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     runToMemory(spark, served, "graft_stream_takedown_gate", OutputMode.Append())
       .orderBy(col("doc_id"))
@@ -910,7 +902,7 @@ object Streams {
     val reads = spark.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
     val queued = reads
-      .join(broadcast(Retract.tombstoneTable(spark, dir)), Seq("doc_id"), "left_semi")
+      .join(broadcast(Retract.Tombstones.table(spark, dir)), Seq("doc_id"), "left_semi")
       .select(col("doc_id"))
     runToMemory(spark, queued, "graft_stream_takedown_queue", OutputMode.Append())
       .orderBy(col("doc_id"))

@@ -39,7 +39,7 @@ class BpeSpec extends AnyFunSuite {
 
   test("codec equals the replace-chain reference form on the real corpus") {
     val docs = Tables.documents(spark, dir)
-    val merges = Bpe.bpeMergesTable(spark, dir).orderBy(col("rank")).collect()
+    val merges = Bpe.MergeTable.table(spark, dir).orderBy(col("rank")).collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
     assert(merges.nonEmpty, "training should learn merges on the real corpus")
     val codec = codecOf(merges)
@@ -80,7 +80,7 @@ class BpeSpec extends AnyFunSuite {
     // terminate naturally, far under BpeMerges, with the whole
     // vocabulary collapsed to single symbols (the documented
     // saturation regime the 4k cap exposes)
-    val merges = Bpe.bpeMergesTable(spark, dir).orderBy(col("rank")).collect()
+    val merges = Bpe.MergeTable.table(spark, dir).orderBy(col("rank")).collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
     assert(merges.length < Bpe.BpeMerges,
       s"training hit the ${Bpe.BpeMerges} cap on a 31-word corpus — saturation logic broken")

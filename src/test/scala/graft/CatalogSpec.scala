@@ -48,12 +48,12 @@ class CatalogSpec extends AnyFunSuite {
 
   test("state tables register when present and serve their persisted rows") {
     // produce one persisted state table, then re-register
-    operators.Curation.splitSidesTable(spark, dir)
+    operators.Curation.SplitSides.table(spark, dir)
     val views = Catalog.registerAll(spark, dir)
     assert(views.contains("graft_split_sides"))
     val viaSql = spark.sql("SELECT * FROM graft_split_sides")
       .collect().map(_.toString).toSeq.sorted
-    val viaApi = operators.Curation.splitSidesTable(spark, dir)
+    val viaApi = operators.Curation.SplitSides.table(spark, dir)
       .collect().map(_.toString).toSeq.sorted
     assert(viaSql == viaApi && viaSql.nonEmpty)
   }

@@ -159,7 +159,7 @@ class CurationSpec extends AnyFunSuite {
     val full = Curation.dedupClusters(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // components touched by a slice pair (either endpoint)
-    val sliceEndpoints = operators.Dedup.ngramPairsStaged(spark, dir)
+    val sliceEndpoints = operators.Dedup.NgramPairs.table(spark, dir)
       .filter(col("doc_b") >= lit(split))
       .collect().flatMap(r => Seq(r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")))
       .toSet
@@ -184,7 +184,7 @@ class CurationSpec extends AnyFunSuite {
     // the leakage property, checked on the PAIRS (not just clusters):
     // both endpoints of every near-dup pair share a side
     val side = rows.map(r => r.getLong(0) -> r.getString(2)).toMap
-    val pairs = operators.Dedup.ngramPairsStaged(spark, dir)
+    val pairs = operators.Dedup.NgramPairs.table(spark, dir)
       .select("doc_a", "doc_b").collect()
     assert(pairs.nonEmpty)
     pairs.foreach { p =>
@@ -208,28 +208,28 @@ class CurationSpec extends AnyFunSuite {
   test("cluster signal routing: ngram below the budget line, minhash above, forced routes honored") {
     def pairsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ngram = pairsOf(operators.Dedup.ngramPairsStaged(spark, dir))
+    val ngram = pairsOf(operators.Dedup.NgramPairs.table(spark, dir))
     // default at test scale: the grid's predicted shuffle is far
     // below any sane disk budget — the signal IS the ngram list
-    assert(pairsOf(operators.Dedup.clusterPairSignal(spark, dir)) == ngram)
+    assert(pairsOf(operators.Dedup.ClusterSignal.table(spark, dir)) == ngram)
     assert(operators.Dedup.lastClusterSignalRoute == "ngram")
     try {
       // sizing model says DNF (budget forced to one byte): the
       // signal reroutes to the minhash sweep without a force flag
       spark.conf.set("graft.clusters.gridShuffleBudgetBytes", "1")
-      val rerouted = pairsOf(operators.Dedup.clusterPairSignal(spark, dir))
+      val rerouted = pairsOf(operators.Dedup.ClusterSignal.table(spark, dir))
       assert(operators.Dedup.lastClusterSignalRoute == "minhash")
       assert(rerouted == pairsOf(operators.Dedup.dedupMinhashLshStaged(spark, dir)))
       // forced override wins over the sizing model
       spark.conf.set("graft.clusters.signalRoute", "ngram")
-      assert(pairsOf(operators.Dedup.clusterPairSignal(spark, dir)) == ngram)
+      assert(pairsOf(operators.Dedup.ClusterSignal.table(spark, dir)) == ngram)
     } finally {
       spark.conf.unset("graft.clusters.gridShuffleBudgetBytes")
       spark.conf.unset("graft.clusters.signalRoute")
     }
     // flip-flop back to the default route re-stages (last-version
     // memo): consumers never read a stale rerouted signal
-    assert(pairsOf(operators.Dedup.clusterPairSignal(spark, dir)) == ngram)
+    assert(pairsOf(operators.Dedup.ClusterSignal.table(spark, dir)) == ngram)
   }
 
   /** The file names of a staged output: new on every re-stage. */
@@ -238,23 +238,23 @@ class CurationSpec extends AnyFunSuite {
   test("a reroute re-stages every staging that reads the cluster signal") {
     import operators.{Dedup, Retract}
     def stageAll(): Unit = {
-      Curation.clusterLabelsTable(spark, dir)
-      Curation.splitSidesTable(spark, dir)
-      Retract.fullClusterLabels(spark, dir)
+      Curation.ClusterLabels.table(spark, dir)
+      Curation.SplitSides.table(spark, dir)
+      Retract.FullClusterLabels.table(spark, dir)
     }
-    val outputs = Seq(Curation.ClusterLabelStagePath, Curation.SplitSidesPath,
-      Retract.FullClusterLabelPath)
+    val outputs = Seq(Curation.ClusterLabels.path, Curation.SplitSides.path,
+      Retract.FullClusterLabels.path)
     stageAll()
     val before = outputs.map(listingOf)
     stageAll()
     assert(outputs.map(listingOf) == before, "a warm call must not re-stage")
     // both routes give the same rows on this corpus, so only the
     // outputs' listings can show that the downstream stagings re-ran
-    val signal = listingOf(Dedup.ClusterSignalStagePath)
+    val signal = listingOf(Dedup.ClusterSignal.path)
     try {
       spark.conf.set("graft.clusters.signalRoute", "minhash")
       stageAll()
-      assert(listingOf(Dedup.ClusterSignalStagePath) != signal, "the signal did not re-stage")
+      assert(listingOf(Dedup.ClusterSignal.path) != signal, "the signal did not re-stage")
       outputs.zip(before).foreach { case (out, was) =>
         assert(listingOf(out) != was, s"$out was not re-staged after the reroute")
       }
@@ -266,23 +266,23 @@ class CurationSpec extends AnyFunSuite {
     def rows(df: DataFrame): Set[String] = df.collect().map(_.toString).toSet
     def staged(path: String): Set[String] = rows(spark.read.parquet(path))
     def snapshot(d: String): Map[String, Set[String]] = Map(
-      "ngramPairsStaged" -> rows(Dedup.ngramPairsStaged(spark, d)),
-      "clusterPairSignal" -> rows(Dedup.clusterPairSignal(spark, d)),
-      "clusterLabelsTable" -> rows(Curation.clusterLabelsTable(spark, d)),
-      "splitSidesTable" -> rows(Curation.splitSidesTable(spark, d)),
-      "fullClusterLabels" -> rows(Retract.fullClusterLabels(spark, d)),
+      "NgramPairs" -> rows(Dedup.NgramPairs.table(spark, d)),
+      "ClusterSignal" -> rows(Dedup.ClusterSignal.table(spark, d)),
+      "ClusterLabels" -> rows(Curation.ClusterLabels.table(spark, d)),
+      "SplitSides" -> rows(Curation.SplitSides.table(spark, d)),
+      "FullClusterLabels" -> rows(Retract.FullClusterLabels.table(spark, d)),
       "decontaminateFuzzyStaged" -> {
-        Dedup.decontaminateFuzzyStaged(spark, d); staged(Dedup.DeconFuzzyPairStagePath)
+        Dedup.decontaminateFuzzyStaged(spark, d); staged(Dedup.DeconFuzzyPairs.path)
       },
       "dedupMinhashLshStaged" -> {
-        Dedup.dedupMinhashLshStaged(spark, d); staged(Dedup.MinhashPairStagePath)
+        Dedup.dedupMinhashLshStaged(spark, d); staged(Dedup.MinhashPairs.path)
       },
       "dedupMinhashIncrementalStaged" -> {
-        Dedup.dedupMinhashIncrementalStaged(spark, d); staged(Dedup.MinhashIncrPairStagePath)
+        Dedup.dedupMinhashIncrementalStaged(spark, d); staged(Dedup.MinhashIncrPairs.path)
       },
       "streamDedupDocsStaged" -> {
         streaming.Streams.streamDedupDocsStaged(spark, d)
-        staged(streaming.Streams.StreamDocPairStagePath)
+        staged(streaming.Streams.StreamDocPairs.path)
       },
       "dedupClusters" -> rows(Curation.dedupClusters(spark, d)))
     val tmp = java.nio.file.Files.createTempDirectory("graft_rewrite")
@@ -300,7 +300,7 @@ class CurationSpec extends AnyFunSuite {
     val served = snapshot(corpus.toString)
     StateCache.dropAll()
     val live = snapshot(corpus.toString)
-    assert(live("ngramPairsStaged") != first("ngramPairsStaged"), "the rewrite moved no pairs")
+    assert(live("NgramPairs") != first("NgramPairs"), "the rewrite moved no pairs")
     live.keys.foreach(k => assert(served(k) == live(k), s"$k served its pre-rewrite state"))
   }
 
@@ -311,12 +311,12 @@ class CurationSpec extends AnyFunSuite {
     // every unflipped old doc keeps its persisted side
     val inc = operators.Curation.splitLeakageFreeIncremental(spark, dir).collect()
     val side = inc.map(r => r.getLong(0) -> r.getString(2)).toMap
-    operators.Dedup.ngramPairsStaged(spark, dir).select("doc_a", "doc_b").collect()
+    operators.Dedup.NgramPairs.table(spark, dir).select("doc_a", "doc_b").collect()
       .foreach { p =>
         assert(side(p.getLong(0)) == side(p.getLong(1)),
           s"near-dup pair (${p.getLong(0)}, ${p.getLong(1)}) straddles the sticky split")
       }
-    val prev = operators.Curation.splitSidesTable(spark, dir).collect()
+    val prev = operators.Curation.SplitSides.table(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     inc.filter(r => prev.contains(r.getLong(0))).foreach { r =>
       if (!r.getBoolean(3))

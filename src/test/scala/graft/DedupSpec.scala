@@ -40,7 +40,7 @@ class DedupSpec extends AnyFunSuite {
   test("staged ngram pair list equals the live pair pipeline") {
     val live = Dedup.dedupNgramJaccard(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val staged = Dedup.ngramPairsStaged(spark, dir).collect()
+    val staged = Dedup.NgramPairs.table(spark, dir).collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"), r.getAs[Double]("jaccard"))).toSet
     assert(staged.nonEmpty && staged == live,
       "materialized pair signals must match a fresh pipeline run bit-for-bit")
@@ -135,7 +135,7 @@ class DedupSpec extends AnyFunSuite {
   test("persisted simhash signature table equals the live signatures") {
     val live = Dedup.simhashSignatures(Tables.documents(spark, dir))
       .orderBy("doc_id").collect().map(_.toString).toSeq
-    val staged = Dedup.simhashSigTable(spark, dir)
+    val staged = Dedup.SimhashSigs.table(spark, dir)
       .orderBy("doc_id").collect().map(_.toString).toSeq
     assert(staged == live)
   }

@@ -682,8 +682,8 @@ class PlanAuditSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, dir)
     val ret = docs.filter(operators.Retract.takedownPred).select(col("doc_id"))
     val parts = operators.Retract.touchedRelabel(
-      operators.Retract.fullClusterLabels(spark, dir),
-      operators.Dedup.clusterPairSignal(spark, dir), ret)
+      operators.Retract.FullClusterLabels.table(spark, dir),
+      operators.Dedup.ClusterSignal.table(spark, dir), ret)
     val edgePlan = formatted(parts.touchedEdges)
     assert(edgePlan.contains("cluster_signal_pairs") && edgePlan.contains("cluster_labels_full"),
       s"closure input does not derive from the staged pair signal + full labels:\n$edgePlan")

@@ -58,7 +58,7 @@ class RetractSpec extends AnyFunSuite with BeforeAndAfterAll {
   // are COLLECTED before any tempDir builder runs, because builders
   // write to the same global stage paths. ----
   private lazy val fixture: (Map[String, Set[String]], Array[Byte], String) = {
-    Retract.repairedState(spark, dir)
+    Retract.Repair.ensure(spark, dir)
     val repaired = Map(
       "tfidf"   -> rows(spark.read.parquet(Retract.RetTfidfPath)),
       "ngram"   -> rows(spark.read.parquet(Retract.RetNgramFreqPath)),
@@ -88,10 +88,10 @@ class RetractSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("repaired per-doc state tables equal a from-scratch rebuild on the reduced corpus") {
     val (repaired, repairedCms, tmp) = fixture
-    assert(rows(Curation.tfidfStateTable(spark, tmp)) == repaired("tfidf"))
-    assert(rows(Dedup.simhashSigTable(spark, tmp)) == repaired("simhash"))
-    assert(rows(Pack.shardMeasureTable(spark, tmp)) == repaired("measure"))
-    assert(rows(Dedup.minhashSketchTable(spark, tmp)) == repaired("sketch"))
+    assert(rows(Curation.TfidfState.table(spark, tmp)) == repaired("tfidf"))
+    assert(rows(Dedup.SimhashSigs.table(spark, tmp)) == repaired("simhash"))
+    assert(rows(Pack.ShardMeasure.table(spark, tmp)) == repaired("measure"))
+    assert(rows(Dedup.MinhashSketch.table(spark, tmp)) == repaired("sketch"))
     // the sketch rebuild also rewrites the CMS at its global path —
     // byte-compare against the repaired CMS
     val rebuiltCms = java.nio.file.Files.readAllBytes(
@@ -102,15 +102,15 @@ class RetractSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("repaired additive-count tables subtract exactly (bigrams, window totals, hash refcounts)") {
     val (repaired, _, tmp) = fixture
-    assert(rows(TextOps.ngramFreqStateTable(spark, tmp)) == repaired("ngram"))
-    assert(rows(Dedup.substringWindowTable(spark, tmp)) == repaired("windows"))
-    assert(rows(Dedup.corpusHashTable(spark, tmp)) == repaired("hashes"))
+    assert(rows(TextOps.NgramFreqState.table(spark, tmp)) == repaired("ngram"))
+    assert(rows(Dedup.SubstringWindows.table(spark, tmp)) == repaired("windows"))
+    assert(rows(Dedup.CorpusHashes.table(spark, tmp)) == repaired("hashes"))
   }
 
   test("repaired cluster labels equal the closure over the reduced corpus's own pairs") {
     val (repaired, _, tmp) = fixture
     val rebuilt = Curation.connectedComponents(
-        Dedup.ngramPairsStaged(spark, tmp)
+        Dedup.NgramPairs.table(spark, tmp)
           .select(col("doc_a").as("a"), col("doc_b").as("b")))
       .select(col("v").as("doc_id"), col("lab").as("cluster_root"))
     assert(rows(rebuilt) == repaired("labels"))
@@ -119,7 +119,7 @@ class RetractSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("split sides are sticky: delete-only, and deletion creates no cross-side pair") {
     val (repaired, _, _) = fixture
     // delete-only: repaired == persisted minus the takedown rows
-    val expected = rows(Curation.splitSidesTable(spark, dir)
+    val expected = rows(Curation.SplitSides.table(spark, dir)
       .join(broadcast(Tables.documents(spark, dir)
         .filter(Retract.takedownPred).select(col("doc_id"))),
         Seq("doc_id"), "left_anti"))
@@ -130,7 +130,7 @@ class RetractSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sides = spark.read.parquet(Retract.RetSplitSidesPath)
     val ret = Tables.documents(spark, dir).filter(Retract.takedownPred)
       .select(col("doc_id"))
-    val surv = Dedup.ngramPairsStaged(spark, dir)
+    val surv = Dedup.NgramPairs.table(spark, dir)
       .join(broadcast(ret.withColumnRenamed("doc_id", "doc_a")), Seq("doc_a"), "left_anti")
       .join(broadcast(ret.withColumnRenamed("doc_id", "doc_b")), Seq("doc_b"), "left_anti")
     val crossers = surv
@@ -234,4 +234,35 @@ class RetractSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     }
   }
+
+  test("a warm repair lists documents.parquet at most once") {
+    Retract.Repair.ensure(spark, dir)
+    val docs = new org.apache.hadoop.fs.Path(Tables.path(dir, "documents")).toUri.getPath
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    val saved = keys.map(k => k -> Option(conf.get(k)))
+    // uncached, so every FileSystem.get during the call is a counting
+    // instance and none of them outlives it in the shared FS cache
+    conf.set("fs.file.impl", classOf[CountingLocalFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    CountingLocalFs.calls.clear()
+    try Retract.Repair.ensure(spark, dir)
+    finally saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+    val listings = CountingLocalFs.calls.toArray.count(_ == ("listStatus" -> docs))
+    assert(CountingLocalFs.calls.size > 0, "the counting file system was not installed")
+    assert(listings <= 1, s"a warm repair listed $docs $listings times")
+  }
+}
+
+/** The local file system, counting its metadata calls by (call, path). */
+class CountingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  private def hit(call: String, p: Path): Unit = CountingLocalFs.calls.add(call -> p.toUri.getPath)
+  override def globStatus(p: Path): Array[FileStatus] = { hit("globStatus", p); super.globStatus(p) }
+  override def listStatus(p: Path): Array[FileStatus] = { hit("listStatus", p); super.listStatus(p) }
+  override def getFileStatus(p: Path): FileStatus = { hit("getFileStatus", p); super.getFileStatus(p) }
+}
+
+object CountingLocalFs {
+  val calls = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
 }

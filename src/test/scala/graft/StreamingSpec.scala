@@ -31,7 +31,7 @@ class StreamingSpec extends AnyFunSuite {
     // queued repair: the batch consumer of the same registry leaves
     // NO per-doc state for any queued id (tf term counts — the most
     // consumer-visible table; RetractSpec pins the other eleven)
-    operators.Retract.repairedState(spark, dir)
+    operators.Retract.Repair.ensure(spark, dir)
     val retained = spark.read.parquet(operators.Retract.RetTfidfPath)
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     assert(retained.intersect(queued).isEmpty,
@@ -163,7 +163,7 @@ class StreamingSpec extends AnyFunSuite {
       nChars >= lit(Curation.CurateMinChars) && nChars <= lit(Curation.CurateMaxChars) &&
         element_at(st, 3) / nChars < lit(Curation.CurateMaxPunctRatio) &&
         element_at(st, 5) / element_at(st, 1) < lit(Curation.CurateMaxMeanWordLen))
-    val e = q.join(Dedup.corpusHashTable(spark, dir),
+    val e = q.join(Dedup.CorpusHashes.table(spark, dir),
       md5(col("text")) === col("h"), "left_anti")
     val flagged = Dedup.dedupMinhashLshIncremental(spark, dir)
       .select(col("doc_b").as("doc_id")).distinct()
@@ -322,7 +322,7 @@ class StreamingSpec extends AnyFunSuite {
         .select(col("doc_id"),
           (length(col("text")) - lit(Dedup.SubstringK - 1)).cast("long").as("n_windows"),
           explode(expr(s"graft_window_hashes(text, ${Dedup.SubstringK})")).as("wh"))
-        .join(Dedup.substringWindowTable(spark, dir), "wh")
+        .join(Dedup.SubstringWindows.table(spark, dir), "wh")
         .groupBy(col("doc_id"), col("n_windows"))
         .agg(sum(when(col("total") === 1, 1L).otherwise(0L)).as("uniq"))
         .select(col("doc_id"), col("n_windows"),
