@@ -43,8 +43,13 @@ echo "[preflight] DuckDB oracle compare..."
 python3 scripts/check_oracle.py "$SMOKE_SF" "$OUT/verify"
 
 echo "[preflight] OK — suite green, registry smoke green."
-# ROADMAP aim 2 tracks the size of the library the way it tracks the suite
+# ROADMAP aim 2 tracks the size of the library and its options the way
+# it tracks the suite
 echo "[preflight] src/main Scala LoC: $(find src/main -name '*.scala' -exec cat {} + | wc -l)"
+echo "[preflight] graft.* conf keys read:" \
+  $(grep -rhoE '"graft\.[A-Za-z.]+"' src/main | tr -d '"' | sort -u)
+echo "[preflight] env vars read:" \
+  $(grep -rhoE 'sys\.env[^"]*"[A-Z_]+"' src/main | grep -oE '"[A-Z_]+"' | tr -d '"' | sort -u)
 
 if [[ -n "$COMMIT_MSG" ]]; then
   git add -A

@@ -48,7 +48,7 @@ object Staged {
   /** One [[Staged.ensure]] over the corpus at `dir`: each source table is
     * listed once and each staging versioned once, however many stagings
     * read them. */
-  final class Call private[Staged] (val spark: SparkSession, val dir: String) {
+  final class Call private[graft] (val spark: SparkSession, val dir: String) {
     private[Staged] val versions = scala.collection.mutable.Map.empty[Staged, Any]
     private val identities = scala.collection.mutable.Map.empty[String, String]
 

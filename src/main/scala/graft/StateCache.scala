@@ -11,13 +11,13 @@ import org.apache.spark.sql.SparkSession
   * LAST version key. A lookup under another version rebuilds and
   * replaces the value, so an A → B → A flip-flop rebuilds each time:
   * a set-of-done-versions memo would wrongly skip the rebuild of A
-  * while the single staged output still holds B's data. The builder
-  * is handed the superseded value, for callers that release what it
-  * holds (a temp-dir index deletes its superseded posting lists).
+  * while the single staged output still holds B's data. A superseded
+  * value is dropped, never handed on: state that outlives it on disk
+  * (the IVF index's version dirs) has its own lifecycle.
   *
-  * Derived state names what it reads ([[stage]], [[superseding]]):
-  * the cache versions it on each read path's listing [[identity]],
-  * plus any non-file parameter that changes it. A staged corpus table
+  * Derived state names what it reads ([[stage]]): the cache versions
+  * it on each read path's listing [[identity]], plus any non-file
+  * parameter that changes it. A staged corpus table
   * ([[Staged]]) names the stagings it reads rather than their output
   * paths: its version carries the versions they were staged at, so a
   * re-stage upstream moves every downstream version with it, and one
@@ -61,25 +61,18 @@ object StateCache {
 
   /** The JVM-wide value of `artifact` at `version`, built once. */
   def apply[V](artifact: Any, version: Any)(build: => V): V =
-    lookup[V](None, artifact, version)(_ => build)
+    lookup[V](None, artifact, version)(build)
 
-  /** Run `body` for `artifact` once per version of the files at
-    * `reads` and of `params`: each read's path and listing identity,
-    * plus `params`. */
-  def stage(spark: SparkSession, artifact: Any, reads: Seq[String], params: Any = ())
-           (body: => Unit): Unit =
-    lookup[Unit](None, artifact, versionOf(spark, reads, params))(_ => body)
-
-  /** The value of `artifact` built from the files at `reads`, once per
-    * version as in [[stage]]; its build receives the superseded value,
-    * if any. */
-  def superseding[V](spark: SparkSession, artifact: Any, reads: Seq[String])
-                    (build: Option[V] => V): V =
-    lookup[V](None, artifact, versionOf(spark, reads, ()))(build)
+  /** The value of `artifact` built by `body` once per version of the
+    * files at `reads` and of `params`: each read's path and listing
+    * identity, plus `params`. */
+  def stage[V](spark: SparkSession, artifact: Any, reads: Seq[String], params: Any = ())
+              (body: => V): V =
+    lookup[V](None, artifact, versionOf(spark, reads, params))(body)
 
   /** The value of `artifact` at `version` for `spark`'s session. */
   def session[V](spark: SparkSession, artifact: Any, version: Any)(build: => V): V =
-    lookup[V](Some(spark), artifact, version)(_ => build)
+    lookup[V](Some(spark), artifact, version)(build)
 
   /** Drop every value in every scope. */
   def dropAll(): Unit = slots.clear()
@@ -88,16 +81,15 @@ object StateCache {
     (reads.map(p => p -> identity(listing(spark, p))), params)
 
   private def lookup[V](scope: Option[SparkSession], artifact: Any, version: Any)
-                       (build: Option[V] => V): V = {
+                       (build: => V): V = {
     slots.keySet.removeIf(_._1.exists(_.sparkContext.isStopped))
     val slot = slots.computeIfAbsent((scope, artifact), _ => new Slot)
     slot.synchronized {
       if (!slot.version.contains(version)) {
-        val superseded = slot.version.map(_ => slot.value.asInstanceOf[V])
         // a build that throws leaves the slot empty, never serving a
         // value whose staged output it may have half overwritten
         slot.version = None
-        slot.value = build(superseded)
+        slot.value = build
         slot.version = Some(version)
       }
       slot.value.asInstanceOf[V]

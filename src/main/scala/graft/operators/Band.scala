@@ -53,27 +53,31 @@ import org.apache.spark.sql.functions._
   * the ceiling, [[selfBandProfile]] FALLS BACK to the
   * caller-supplied join form (the bin composition keeps working at
   * any density; the kernel is the fast path, not a correctness
-  * dependency). The fallback line is
-  * `graft.band.maxKernelRowsPerBucket` (default 8M rows/bucket).
+  * dependency). The fallback line is [[MaxKernelRowsPerBucket]].
   */
 object Band {
 
   /** Max rows the kernel may buffer for one bucket (a bucket must
     * sort + scan in one task). The route gates the measured MAX
     * staged bucket size against this, so it is a hard per-task
-    * memory ceiling, not an average.
-    * Override: `graft.band.maxKernelRowsPerBucket`. */
+    * memory ceiling, not an average. */
   val MaxKernelRowsPerBucket: Long = 8L * 1000 * 1000
-
-  /** Last routing decision — observability for the spec only. */
-  @volatile private[graft] var lastRoute: String = ""
 
   /** (key, n_similar, min_gap) for every row of `df` whose value
     * column has at least one OTHER row within +-eps. `joinForm` is
     * the dense-data fallback (and the spec's reference). */
   def selfBandProfile(spark: SparkSession, df: DataFrame, keyCol: String,
                       valCol: String, eps: Double,
-                      joinForm: => DataFrame): DataFrame = {
+                      joinForm: => DataFrame): DataFrame =
+    selfBandProfile(spark, df, keyCol, valCol, eps, joinForm, MaxKernelRowsPerBucket)
+
+  /** [[selfBandProfile]] with the kernel route's bucket bound as a
+    * parameter, so specs can run both routes on one input. The kernel
+    * route's plan carries its `MapPartitions`; the join route's does
+    * not. */
+  private[graft] def selfBandProfile(spark: SparkSession, df: DataFrame, keyCol: String,
+                                     valCol: String, eps: Double, joinForm: => DataFrame,
+                                     maxPerBucket: Long): DataFrame = {
     import spark.implicits._
     val outCols = Seq(keyCol, "n_similar", "min_gap")
     val stats = df.agg(min(col(valCol)).cast("double"), max(col(valCol)).cast("double"),
@@ -87,11 +91,9 @@ object Band {
     // parallelism, not correctness
     val maxB = math.max(1L, ((hi - lo) / (4 * eps)).toLong)
     val nb = math.min(math.max(parts.toLong, 1L), maxB).toInt
-    val maxPerBucket = spark.conf.getOption("graft.band.maxKernelRowsPerBucket")
-      .map(_.toLong).getOrElse(MaxKernelRowsPerBucket)
     // cheap short-circuit: if even the MEAN breaches the ceiling the
     // max must too — skip the bucketed count entirely
-    if (n / nb > maxPerBucket) { lastRoute = "join"; return joinForm }
+    if (n / nb > maxPerBucket) return joinForm
     val w = (hi - lo) / nb
     def bucketOf(v: org.apache.spark.sql.Column) =
       least(greatest(floor((v - lit(lo)) / lit(w)), lit(0.0)), lit((nb - 1).toDouble))
@@ -136,9 +138,8 @@ object Band {
       .agg(max(col("count"))).head().getLong(0)
     if (maxStaged > maxPerBucket) {
       staged0.unpersist(blocking = false)
-      lastRoute = "join"; return joinForm
+      return joinForm
     }
-    lastRoute = "kernel"
     val staged = staged0
       .repartition(nb.min(parts * 4), col("pid"))
       .sortWithinPartitions(col("pid"), col("p"), col("k"))

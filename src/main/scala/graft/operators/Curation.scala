@@ -261,10 +261,20 @@ object Curation {
       val oldPairs = c.read(Dedup.ClusterSignal)
         .filter(col("doc_b") < lit(split))
         .select(col("doc_a").as("a"), col("doc_b").as("b"))
-      connectedComponents(oldPairs)
-        .select(col("v").as("doc_id"), col("lab").as("cluster_root"))
-        .write.mode("overwrite").parquet(ClusterLabels.path)
+      stageLabels(oldPairs, ClusterLabels.path)
     }
+
+  /** Stage the components of `edges` at `path` as (doc_id,
+    * cluster_root). The driver route's labels are a local relation,
+    * which Spark writes as one tiny part file per core, and every scan
+    * of the staged table stats each part file: they are written as one
+    * file. The distributed route's labels keep their partitioning. */
+  private[graft] def stageLabels(edges: DataFrame, path: String): Unit = {
+    val labels = connectedComponents(edges)
+    (if (labels.isLocal) labels.coalesce(1) else labels)
+      .select(col("v").as("doc_id"), col("lab").as("cluster_root"))
+      .write.mode("overwrite").parquet(path)
+  }
 
   /** Incremental cluster maintenance (VERDICT r11 item 3): fold the
     * fresh crawl's near-dup pairs into the PERSISTED component

@@ -355,19 +355,13 @@ object Dedup {
     * ~1.9-3.2 s while the merge itself is milliseconds. B=1 routes
     * the SAME plan shape (one cell, no replication, one task), so
     * grid-invariance still pins equality; above the floor the
-    * memory-adaptive sizing is unchanged. Override:
-    * `graft.verify.smallVolumeBytes` (0 disables). */
+    * memory-adaptive sizing is unchanged. */
   private[graft] val SmallGridVolumeBytes = 64L << 20
 
   private[graft] def gridB(spark: SparkSession, volumeBytes: Long): Int =
-    spark.conf.getOption("graft.verify.gridSide").map(_.toInt)
-      .getOrElse {
-        val small = spark.conf.getOption("graft.verify.smallVolumeBytes")
-          .map(_.toLong).getOrElse(SmallGridVolumeBytes)
-        if (volumeBytes <= small) 1
-        else gridSideFor(volumeBytes, taskHeapBytes(spark),
-          spark.sparkContext.defaultParallelism)
-      }
+    spark.conf.getOption("graft.verify.gridSide").map(_.toInt).getOrElse(
+      if (volumeBytes <= SmallGridVolumeBytes) 1
+      else gridSideFor(volumeBytes, taskHeapBytes(spark), spark.sparkContext.defaultParallelism))
 
   /** The grid's PAIRS-side input plan: candidate pairs bucketed to
     * their cell, one partition per cell, streamed UNSORTED into the
@@ -848,15 +842,9 @@ object Dedup {
     * NOT routed here at any volume: their candidate relation
     * dwarfs the corpus, so per-pair array shipping would ship each
     * array ~8x and the grid's bounded B-fold replication wins.
-    * Override: `graft.verify.sparseVolumeBytes` (0 forces the
-    * above-floor regime — the equality spec does; the MEASURED
-    * candidate-density check then picks sparse vs grid, see
-    * [[DenseCandRatio]]). */
+    * Above the floor the MEASURED candidate-density check picks
+    * sparse vs grid, see [[DenseCandRatio]]. */
   private[graft] val SparseGridVolumeBytes = SmallGridVolumeBytes
-
-  private def sparseFloor(spark: SparkSession): Long =
-    spark.conf.getOption("graft.verify.sparseVolumeBytes")
-      .map(_.toLong).getOrElse(SparseGridVolumeBytes)
 
   /** Candidate-density line above which a BANDED family is verified
     * on the grid after all (r16, VERDICT r14 item 3): the sparse
@@ -868,14 +856,8 @@ object Dedup {
     * on a healthy corpus — but a near-dup-SATURATED crawl (the same
     * page mirrored thousands of times) collides everything into the
     * same band buckets and the banded relation turns dense too.
-    * 4 rows/doc splits the regimes with margin on both sides.
-    * Override: `graft.verify.denseCandRatio`. */
+    * 4 rows/doc splits the regimes with margin on both sides. */
   private[graft] val DenseCandRatio = 4.0
-
-  /** Last routing decision of [[verifyJaccardAuto]] — observability
-    * for the routing spec ONLY (specs run serially); not part of the
-    * operator contract. */
-  @volatile private[graft] var lastAutoRoute: String = ""
 
   /** Dispatch between the classic one-query grid and the sparse
     * pair join: by corpus volume first (below
@@ -893,27 +875,18 @@ object Dedup {
     * (the verify job recomputes `hashed` for the array joins — cross-
     * action exchange reuse doesn't exist), a bounded premium paid
     * only above the volume floor, against the unbounded downside of
-    * per-pair array shipping on a dense candidate set. */
-  private def verifyJaccardAuto(cand: DataFrame, hashed: DataFrame,
-                                docs: DataFrame): DataFrame = {
-    val spark = cand.sparkSession
+    * per-pair array shipping on a dense candidate set. The bounds are
+    * [[SparseGridVolumeBytes]] and [[DenseCandRatio]] outside specs;
+    * the sparse route's plan carries its `array_intersect` join, the
+    * grid routes' plans do not. */
+  private def verifyJaccardAuto(cand: DataFrame, hashed: DataFrame, docs: DataFrame,
+                                sparseFloor: Long, denseRatio: Double): DataFrame = {
     val vol = shingleVolumeBytes(docs)
-    if (vol <= sparseFloor(spark)) {
-      lastAutoRoute = "small-grid"
-      verifyJaccard(cand, hashed, vol)
-    } else {
-      val ratio = spark.conf.getOption("graft.verify.denseCandRatio")
-        .map(_.toDouble).getOrElse(DenseCandRatio)
+    if (vol <= sparseFloor) verifyJaccard(cand, hashed, vol)
+    else {
       val candP = cand.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val candRows = candP.count()
-      val docRows = docs.count()
-      if (candRows > ratio * docRows) {
-        lastAutoRoute = "dense-grid"
-        verifyJaccard(candP, hashed, vol)
-      } else {
-        lastAutoRoute = "sparse"
-        verifyJaccardSparse(candP, hashed)
-      }
+      if (candP.count() > denseRatio * docs.count()) verifyJaccard(candP, hashed, vol)
+      else verifyJaccardSparse(candP, hashed)
     }
   }
 
@@ -1306,7 +1279,14 @@ object Dedup {
     * table — the same split as ann_ivf (build+probe fused) vs
     * ann_ivf_probe (probe over the persisted index). */
   def dedupMinhashLsh(spark: SparkSession, dir: String,
-                      gridInputOnly: Boolean = false): DataFrame = {
+                      gridInputOnly: Boolean = false): DataFrame =
+    dedupMinhashLsh(spark, dir, gridInputOnly, SparseGridVolumeBytes, DenseCandRatio)
+
+  /** [[dedupMinhashLsh]] with the verify route's bounds as parameters
+    * ([[verifyJaccardAuto]]), so specs can run every route on one
+    * corpus. */
+  private[graft] def dedupMinhashLsh(spark: SparkSession, dir: String, gridInputOnly: Boolean,
+                                     sparseFloor: Long, denseRatio: Double): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val p = docs.sparkSession.sparkContext.defaultParallelism
     // same shared-exchange shape as the ngram path: ONE shingle
@@ -1330,7 +1310,8 @@ object Dedup {
     if (gridInputOnly) verifyGridPlan(cand, hashed, gridB(spark, shingleVolumeBytes(docs)))
     // banded LSH candidates arrive at the near-dup rate — the sparse
     // staged path applies at large volume (verifyJaccardAuto)
-    else verifyJaccardAuto(cand, hashed, docs).orderBy(col("doc_a"), col("doc_b"))
+    else verifyJaccardAuto(cand, hashed, docs, sparseFloor, denseRatio)
+      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** Fresh-crawl form (round 9; persisted a-side round 11): near-dup
@@ -1354,7 +1335,14 @@ object Dedup {
     * exactly "the pair touches the slice") — spec-pinned, same rows
     * same scores, persisted or live. */
   def dedupMinhashLshIncremental(spark: SparkSession, dir: String,
-                                 gridInputOnly: Boolean = false): DataFrame = {
+                                 gridInputOnly: Boolean = false): DataFrame =
+    dedupMinhashLshIncremental(spark, dir, gridInputOnly, SparseGridVolumeBytes, DenseCandRatio)
+
+  /** [[dedupMinhashLshIncremental]] with the verify route's bounds as
+    * parameters, as [[dedupMinhashLsh]]. */
+  private[graft] def dedupMinhashLshIncremental(spark: SparkSession, dir: String,
+                                                gridInputOnly: Boolean, sparseFloor: Long,
+                                                denseRatio: Double): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val restrict = incrementalSplit(docs)
       .map(split => col("doc_id") >= lit(split))
@@ -1373,7 +1361,8 @@ object Dedup {
     val hashedSk = sk.select(col("doc_id"), col("ghs"), col("n"))
     if (gridInputOnly) verifyGridPlan(cand, hashedSk, gridB(spark, shingleVolumeBytes(docs)))
     // sliced banded candidates: sparse staged path at large volume
-    else verifyJaccardAuto(cand, hashedSk, docs).orderBy(col("doc_a"), col("doc_b"))
+    else verifyJaccardAuto(cand, hashedSk, docs, sparseFloor, denseRatio)
+      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   // ---- decontaminate_fuzzy: near-dup train-vs-benchmark leakage ----
@@ -1767,10 +1756,6 @@ object Dedup {
 
   // ---- corpus-adaptive pair signal for the clusters/split family ----
 
-  /** Last routing decision of [[ClusterSignal]] — observability
-    * for the routing spec only (specs run serially). */
-  @volatile private[graft] var lastClusterSignalRoute: String = ""
-
   /** Predicted lower bound on the exact-ngram verify grid's shuffle:
     * the docs-side (2B−1)-fold replication of the corpus shingle
     * volume (the candidate pair relation comes ON TOP — at sf10 it
@@ -1801,33 +1786,26 @@ object Dedup {
     * box: ~12 GB of shingles, B≈16, a 0.26-0.5 TB docs-side shuffle
     * before the TB-class candidate relation lands — the signal comes
     * from the minhash sweep instead, whose banded candidates verify on
-    * the sparse pair join and COMPUTE at that scale. Force with
-    * `graft.clusters.signalRoute` = ngram|minhash (the routing spec
-    * does); the driver corpora are all far below the budget line, so
-    * the gate always exercises the ngram route. */
-  private def signalSource(c: Staged.Call): Staged = {
-    val route = c.spark.conf.getOption("graft.clusters.signalRoute").getOrElse {
-      // derived once per corpus version (ADVICE r18): getUsableSpace
-      // is live state, so near the budget line the AUTO-derived route
-      // could flip MID-SESSION between calls — and label tables staged
-      // under the earlier route would then join against slice pairs
-      // from the other. Only the live-disk derivation is held: an
-      // EXPLICIT budget conf is deterministic (no disk-state input) and
-      // setting it mid-session is a deliberate re-route, like the force
-      // flag. A reroute re-stages the signal (it reads the other pair
-      // list) and, through the signal's version, every staging that
-      // reads it.
-      def derive() = {
-        val vol = shingleVolumeBytes(c.docs)
-        if (gridShuffleLowerBoundBytes(c.spark, vol) <= shuffleDiskBudgetBytes(c.spark))
-          "ngram" else "minhash"
-      }
-      if (c.spark.conf.getOption("graft.clusters.gridShuffleBudgetBytes").isDefined) derive()
-      else graft.StateCache(("Dedup.signalRoute", c.dir), c.source("documents"))(derive())
+    * the sparse pair join and COMPUTE at that scale. The driver
+    * corpora are all far below the budget line, so the gate always
+    * exercises the ngram route; specs reroute by setting the budget. */
+  private[graft] def signalSource(c: Staged.Call): Staged = {
+    // derived once per corpus version (ADVICE r18): getUsableSpace is
+    // live state, so near the budget line the AUTO-derived route could
+    // flip MID-SESSION between calls — and label tables staged under
+    // the earlier route would then join against slice pairs from the
+    // other. Only the live-disk derivation is held: an EXPLICIT budget
+    // conf is deterministic (no disk-state input) and setting it
+    // mid-session is a deliberate re-route. A reroute re-stages the
+    // signal (it reads the other pair list) and, through the signal's
+    // version, every staging that reads it.
+    def derive(): Staged = {
+      val vol = shingleVolumeBytes(c.docs)
+      if (gridShuffleLowerBoundBytes(c.spark, vol) <= shuffleDiskBudgetBytes(c.spark))
+        NgramPairs else MinhashPairs
     }
-    require(route == "ngram" || route == "minhash",
-      s"graft.clusters.signalRoute must be ngram|minhash, got $route")
-    if (route == "ngram") NgramPairs else MinhashPairs
+    if (c.spark.conf.getOption("graft.clusters.gridShuffleBudgetBytes").isDefined) derive()
+    else graft.StateCache(("Dedup.signalRoute", c.dir), c.source("documents"))(derive())
   }
 
   /** The ROUTED cluster signal — the one pair list every downstream
@@ -1838,9 +1816,7 @@ object Dedup {
     * components over the same signal. */
   val ClusterSignal: Staged =
     Staged("cluster_signal_pairs.parquet", sources = Nil, upstream = c => Seq(signalSource(c))) { c =>
-      val source = signalSource(c)
-      lastClusterSignalRoute = if (source == NgramPairs) "ngram" else "minhash"
-      c.read(source).select(col("doc_a"), col("doc_b"))
+      c.read(signalSource(c)).select(col("doc_a"), col("doc_b"))
         .write.mode("overwrite").parquet(ClusterSignal.path)
     }
 

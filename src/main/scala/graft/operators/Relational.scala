@@ -674,7 +674,13 @@ object Relational {
     * term anywhere; candidate volume per bin is data-density-bounded
     * (AQE's skew split handles a hot price point). The spec pins the
     * plan: an equi shuffle join, no nested-loop/cartesian operator. */
-  def qBandJoin(spark: SparkSession, dir: String): DataFrame = {
+  def qBandJoin(spark: SparkSession, dir: String): DataFrame =
+    qBandJoin(spark, dir, Band.MaxKernelRowsPerBucket)
+
+  /** [[qBandJoin]] with the band kernel's bucket bound as a parameter,
+    * so specs can run both routes on one input. */
+  private[graft] def qBandJoin(spark: SparkSession, dir: String,
+                               maxKernelRowsPerBucket: Long): DataFrame = {
     val ord = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_totalprice"))
     // candidate-free kernel path (round 18) with the bin-join form
@@ -682,7 +688,7 @@ object Relational {
     // graft.operators.Band for the algorithm and the equality
     // argument (identical IEEE comparisons, bit-identical output)
     Band.selfBandProfile(spark, ord, "o_orderkey", "o_totalprice", BandEps,
-        qBandJoinJoinForm(spark, dir))
+        qBandJoinJoinForm(spark, dir), maxKernelRowsPerBucket)
       .orderBy(col("o_orderkey"))
   }
 

@@ -98,10 +98,9 @@ object Retract {
     * repairs). Versioned on the staged cluster signal. */
   val FullClusterLabels: Staged =
     Staged("cluster_labels_full.parquet", sources = Nil, upstream = _ => Seq(Dedup.ClusterSignal)) { c =>
-      Curation.connectedComponents(
-          c.read(Dedup.ClusterSignal).select(col("doc_a").as("a"), col("doc_b").as("b")))
-        .select(col("v").as("doc_id"), col("lab").as("cluster_root"))
-        .write.mode("overwrite").parquet(FullClusterLabels.path)
+      Curation.stageLabels(
+        c.read(Dedup.ClusterSignal).select(col("doc_a").as("a"), col("doc_b").as("b")),
+        FullClusterLabels.path)
     }
 
   /** The tombstone REGISTRY — the takedown set persisted as the

@@ -485,11 +485,14 @@ object Similarity {
     * storage — at warehouse scale this layout IS the inverted file. */
   final case class IvfIndex(cells: Int, centroids: Seq[(Int, Seq[Double])], listsPath: String)
 
-  /** Root directory for persisted IVF indexes. The harness defaults
-    * to a temp dir; a DEPLOYMENT should point this at the warehouse
-    * root (e.g. `<warehouse>/_ivf_index/embeddings`) so the inverted
-    * file lives next to the tables and manifest it indexes and
-    * participates in the same retention/backup story. The layout
+  /** Root directory for persisted IVF indexes. It defaults to
+    * `ivf_index` under the stage dir, so a process that pins its stage
+    * dir (`GRAFT_STAGE_DIR`) reuses its indexes across restarts and a
+    * per-process stage dir takes its indexes with it. A DEPLOYMENT
+    * should point this at the warehouse root (e.g.
+    * `<warehouse>/_ivf_index/embeddings`) so the inverted file lives
+    * next to the tables and manifest it indexes and participates in
+    * the same retention/backup story. The layout
     * under the root is self-describing: one `ivf_v*` directory per
     * index version holding a cid-partitioned parquet table of
     * posting lists plus a `_centroids` parquet, and a
@@ -502,7 +505,7 @@ object Similarity {
     * builds for one root from one scheduler slot. (ADVICE r5: the
     * r5 lifecycle was in-memory only — restarts rebuilt from
     * scratch and orphaned every prior `ivf_v*` dir.) */
-  @volatile var ivfIndexRoot: Option[String] = None
+  @volatile var ivfIndexRoot: String = graft.Staged.at("ivf_index")
 
   private val IvfManifestName = "_ivf_manifest"
 
@@ -568,9 +571,10 @@ object Similarity {
     * the manifest read-modify-write — each writing a manifest missing
     * the other's entry, and the GC pass then deleting the other's
     * freshly built live version dir. Keyed by the qualified root URI
-    * so `file:/x` and `/x` share a lock. Cross-JVM writers are fenced
-    * by the [[graft.FsLease]] lease file (round 8) — a second driver
-    * fails loudly instead of corrupting. */
+    * so `file:/x` and `/x` share a lock; under the default root every
+    * corpus's build in this JVM takes the one lock. Cross-JVM writers
+    * are fenced by the [[graft.FsLease]] lease file (round 8) — a
+    * second driver fails loudly instead of corrupting. */
   private val ivfRootLocks =
     new scala.collection.concurrent.TrieMap[String, Object]
 
@@ -690,25 +694,12 @@ object Similarity {
     * rebuilds instead of serving stale centroids and posting lists)
     * and amortizes across every subsequent probe batch — `ann_ivf`
     * times build+probe fused; `ann_ivf_probe` times the steady-state
-    * regime. A superseded index's temp directory is deleted on
-    * rebuild. */
-  def ivfIndex(spark: SparkSession, dir: String): IvfIndex = {
-    graft.StateCache.superseding[IvfIndex](spark, ("Similarity.ivfIndex", dir),
-        Seq(graft.Tables.path(dir, "embeddings"))) { superseded =>
-      // a superseded temp-dir index's on-disk lists go with it;
-      // manifest-managed roots are cleaned by persistedIndex's GC
-      if (ivfIndexRoot.isEmpty) superseded.foreach { idx =>
-        val p = new org.apache.hadoop.fs.Path(idx.listsPath)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      }
-      ivfIndexRoot match {
-        case Some(root) =>
-          persistedIndex(spark, dir, graft.Tables.fingerprint(spark, dir, "embeddings"), root)
-        case None => buildIndex(spark, dir,
-          java.nio.file.Files.createTempDirectory("graft_ivf_index").toString)
-      }
+    * regime. A rebuild's GC deletes the superseded version dir. */
+  def ivfIndex(spark: SparkSession, dir: String): IvfIndex =
+    graft.StateCache.stage(spark, ("Similarity.ivfIndex", dir),
+        Seq(graft.Tables.path(dir, "embeddings"))) {
+      persistedIndex(spark, dir, graft.Tables.fingerprint(spark, dir, "embeddings"), ivfIndexRoot)
     }
-  }
 
   /** The loaded posting-list frame of an index, held per session:
     * partition discovery + footer reads are driver-side metadata work

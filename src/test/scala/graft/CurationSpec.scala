@@ -208,25 +208,20 @@ class CurationSpec extends AnyFunSuite {
   test("cluster signal routing: ngram below the budget line, minhash above, forced routes honored") {
     def pairsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def route(): Staged = operators.Dedup.signalSource(new Staged.Call(spark, dir))
     val ngram = pairsOf(operators.Dedup.NgramPairs.table(spark, dir))
     // default at test scale: the grid's predicted shuffle is far
     // below any sane disk budget — the signal IS the ngram list
     assert(pairsOf(operators.Dedup.ClusterSignal.table(spark, dir)) == ngram)
-    assert(operators.Dedup.lastClusterSignalRoute == "ngram")
+    assert(route() == operators.Dedup.NgramPairs)
     try {
       // sizing model says DNF (budget forced to one byte): the
-      // signal reroutes to the minhash sweep without a force flag
+      // signal reroutes to the minhash sweep
       spark.conf.set("graft.clusters.gridShuffleBudgetBytes", "1")
       val rerouted = pairsOf(operators.Dedup.ClusterSignal.table(spark, dir))
-      assert(operators.Dedup.lastClusterSignalRoute == "minhash")
+      assert(route() == operators.Dedup.MinhashPairs)
       assert(rerouted == pairsOf(operators.Dedup.dedupMinhashLshStaged(spark, dir)))
-      // forced override wins over the sizing model
-      spark.conf.set("graft.clusters.signalRoute", "ngram")
-      assert(pairsOf(operators.Dedup.ClusterSignal.table(spark, dir)) == ngram)
-    } finally {
-      spark.conf.unset("graft.clusters.gridShuffleBudgetBytes")
-      spark.conf.unset("graft.clusters.signalRoute")
-    }
+    } finally spark.conf.unset("graft.clusters.gridShuffleBudgetBytes")
     // flip-flop back to the default route re-stages (last-version
     // memo): consumers never read a stale rerouted signal
     assert(pairsOf(operators.Dedup.ClusterSignal.table(spark, dir)) == ngram)
@@ -252,13 +247,13 @@ class CurationSpec extends AnyFunSuite {
     // outputs' listings can show that the downstream stagings re-ran
     val signal = listingOf(Dedup.ClusterSignal.path)
     try {
-      spark.conf.set("graft.clusters.signalRoute", "minhash")
+      spark.conf.set("graft.clusters.gridShuffleBudgetBytes", "1")
       stageAll()
       assert(listingOf(Dedup.ClusterSignal.path) != signal, "the signal did not re-stage")
       outputs.zip(before).foreach { case (out, was) =>
         assert(listingOf(out) != was, s"$out was not re-staged after the reroute")
       }
-    } finally spark.conf.unset("graft.clusters.signalRoute")
+    } finally spark.conf.unset("graft.clusters.gridShuffleBudgetBytes")
   }
 
   test("rewriting documents in place re-stages every staging that reads it") {

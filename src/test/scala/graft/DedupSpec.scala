@@ -402,35 +402,39 @@ class DedupSpec extends AnyFunSuite {
     assert(out(1L) == ((expect1.length.toLong, sharedLen.toLong, 1L, md5hex(expect1))))
   }
 
+  /** The sparse verify route's plan carries its `array_intersect`
+    * pair join; the grid routes' plans do not. */
+  private def verifyRoute(df: org.apache.spark.sql.DataFrame): String =
+    if (df.queryExecution.analyzed.exists(_.expressions.exists(_.exists(
+          _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ArrayIntersect])))) "sparse"
+    else "grid"
+
+  private def pairsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+
   test("sparse staged verify path emits exactly the classic grid's pairs") {
     // the large-volume regime (candidates staged, docs side pruned
     // to candidate-touched ids, B sized to the touched volume) is
-    // pure plumbing — force it via the floor override and pin
+    // pure plumbing — force it with a zero volume floor and pin
     // equality on the minhash and sliced-ngram families
-    val classicLsh = Dedup.dedupMinhashLsh(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val classicInc = Dedup.dedupMinhashLshIncremental(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    spark.conf.set("graft.verify.sparseVolumeBytes", "0")
+    val classicLsh = pairsOf(Dedup.dedupMinhashLsh(spark, dir))
+    val classicInc = pairsOf(Dedup.dedupMinhashLshIncremental(spark, dir))
     // Run the sparse path with its orphan-candidate audit on: the
     // "cannot happen by construction" invariant (every candidate's
     // doc ids exist in the shingle relation) stays loud here, where
     // the grid paths throw natively.
     spark.conf.set("graft.verify.auditSparse", "true")
     try {
-      val sparseLsh = Dedup.dedupMinhashLsh(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      val sparseInc = Dedup.dedupMinhashLshIncremental(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      val lshDf = Dedup.dedupMinhashLsh(spark, dir, false, 0L, Dedup.DenseCandRatio)
+      val incDf = Dedup.dedupMinhashLshIncremental(spark, dir, false, 0L, Dedup.DenseCandRatio)
+      val sparseLsh = pairsOf(lshDf)
+      val sparseInc = pairsOf(incDf)
       assert(classicLsh.nonEmpty && sparseLsh == classicLsh)
       assert(classicInc.nonEmpty && sparseInc == classicInc)
       // this corpus's banded candidates are near-dup-rate sparse, so
       // the density check must have picked the pair join
-      assert(Dedup.lastAutoRoute == "sparse")
-    } finally {
-      spark.conf.unset("graft.verify.sparseVolumeBytes")
-      spark.conf.unset("graft.verify.auditSparse")
-    }
+      assert(verifyRoute(lshDf) == "sparse" && verifyRoute(incDf) == "sparse")
+    } finally spark.conf.unset("graft.verify.auditSparse")
   }
 
   test("density-aware routing: a near-dup-saturated corpus routes banded verify to the grid") {
@@ -453,24 +457,18 @@ class DedupSpec extends AnyFunSuite {
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
     val tmp = java.nio.file.Files.createTempDirectory("densecorpus").toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    spark.conf.set("graft.verify.sparseVolumeBytes", "0") // engage the above-floor regime
-    try {
-      val auto = Dedup.dedupMinhashLsh(spark, tmp).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      assert(Dedup.lastAutoRoute == "dense-grid",
-        s"dense banded corpus routed '${Dedup.lastAutoRoute}', expected dense-grid")
-      assert(auto.nonEmpty)
-      // pairs identical whichever way the router decides: force the
-      // sparse path on the same corpus by raising the density line
-      spark.conf.set("graft.verify.denseCandRatio", "1e18")
-      val sparse = Dedup.dedupMinhashLsh(spark, tmp).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-      assert(Dedup.lastAutoRoute == "sparse")
-      assert(sparse == auto)
-    } finally {
-      spark.conf.unset("graft.verify.sparseVolumeBytes")
-      spark.conf.unset("graft.verify.denseCandRatio")
-    }
+    // a zero volume floor engages the above-floor regime, where a
+    // grid route is the dense-grid one
+    val autoDf = Dedup.dedupMinhashLsh(spark, tmp, false, 0L, Dedup.DenseCandRatio)
+    assert(verifyRoute(autoDf) == "grid", "dense banded corpus routed sparse, expected dense-grid")
+    val auto = pairsOf(autoDf)
+    assert(auto.nonEmpty)
+    // pairs identical whichever way the router decides: force the
+    // sparse path on the same corpus by raising the density line
+    val sparseDf = Dedup.dedupMinhashLsh(spark, tmp, false, 0L, 1e18)
+    assert(verifyRoute(sparseDf) == "sparse")
+    val sparse = pairsOf(sparseDf)
+    assert(sparse == auto)
   }
 
   test("zero candidate pairs: verify grid returns empty, not an AQE partition-count crash") {

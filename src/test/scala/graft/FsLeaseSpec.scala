@@ -77,9 +77,10 @@ class FsLeaseSpec extends AnyFunSuite {
     val lock = new Path(rootPath, Similarity.IvfLockName)
     val out = fs.create(lock, false)
     out.write("second-driver@elsewhere 0\n".getBytes("UTF-8")); out.close()
+    val defaultRoot = Similarity.ivfIndexRoot
     try {
       StateCache.dropAll()
-      Similarity.ivfIndexRoot = Some(s"file:$root")
+      Similarity.ivfIndexRoot = s"file:$root"
       val e = intercept[IllegalStateException](Similarity.ivfIndex(spark, dataDir))
       assert(e.getMessage.contains(Similarity.IvfLockName))
       // the refused build must leave no manifest and no version dirs
@@ -91,7 +92,7 @@ class FsLeaseSpec extends AnyFunSuite {
       val idx = Similarity.ivfIndex(spark, dataDir)
       assert(idx.centroids.nonEmpty && !fs.exists(lock))
     } finally {
-      Similarity.ivfIndexRoot = None
+      Similarity.ivfIndexRoot = defaultRoot
       StateCache.dropAll()
     }
   }

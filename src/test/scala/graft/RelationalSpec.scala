@@ -149,24 +149,30 @@ class RelationalSpec extends AnyFunSuite {
     }
   }
 
+  /** The band kernel route's plan carries its `MapPartitions`; the
+    * join route's does not. */
+  private def bandRoute(df: org.apache.spark.sql.DataFrame): String =
+    if (df.queryExecution.analyzed.exists(
+          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.MapPartitions])) "kernel"
+    else "join"
+
   test("band kernel equals the bin-join form row for row, and dense data falls back") {
     // the candidate-free two-pointer kernel must reproduce the
     // 3-bin equi-join composition exactly — same IEEE BETWEEN
     // membership, same counts, same nearest-neighbor gaps
     val big = "/root/testdata/sf0.01"
-    val kern = operators.Relational.qBandJoin(spark, big).collect().map(_.toString).toSeq
-    assert(operators.Band.lastRoute == "kernel")
+    val kernDf = operators.Relational.qBandJoin(spark, big)
+    assert(bandRoute(kernDf) == "kernel")
+    val kern = kernDf.collect().map(_.toString).toSeq
     val join = operators.Relational.qBandJoinJoinForm(spark, big)
       .orderBy(col("o_orderkey")).collect().map(_.toString).toSeq
     assert(kern.nonEmpty && kern == join)
     // sizing fallback: a one-row-per-bucket ceiling routes to the
     // join form (the kernel is a fast path, never a dependency)
-    try {
-      spark.conf.set("graft.band.maxKernelRowsPerBucket", "1")
-      val fb = operators.Relational.qBandJoin(spark, big).collect().map(_.toString).toSeq
-      assert(operators.Band.lastRoute == "join")
-      assert(fb == kern)
-    } finally spark.conf.unset("graft.band.maxKernelRowsPerBucket")
+    val fbDf = operators.Relational.qBandJoin(spark, big, 1L)
+    assert(bandRoute(fbDf) == "join")
+    val fb = fbDf.collect().map(_.toString).toSeq
+    assert(fb == kern)
   }
 
   test("band route gates on MAX bucket occupancy, not the mean (skew hole, r18 ADVICE)") {
@@ -186,18 +192,15 @@ class RelationalSpec extends AnyFunSuite {
         .write.mode("overwrite").parquet(s"$tmp/orders.parquet")
       val join = operators.Relational.qBandJoinJoinForm(spark, tmp)
         .orderBy(col("o_orderkey")).collect().map(_.toString).toSeq
-      try {
-        // mean = 1000/nb << 100, but the hot bucket holds 900+ rows
-        spark.conf.set("graft.band.maxKernelRowsPerBucket", "100")
-        val gated = operators.Relational.qBandJoin(spark, tmp)
-          .collect().map(_.toString).toSeq
-        assert(operators.Band.lastRoute == "join",
-          "skewed corpus must fall back to the join form under a max-bucket ceiling")
-        assert(gated == join)
-      } finally spark.conf.unset("graft.band.maxKernelRowsPerBucket")
-      val kern = operators.Relational.qBandJoin(spark, tmp)
-        .collect().map(_.toString).toSeq
-      assert(operators.Band.lastRoute == "kernel")
+      // mean = 1000/nb << 100, but the hot bucket holds 900+ rows
+      val gatedDf = operators.Relational.qBandJoin(spark, tmp, 100L)
+      assert(bandRoute(gatedDf) == "join",
+        "skewed corpus must fall back to the join form under a max-bucket ceiling")
+      val gated = gatedDf.collect().map(_.toString).toSeq
+      assert(gated == join)
+      val kernDf = operators.Relational.qBandJoin(spark, tmp)
+      assert(bandRoute(kernDf) == "kernel")
+      val kern = kernDf.collect().map(_.toString).toSeq
       assert(kern.nonEmpty && kern == join)
     } finally {
       import scala.jdk.CollectionConverters._

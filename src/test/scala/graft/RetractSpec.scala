@@ -235,9 +235,9 @@ class RetractSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("a warm repair lists documents.parquet at most once") {
-    Retract.Repair.ensure(spark, dir)
-    val docs = new org.apache.hadoop.fs.Path(Tables.path(dir, "documents")).toUri.getPath
+  /** The local file system's metadata calls, (call, path), made while
+    * `body` runs. */
+  private def fsCalls(body: => Unit): Seq[(String, String)] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
     val saved = keys.map(k => k -> Option(conf.get(k)))
@@ -246,11 +246,37 @@ class RetractSpec extends AnyFunSuite with BeforeAndAfterAll {
     conf.set("fs.file.impl", classOf[CountingLocalFs].getName)
     conf.setBoolean("fs.file.impl.disable.cache", true)
     CountingLocalFs.calls.clear()
-    try Retract.Repair.ensure(spark, dir)
+    try body
     finally saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
-    val listings = CountingLocalFs.calls.toArray.count(_ == ("listStatus" -> docs))
-    assert(CountingLocalFs.calls.size > 0, "the counting file system was not installed")
+    import scala.jdk.CollectionConverters._
+    val calls = CountingLocalFs.calls.asScala.toSeq
+    assert(calls.nonEmpty, "the counting file system was not installed")
+    calls
+  }
+
+  test("a warm repair lists documents.parquet at most once") {
+    Retract.Repair.ensure(spark, dir)
+    val docs = new org.apache.hadoop.fs.Path(Tables.path(dir, "documents")).toUri.getPath
+    val listings = fsCalls(Retract.Repair.ensure(spark, dir)).count(_ == ("listStatus" -> docs))
     assert(listings <= 1, s"a warm repair listed $docs $listings times")
+  }
+
+  test("the staged component labels are one file each, so a warm scan stats one part file per table") {
+    val tables = Seq(Curation.ClusterLabels, Retract.FullClusterLabels)
+    tables.foreach(_.ensure(spark, dir))
+    tables.foreach { t =>
+      val parts = new java.io.File(t.path).list().filter(_.startsWith("part-")).toSeq
+      assert(parts.size == 1, s"${t.path} holds ${parts.size} part files")
+    }
+    def warm(): Unit = {
+      Retract.retractClusters(spark, dir).collect()
+      Curation.dedupClustersIncremental(spark, dir).collect()
+    }
+    warm()
+    val statted = fsCalls(warm()).collect {
+      case ("getFileStatus", p) if tables.exists(t => p.startsWith(s"${t.path}/part-")) => p
+    }
+    assert(statted.distinct.size <= tables.size, s"label part files statted: ${statted.distinct}")
   }
 }
 

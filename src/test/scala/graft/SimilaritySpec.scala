@@ -307,20 +307,35 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
-  test("temp-dir index: a fingerprint change deletes the superseded lists and serves a rebuild") {
+  test("default root: the index lives under the stage dir, is reused after dropAll, and a rebuild GCs") {
     import java.nio.file.{Files, Paths}
-    val corpus = Files.createTempDirectory("graft_ivf_corpus_tmp")
+    val corpus = Files.createTempDirectory("graft_ivf_corpus_default")
     val emb = corpus.resolve("embeddings.parquet").toFile
     Files.copy(Paths.get(dir, "embeddings.parquet"), emb.toPath)
-    assert(Similarity.ivfIndexRoot.isEmpty)
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def tempIndexDirs(): Set[String] = tmp.list().filter(_.startsWith("graft_ivf_index")).toSet
+    def maxMtime(d: String): Long =
+      Files.walk(Paths.get(d)).toArray.map(p => p.asInstanceOf[java.nio.file.Path].toFile.lastModified).max
+    val before = tempIndexDirs()
     val first = Similarity.ivfIndex(spark, corpus.toString)
+    val made = tempIndexDirs() -- before
+    assert(made.isEmpty, s"the default root built an index under java.io.tmpdir: $made")
+    assert(first.listsPath.startsWith(graft.sources.SdfQueries.StageDir + "ivf_index/"),
+      s"${first.listsPath} is not under the stage dir")
     val probed = Similarity.annIvfProbe(spark, corpus.toString).collect().toSeq
     assert(Similarity.ivfIndex(spark, corpus.toString) eq first, "an unchanged corpus must hit")
+
+    // a cold cache reuses the persisted version dir instead of rebuilding
+    val builtAt = maxMtime(first.listsPath)
+    StateCache.dropAll()
+    val reused = Similarity.ivfIndex(spark, corpus.toString)
+    assert(reused.listsPath == first.listsPath && reused.centroids == first.centroids)
+    assert(maxMtime(first.listsPath) == builtAt, "reuse rewrote the version dir (rebuild, not reuse)")
 
     assert(emb.setLastModified(emb.lastModified + 5000))
     val second = Similarity.ivfIndex(spark, corpus.toString)
     assert(second.listsPath != first.listsPath, "a moved fingerprint must rebuild")
-    assert(!Files.exists(Paths.get(first.listsPath)), "superseded temp lists dir not deleted")
+    assert(!Files.exists(Paths.get(first.listsPath)), "superseded version dir not GC'd")
     assert(second.centroids == first.centroids, "same data, same deterministic k-means")
     // the session's posting-list frame must follow the rebuild: a
     // frame over the deleted lists would fail the scan
@@ -336,12 +351,13 @@ class SimilaritySpec extends AnyFunSuite {
       root.toFile.listFiles().toSeq.filter(_.getName.startsWith("ivf_v"))
     def maxMtime(d: java.io.File): Long =
       Files.walk(d.toPath).toArray.map(p => p.asInstanceOf[java.nio.file.Path].toFile.lastModified).max
+    val defaultRoot = Similarity.ivfIndexRoot
     try {
       StateCache.dropAll()
       // `file:` scheme: the manifest/version-dir lifecycle must run
       // through the Hadoop FileSystem API, not java.nio — the root's
       // documented deployment target is an hdfs:// or s3a:// warehouse
-      Similarity.ivfIndexRoot = Some(s"file:$root")
+      Similarity.ivfIndexRoot = s"file:$root"
       val first = Similarity.ivfIndex(spark, corpus.toString)
       assert(Files.exists(root.resolve("_ivf_manifest")), "manifest not written")
       assert(verDirs().size == 1, s"expected one version dir, got ${verDirs()}")
@@ -366,7 +382,7 @@ class SimilaritySpec extends AnyFunSuite {
       assert(verDirs().head.getName != v1.getName, "fingerprint change did not produce a new version dir")
       assert(third.centroids == first.centroids, "same data, same deterministic k-means — centroids must match")
     } finally {
-      Similarity.ivfIndexRoot = None
+      Similarity.ivfIndexRoot = defaultRoot
       StateCache.dropAll()
     }
   }
@@ -386,9 +402,10 @@ class SimilaritySpec extends AnyFunSuite {
         .setLastModified(1700000000000L + i * 60000L))
       c.toString
     }
+    val defaultRoot = Similarity.ivfIndexRoot
     try {
       StateCache.dropAll()
-      Similarity.ivfIndexRoot = Some(root.toString)
+      Similarity.ivfIndexRoot = root.toString
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration._
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -406,7 +423,7 @@ class SimilaritySpec extends AnyFunSuite {
         assert(again.listsPath == first.listsPath && again.centroids == first.centroids)
       }
     } finally {
-      Similarity.ivfIndexRoot = None
+      Similarity.ivfIndexRoot = defaultRoot
       StateCache.dropAll()
     }
   }
