@@ -257,7 +257,7 @@ object Curation {
     * below the split" is exactly "neither endpoint is fresh"). */
   val ClusterLabels: Staged =
     Staged("cluster_labels.parquet", upstream = _ => Seq(Dedup.ClusterSignal)) { c =>
-      val split = Dedup.incrementalSplit(c.docs).getOrElse(Long.MaxValue)
+      val split = Dedup.freshSplit(c.docs)
       val oldPairs = c.read(Dedup.ClusterSignal)
         .filter(col("doc_b") < lit(split))
         .select(col("doc_a").as("a"), col("doc_b").as("b"))
@@ -303,8 +303,7 @@ object Curation {
     * changed, and the persisted labels for untouched components
     * remain valid as-is. */
   def dedupClustersIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val split = Dedup.incrementalSplit(Tables.documents(spark, dir))
-      .getOrElse(Long.MaxValue)
+    val split = Dedup.freshSplit(Tables.documents(spark, dir))
     val labels = ClusterLabels.table(spark, dir)
     val slicePairs = Dedup.ClusterSignal.table(spark, dir)
       .filter(col("doc_b") >= lit(split))
@@ -611,7 +610,7 @@ object Curation {
     * persisted table and every downstream number (df, n_docs,
     * scores, ranks) is identical to the full recompute. */
   val TfidfState: Staged = Staged("tfidf_tf.parquet") { c =>
-    val split = Dedup.incrementalSplit(c.docs).getOrElse(Long.MaxValue)
+    val split = Dedup.freshSplit(c.docs)
     TextOps.whitespaceTokens(c.docs.filter(col("doc_id") < lit(split)))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
       .write.mode("overwrite").parquet(TfidfState.path)
@@ -630,7 +629,7 @@ object Curation {
     * presentation; top-k by |drift| with a term tie-break. */
   def corpusDrift(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val split = Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
+    val split = Dedup.freshSplit(docs)
     val old = TfidfState.table(spark, dir)
       .groupBy(col("term")).agg(sum(col("tf")).as("old_n"))
     val fresh = TextOps.whitespaceTokens(docs.filter(col("doc_id") >= lit(split)))
@@ -690,7 +689,7 @@ object Curation {
     * approximate. */
   def tfidfIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val split = Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
+    val split = Dedup.freshSplit(docs)
     val freshTf = TextOps.whitespaceTokens(docs.filter(col("doc_id") >= lit(split)))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
     tfidfFrom(TfidfState.table(spark, dir).unionByName(freshTf), docs)
@@ -768,7 +767,7 @@ object Curation {
     * (documented, deterministic). */
   private[graft] def importanceScored(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val split = Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
+    val split = Dedup.freshSplit(docs)
     val B = ImportanceBuckets.toLong
     val p = spark.sparkContext.defaultParallelism
     // regexp_extract_all appears ONCE, inside the generator, so
@@ -899,7 +898,7 @@ object Curation {
     * one corpus pass). */
   def textDecontaminate(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val split = Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
+    val split = Dedup.freshSplit(docs)
     val hashed = Dedup.sharedShingleArrays(docs)
     val corpus = hashed.filter(col("doc_id") < lit(split))
       .select(col("doc_id"), col("n").cast("long").as("n_shingles"),
@@ -981,7 +980,7 @@ object Curation {
 
   def decontaminateBloom(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val split = Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
+    val split = Dedup.freshSplit(docs)
     val hashed = Dedup.sharedShingleArrays(docs)
     val corpus = hashed.filter(col("doc_id") < lit(split))
       .select(col("doc_id"), col("n").cast("long").as("n_shingles"),
@@ -1218,7 +1217,7 @@ object Curation {
     * train next release (the trained model's eval would quietly
     * become contaminated-by-history). */
   val SplitSides: Staged = Staged("split_sides.parquet", upstream = _ => Seq(ClusterLabels)) { c =>
-    val split = Dedup.incrementalSplit(c.docs).getOrElse(Long.MaxValue)
+    val split = Dedup.freshSplit(c.docs)
     val withRoot = c.docs.filter(col("doc_id") < lit(split)).select(col("doc_id"))
       .join(c.read(ClusterLabels), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("cluster_root"), col("doc_id")).as("r"))

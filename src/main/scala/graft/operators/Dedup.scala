@@ -70,27 +70,6 @@ object Dedup {
     """SELECT md5(text) AS h, MIN(doc_id) AS keep_doc_id, COUNT(*) AS n_copies
       |FROM documents GROUP BY 1 ORDER BY keep_doc_id""".stripMargin
 
-  /** Exploded 64-bit-hashed distinct shingles: (doc_id, gh), via the
-    * fused graft_hash_shingles kernel — no shingle strings are ever
-    * materialized, and longs shuffle/sort/join far cheaper than
-    * 16-char strings. Consumers (MinHash perms, LSH bands, Jaccard
-    * intersects) are complete under any consistent shingle identity,
-    * exact up to 64-bit xxhash collisions (see the kernel's doc for
-    * the honest bound). */
-  def hashedShingleRows(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    // repartition BEFORE the CPU-heavy shingling: a small input
-    // (one parquet file = one partition) would otherwise pin the
-    // whole kernel+explode on a single core; the shuffle moves only
-    // the raw text, a fraction of the shingle volume it unlocks.
-    // Pinned count (REPARTITION_BY_NUM): a coalescible repartition
-    // over the byte-small doc relation would be collapsed to one
-    // post-shuffle partition by AQE, re-serializing the kernel.
-    val p = docs.sparkSession.sparkContext.defaultParallelism
-    docs.repartition(p, col("doc_id"))
-      .select(col("doc_id"), explode(expr(s"graft_hash_shingles(text, $ShingleN)")).as("gh"))
-  }
-
   /** (doc_id, ghs, n): the per-doc hashed-shingle relation behind
     * a pinned doc_id exchange — the single relation every near-dup
     * operator runs end to end on. The exchange above the kernel is the
@@ -108,7 +87,8 @@ object Dedup {
     * joins (keyed on renamed doc_id) need no further exchange. The
     * kernel itself runs behind a pinned ROUND-ROBIN repartition: it
     * must stay spread across cores whatever the input file count
-    * (the hashedShingleRows rationale), and it must NOT be
+    * (a small input is one parquet file = one partition, which would
+    * pin the whole kernel on a single core), and it must NOT be
     * hash(doc_id) — physical planning elides a repartition whose
     * partitioning equals its child's, which would collapse the two
     * exchanges and put the kernel back above the surviving one,
@@ -1058,13 +1038,17 @@ object Dedup {
   /** The denominator of the incremental split: documents with
     * doc_id >= (max_id * 9) / 10 play the "fresh crawl". A fixed
     * fraction (not a fixed id) keeps the entry meaningful at every
-    * SF; integer arithmetic keeps the two engines' splits identical. */
-  private[graft] def incrementalSplit(docs: DataFrame): Option[Long] = {
-    // None when the corpus is empty (or has only null ids): no
-    // slice exists, so no pair can touch it
+    * SF; integer arithmetic keeps the two engines' splits identical.
+    * `Long.MaxValue` when the corpus has no non-null id: no slice
+    * exists, and `doc_id >= split` then holds for no row. */
+  private[graft] def freshSplit(docs: DataFrame): Long = {
     val row = docs.agg(max(col("doc_id"))).head
-    if (row.isNullAt(0)) None else Some(row.getLong(0) * 9 / 10)
+    if (row.isNullAt(0)) Long.MaxValue else row.getLong(0) * 9 / 10
   }
+
+  /** The fresh-crawl slice predicate: `doc_id >= [[freshSplit]]`. */
+  private[graft] def freshSlice(docs: DataFrame): Column =
+    col("doc_id") >= lit(freshSplit(docs))
 
   /** Incremental near-dup detection: pairs that TOUCH the new slice
     * (doc_id >= the 90% split) against the whole corpus — the
@@ -1077,11 +1061,7 @@ object Dedup {
     * operator, plus one bounded pre-pass (the max(doc_id) head that
     * computes the split) ahead of its CMS head + terminal action. */
   def dedupNgramJaccardIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val restrict = incrementalSplit(docs)
-      .map(split => col("doc_id") >= lit(split))
-      .getOrElse(lit(false))
-    dedupNgramJaccardPairs(spark, dir, Some(restrict))
+    dedupNgramJaccardPairs(spark, dir, Some(freshSlice(Tables.documents(spark, dir))))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -1112,47 +1092,16 @@ object Dedup {
   val MinhashPerms = 64
   val LshBands = 16 // 16 bands x 4 rows
 
-  /** (doc_id, sig): 64-perm MinHash signature via explode +
-    * 64 min-aggregates — the REFERENCE implementation, kept as the
-    * independent check the kernel path is spec-pinned against (and
-    * as the affinity-free form a reviewer can read next to Spark's
-    * own xxhash64). Operators run [[kernelSignatures]] instead: one
-    * codegen'd loop per document, no explode, no 64-aggregate
-    * shuffle, and the per-shingle hashLong stage hoisted out of the
-    * 64-permutation loop (the aggregate re-hashes gh from scratch
-    * per permutation). Shingle-less docs are excluded at the source
-    * (sharedShingleArrays' text-length predicate), matching the
-    * aggregate form, which never has a row for them.
-    *
-    * (The tempting one-projection nested-`transform` form is a trap:
-    * Catalyst's projection collapse inlines the shingle-array
-    * expression into the per-seed lambda, recomputing the shingling
-    * 64x per document — measured 100x slower at sf0.1.) */
-  def minhashSignatures(docs: DataFrame): DataFrame =
-    // No persist: the shingle relation has exactly one consumer here
-    // (the map-side-combined 64-aggregate groupBy).
-    minhashSignaturesFromRows(hashedShingleRows(docs))
-
-  /** The signature aggregation proper, over any (doc_id, gh)
-    * exploded-hashed-shingle relation. */
-  private[operators] def minhashSignaturesFromRows(rows: DataFrame): DataFrame = {
-    val aggs = (0 until MinhashPerms).map(k =>
-      min(xxhash64(col("gh"), lit(k))).as(s"mh_$k"))
-    rows.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-      .select(col("doc_id"),
-        array((0 until MinhashPerms).map(k => col(s"mh_$k")): _*).as("sig"))
-  }
-
   /** Per-ROW minhash signature of one hashed-shingle array — the
     * streaming twin's form: a stream computes each fresh document's
     * signature inside its own row (no aggregation, so no streaming
-    * state), where the batch path min-aggregates exploded shingles.
-    * Both evaluate min over xxhash64(gh, k) for k in [0, 64) on the
-    * same long/int argument types, so the values are identical
-    * (spec-pinned); `array_min` on an empty array would yield null,
-    * so callers filter empty shingle sets first — mirroring the
-    * batch aggregation, where a doc with no shingles has no rows and
-    * thus no signature. */
+    * state). The spec-side reference form min-aggregates exploded
+    * shingles; both evaluate min over xxhash64(gh, k) for k in
+    * [0, 64) on the same long/int argument types, so the values are
+    * identical (spec-pinned). `array_min` on an empty array would
+    * yield null, so callers filter empty shingle sets first —
+    * mirroring the aggregation, where a doc with no shingles has no
+    * rows and thus no signature. */
   private[graft] def rowMinhashSig(ghs: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(graft.functions.MinhashSigExpr(
@@ -1169,20 +1118,33 @@ object Dedup {
   private def kernelSignatures(hashed: DataFrame): DataFrame =
     hashed.select(col("doc_id"), col("n"), rowMinhashSig(col("ghs")).as("sig"))
 
-  /** PROVABLY-SAFE length prefilter on an (a, b) banded candidate
-    * join (round 12): J(A,B) <= min|A|,|B| / max|A|,|B|, so a pair
-    * with n_min < t*n_max can never clear the threshold — dropping
-    * it IN the join condition (the PPJoin length filter, applied to
-    * LSH collisions) prunes verification work without touching the
+  /** The ONE banded LSH candidate join of the minhash family — the
+    * full sweep, the fresh crawl, fuzzy decontamination and the
+    * stream gate all generate candidates here: two [[lshBandsOf]]
+    * relations (each carrying `n`) equi-joined on (band, bh) under
+    * doc_a < doc_b, emitting (doc_a, doc_b, bCols…) raw, one row per
+    * colliding band (verification dedupes). `bCols` are b-side
+    * columns (`b.<name>`) the caller rides onto each candidate.
+    *
+    * The join also carries a PROVABLY-SAFE length prefilter (round
+    * 12): J(A,B) <= min|A|,|B| / max|A|,|B|, so a pair with
+    * n_min < t*n_max can never clear the threshold — dropping it IN
+    * the join condition (the PPJoin length filter, applied to LSH
+    * collisions) prunes verification work without touching the
     * emitted pair set. The 1e-9 slack keeps double rounding from
     * over-pruning at exact-integer boundaries (a slightly low bound
     * only admits extra candidates — same slack as the PPJoin join).
     * Matters most at scale on band-collision-heavy corpora: the
     * synthetic 30-word vocabulary makes unrelated same-band docs
     * common, and a length mismatch is the cheapest disqualifier. */
-  private[graft] def lshLengthFilter: Column =
-    least(col("a.n"), col("b.n")) >=
-      lit(JaccardThreshold) * greatest(col("a.n"), col("b.n")) - lit(1e-9)
+  private[graft] def lshCandidates(a: DataFrame, b: DataFrame,
+                                   bCols: Seq[Column] = Nil): DataFrame =
+    a.as("a").join(b.as("b"),
+        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
+          col("a.doc_id") < col("b.doc_id") &&
+          least(col("a.n"), col("b.n")) >=
+            lit(JaccardThreshold) * greatest(col("a.n"), col("b.n")) - lit(1e-9))
+      .select(col("a.doc_id").as("doc_a") +: col("b.doc_id").as("doc_b") +: bCols: _*)
 
   /** The (band, bh) bucket relation of a (doc_id, sig) signature
     * frame, behind a pinned exchange on the join's own distribution:
@@ -1264,7 +1226,7 @@ object Dedup {
     * drop rows at zero. Every consumer joins on `h` only (the
     * stream gates' left_anti), so the extra column is free. */
   val CorpusHashes: Staged = Staged("corpus_hashes.parquet") { c =>
-    val split = incrementalSplit(c.docs).getOrElse(Long.MaxValue)
+    val split = freshSplit(c.docs)
     c.docs.filter(col("doc_id") < lit(split))
       .select(md5(col("text")).as("h"))
       .groupBy(col("h")).agg(count(lit(1)).as("cnt"))
@@ -1288,7 +1250,6 @@ object Dedup {
   private[graft] def dedupMinhashLsh(spark: SparkSession, dir: String, gridInputOnly: Boolean,
                                      sparseFloor: Long, denseRatio: Double): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val p = docs.sparkSession.sparkContext.defaultParallelism
     // same shared-exchange shape as the ngram path: ONE shingle
     // relation feeds the signature kernel AND the final
     // verification. This operator runs as a SINGLE job — no sketch
@@ -1298,18 +1259,25 @@ object Dedup {
     val hashed = sharedShingleArrays(docs)
     // per-row signature kernel directly on the doc_id exchange — no
     // explode and no 64-aggregate shuffle (the r11 kernel path; the
-    // aggregate reference lives in minhashSignatures, spec-pinned
-    // equal)
-    val bands = lshBandsOf(kernelSignatures(hashed), p, carry = Seq("n"))
-    val cand = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id") && lshLengthFilter)
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    // raw (one row per colliding band) — the grid dedupes in-cell
-    if (gridInputOnly) verifyGridPlan(cand, hashed, gridB(spark, shingleVolumeBytes(docs)))
-    // banded LSH candidates arrive at the near-dup rate — the sparse
-    // staged path applies at large volume (verifyJaccardAuto)
+    // aggregate reference form is spec-side, pinned equal)
+    val sigs = kernelSignatures(hashed)
+    minhashPairs(docs, sigs, sigs, hashed, gridInputOnly, sparseFloor, denseRatio)
+  }
+
+  /** The minhash family's one candidate + verify pipeline, shared by
+    * the full sweep and the fresh crawl: bands of `sigsA` × bands of
+    * `sigsB` ([[lshCandidates]]; (doc_id, n, sig) frames), verified
+    * on `hashed`'s (doc_id, ghs, n) arrays. Candidates stay raw (one
+    * row per colliding band) — the verify dedupes. Banded LSH
+    * candidates arrive at the near-dup rate, so the sparse pair-join
+    * verify applies at large volume ([[verifyJaccardAuto]]). */
+  private def minhashPairs(docs: DataFrame, sigsA: DataFrame, sigsB: DataFrame,
+                           hashed: DataFrame, gridInputOnly: Boolean, sparseFloor: Long,
+                           denseRatio: Double): DataFrame = {
+    val p = docs.sparkSession.sparkContext.defaultParallelism
+    val cand = lshCandidates(lshBandsOf(sigsA, p, carry = Seq("n")),
+      lshBandsOf(sigsB, p, carry = Seq("n")))
+    if (gridInputOnly) verifyGridPlan(cand, hashed, gridB(docs.sparkSession, shingleVolumeBytes(docs)))
     else verifyJaccardAuto(cand, hashed, docs, sparseFloor, denseRatio)
       .orderBy(col("doc_a"), col("doc_b"))
   }
@@ -1318,7 +1286,9 @@ object Dedup {
     * pairs that TOUCH the new slice (doc_id >= the 90% split — the
     * shared fixed-fraction convention), banded against the whole
     * corpus — minhash's twin of `dedup_incremental` (ngram/PPJoin)
-    * and `dedup_semantic_incremental` (embedding/IVF).
+    * and `dedup_semantic_incremental` (embedding/IVF). It is the
+    * full form's own pipeline ([[minhashPairs]]) called with the
+    * persisted corpus state × the live slice in place of live × live.
     *
     * The a side reads the PERSISTED sketch table
     * ([[MinhashSketch]]): band hashes derive from stored
@@ -1344,25 +1314,10 @@ object Dedup {
                                                 gridInputOnly: Boolean, sparseFloor: Long,
                                                 denseRatio: Double): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val restrict = incrementalSplit(docs)
-      .map(split => col("doc_id") >= lit(split))
-      .getOrElse(lit(false))
-    val p = spark.sparkContext.defaultParallelism
     val sk = MinhashSketch.table(spark, dir)
-    val bands = lshBandsOf(sk.select(col("doc_id"), col("n"), col("sig")), p, carry = Seq("n"))
-    val hb = sharedShingleArrays(docs.filter(restrict))
-    val bandsB = lshBandsOf(kernelSignatures(hb), p, carry = Seq("n"))
-    val cand = bands.as("a")
-      .join(bandsB.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id") && lshLengthFilter)
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    // raw (one row per colliding band) — the grid dedupes in-cell
-    val hashedSk = sk.select(col("doc_id"), col("ghs"), col("n"))
-    if (gridInputOnly) verifyGridPlan(cand, hashedSk, gridB(spark, shingleVolumeBytes(docs)))
-    // sliced banded candidates: sparse staged path at large volume
-    else verifyJaccardAuto(cand, hashedSk, docs, sparseFloor, denseRatio)
-      .orderBy(col("doc_a"), col("doc_b"))
+    minhashPairs(docs, sk.select(col("doc_id"), col("n"), col("sig")),
+      kernelSignatures(sharedShingleArrays(docs.filter(freshSlice(docs)))),
+      sk.select(col("doc_id"), col("ghs"), col("n")), gridInputOnly, sparseFloor, denseRatio)
   }
 
   // ---- decontaminate_fuzzy: near-dup train-vs-benchmark leakage ----
@@ -1397,18 +1352,16 @@ object Dedup {
   def decontaminateFuzzy(spark: SparkSession, dir: String,
                          gridInputOnly: Boolean = false): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val split = incrementalSplit(docs).getOrElse(Long.MaxValue)
+    val split = freshSplit(docs)
     val sk = MinhashSketch.table(spark, dir)
-    val corpusBands = lshBandsOf(
-      sk.filter(col("doc_id") < lit(split)).select(col("doc_id"), col("n"), col("sig")),
+    val corpus = sk.filter(col("doc_id") < lit(split))
+    val corpusBands = lshBandsOf(corpus.select(col("doc_id"), col("n"), col("sig")),
       0, carry = Seq("n"), shuffle = false)
     val benchBands = lshBandsOf(
       kernelSignatures(sharedShingleArrays(docs.filter(col("doc_id") >= lit(split)))),
       0, carry = Seq("n"), shuffle = false)
-    val cand = corpusBands.as("a")
-      .join(broadcast(benchBands.as("b")),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") && lshLengthFilter)
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+    // doc_a < doc_b holds for every corpus × bench pair already
+    val cand = lshCandidates(corpusBands, broadcast(benchBands))
     // raw (one row per colliding band) — the merge dedupes in-cell;
     // verification is the ASYMMETRIC fragment-replicate form
     // (corpus arrays ship once, only the bounded bench side
@@ -1418,10 +1371,8 @@ object Dedup {
     // argument)
     val volA = shingleVolumeBytes(docs.filter(col("doc_id") < lit(split)))
     if (gridInputOnly) verifyAsymPairsPlan(cand, asymFragments(volA))
-    else verifyJaccardAsym(cand,
-      sk.filter(col("doc_id") < lit(split)).select(col("doc_id"), col("ghs")),
-      sk.filter(col("doc_id") >= lit(split)).select(col("doc_id"), col("ghs")),
-      volA)
+    else verifyJaccardAsym(cand, corpus.select(col("doc_id"), col("ghs")),
+      sk.filter(col("doc_id") >= lit(split)).select(col("doc_id"), col("ghs")), volA)
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -1476,83 +1427,92 @@ object Dedup {
       .select(col("doc_id"), sim.as("sim"))
   }
 
-  /** Pigeonhole band join: pairs within hamming <= 3 must agree on
-    * at least one of the 4 16-bit bands; exact popcount(xor) filters
-    * the candidates. */
   /** Block edge for the grouped simhash enumeration: blocks of 64k
     * signatures (1 MB arrays) keep per-task memory trivial while a
     * hot band value's m² loop splits into (m/64k)² parallel tasks. */
   val SimhashBlockSize = 65536
 
   def dedupSimhash(spark: SparkSession, dir: String): DataFrame =
-    dedupSimhashBlocked(spark, dir, SimhashBlockSize)
+    dedupSimhash(spark, dir, SimhashBlockSize)
 
-  /** GROUPED, BLOCK-PARALLEL pair enumeration (round 17 — the sf100
+  /** [[dedupSimhash]] with the block edge as a parameter, so specs can
+    * force multi-block coverage on a small corpus. */
+  private[graft] def dedupSimhash(spark: SparkSession, dir: String, blockSize: Int): DataFrame =
+    simhashPairs(simhashSignatures(Tables.documents(spark, dir)), None, blockSize)
+
+  /** The simhash family's ONE pair kernel: every hamming <= max pair
+    * (doc_a < doc_b) of `sigs` whose doc_b is `fresh` — the fresh
+    * crawl passes its slice predicate, which must select the TOP of
+    * the id range (every old member then sorts below every fresh
+    * one); the full form passes None: every member is fresh, and no
+    * old list is collected. Pigeonhole banding: pairs within
+    * hamming <= 3 agree on at least one of the 4 16-bit bands.
+    *
+    * GROUPED, BLOCK-PARALLEL pair enumeration (round 17 — the sf100
     * lesson, in two measured steps). The band self-join materialized
     * every same-band candidate as a physical row and ran a
     * candidate-volume distinct BEFORE the hamming filter could
     * discard ~all of them — 703 s at 5M docs. Step 1: collect each
-    * band bucket into one array row and loop i<j in a native kernel
+    * band bucket into one array row and loop in a native kernel
     * ([[graft.functions.PairKernels.simhashPairsIter]]) emitting
     * only hamming <= max pairs — candidates become loop iterations,
     * never rows (703 → 315 s). Step 2: the remaining 315 s was ONE
     * task's loop — this synthetic corpus's 30-word vocabulary
     * collapses signatures onto few values, so one band bucket holds
     * ~10⁵-10⁶ docs and its m² popcounts serialized. Each bucket's
-    * member array therefore SLICES into `blockSize` blocks and
-    * explodes into B(B+1)/2 block-pair rows (triangle when ia == ib,
-    * bipartite otherwise — every unordered pair covered exactly
-    * once), round-robin-repartitioned so each block pair is its own
-    * task. Replication is (B+1)/2 × the member arrays — bounded and
-    * near-1x for normal buckets (B = 1 → one row, zero overhead).
-    * Spec-pinned equal to the join form at the default AND at
-    * blockSize = 4 (forcing multi-block coverage on the test
-    * corpus). */
-  private[graft] def dedupSimhashBlocked(spark: SparkSession, dir: String,
-                                         blockSize: Int): DataFrame = {
+    * member lists therefore SLICE into `blockSize` blocks, and the
+    * bucket explodes into one row per block pair, round-robin-
+    * repartitioned so each block pair is its own task:
+    *
+    *  - fresh × fresh: the triangle of the fresh list's blocks
+    *    (ia <= ib; the kernel's triangle when ia == ib, bipartite
+    *    otherwise) — every unordered fresh pair exactly once;
+    *  - old × fresh: every old block (index ia < 0) against every
+    *    fresh block, bipartite — the fresh crawl's probe of the
+    *    corpus state, never old × old.
+    *
+    * A bucket with no fresh member emits nothing. Replication is
+    * bounded and near-1x for normal buckets (one block each → one
+    * row). Pairs recurring in several bands collapse in the distinct
+    * over the kernel's (near-dup-sized) output. Spec-pinned equal to
+    * the band-join form at the default AND at blockSize = 4, full
+    * and fresh. */
+  private def simhashPairs(sigs: DataFrame, fresh: Option[Column], blockSize: Int): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
-    val p = spark.sparkContext.defaultParallelism
-    val bands = simhashBandsOf(simhashSignatures(Tables.documents(spark, dir)))
-    val members = bands.groupBy(col("band"), col("bits"))
-      .agg(collect_list(struct(col("doc_id"), col("sim"))).as("ms"))
-      .withColumn("nb",
-        greatest(ceil(size(col("ms")).cast("double") / lit(blockSize)), lit(1)).cast("int"))
-    val blockRows = members
-      .select(col("ms"), col("nb"),
-        explode(sequence(lit(0), col("nb") - 1)).as("ia"))
-      .select(col("ms"), col("ia"),
-        explode(sequence(col("ia"), col("nb") - 1)).as("ib"))
+    val p = sigs.sparkSession.sparkContext.defaultParallelism
+    val m = struct(col("doc_id"), col("sim"))
+    def blocks(ms: String): Column = ceil(size(col(ms)).cast("double") / lit(blockSize)).cast("int")
+    def block(ms: String, i: Column): Column = slice(col(ms), i * blockSize + 1, lit(blockSize))
+    val buckets = simhashBandsOf(sigs).groupBy(col("band"), col("bits"))
+    val lists = fresh match {
+      case Some(f) =>
+        buckets.agg(collect_list(when(f, m)).as("mn"), collect_list(when(!f, m)).as("mo"))
+          .filter(size(col("mn")) > 0)
+      // every member is fresh: an empty old list, typed as the fresh one
+      case None => buckets.agg(collect_list(m).as("mn")).withColumn("mo", slice(col("mn"), 1, 0))
+    }
+    val blockRows = lists
+      .select(col("mn"), col("mo"), blocks("mn").as("nn"),
+        explode(sequence(-blocks("mo"), blocks("mn") - 1)).as("ia"))
+      .select(col("mn"), col("mo"), col("ia"),
+        explode(sequence(greatest(col("ia"), lit(0)), col("nn") - 1)).as("ib"))
       .select(
-        slice(col("ms"), col("ia") * blockSize + 1, lit(blockSize)).as("ma"),
-        slice(col("ms"), col("ib") * blockSize + 1, lit(blockSize)).as("mb"),
+        when(col("ia") >= 0, block("mn", col("ia")))
+          .otherwise(block("mo", -col("ia") - 1)).as("ma"),
+        block("mn", col("ib")).as("mb"),
         (col("ia") === col("ib")).as("same"))
       .repartition(p)
     // GENERATOR, not explode(kernel(...)): a saturated band value
     // emits dense blocks whose pair output must stream straight into
-    // the distinct's spillable aggregate, never buffer per task
+    // the distinct's spillable aggregate, never buffer per task. The
+    // distinct's exchange is also the materialization boundary under
+    // the presentation sort: the sort's range sampling reads its
+    // output instead of re-running the pair loops.
     val gen = ColumnBridge.column(graft.functions.SimhashPairsGen(
       ColumnBridge.expression(col("ma")), ColumnBridge.expression(col("mb")),
       ColumnBridge.expression(col("same")), HammingMax))
     blockRows.select(gen)
       .distinct()
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
-
-  /** The pre-r17 band-JOIN form — kept as the spec's reference
-    * implementation for the grouped kernel's equality pin. */
-  private[graft] def dedupSimhashJoinForm(spark: SparkSession, dir: String): DataFrame = {
-    val bands = simhashBandsOf(simhashSignatures(Tables.documents(spark, dir)))
-    val cand = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bits") === col("b.bits") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.sim").as("sim_a"), col("b.sim").as("sim_b"))
-      .distinct()
-    cand
-      .withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
-      .filter(col("hamming") <= HammingMax)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -1568,40 +1528,36 @@ object Dedup {
   }
 
   /** The pigeonhole band relation of a (doc_id, sim) signature frame
-    * — ONE definition for both sides of every simhash band join. */
-  private def simhashBandsOf(sigs: DataFrame): DataFrame =
+    * — ONE definition for every simhash bucket grouping. */
+  private[graft] def simhashBandsOf(sigs: DataFrame): DataFrame =
     sigs.select(col("doc_id"), col("sim"),
         explode(sequence(lit(0), lit(SimhashBands - 1))).as("band"))
       .withColumn("bits", expr("shiftrightunsigned(sim, band * 16) & 65535"))
 
   /** Fresh-crawl simhash dedup: hamming<=3 pairs that TOUCH the new
     * slice (doc_id >= the shared 90% split), completing the
-    * incremental family (ngram, minhash, semantic, simhash). The a
-    * side reads the PERSISTED signature table — the steady state
-    * tokenizes and signs ONLY the fresh slice (pushed doc_id
-    * predicate on the documents scan); candidate volume is
-    * new x corpus through band cooccurrence. Exact by the same
-    * pigeonhole argument as the full operator, so the oracle is the
-    * brute-force hamming definition restricted to the slice. */
-  def dedupSimhashIncremental(spark: SparkSession, dir: String): DataFrame = {
+    * incremental family (ngram, minhash, semantic, simhash). It is
+    * the full form's own blocked kernel ([[simhashPairs]]) called
+    * with old state × new slice: the PERSISTED signature table below
+    * the split ([[SimhashSigs]]) as each bucket's old members, the
+    * live signatures of ONLY the fresh slice (pushed doc_id predicate
+    * on the documents scan) as its new members. A saturated bucket
+    * splits into block pairs exactly as in the full form. Exact by the
+    * same pigeonhole argument, so the output equals the full operator
+    * restricted to doc_b in the slice (spec-pinned) and the oracle is
+    * the brute-force hamming definition restricted to the slice. */
+  def dedupSimhashIncremental(spark: SparkSession, dir: String): DataFrame =
+    dedupSimhashIncremental(spark, dir, SimhashBlockSize)
+
+  /** [[dedupSimhashIncremental]] with the block edge as a parameter,
+    * as [[dedupSimhash]]. */
+  private[graft] def dedupSimhashIncremental(spark: SparkSession, dir: String,
+                                             blockSize: Int): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val restrict = incrementalSplit(docs)
-      .map(split => col("doc_id") >= lit(split))
-      .getOrElse(lit(false))
-    val bandsA = simhashBandsOf(SimhashSigs.table(spark, dir))
-    val bandsB = simhashBandsOf(simhashSignatures(docs.filter(restrict)))
-    val cand = bandsA.as("a")
-      .join(bandsB.as("b"),
-        col("a.band") === col("b.band") && col("a.bits") === col("b.bits") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.sim").as("sim_a"), col("b.sim").as("sim_b"))
-      .distinct()
-    cand
-      .withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
-      .filter(col("hamming") <= HammingMax)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
-      .orderBy(col("doc_a"), col("doc_b"))
+    val split = freshSplit(docs)
+    val sigs = SimhashSigs.table(spark, dir).filter(col("doc_id") < lit(split))
+      .unionByName(simhashSignatures(docs.filter(col("doc_id") >= lit(split))))
+    simhashPairs(sigs, Some(col("doc_id") >= lit(split)), blockSize)
   }
 
   /** DuckDB twin of dedup_simhash — EXACT, not approximate: the
@@ -1929,18 +1885,7 @@ object Dedup {
     // 17 s at sf1); this one is three map-side-combined aggregates
     // and a broadcast-sized count join. n_windows itself is pure
     // arithmetic on the text length — never aggregated.
-    // pushed n_chars predicate: a doc shorter than one window
-    // contributes nothing — prune it at the scan, not post-kernel
-    // repartition BELOW the kernel: a small corpus arrives as one or
-    // two scan splits and the explode + partial aggregate would run
-    // on as many cores (measured: 8.6 of 9.7 s at sf1 on 2 tasks).
-    // The exchange ships raw text once — a few percent of the
-    // window-row volume the wh exchange ships right after.
-    val p = spark.sparkContext.defaultParallelism
-    val w = docs.filter(col("n_chars") >= SubstringK)
-      .repartition(p, col("doc_id"))
-      .select(col("doc_id"),
-        explode(expr(s"graft_window_hashes(text, $SubstringK)")).as("wh"))
+    val w = windowRows(docs)
     // ONE aggregate over the exploded relation: total == 1 means the
     // window has a single occurrence in the whole corpus, so
     // min(doc_id) IS its owner and it contributes exactly one unique
@@ -1949,25 +1894,54 @@ object Dedup {
       .agg(count(lit(1)).as("total"), min(col("doc_id")).as("doc_id"))
       .filter(col("total") === 1)
       .groupBy(col("doc_id")).agg(count(lit(1)).as("uniq"))
-    // union-aggregate instead of a LEFT join of the arithmetic
-    // n_windows branch onto the uniq aggregate: the aggregate side
-    // has unique keys, so Catalyst (correctly) ELIMINATES such an
-    // outer join under a count(*)-style consumer and the benchmark
-    // action would measure a pruned plan — the union keeps every
-    // consumer paying the real profile while staying join-back-free
-    val nPerDoc = docs.filter(col("n_chars") >= SubstringK)
-      .select(col("doc_id"),
-        (length(col("text")) - lit(SubstringK - 1)).cast("long").as("n_windows"),
-        lit(0L).as("uniq"))
-    nPerDoc.unionByName(
-        uniqPerDoc.select(col("doc_id"), lit(0L).as("n_windows"), col("uniq")))
+    profileFrom(docs, uniqPerDoc)
+  }
+
+  /** The one window-row relation of the substring family — every
+    * profile, window-total, cleaner, stream-gate and retraction site
+    * reads it: one row per k-char window of each doc with at least
+    * one window, as (keep…, wh), or (keep…, pos, wh) with `withPos`
+    * (the cleaner's per-position form). The n_chars predicate is the
+    * pushed scan filter: a doc shorter than one window contributes
+    * nothing — prune it at the scan, not post-kernel. `spread`
+    * repartitions BELOW the kernel: a small corpus arrives as one or
+    * two scan splits and the explode + partial aggregate would run
+    * on as many cores (measured: 8.6 of 9.7 s at sf1 on 2 tasks).
+    * The exchange ships raw text once — a few percent of the
+    * window-row volume the wh exchange ships right after. Streams
+    * pass `spread = false` (a micro-batch stays in its own plan).
+    * Callers must have the graft kernels registered. */
+  private[graft] def windowRows(docs: DataFrame, keep: Seq[Column] = Seq(col("doc_id")),
+                                withPos: Boolean = false, spread: Boolean = true): DataFrame = {
+    val long = docs.filter(col("n_chars") >= SubstringK)
+    val in = if (spread) long.repartition(docs.sparkSession.sparkContext.defaultParallelism,
+      col("doc_id")) else long
+    val wh = expr(s"graft_window_hashes(text, $SubstringK)")
+    in.select(keep :+ (if (withPos) posexplode(wh).as(Seq("pos", "wh")) else explode(wh).as("wh")): _*)
+  }
+
+  /** Window count of a doc with at least one window — text-length
+    * arithmetic, never aggregated. */
+  private[graft] val nWindows: Column =
+    (length(col("text")) - lit(SubstringK - 1)).cast("long").as("n_windows")
+
+  /** The per-doc profile rows of `docs`' docs with at least one
+    * window, from their (doc_id, uniq) unique-window counts.
+    * Union-aggregate instead of a LEFT join of the arithmetic
+    * n_windows branch onto the uniq aggregate: the aggregate side has
+    * unique keys, so Catalyst (correctly) ELIMINATES such an outer
+    * join under a count(*)-style consumer and the benchmark action
+    * would measure a pruned plan — the union keeps every consumer
+    * paying the real profile while staying join-back-free. */
+  private def profileFrom(docs: DataFrame, uniqPerDoc: DataFrame): DataFrame =
+    docs.filter(col("n_chars") >= SubstringK).select(col("doc_id"), nWindows, lit(0L).as("uniq"))
+      .unionByName(uniqPerDoc.select(col("doc_id"), lit(0L).as("n_windows"), col("uniq")))
       .groupBy(col("doc_id"))
       .agg(sum(col("n_windows")).as("n_windows"),
         (sum(col("n_windows")) - sum(col("uniq"))).as("dup_windows"))
       .withColumn("dup_frac",
         col("dup_windows").cast("double") / col("n_windows").cast("double"))
       .orderBy(col("doc_id"))
-  }
 
   /** The corpus WINDOW-TOTAL table — (wh, total), occurrence count of
     * every k-char window (as its rolling hash) across the whole
@@ -1980,12 +1954,7 @@ object Dedup {
     * relation). */
   val SubstringWindows: Staged = Staged("substring_windows.parquet") { c =>
     graft.functions.GraftFunctions.register(c.spark)
-    val p = c.spark.sparkContext.defaultParallelism
-    c.docs.filter(col("n_chars") >= SubstringK)
-      .repartition(p, col("doc_id"))
-      .select(col("doc_id"),
-        explode(expr(s"graft_window_hashes(text, $SubstringK)")).as("wh"))
-      .groupBy(col("wh")).agg(count(lit(1)).as("total"))
+    windowRows(c.docs).groupBy(col("wh")).agg(count(lit(1)).as("total"))
       .write.mode("overwrite").parquet(SubstringWindows.path)
   }
 
@@ -2003,11 +1972,7 @@ object Dedup {
   def dedupSubstringIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     graft.functions.GraftFunctions.register(spark)
-    val restrict = incrementalSplit(docs)
-      .map(split => col("doc_id") >= lit(split))
-      .getOrElse(lit(false))
-    val wt = SubstringWindows.table(spark, dir)
-    sliceProfileAgainst(docs.filter(col("n_chars") >= SubstringK && restrict), wt)
+    sliceProfileAgainst(docs.filter(freshSlice(docs)), SubstringWindows.table(spark, dir))
   }
 
   /** The slice-vs-window-totals profile core — shared by the
@@ -2016,28 +1981,10 @@ object Dedup {
     * text, inner-join window totals (lossless — every slice window
     * is in the table by construction), total == 1 means globally
     * unique. Callers must have the graft kernels registered. */
-  private[operators] def sliceProfileAgainst(sliceDocs: DataFrame, wt: DataFrame): DataFrame = {
-    val p = sliceDocs.sparkSession.sparkContext.defaultParallelism
-    val uniqPerDoc = sliceDocs
-      .repartition(p, col("doc_id"))
-      .select(col("doc_id"),
-        explode(expr(s"graft_window_hashes(text, $SubstringK)")).as("wh"))
-      .join(wt, "wh")
+  private[operators] def sliceProfileAgainst(sliceDocs: DataFrame, wt: DataFrame): DataFrame =
+    profileFrom(sliceDocs, windowRows(sliceDocs).join(wt, "wh")
       .filter(col("total") === 1)
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("uniq"))
-    val nPerDoc = sliceDocs
-      .select(col("doc_id"),
-        (length(col("text")) - lit(SubstringK - 1)).cast("long").as("n_windows"),
-        lit(0L).as("uniq"))
-    nPerDoc.unionByName(
-        uniqPerDoc.select(col("doc_id"), lit(0L).as("n_windows"), col("uniq")))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("n_windows")).as("n_windows"),
-        (sum(col("n_windows")) - sum(col("uniq"))).as("dup_windows"))
-      .withColumn("dup_frac",
-        col("dup_windows").cast("double") / col("n_windows").cast("double"))
-      .orderBy(col("doc_id"))
-  }
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("uniq")))
 
   /** The cleaning form of the substring criterion — what Lee et al.
     * 2022 actually DO to the corpus (cut the duplicated spans, keep
@@ -2060,23 +2007,15 @@ object Dedup {
   def dedupSubstringClean(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     graft.functions.GraftFunctions.register(spark)
-    val p = spark.sparkContext.defaultParallelism
-    val w = docs.filter(col("n_chars") >= SubstringK)
-      .repartition(p, col("doc_id"))
-      .select(col("doc_id"),
-        posexplode(expr(s"graft_window_hashes(text, $SubstringK)")))
-      .withColumnRenamed("col", "wh")
-    val dps = w
+    stripStage(docs, windowRows(docs, withPos = true)
       .withColumn("total", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("wh"))))
-      .filter(col("total") >= 2)
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("pos"))).as("dps"))
-    stripStage(docs, dps)
+      .filter(col("total") >= 2))
   }
 
-  /** Attach per-doc duplicated positions and emit the cleaned-doc
-    * row — shared by the full and incremental cleaners.
+  /** Attach each doc's duplicated (doc_id, pos) window positions, as
+    * a sorted array, and emit the cleaned-doc row — shared by the
+    * full and incremental cleaners.
     *
     * Union-aggregate, NOT a left join: the positions aggregate has
     * unique keys and the attach preserves row count, so Catalyst
@@ -2086,11 +2025,12 @@ object Dedup {
     * union's group count is not statically derivable, so every
     * consumer pays the real pipeline. max() picks the non-null text
     * and the non-empty position array (empty array sorts first). */
-  private def stripStage(docs: DataFrame, dps: DataFrame): DataFrame =
+  private def stripStage(docs: DataFrame, dupPositions: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("text"),
         expr("cast(array() as array<int>)").as("dps"))
-      .unionByName(dps.select(col("doc_id"),
-        lit(null).cast("string").as("text"), col("dps")))
+      .unionByName(dupPositions.groupBy(col("doc_id"))
+        .agg(sort_array(collect_list(col("pos"))).as("dps"))
+        .select(col("doc_id"), lit(null).cast("string").as("text"), col("dps")))
       .groupBy(col("doc_id"))
       .agg(max(col("text")).as("text"), max(col("dps")).as("dps"))
       .select(col("doc_id"),
@@ -2117,21 +2057,9 @@ object Dedup {
   def dedupSubstringCleanIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     graft.functions.GraftFunctions.register(spark)
-    val restrict = incrementalSplit(docs)
-      .map(split => col("doc_id") >= lit(split))
-      .getOrElse(lit(false))
-    val p = spark.sparkContext.defaultParallelism
-    val wt = SubstringWindows.table(spark, dir).filter(col("total") >= 2)
-    val sliceDocs = docs.filter(restrict)
-    val w = sliceDocs.filter(col("n_chars") >= SubstringK)
-      .repartition(p, col("doc_id"))
-      .select(col("doc_id"),
-        posexplode(expr(s"graft_window_hashes(text, $SubstringK)")))
-      .withColumnRenamed("col", "wh")
-    val dps = w.join(wt, "wh")
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("pos"))).as("dps"))
-    stripStage(sliceDocs, dps)
+    val sliceDocs = docs.filter(freshSlice(docs))
+    stripStage(sliceDocs, windowRows(sliceDocs, withPos = true)
+      .join(SubstringWindows.table(spark, dir).filter(col("total") >= 2), "wh"))
   }
 
   /** Oracle: the cleaned text re-derived entirely in SQL from the

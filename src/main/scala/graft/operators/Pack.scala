@@ -332,7 +332,7 @@ object Pack {
   def shardShuffleIncremental(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
-    val split = Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
+    val split = Dedup.freshSplit(docs)
     val old = ShardMeasure.table(spark, dir).filter(col("doc_id") < lit(split))
     val fresh = docs.filter(col("doc_id") >= lit(split)).select(
       col("doc_id"),

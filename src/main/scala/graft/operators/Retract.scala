@@ -132,7 +132,7 @@ object Retract {
     graft.functions.GraftFunctions.register(spark)
     val p = spark.sparkContext.defaultParallelism
     val docs = c.docs
-    val split = Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
+    val split = Dedup.freshSplit(docs)
     val ret = docs.filter(takedownPred).select(col("doc_id"))
 
     def minus(state: DataFrame): DataFrame =
@@ -166,10 +166,7 @@ object Retract {
       .filter(col("freq") > 0)
       .write.mode("overwrite").parquet(RetNgramFreqPath)
 
-    val subWin = docs
-      .filter(takedownPred && col("n_chars") >= Dedup.SubstringK)
-      .repartition(p, col("doc_id"))
-      .select(explode(expr(s"graft_window_hashes(text, ${Dedup.SubstringK})")).as("wh"))
+    val subWin = Dedup.windowRows(docs.filter(takedownPred))
       .groupBy(col("wh")).agg(count(lit(1)).as("sub"))
     c.read(Dedup.SubstringWindows).join(subWin, Seq("wh"), "left")
       .select(col("wh"),
@@ -257,7 +254,7 @@ object Retract {
   def retractDocs(spark: SparkSession, dir: String): DataFrame = {
     Repair.ensure(spark, dir)
     val docs = Tables.documents(spark, dir)
-    val split = Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
+    val split = Dedup.freshSplit(docs)
     val kept = docs.filter(!takedownPred)
     val freshTf = TextOps.whitespaceTokens(kept.filter(col("doc_id") >= lit(split)))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
@@ -357,11 +354,7 @@ object Retract {
     Repair.ensure(spark, dir)
     graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
-    val restrict = Dedup.incrementalSplit(docs)
-      .map(split => col("doc_id") >= lit(split))
-      .getOrElse(lit(false))
-    Dedup.sliceProfileAgainst(
-      docs.filter(col("n_chars") >= Dedup.SubstringK && restrict && !takedownPred),
+    Dedup.sliceProfileAgainst(docs.filter(Dedup.freshSlice(docs) && !takedownPred),
       graft.Tables.parquetCached(spark, RetWindowPath))
   }
 

@@ -1521,7 +1521,7 @@ object Similarity {
 
   /** Fresh-crawl form (round 9, VERDICT r8 item 4): near-dup pairs
     * that TOUCH the new slice (vec_id >= the 90% split — the same
-    * fixed-fraction convention as Dedup.incrementalSplit), against
+    * fixed-fraction convention as Dedup.freshSplit), against
     * the whole corpus through the SAME persisted IVF centroids. The
     * b-side assignment pipeline runs over ONLY the new slice — its
     * embeddings scan is pushdown-filtered to the split (pinned by

@@ -296,7 +296,7 @@ object TextOps {
     * applied to the n-gram census. */
   val NgramFreqState: Staged = Staged("ngram_freq.parquet") { c =>
     graft.functions.GraftFunctions.register(c.spark)
-    val split = graft.operators.Dedup.incrementalSplit(c.docs).getOrElse(Long.MaxValue)
+    val split = graft.operators.Dedup.freshSplit(c.docs)
     c.docs.filter(col("doc_id") < lit(split))
       .repartition(c.spark.sparkContext.defaultParallelism, col("doc_id"))
       .select(explode(expr("graft_word_bigrams(text)")).as("bigram"))
@@ -314,7 +314,7 @@ object TextOps {
   def textNgramFreqIncremental(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
-    val split = graft.operators.Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
+    val split = graft.operators.Dedup.freshSplit(docs)
     val fresh = docs.filter(col("doc_id") >= lit(split))
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
       .select(explode(expr("graft_word_bigrams(text)")).as("bigram"))
@@ -468,7 +468,7 @@ object TextOps {
   def textUnigramLmIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val p = docs.sparkSession.sparkContext.defaultParallelism
-    val split = graft.operators.Dedup.incrementalSplit(docs).getOrElse(Long.MaxValue)
+    val split = graft.operators.Dedup.freshSplit(docs)
     val freshTf = whitespaceTokens(docs.filter(col("doc_id") >= lit(split)))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
     val tf = graft.operators.Curation.TfidfState.table(spark, dir)

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.{Exact, GraftQuery}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -32,6 +32,18 @@ object Streams {
       spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(dir))
   }
+
+  /** The documents table as a stream, schema from the batch table's
+    * memo, like [[eventsStream]]. */
+  private def documentsStream(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.schema(graft.Tables.documents(spark, dir).schema)
+      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+
+  /** The fresh-crawl slice of [[documentsStream]] — the ingest gates'
+    * input, the batch fresh forms' slice ([[graft.operators.Dedup.freshSlice]]). */
+  private def freshDocsStream(spark: SparkSession, dir: String): DataFrame =
+    documentsStream(spark, dir)
+      .filter(graft.operators.Dedup.freshSlice(graft.Tables.documents(spark, dir)))
 
   /** Stateful-shuffle width for the one-shot driver entries. A
     * streaming query pins `spark.sql.shuffle.partitions` at start as
@@ -339,15 +351,7 @@ object Streams {
     *    state with dropDuplicatesWithinWatermark on ingest time;
     *    the one-shot harness run has no watermark to couple to. */
   def streamDedupDocs(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Dedup
-    val docsBatch = graft.Tables.documents(spark, dir)
-    val schema = docsBatch.schema
-    val freshAll = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-    val fresh = Dedup.incrementalSplit(docsBatch)
-      .map(split => freshAll.filter(col("doc_id") >= lit(split)))
-      .getOrElse(freshAll.filter(lit(false)))
-    val scored = gateScoredPairs(spark, dir, fresh, carry = Nil)
+    val scored = gateScoredPairs(spark, dir, freshDocsStream(spark, dir), carry = Nil)
       .dropDuplicates("doc_a", "doc_b")
     runToMemory(spark, scored, "graft_stream_dedup_docs", OutputMode.Append())
       .orderBy(col("doc_a"), col("doc_b"))
@@ -356,9 +360,14 @@ object Streams {
   /** The gate's scoring pipeline over an arbitrary fresh-document
     * stream (doc_id, text, plus any `carry` columns ridden through
     * unchanged — the bounded variant carries its ingest-time
-    * column). Emits verified (doc_a, doc_b, jaccard [, carry…])
-    * candidate rows BEFORE pair dedup, so each dedup regime
-    * (unbounded dropDuplicates for the one-shot entry,
+    * column). Candidates come from the minhash family's one banded
+    * join ([[graft.operators.Dedup.lshCandidates]], length prefilter
+    * included) — the persisted corpus sketch's bands × the stream's
+    * bands, the batch fresh-crawl form's state × slice split — with
+    * the stream's shingle arrays riding each candidate, so the exact
+    * Jaccard verify runs in-row. Emits verified (doc_a, doc_b,
+    * jaccard [, carry…]) candidate rows BEFORE pair dedup, so each
+    * dedup regime (unbounded dropDuplicates for the one-shot entry,
     * dropDuplicatesWithinWatermark for continuous deployments)
     * composes on top. */
   private def gateScoredPairs(spark: SparkSession, dir: String,
@@ -386,12 +395,8 @@ object Streams {
       .select(col("doc_id") +: col("ghs") +: size(col("ghs")).as("n") +:
         Dedup.rowMinhashSig(col("ghs")).as("sig") +: c: _*)
     val freshBands = Dedup.lshBandsOf(sigs, p, carry = Seq("ghs", "n") ++ carry)
-    val cand = corpusBands.as("a")
-      .join(freshBands.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id") && Dedup.lshLengthFilter)
-      .select(col("a.doc_id").as("doc_a") +: col("b.doc_id").as("doc_b") +:
-        col("b.ghs").as("ghs_b") +: col("b.n").as("n_b") +: carry.map(n => col(s"b.$n")): _*)
+    val cand = Dedup.lshCandidates(corpusBands, freshBands,
+      col("b.ghs").as("ghs_b") +: col("b.n").as("n_b") +: carry.map(n => col(s"b.$n")))
     cand
       .join(sk.select(col("doc_id").as("doc_a"), col("ghs").as("ghs_a"), col("n").as("n_a")),
         Seq("doc_a"))
@@ -444,30 +449,28 @@ object Streams {
     * One-shot output equals the batch incremental entry row-for-row
     * (spec-pinned), so the batch oracle applies unchanged. */
   def streamSubstringProfile(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Dedup
     graft.functions.GraftFunctions.register(spark)
-    val docsBatch = graft.Tables.documents(spark, dir)
-    val schema = docsBatch.schema
-    val wt = Dedup.SubstringWindows.table(spark, dir)
-    val freshAll = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-    val fresh = Dedup.incrementalSplit(docsBatch)
-      .map(split => freshAll.filter(col("doc_id") >= lit(split)))
-      .getOrElse(freshAll.filter(lit(false)))
-      .filter(col("n_chars") >= Dedup.SubstringK)
-    val w = fresh
-      .select(col("doc_id"),
-        (length(col("text")) - lit(Dedup.SubstringK - 1)).cast("long").as("n_windows"),
-        explode(expr(s"graft_window_hashes(text, ${Dedup.SubstringK})")).as("wh"))
-    val profile = w.join(wt, "wh")
-      .groupBy(col("doc_id"), col("n_windows"))
+    val profile = streamProfile(spark, dir, freshDocsStream(spark, dir), Nil, Nil)
+    runToMemory(spark, profile, "graft_stream_substring_profile", OutputMode.Complete())
+      .orderBy(col("doc_id"))
+  }
+
+  /** Both profile gates' per-doc profile: each doc of the `fresh`
+    * stream probed against the persisted (wh, total) table through
+    * the substring family's one window-row relation, grouped per
+    * (doc_id, n_windows) plus the `bucket` columns over the `keep`
+    * ones. */
+  private def streamProfile(spark: SparkSession, dir: String, fresh: DataFrame,
+                            keep: Seq[Column], bucket: Seq[Column]): DataFrame = {
+    import graft.operators.Dedup
+    Dedup.windowRows(fresh, col("doc_id") +: Dedup.nWindows +: keep, spread = false)
+      .join(Dedup.SubstringWindows.table(spark, dir), "wh")
+      .groupBy(col("doc_id") +: col("n_windows") +: bucket: _*)
       .agg(sum(when(col("total") === 1, 1L).otherwise(0L)).as("uniq"))
       .select(col("doc_id"), col("n_windows"),
         (col("n_windows") - col("uniq")).as("dup_windows"),
         ((col("n_windows") - col("uniq")).cast("double") / col("n_windows").cast("double"))
           .as("dup_frac"))
-    runToMemory(spark, profile, "graft_stream_substring_profile", OutputMode.Complete())
-      .orderBy(col("doc_id"))
   }
 
   /** Bounded-state continuous-deployment form of
@@ -497,21 +500,14 @@ object Streams {
                                     fresh: DataFrame, delay: String): DataFrame = {
     import graft.operators.Dedup
     graft.functions.GraftFunctions.register(spark)
-    val wt = Dedup.SubstringWindows.table(spark, dir)
-    val marked = fresh
-      .filter(length(col("text")).cast("long") >= Dedup.SubstringK)
+    // short docs leave BEFORE the dedup state, not only at the
+    // window explode
+    val marked = fresh.withColumn("n_chars", length(col("text")))
+      .filter(col("n_chars") >= Dedup.SubstringK)
       .withWatermark("ingest_ts", delay)
       .dropDuplicatesWithinWatermark("doc_id")
-    val w = marked.select(col("doc_id"), col("ingest_ts"),
-      (length(col("text")) - lit(Dedup.SubstringK - 1)).cast("long").as("n_windows"),
-      explode(expr(s"graft_window_hashes(text, ${Dedup.SubstringK})")).as("wh"))
-    w.join(wt, "wh")
-      .groupBy(col("doc_id"), col("n_windows"), window(col("ingest_ts"), "1 minute"))
-      .agg(sum(when(col("total") === 1, 1L).otherwise(0L)).as("uniq"))
-      .select(col("doc_id"), col("n_windows"),
-        (col("n_windows") - col("uniq")).as("dup_windows"),
-        ((col("n_windows") - col("uniq")).cast("double") / col("n_windows").cast("double"))
-          .as("dup_frac"))
+    streamProfile(spark, dir, marked, Seq(col("ingest_ts")),
+      Seq(window(col("ingest_ts"), "1 minute")))
   }
 
   /** The stream-gate pair list, staged once per corpus version for
@@ -569,13 +565,7 @@ object Streams {
     import graft.operators.{Curation, Dedup}
     graft.functions.GraftFunctions.register(spark)
     StreamDocPairs.ensure(spark, dir)
-    val docsBatch = graft.Tables.documents(spark, dir)
-    val schema = docsBatch.schema
-    val freshAll = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-    val fresh = Dedup.incrementalSplit(docsBatch)
-      .map(split => freshAll.filter(col("doc_id") >= lit(split)))
-      .getOrElse(freshAll.filter(lit(false)))
+    val fresh = freshDocsStream(spark, dir)
     val st = expr("graft_text_stats(text)")
     val nChars = length(col("text")).cast("long")
     val q = fresh.filter(
@@ -691,10 +681,7 @@ object Streams {
   def streamShardAssign(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Pack
     graft.functions.GraftFunctions.register(spark)
-    val schema = graft.Tables.documents(spark, dir).schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-    val measured = docs.select(
+    val measured = documentsStream(spark, dir).select(
       col("doc_id"),
       element_at(expr("graft_text_stats(text)"), 1).as("n_tokens"))
     val totals = Pack.shardKeyed(measured, Pack.DefaultShards)
@@ -872,11 +859,7 @@ object Streams {
     * state to the one batch retraction semantics. */
   def streamTakedownGate(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Retract
-    val docsBatch = graft.Tables.documents(spark, dir)
-    val schema = docsBatch.schema
-    val reads = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-    val served = reads
+    val served = documentsStream(spark, dir)
       .join(broadcast(Retract.Tombstones.table(spark, dir)), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     runToMemory(spark, served, "graft_stream_takedown_gate", OutputMode.Append())
@@ -897,11 +880,7 @@ object Streams {
     * it needs from the state tables, never from serving traffic. */
   def streamTakedownQueue(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Retract
-    val docsBatch = graft.Tables.documents(spark, dir)
-    val schema = docsBatch.schema
-    val reads = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-    val queued = reads
+    val queued = documentsStream(spark, dir)
       .join(broadcast(Retract.Tombstones.table(spark, dir)), Seq("doc_id"), "left_semi")
       .select(col("doc_id"))
     runToMemory(spark, queued, "graft_stream_takedown_queue", OutputMode.Append())

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class DedupSpec extends AnyFunSuite {
+class DedupSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   val dir = "/root/testdata/sf0.001"
   import operators.Dedup
@@ -107,12 +107,12 @@ class DedupSpec extends AnyFunSuite {
 
   test("grouped simhash pair kernel equals the band-join form row for row") {
     val grouped = Dedup.dedupSimhash(spark, dir).collect().map(_.toString).toSeq
-    val joined = Dedup.dedupSimhashJoinForm(spark, dir).collect().map(_.toString).toSeq
+    val joined = DedupReference.dedupSimhashJoinForm(spark, dir).collect().map(_.toString).toSeq
     assert(grouped.nonEmpty && grouped == joined)
     // multi-block coverage: blockSize 4 forces every bucket above 4
     // members through the bipartite block path; union across block
     // pairs must reproduce the single-triangle result exactly
-    val blocked = Dedup.dedupSimhashBlocked(spark, dir, blockSize = 4)
+    val blocked = Dedup.dedupSimhash(spark, dir, blockSize = 4)
       .collect().map(_.toString).toSeq
     assert(blocked == joined)
   }
@@ -123,13 +123,23 @@ class DedupSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     val split = Tables.documents(spark, dir)
       .agg(max(col("doc_id"))).head.getLong(0) * 9 / 10
-    val inc = Dedup.dedupSimhashIncremental(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    // the persisted a-side signatures equal the live pipeline's
-    // (deterministic token hashing), so the slice restriction
-    // commutes: same rows, same hamming distances, same order
-    assert(inc.toSeq == full.filter(_._2 >= split).toSeq,
-      s"incremental simhash pairs diverge from the restricted full set (split=$split)")
+    // the default block edge (one block per bucket) and blockSize 4,
+    // which forces multi-block old × new and new × new coverage
+    for (incDf <- Seq(Dedup.dedupSimhashIncremental(spark, dir),
+                      Dedup.dedupSimhashIncremental(spark, dir, blockSize = 4))) {
+      val inc = incDf.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+      // the persisted a-side signatures equal the live pipeline's
+      // (deterministic token hashing), so the slice restriction
+      // commutes: same rows, same hamming distances, same order
+      assert(inc.toSeq == full.filter(_._2 >= split).toSeq,
+        s"incremental simhash pairs diverge from the restricted full set (split=$split)")
+      // the fresh form runs the full form's blocked pair kernel: no
+      // band-equality join
+      val plan = incDf.queryExecution.executedPlan.toString
+      assert(plan.contains("graft_simhash_pairs"), s"blocked kernel absent:\n$plan")
+      assert(!plan.linesIterator.exists(l => l.contains("Join") && l.contains("band")),
+        s"fresh simhash still band-joins:\n$plan")
+    }
   }
 
   test("persisted simhash signature table equals the live signatures") {
@@ -173,8 +183,8 @@ class DedupSpec extends AnyFunSuite {
 
   test("minhash signatures are deterministic across partitionings") {
     val docs = Tables.documents(spark, dir)
-    val a = Dedup.minhashSignatures(docs).orderBy("doc_id").collect()
-    val b = Dedup.minhashSignatures(docs.repartition(7)).orderBy("doc_id").collect()
+    val a = DedupReference.minhashSignatures(docs).orderBy("doc_id").collect()
+    val b = DedupReference.minhashSignatures(docs.repartition(7)).orderBy("doc_id").collect()
     assert(a.map(_.toString).toSeq == b.map(_.toString).toSeq)
   }
 
@@ -289,7 +299,7 @@ class DedupSpec extends AnyFunSuite {
       (3L, span + span) // self-repeat
     ).toDF("doc_id", "text").withColumn("n_chars", length(col("text")))
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
-    val tmp = java.nio.file.Files.createTempDirectory("substr").toString
+    val tmp = tempDir("substr").toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val out = Dedup.dedupSubstring(spark, tmp).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
@@ -379,7 +389,7 @@ class DedupSpec extends AnyFunSuite {
       (3L, "shorty") // below k: untouched by construction
     ).toDF("doc_id", "text").withColumn("n_chars", length(col("text")))
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
-    val tmp = java.nio.file.Files.createTempDirectory("substrclean").toString
+    val tmp = tempDir("substrclean").toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val out = Dedup.dedupSubstringClean(spark, tmp).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4))))
@@ -455,7 +465,7 @@ class DedupSpec extends AnyFunSuite {
         (102L, "a third unique text on approximate membership structures")))
       .toDF("doc_id", "text").withColumn("n_chars", length(col("text")))
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
-    val tmp = java.nio.file.Files.createTempDirectory("densecorpus").toString
+    val tmp = tempDir("densecorpus").toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     // a zero volume floor engages the above-floor regime, where a
     // grid route is the dense-grid one
@@ -488,7 +498,7 @@ class DedupSpec extends AnyFunSuite {
       (3L, "d" * 80)
     ).toDF("doc_id", "text").withColumn("n_chars", length(col("text")))
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
-    val tmp = java.nio.file.Files.createTempDirectory("nocand").toString
+    val tmp = tempDir("nocand").toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     assert(Dedup.dedupNgramJaccard(spark, tmp).collect().isEmpty)
     assert(Dedup.dedupMinhashLsh(spark, tmp).collect().isEmpty)
@@ -498,7 +508,7 @@ class DedupSpec extends AnyFunSuite {
     val shorts = Seq((0L, "aa"), (1L, "bb"), (2L, "cc"))
       .toDF("doc_id", "text").withColumn("n_chars", length(col("text")))
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
-    val tmp2 = java.nio.file.Files.createTempDirectory("nocand2").toString
+    val tmp2 = tempDir("nocand2").toString
     shorts.write.mode("overwrite").parquet(s"$tmp2/documents.parquet")
     assert(Dedup.dedupNgramJaccard(spark, tmp2).collect().isEmpty)
     assert(Dedup.dedupMinhashLsh(spark, tmp2).collect().isEmpty)

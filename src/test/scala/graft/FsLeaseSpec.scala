@@ -3,7 +3,7 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
-class FsLeaseSpec extends AnyFunSuite {
+class FsLeaseSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   val dataDir = "/root/testdata/sf0.001"
   import operators.Similarity
@@ -12,7 +12,7 @@ class FsLeaseSpec extends AnyFunSuite {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def tmpRoot(prefix: String): Path =
-    new Path("file:" + java.nio.file.Files.createTempDirectory(prefix).toString)
+    new Path("file:" + tempDir(prefix).toString)
 
   test("lease acquires, runs the body, and releases — including on exception") {
     val root = tmpRoot("graft_lease")
@@ -71,7 +71,7 @@ class FsLeaseSpec extends AnyFunSuite {
   }
 
   test("a second writer against a live IVF index root fails loudly instead of corrupting") {
-    val root = java.nio.file.Files.createTempDirectory("graft_ivf_lease").toString
+    val root = tempDir("graft_ivf_lease").toString
     val rootPath = new Path(s"file:$root")
     val fs = localFs(rootPath)
     val lock = new Path(rootPath, Similarity.IvfLockName)
@@ -98,7 +98,7 @@ class FsLeaseSpec extends AnyFunSuite {
   }
 
   test("warehouse ingest and compact refuse a root another writer holds") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh_lease").toString
+    val wh = tempDir("graft_wh_lease").toString
     val whPath = new Path(wh)
     val fs = localFs(whPath)
     val lock = new Path(whPath, graft.sinks.Warehouse.WriterLockName)

@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * InChIKey candidates from the key's bucket), their equivalence with
   * the scan route past the byte bound, the scan route's plan, and
   * freshness through every warehouse write. */
-class LookupSpec extends AnyFunSuite {
+class LookupSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
 
   /** 4 files x 200 records (cids 1..800) under a fresh root. In file 1
@@ -24,7 +24,7 @@ class LookupSpec extends AnyFunSuite {
     * row; cid 270 loses its (nullable) XLOGP3. Returns (root, glob,
     * warehouse). */
   private def corpus(): (String, String, String) = {
-    val root = java.nio.file.Files.createTempDirectory("graft_lookup_spec").toString
+    val root = tempDir("graft_lookup_spec").toString
     val glob = SdfScaleBench.generate(root, nFiles = 4, molsPerFile = 200)
     val f1 = java.nio.file.Paths.get(root, "sdf", "Compound_00001.sdf")
     val recs = java.nio.file.Files.readString(f1).split("\\$\\$\\$\\$\n", -1).toSeq.init
@@ -59,7 +59,7 @@ class LookupSpec extends AnyFunSuite {
     assert(LookupSpec.jobsOf(spark)(Warehouse.lookup(spark, wh, 301L).collect())._2 == 0)
     assert(LookupSpec.jobsOf(spark)(Warehouse.lookup(spark, wh, 250L).collect())._2 == 0)
     assert(LookupSpec.jobsOf(spark)(Warehouse.lookup(spark, wh, 5000L).collect())._2 == 0)
-    val onlySpan = LookupSpec.garbledCopy(wh, _ == "Compound_00001.sdf")
+    val onlySpan = LookupSpec.garbledCopy(wh, _ == "Compound_00001.sdf", tempDir("graft_lookup_garbled"))
     assert(cids(Warehouse.lookup(spark, onlySpan, 300L)) == Seq(300L))
     assert(Warehouse.lookup(spark, onlySpan, 250L).collect().isEmpty)
     // the scan route past the byte bound reads only the spanning
@@ -102,7 +102,7 @@ class LookupSpec extends AnyFunSuite {
     Warehouse.retract(spark, wh, Seq(900L, 1000L))
     assert(Warehouse.lookup(spark, wh, 900L).collect().isEmpty, "retracted cid served")
     val top = Warehouse.lookup(spark, wh, 1000L)
-    val noData = LookupSpec.garbledCopy(wh, _ => false)
+    val noData = LookupSpec.garbledCopy(wh, _ => false, tempDir("graft_lookup_garbled"))
     assert(Warehouse.lookup(spark, noData, 1000L).collect().isEmpty, "stale span read a file")
     assert(top.collect().isEmpty)
     assert(cids(Warehouse.lookup(spark, wh, 999L)) == Seq(999L))
@@ -131,7 +131,7 @@ class LookupSpec extends AnyFunSuite {
   }
 
   test("an all-digit source filename comes back as the string '00123'") {
-    val wh = LookupSpec.digitWarehouse()
+    val wh = LookupSpec.digitWarehouse(tempDir("graft_lookup_digit").toString)
     def assertDigits(df: DataFrame): Unit = {
       assert(df.schema("src_filename").dataType == org.apache.spark.sql.types.StringType)
       val rows = df.collect()
@@ -219,7 +219,7 @@ class LookupSpec extends AnyFunSuite {
     assert(nullLogp.length == 1 && nullLogp(0).isNullAt(nullLogp(0).fieldIndex("xlogp3")))
 
     // an all-digit src_filename stays the string '00123'
-    val digits = LookupSpec.digitWarehouse()
+    val digits = LookupSpec.digitWarehouse(tempDir("graft_lookup_digit").toString)
     same(Warehouse.lookup(spark, digits, 10L), Warehouse.lookup(spark, digits, 10L, LayoutSpec.default, -1L))
 
     // a layout column missing from an older file reads null
@@ -268,10 +268,9 @@ class LookupSpec extends AnyFunSuite {
 object LookupSpec {
   import org.scalatest.Assertions._
 
-  /** A one-file warehouse whose source file is named `00123` (cids
-    * 0..49). */
-  def digitWarehouse(): String = {
-    val root = java.nio.file.Files.createTempDirectory("graft_lookup_digit").toString
+  /** A one-file warehouse under `root` whose source file is named
+    * `00123` (cids 0..49). */
+  def digitWarehouse(root: String): String = {
     SdfScaleBench.generate(root, nFiles = 1, molsPerFile = 50)
     val src = java.nio.file.Paths.get(root, "sdf")
     java.nio.file.Files.move(src.resolve("Compound_00000.sdf"), src.resolve("00123"))
@@ -307,10 +306,10 @@ object LookupSpec {
     java.nio.file.Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
   }
 
-  /** A copy of warehouse `wh` in which the data files of every
-    * `src_filename=` partition that `keep` rejects are garbled. */
-  def garbledCopy(wh: String, keep: String => Boolean): String = {
-    val to = java.nio.file.Files.createTempDirectory("graft_lookup_garbled").resolve("wh")
+  /** A copy of warehouse `wh` under `root` in which the data files of
+    * every `src_filename=` partition that `keep` rejects are garbled. */
+  def garbledCopy(wh: String, keep: String => Boolean, root: java.nio.file.Path): String = {
+    val to = root.resolve("wh")
     org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(wh), to.toFile)
     garble(dataFiles(Warehouse.compoundsDir(to.toString)).filterNot(f =>
       keep(org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(

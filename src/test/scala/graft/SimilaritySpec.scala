@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-class SimilaritySpec extends AnyFunSuite {
+class SimilaritySpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   val dir = "/root/testdata/sf0.001"
   import operators.Similarity
@@ -98,7 +98,7 @@ class SimilaritySpec extends AnyFunSuite {
     // partitions (the production codes layout) reproduces the full
     // table
     val pg = pmod(col("cid"), lit(Similarity.CodesPartGroups))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq_append_test").toString
+    val tmp = tempDir("graft_ivfpq_append_test").toString
     spark.read.parquet(Similarity.IvfPqCodesBasePath)
       .select(col("vec_id"), col("codes"), col("cid")).withColumn("pg", pg)
       .repartition(col("pg"))
@@ -309,7 +309,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("default root: the index lives under the stage dir, is reused after dropAll, and a rebuild GCs") {
     import java.nio.file.{Files, Paths}
-    val corpus = Files.createTempDirectory("graft_ivf_corpus_default")
+    val corpus = tempDir("graft_ivf_corpus_default")
     val emb = corpus.resolve("embeddings.parquet").toFile
     Files.copy(Paths.get(dir, "embeddings.parquet"), emb.toPath)
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
@@ -344,8 +344,8 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("persisted root: fresh-process reuse without rebuild, fingerprint-change GC") {
     import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("graft_ivf_root")
-    val corpus = Files.createTempDirectory("graft_ivf_corpus")
+    val root = tempDir("graft_ivf_root")
+    val corpus = tempDir("graft_ivf_corpus")
     Files.copy(Paths.get(dir, "embeddings.parquet"), corpus.resolve("embeddings.parquet"))
     def verDirs(): Seq[java.io.File] =
       root.toFile.listFiles().toSeq.filter(_.getName.startsWith("ivf_v"))
@@ -393,9 +393,9 @@ class SimilaritySpec extends AnyFunSuite {
     // root: unsynchronized, each builder writes a manifest missing
     // the other's entry and the GC pass deletes the other's freshly
     // built live version dir (ADVICE r6, medium)
-    val root = Files.createTempDirectory("graft_ivf_root_conc")
+    val root = tempDir("graft_ivf_root_conc")
     val corpora = (0 until 2).map { i =>
-      val c = Files.createTempDirectory(s"graft_ivf_corpus_$i")
+      val c = tempDir(s"graft_ivf_corpus_$i")
       Files.copy(Paths.get(dir, "embeddings.parquet"), c.resolve("embeddings.parquet"))
       // distinct mtimes -> distinct fingerprints -> distinct version dirs
       assert(c.resolve("embeddings.parquet").toFile

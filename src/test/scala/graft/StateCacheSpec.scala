@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
-class StateCacheSpec extends AnyFunSuite {
+class StateCacheSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
 
   /** Run `body` on `n` threads released together; their results. */
@@ -25,7 +25,7 @@ class StateCacheSpec extends AnyFunSuite {
 
   /** A fresh temp dir holding `name`. */
   private def tempPath(name: String): String =
-    java.nio.file.Files.createTempDirectory("graft_statecache").resolve(name).toString
+    tempDir("graft_statecache").resolve(name).toString
 
   test("a version flip-flop A -> B -> A rebuilds each time") {
     val builds = new AtomicInteger
@@ -119,7 +119,7 @@ class StateCacheSpec extends AnyFunSuite {
       .toArray.map(_.toString).filterNot(_.startsWith("-Xmx")).toSeq
     val cmd = Seq(javaBin) ++ flags ++ Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"),
       StateCacheStoppedSessionCheck.getClass.getName.stripSuffix("$"))
-    val log = java.io.File.createTempFile("graft_statecache_child", ".log")
+    val log = tempDir("graft_statecache_child").resolve("child.log").toFile
     val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).redirectOutput(log).start()
     val finished = proc.waitFor(5, TimeUnit.MINUTES)
     if (!finished) proc.destroyForcibly()

@@ -133,7 +133,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val docs = Tables.documents(spark, dir)
     val hashed = operators.Dedup.sharedShingleArrays(docs)
-    val batch = operators.Dedup.minhashSignatures(docs)
+    val batch = DedupReference.minhashSignatures(docs)
       .orderBy(col("doc_id")).collect().map(r => (r.getLong(0), r.getSeq[Long](1)))
     val perRow = hashed.filter(size(col("ghs")) > 0)
       .select(col("doc_id"), operators.Dedup.rowMinhashSig(col("ghs")).as("sig"))
@@ -156,7 +156,7 @@ class StreamingSpec extends AnyFunSuite {
     graft.functions.GraftFunctions.register(spark)
     val stream = Streams.streamCurateGate(spark, dir).collect().map(_.toString).toSeq
     val docs = Tables.documents(spark, dir)
-    val split = Dedup.incrementalSplit(docs).get
+    val split = Dedup.freshSplit(docs)
     val st = expr("graft_text_stats(text)")
     val nChars = length(col("text")).cast("long")
     val q = docs.filter(col("doc_id") >= lit(split)).filter(
