@@ -32,8 +32,16 @@ SMOKE_SF="${SMOKE_SF:-/root/testdata/sf0.001}"
 OUT="$(mktemp -d /tmp/graft_preflight.XXXXXX)"
 trap 'rm -rf "$OUT"' EXIT
 
+# The suite's JVMs keep the default java.io.tmpdir (build.sbt sets
+# none), so what a run leaves behind shows as new entries in /tmp.
+JAVA_TMP=/tmp
+TMP_BEFORE="$(mktemp)"
+ls -A "$JAVA_TMP" | sort > "$TMP_BEFORE"
+
 echo "[preflight] sbt test..."
 sbt -batch test
+TMP_ADDED="$(ls -A "$JAVA_TMP" | sort | comm -13 "$TMP_BEFORE" - | grep -c . || true)"
+rm -f "$TMP_BEFORE"
 
 echo "[preflight] registry smoke at $SMOKE_SF..."
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
@@ -50,6 +58,8 @@ echo "[preflight] graft.* conf keys read:" \
   $(grep -rhoE '"graft\.[A-Za-z.]+"' src/main | tr -d '"' | sort -u)
 echo "[preflight] env vars read:" \
   $(grep -rhoE 'sys\.env[^"]*"[A-Z_]+"' src/main | grep -oE '"[A-Z_]+"' | tr -d '"' | sort -u)
+# leaked scratch: entries the suite run added under java.io.tmpdir
+echo "[preflight] $JAVA_TMP entries added by the suite run: $TMP_ADDED"
 
 if [[ -n "$COMMIT_MSG" ]]; then
   git add -A

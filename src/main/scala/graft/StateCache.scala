@@ -3,9 +3,10 @@ package graft
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 
-/** The one memo for derived state: inferred schemas and bounded row
-  * snapshots keyed on a table's file listing, parquet row-group
-  * counts, IVF/PQ index state, and the staged oracle tables.
+/** The one memo for derived state: inferred schemas, bounded row
+  * snapshots and parquet footer statistics keyed on a table's file
+  * listing, parquet row-group counts, IVF/PQ index state, and the
+  * staged oracle tables.
   *
   * For each (scope, artifact) it holds only the value built for the
   * LAST version key. A lookup under another version rebuilds and

@@ -1,6 +1,18 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.column.statistics.Statistics
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.FilterApi
+import org.apache.parquet.hadoop.metadata.{ColumnPath, FileMetaData, ParquetMetadata}
+import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructType}
+
+import scala.jdk.CollectionConverters._
 
 /** Loaders for the driver-generated test tables (see TESTDATA.md).
   *
@@ -11,7 +23,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
   /** A listing with `key=value` subdirectories: a partitioned table. */
-  private def partitioned(listing: Seq[org.apache.hadoop.fs.FileStatus]): Boolean =
+  private def partitioned(listing: Seq[FileStatus]): Boolean =
     listing.exists(s => s.isDirectory && s.getPath.getName.contains("="))
 
   /** `spark.read.parquet(path)` with the inferred schema held in
@@ -37,38 +49,115 @@ object Tables {
   def parquetCached(spark: SparkSession, path: String): DataFrame =
     listedRead(spark, path, StateCache.listing(spark, path))
 
-  /** The rows of `columns` in the unpartitioned table at `path`,
-    * collected to the driver once per listing key, or None when the
-    * table holds more than `max` rows (the caller then stays on a
-    * distributed plan). One `limit(max + 1)` collect decides both, so
-    * a table past the bound costs one bounded job per listing key, not
-    * a count plus a collect. A cache hit costs the listing and nothing
-    * else (no relation is resolved). Partitioned paths bypass the cache
-    * as in [[parquetCached]] and collect on every call. */
-  def collectCached(spark: SparkSession, path: String, columns: Seq[String],
-                    max: Int): Option[IndexedSeq[org.apache.spark.sql.Row]] = {
+  /** A table's rows held on the driver, with the schema a scan of the
+    * table has. */
+  final case class Snapshot(schema: StructType, rows: IndexedSeq[Row])
+
+  /** The unpartitioned table at `path` read on the driver once per
+    * listing key, or None when its footers count more than `max` rows
+    * or a column does not decode on the driver ([[readOnDriver]]); the
+    * caller then stays on a distributed plan. The bound is decided from
+    * the [[footers]] before a row is decoded, and no Spark job runs
+    * either way. A hit costs the listing and nothing else. The schema is
+    * the one Spark infers for the scan: the first file's footer schema,
+    * every field nullable. */
+  def collectCached(spark: SparkSession, path: String, max: Long): Option[Snapshot] = {
     val listing = StateCache.listing(spark, path)
-    def bounded() = {
-      val rows = listedRead(spark, path, listing)
-        .select(columns.map(org.apache.spark.sql.functions.col): _*)
-        .limit(max + 1).collect()
-      if (rows.length > max) None else Some(rows.toIndexedSeq)
+    require(!partitioned(listing), s"collectCached: $path is a partitioned table")
+    StateCache(("Tables.rows", path, max), StateCache.identity(listing)) {
+      val files = footers(spark, path, listing)
+      if (files.isEmpty || files.map(_.rows).sum > max) None
+      else {
+        val inferred = ParquetFileFormat.readSchemaFromFooter(
+          new org.apache.parquet.hadoop.Footer(files.head.file.getPath,
+            new ParquetMetadata(files.head.meta, java.util.Collections.emptyList())),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        val schema = StructType(inferred.fields.map(_.copy(nullable = true)))
+        readOnDriver(spark, files.map(_.file -> Nil), schema, None).map(Snapshot(schema, _))
+      }
     }
-    if (partitioned(listing)) bounded()
-    else StateCache(("Tables.rows", path, columns, max), StateCache.identity(listing))(bounded())
   }
+
+  /** One parquet file's footer facts: its row count, its file metadata
+    * (schema and key-value metadata), and, per top-level column of a
+    * plain or string type, the statistics merged over its row groups. A
+    * column is absent from `stats` when a row group holds values of it
+    * but no min/max or no null count. */
+  final case class Footer(file: FileStatus, rows: Long, meta: FileMetaData,
+                          stats: Map[String, Statistics[_]])
+
+  /** The footers of the files a Spark scan of `path` reads (a directory
+    * of part files, or one file): visible and non-empty. Read on the
+    * driver through [[openParquet]] and held in [[StateCache]] under
+    * the listing identity, so a rewrite re-reads them. Throws
+    * FileNotFoundException when `path` is gone. */
+  def footers(spark: SparkSession, path: String): Seq[Footer] = {
+    val p = new Path(path)
+    footers(spark, path, p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).toSeq)
+  }
+
+  /** [[footers]] of `path` under a listing the caller already holds. */
+  private[graft] def footers(spark: SparkSession, path: String, listing: Seq[FileStatus]): Seq[Footer] =
+    StateCache(("Tables.footers", path), StateCache.identity(listing)) {
+      listing.filter(dataFile).sortBy(_.getPath.getName).map { st =>
+        val reader = openParquet(spark, st)
+        try footerOf(st, reader.getFooter) finally reader.close()
+      }
+    }
+
+  private def footerOf(file: FileStatus, footer: ParquetMetadata): Footer = {
+    val meta = footer.getFileMetaData
+    val blocks = footer.getBlocks.asScala
+    val stats = meta.getSchema.getFields.asScala.filter(t =>
+      t.isPrimitive && !t.isRepetition(Type.Repetition.REPEATED) &&
+        (t.getLogicalTypeAnnotation == null || t.getLogicalTypeAnnotation == LogicalTypeAnnotation.stringType())
+    ).flatMap { t =>
+      val merged = Statistics.createStats(t.asPrimitiveType)
+      val complete = blocks.forall(_.getColumns.asScala.find(_.getPath == ColumnPath.get(t.getName))
+        .exists { c =>
+          val s = c.getStatistics
+          // parquet drops min/max it deems too long but keeps the null
+          // count: a chunk without a non-null value must be all nulls
+          val known = s != null && s.isNumNullsSet && (s.hasNonNullValue || s.getNumNulls == c.getValueCount)
+          if (known) merged.mergeStatistics(s)
+          known
+        })
+      Option.when(complete)(t.getName -> (merged: Statistics[_]))
+    }.toMap
+    Footer(file, blocks.map(_.getRowCount).sum, meta, stats)
+  }
+
+  /** Min and max (None when no value is non-null) and null count of
+    * column `name` over `files`, as Spark values. Fails loudly when a
+    * file holds rows but no statistics for the column. */
+  def columnStats(files: Seq[Footer], name: String): (Option[Any], Option[Any], Long) = {
+    val parts = files.filter(_.rows > 0).map(f => f.stats.getOrElse(name,
+      throw new IllegalStateException(s"${f.file.getPath}: no parquet statistics for column $name")))
+    if (parts.isEmpty) return (None, None, 0L)
+    val merged = Statistics.createStats(parts.head.`type`)
+    parts.foreach(merged.mergeStatistics(_))
+    def value(v: Any): Any = v match {
+      case b: Binary => b.toStringUsingUTF8
+      case other => other
+    }
+    if (!merged.hasNonNullValue) (None, None, merged.getNumNulls)
+    else (Some(value(merged.genericGetMin)), Some(value(merged.genericGetMax)), merged.getNumNulls)
+  }
+
+  /** A file a Spark file scan reads: visible and non-empty. */
+  private[graft] def dataFile(s: FileStatus): Boolean = s.isFile && s.getLen > 0 && !hidden(s.getPath.getName)
 
   /** A reader of the table at `path` under `listing`; a schema miss
     * hands back the inferring read itself. */
   private def listedRead(spark: SparkSession, path: String,
-                         listing: Seq[org.apache.hadoop.fs.FileStatus]): DataFrame = {
+                         listing: Seq[FileStatus]): DataFrame = {
     if (partitioned(listing)) return spark.read.parquet(path)
     // A root whose own name Spark treats as hidden (the warehouse's
     // `_manifest`) is read through its listed visible files: read as a
     // directory, Spark scans it anyway but logs "All paths were
     // ignored" on every read.
     val visible = listing.map(_.getPath).filterNot(f => hidden(f.getName))
-    val paths = if (hidden(new org.apache.hadoop.fs.Path(path).getName) && visible.nonEmpty)
+    val paths = if (hidden(new Path(path).getName) && visible.nonEmpty)
       visible.map(_.toString) else Seq(path)
     var inferred: Option[DataFrame] = None
     val schema = StateCache(("Tables.schema", path), StateCache.identity(listing)) {
@@ -94,7 +183,7 @@ object Tables {
     * no footer is ever read. */
   def rowGroupCount(spark: SparkSession, file: String): Int = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(file)
+    val p = new Path(file)
     // a file deleted since the caller listed it (a concurrent rewrite)
     // counts as one row group: the width guess only sizes a spread,
     // and the scan itself reports the missing file loudly
@@ -117,14 +206,103 @@ object Tables {
     * resources on every call, 12-16 ms against 0.5 ms for a filtered
     * read of a 24 KB file through these options. */
   private[graft] def openParquet(
-      spark: SparkSession, file: org.apache.hadoop.fs.FileStatus,
-      filter: org.apache.parquet.filter2.compat.FilterCompat.Filter =
-        org.apache.parquet.filter2.compat.FilterCompat.NOOP)
+      spark: SparkSession, file: FileStatus,
+      filter: FilterCompat.Filter = FilterCompat.NOOP)
       : org.apache.parquet.hadoop.ParquetFileReader = {
     val conf = spark.sparkContext.hadoopConfiguration
     org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf),
       org.apache.parquet.HadoopReadOptions.builder(conf, file.getPath).withRecordFilter(filter).build())
+  }
+
+  /** The rows of `files` read on the driver, in the order of `schema`:
+    * the one driver-side parquet row reader. Each file pairs with its
+    * constants (partition values), which fill the last columns of
+    * `schema`; the leading columns are read from the file by name, null
+    * where the file lacks one, as Spark's scan reads them. With a `key`
+    * (column, value), only rows whose column equals the value are kept:
+    * a parquet record filter skips row groups by statistics and
+    * dictionaries and pages by column index, and each surviving row is
+    * checked against the value again. None when a column is not a
+    * bigint, double or string stored as such. Every file is opened
+    * through [[openParquet]]. */
+  private[graft] def readOnDriver(spark: SparkSession, files: Seq[(FileStatus, Seq[Any])],
+                                  schema: StructType,
+                                  key: Option[(String, Any)]): Option[IndexedSeq[Row]] = {
+    import PrimitiveType.PrimitiveTypeName.{BINARY, DOUBLE, INT64}
+    val data = schema.fields.dropRight(files.headOption.fold(0)(_._2.length))
+    val physical = data.map(_.dataType match {
+      case LongType => Some(INT64)
+      case DoubleType => Some(DOUBLE)
+      case StringType => Some(BINARY)
+      case _ => None
+    })
+    if (key.exists(_._1.contains('.')) || physical.contains(None)) return None
+    val filter = key.fold(FilterCompat.NOOP) {
+      case (k, v: Long) => FilterCompat.get(FilterApi.eq(FilterApi.longColumn(k), java.lang.Long.valueOf(v)))
+      case (k, v: String) => FilterCompat.get(FilterApi.eq(FilterApi.binaryColumn(k), Binary.fromString(v)))
+    }
+    val keySlot = key.map(k => data.indexWhere(_.name == k._1))
+    val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
+    val decoded = files.forall { case (st, constants) =>
+      val reader = openParquet(spark, st, filter)
+      try {
+        val fileSchema = reader.getFooter.getFileMetaData.getSchema
+        val names = fileSchema.getFields.asScala.map(_.getName).toSet
+        def field(i: Int) = fileSchema.getType(fileSchema.getFieldIndex(data(i).name))
+        val slots = data.indices.filter(i => names.contains(data(i).name))
+        val decodable = data.forall(f => names.contains(f.name) || !names.exists(_.equalsIgnoreCase(f.name))) &&
+          slots.forall { i =>
+            val t = field(i)
+            val annotation = t.getLogicalTypeAnnotation
+            t.isPrimitive && !t.isRepetition(Type.Repetition.REPEATED) &&
+              physical(i).contains(t.asPrimitiveType.getPrimitiveTypeName) &&
+              (annotation == null ||
+                data(i).dataType == StringType && annotation == LogicalTypeAnnotation.stringType())
+          }
+        if (decodable && keySlot.forall(slots.contains)) {
+          val requested = new MessageType(fileSchema.getName,
+            slots.map(field): _*)
+          reader.setRequestedSchema(requested)
+          val io = new ColumnIOFactory(reader.getFooter.getFileMetaData.getCreatedBy)
+            .getColumnIO(requested, fileSchema, true)
+          var pages = reader.readNextFilteredRowGroup()
+          while (pages != null) {
+            val records = io.getRecordReader(pages, new SlotMaterializer(slots, data.length), filter)
+            var n = 0L
+            while (n < pages.getRowCount) {
+              val r = records.read()
+              if (r != null && !records.shouldSkipCurrentRecord && key.forall(k => r(keySlot.get) == k._2))
+                rows += Row.fromSeq(r.toSeq ++ constants)
+              n += 1
+            }
+            pages = reader.readNextFilteredRowGroup()
+          }
+        }
+        decodable
+      } finally reader.close()
+    }
+    if (decoded) Some(rows.toIndexedSeq) else None
+  }
+
+  /** Materializes one parquet record of a driver read: field `j` of the
+    * requested schema lands in slot `slots(j)` of a `width`-wide array,
+    * and a slot no field fills stays null. */
+  private final class SlotMaterializer(slots: IndexedSeq[Int], width: Int)
+      extends RecordMaterializer[Array[Any]] {
+    private var current: Array[Any] = _
+    private val root = new GroupConverter {
+      private val fields: IndexedSeq[Converter] = slots.map(slot => new PrimitiveConverter {
+        override def addLong(v: Long): Unit = current(slot) = v
+        override def addDouble(v: Double): Unit = current(slot) = v
+        override def addBinary(v: Binary): Unit = current(slot) = v.toStringUsingUTF8
+      })
+      override def getConverter(i: Int): Converter = fields(i)
+      override def start(): Unit = current = new Array[Any](width)
+      override def end(): Unit = ()
+    }
+    override def getCurrentRecord: Array[Any] = current
+    override def getRootConverter: GroupConverter = root
   }
 
   /** Where table `name` of the corpus at `dir` lives. */

@@ -2,18 +2,13 @@ package graft.sinks
 
 import graft.sources.{LayoutSpec, Sdf}
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.parquet.filter2.predicate.FilterApi
-import org.apache.parquet.io.ColumnIOFactory
-import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.CatalogTableType
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -26,10 +21,13 @@ import scala.jdk.CollectionConverters._
   * manifest is itself a small parquet table, the "files not yet
   * loaded" set is a local anti-filter over the driver-side file
   * listing (thousands of filenames, not data rows), and compound
-  * rows are appended partition-parallel.
+  * rows are appended partition-parallel. As in the reference, the
+  * bookkeeping rides on the insert: each file's manifest row is read
+  * from the parquet footers of the rows just written, not recomputed
+  * by Spark jobs.
   *
   * Divergence from the reference, on purpose: lowest/highest CID are
-  * computed from the DATA (min/max of extracted cid per file), not
+  * computed from the DATA (min/max of the written cids per file), not
   * parsed out of the filename (utils.py:330) — filename-derived
   * ranges silently break on any non-PubChem naming scheme.
   */
@@ -56,16 +54,23 @@ object Warehouse {
   }
 
   /** Manifest rows: filename, lowest_cid, highest_cid, date_added,
-    * n_compounds — the sdf_file schema (utils.py:222-227). */
+    * n_compounds — the sdf_file schema (utils.py:222-227).
+    *
+    * Up to `ManifestCollectMax` rows this is the driver-side manifest
+    * snapshot ([[manifestSnapshot]], the one the skip set and the
+    * lookup spans read) as a local relation with the scan's schema:
+    * `collect()` runs no Spark job, and the frame is fixed at the
+    * listing it was built from, as a scan's file index is. Past the
+    * bound it is the scan, under the listing-keyed schema memo. An
+    * empty frame when the warehouse has no manifest. */
   def manifest(spark: SparkSession, warehouseDir: String): DataFrame = {
     val path = new Path(manifestDir(warehouseDir))
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // schema memo (r20): the manifest is a flat unpartitioned dir and
-    // every warehouse entry re-reads it several times per run — the
-    // bare read re-paid a footer-inference job each time. The memo
-    // keys on the file listing, so an appended manifest re-infers.
-    if (fs.exists(path)) graft.Tables.parquetCached(spark, path.toString)
-    else spark.emptyDataFrame
+    if (!fs.exists(path)) spark.emptyDataFrame
+    else manifestSnapshot(spark, warehouseDir) match {
+      case Some(m) => spark.createDataFrame(m.rows.asJava, m.schema)
+      case None => graft.Tables.parquetCached(spark, path.toString)
+    }
   }
 
   /** Span-matching files above which the lookup stops pruning the
@@ -81,7 +86,7 @@ object Warehouse {
   val MaxLookupPruneFiles = 10000
 
   /** Candidate parquet bytes up to which a point lookup reads its
-    * candidate files on the driver ([[readOnDriver]]) instead of
+    * candidate files on the driver ([[graft.Tables.readOnDriver]]) instead of
     * scanning them in a Spark job. The read runs on one driver thread
     * and, when no row group or page is pruned, decodes every candidate
     * row, so the bound caps driver time and memory per lookup. It is a
@@ -98,8 +103,8 @@ object Warehouse {
     * [lowest_cid, highest_cid] spans ARE the index.
     *
     * The candidates are known before any job runs: the spans come
-    * from the driver-side manifest snapshot ([[manifestSpans]] —
-    * collected once per manifest listing key, the same snapshot the
+    * from the driver-side manifest snapshot ([[manifestSnapshot]] —
+    * read once per manifest listing key, the same snapshot the
     * ingest skip set reads), so picking the candidate files is a loop
     * over at most `ManifestCollectMax` rows, and one `listStatus` per
     * candidate `src_filename=` directory names its files. A candidate
@@ -142,11 +147,13 @@ object Warehouse {
                             layout: LayoutSpec, driverMaxBytes: Long): DataFrame = {
     val pk = layout.columns.find(_.primaryKey).map(_.name)
       .getOrElse(layout.columns.head.name)
-    val files = manifestSpans(spark, warehouseDir) match {
-      case Some(spans) => spans.collect {
-        case r if !r.isNullAt(1) && !r.isNullAt(2) && r.getLong(1) <= cid && r.getLong(2) >= cid =>
-          r.getString(0)
-      }
+    val files = manifestSnapshot(spark, warehouseDir) match {
+      case Some(m) =>
+        val Seq(f, lo, hi) = Seq("filename", "lowest_cid", "highest_cid").map(m.schema.fieldIndex)
+        m.rows.collect {
+          case r if !r.isNullAt(lo) && !r.isNullAt(hi) && r.getLong(lo) <= cid && r.getLong(hi) >= cid =>
+            r.getString(f)
+        }
       case None => manifest(spark, warehouseDir)
         .filter(col("lowest_cid") <= cid && col("highest_cid") >= cid)
         .select("filename").limit(MaxLookupPruneFiles + 1)
@@ -235,98 +242,18 @@ object Warehouse {
   /** The files a Spark file scan of `dir` reads: visible and non-empty.
     * Throws FileNotFoundException when `dir` is gone. */
   private def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
-    fs.listStatus(dir).toSeq.filter(s => s.isFile && s.getLen > 0 && !graft.Tables.hidden(s.getPath.getName))
+    fs.listStatus(dir).toSeq.filter(graft.Tables.dataFile)
 
-  /** The rows of `files` whose `key` column equals `value`, read on the
-    * driver and returned as a local relation of `schema`. Each file
-    * pairs with its constants (partition values), which fill the last
-    * columns of `schema`; the leading columns are read from the file by
-    * name, null where the file lacks one, as Spark's scan reads them.
-    * The parquet record filter on `key` skips row groups by statistics
-    * and dictionaries and pages by column index, and each surviving
-    * row is checked against `value` again. None, and the caller scans,
-    * when the files hold more than `maxBytes`, or a column is not a
-    * bigint, double or string stored as such. Every file is opened
-    * through [[graft.Tables.openParquet]]. */
+  /** The rows of `files` whose `key` column equals `value`
+    * ([[graft.Tables.readOnDriver]]) as a local relation of `schema`;
+    * None, and the caller scans, when the files hold more than
+    * `maxBytes` or do not decode on the driver. */
   private def readOnDriver(spark: SparkSession, files: Seq[(FileStatus, Seq[Any])],
                            schema: StructType, key: String, value: Any,
-                           maxBytes: Long): Option[DataFrame] = {
-    import PrimitiveType.PrimitiveTypeName.{BINARY, DOUBLE, INT64}
-    val data = schema.fields.dropRight(files.headOption.fold(0)(_._2.length))
-    val physical = data.map(_.dataType match {
-      case LongType => Some(INT64)
-      case DoubleType => Some(DOUBLE)
-      case StringType => Some(BINARY)
-      case _ => None
-    })
-    if (files.map(_._1.getLen).sum > maxBytes || key.contains('.') || physical.contains(None))
-      return None
-    val filter = FilterCompat.get(value match {
-      case v: Long => FilterApi.eq(FilterApi.longColumn(key), java.lang.Long.valueOf(v))
-      case v: String => FilterApi.eq(FilterApi.binaryColumn(key), Binary.fromString(v))
-    })
-    val keySlot = data.indexWhere(_.name == key)
-    val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
-    val decoded = files.forall { case (st, constants) =>
-      val reader = graft.Tables.openParquet(spark, st, filter)
-      try {
-        val fileSchema = reader.getFooter.getFileMetaData.getSchema
-        val names = fileSchema.getFields.asScala.map(_.getName).toSet
-        def field(i: Int) = fileSchema.getType(fileSchema.getFieldIndex(data(i).name))
-        val slots = data.indices.filter(i => names.contains(data(i).name))
-        val decodable = data.forall(f => names.contains(f.name) || !names.exists(_.equalsIgnoreCase(f.name))) &&
-          slots.forall { i =>
-            val t = field(i)
-            val annotation = t.getLogicalTypeAnnotation
-            t.isPrimitive && !t.isRepetition(Type.Repetition.REPEATED) &&
-              physical(i).contains(t.asPrimitiveType.getPrimitiveTypeName) &&
-              (annotation == null ||
-                data(i).dataType == StringType && annotation == LogicalTypeAnnotation.stringType())
-          }
-        if (decodable && slots.contains(keySlot)) {
-          val requested = new MessageType(fileSchema.getName,
-            slots.map(field): _*)
-          reader.setRequestedSchema(requested)
-          val io = new ColumnIOFactory(reader.getFooter.getFileMetaData.getCreatedBy)
-            .getColumnIO(requested, fileSchema, true)
-          var pages = reader.readNextFilteredRowGroup()
-          while (pages != null) {
-            val records = io.getRecordReader(pages, new SlotMaterializer(slots, data.length), filter)
-            var n = 0L
-            while (n < pages.getRowCount) {
-              val r = records.read()
-              if (r != null && !records.shouldSkipCurrentRecord && r(keySlot) == value)
-                rows += Row.fromSeq(r.toSeq ++ constants)
-              n += 1
-            }
-            pages = reader.readNextFilteredRowGroup()
-          }
-        }
-        decodable
-      } finally reader.close()
-    }
-    if (decoded) Some(spark.createDataFrame(rows.asJava, schema)) else None
-  }
-
-  /** Materializes one parquet record of a driver read: field `j` of the
-    * requested schema lands in slot `slots(j)` of a `width`-wide array,
-    * and a slot no field fills stays null. */
-  private final class SlotMaterializer(slots: IndexedSeq[Int], width: Int)
-      extends RecordMaterializer[Array[Any]] {
-    private var current: Array[Any] = _
-    private val root = new GroupConverter {
-      private val fields: IndexedSeq[Converter] = slots.map(slot => new PrimitiveConverter {
-        override def addLong(v: Long): Unit = current(slot) = v
-        override def addDouble(v: Double): Unit = current(slot) = v
-        override def addBinary(v: Binary): Unit = current(slot) = v.toStringUsingUTF8
-      })
-      override def getConverter(i: Int): Converter = fields(i)
-      override def start(): Unit = current = new Array[Any](width)
-      override def end(): Unit = ()
-    }
-    override def getCurrentRecord: Array[Any] = current
-    override def getRootConverter: GroupConverter = root
-  }
+                           maxBytes: Long): Option[DataFrame] =
+    if (files.map(_._1.getLen).sum > maxBytes) None
+    else graft.Tables.readOnDriver(spark, files, schema, Some(key -> value))
+      .map(rows => spark.createDataFrame(rows.asJava, schema))
 
   /** Manifest rows above which neither the skip set nor the span
     * index is held on the driver: beyond it, pending files come from a
@@ -335,16 +262,16 @@ object Warehouse {
     * from a distributed span filter. */
   val ManifestCollectMax = 100000
 
-  /** The manifest's (filename, lowest_cid, highest_cid) rows on the
-    * driver, or None past `ManifestCollectMax` rows. Read once per
-    * manifest listing key and held in the listing-keyed memo of
+  /** The manifest's rows on the driver, or None past
+    * `ManifestCollectMax` rows, which the footers' row counts decide
+    * before a row is decoded. Read on the driver with no Spark job, once
+    * per manifest listing key, and held in the listing-keyed memo of
     * [[graft.Tables.collectCached]]: every ingest append and every
     * retract swap writes new part-file names, so the next call after
     * any manifest write re-reads it and no stale span or skip set is
     * ever served. Throws if the warehouse has no manifest. */
-  private def manifestSpans(spark: SparkSession, warehouseDir: String): Option[IndexedSeq[Row]] =
-    graft.Tables.collectCached(spark, manifestDir(warehouseDir),
-      Seq("filename", "lowest_cid", "highest_cid"), ManifestCollectMax)
+  private def manifestSnapshot(spark: SparkSession, warehouseDir: String): Option[graft.Tables.Snapshot] =
+    graft.Tables.collectCached(spark, manifestDir(warehouseDir), ManifestCollectMax)
 
   private def partitionDir(dataDir: Path, filename: String): Path = new Path(dataDir,
     "src_filename=" + org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(filename))
@@ -356,17 +283,18 @@ object Warehouse {
     * the reference's `get_sdf_files_not_in_db`. A manifest past
     * `ManifestCollectMax` rows switches to a left-anti join of the
     * listing against the manifest table, so a million-file warehouse
-    * never materializes its full history on the driver. The
-    * snapshot's `limit(max + 1)` makes the choice without a separate
-    * count job. */
+    * never materializes its full history on the driver. The manifest
+    * footers' row counts make the choice, so a re-run that loads
+    * nothing runs no Spark job under the bound. */
   private def pendingFiles(spark: SparkSession, warehouseDir: String,
                            all: Seq[String]): Seq[String] = {
     val path = new Path(manifestDir(warehouseDir))
     if (!path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path))
       return all.sorted
-    manifestSpans(spark, warehouseDir) match {
-      case Some(spans) =>
-        val done = spans.map(_.getString(0)).toSet
+    manifestSnapshot(spark, warehouseDir) match {
+      case Some(m) =>
+        val name = m.schema.fieldIndex("filename")
+        val done = m.rows.map(_.getString(name)).toSet
         all.filterNot(f => done.contains(basename(f))).sorted
       case None =>
         import spark.implicits._
@@ -387,13 +315,24 @@ object Warehouse {
   private def basename(p: String): String = p.substring(p.lastIndexOf('/') + 1)
 
   /** Ingest every not-yet-loaded file under `glob` into the
-    * warehouse: extract per `layout`, append to compounds/, append
-    * per-file stats to the manifest. Re-running with the same inputs
-    * is a no-op (the skip set is filename-based, matching
-    * `get_sdf_files_not_in_db` utils.py:282). */
+    * warehouse: extract per `layout`, write compounds/ once, then append
+    * each file's manifest row, built from the parquet footers of what
+    * was written. Re-running with the same inputs is a no-op (the skip
+    * set is filename-based, matching `get_sdf_files_not_in_db`
+    * utils.py:282) and, under `ManifestCollectMax` manifest rows, runs
+    * no Spark job. A glob that matches no file is a no-op against a
+    * warehouse that has a manifest (an empty nightly dump) and an
+    * IllegalArgumentException against one that has none: nothing would
+    * be written, and every later read of the warehouse would fail on
+    * the missing manifest instead. */
   def ingest(spark: SparkSession, glob: String, warehouseDir: String,
              layout: LayoutSpec = LayoutSpec.default): IngestResult = {
     val all = listSdfFiles(spark, glob)
+    if (all.isEmpty) {
+      val m = new Path(manifestDir(warehouseDir))
+      require(m.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(m),
+        s"ingest: no file matches $glob, and the warehouse $warehouseDir has no manifest yet")
+    }
     // lease held across pending-set computation + data write +
     // manifest append: a concurrent ingest/compact against the same
     // root fails loudly instead of double-appending manifest rows or
@@ -423,8 +362,8 @@ object Warehouse {
     * reference's own re-run semantics, utils.py:272) and a batch
     * ingest interleaved with streaming cannot double-load. The file
     * source schedules whole files per micro-batch, so the per-file
-    * manifest rows (span + count) are computed from complete record
-    * sets — the same single-pass stats as the batch path.
+    * manifest rows (span + count) are read from the footers of
+    * complete partitions, as on the batch path.
     *
     * A file the micro-batches cannot SEE still needs its manifest
     * row (ADVICE r19): the batch list is derived from the record
@@ -481,55 +420,60 @@ object Warehouse {
 
   private def ingestFiles(spark: SparkSession, todo: Seq[String], warehouseDir: String,
                           layout: LayoutSpec): IngestResult =
-    // One distributed read over exactly the pending files. Keeping
-    // src_file through extraction lets both the manifest stats and
-    // the append happen in a single pass over the data.
+    // One distributed read over exactly the pending files.
     ingestFrame(spark, Sdf.read(spark, todo), todo, warehouseDir, layout)
 
   /** Core of one ingest transaction over an already-read record
     * frame (sdf, src_file, cid rows covering exactly `todo`) —
     * shared by the batch path (which reads the pending files
     * itself) and the streaming path (whose micro-batch already
-    * holds the records). Caller holds the writer lease. */
+    * holds the records). Caller holds the writer lease.
+    *
+    * The frame is written once, and that write is the only data job:
+    * each file's manifest row and the loaded row count come from the
+    * parquet footers of the file's `src_filename=` directory
+    * ([[graft.Tables.footers]]), which hold its row count and its pk
+    * min/max. A file with no directory wrote no row (n_compounds 0, a
+    * null span); a directory whose footers lack pk statistics fails
+    * the ingest before its manifest row is written. */
   private def ingestFrame(spark: SparkSession, read: DataFrame, todo: Seq[String],
                           warehouseDir: String, layout: LayoutSpec): IngestResult = {
-    val extracted = Sdf.filterNotNull(
-      read.select(Seq(col("src_file")) ++
-        layout.columns.map(c => Sdf.extractColumn(col("sdf"), c)): _*),
-      layout)
-    extracted.cache()
-    try {
-      val pk = layout.columns.find(_.primaryKey).map(_.name).getOrElse(layout.columns.head.name)
-      // Compounds are PARTITIONED BY SOURCE FILENAME and written with
-      // dynamic partition overwrite: the manifest append (below)
-      // happens after the data write, so a crash between the two
-      // leaves the file un-manifested — and the re-run then
-      // OVERWRITES that file's partition instead of duplicating its
-      // rows. Per-file reprocessing also gets partition pruning.
-      extracted
-        .withColumn("src_filename", element_at(split(col("src_file"), "/"), -1))
-        .drop("src_file")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("src_filename")
-        .parquet(compoundsDir(warehouseDir))
-      // Every PROCESSED file gets a manifest row — even one whose
-      // rows were all NOT_NULL-filtered (n_compounds = 0). Otherwise
-      // such a file would be re-read on every ingest, forever.
-      import spark.implicits._
-      val processed = todo.map(basename).toDF("filename")
-      val stats = extracted
-        .groupBy(element_at(split(col("src_file"), "/"), -1).as("filename"))
-        .agg(min(col(pk)).as("lowest_cid"), max(col(pk)).as("highest_cid"),
-          count(lit(1)).as("n_compounds"))
-      processed.join(stats, Seq("filename"), "left")
-        .na.fill(0L, Seq("n_compounds"))
-        .withColumn("date_added", date_format(current_date(), "yyyy-MM-dd"))
-        .select("filename", "lowest_cid", "highest_cid", "date_added", "n_compounds")
-        .write.mode("append").parquet(manifestDir(warehouseDir))
-      val rows = extracted.count()
-      IngestResult(todo.map(basename), rows)
-    } finally extracted.unpersist()
+    val pk = layout.columns.find(_.primaryKey).getOrElse(layout.columns.head)
+    // Compounds are PARTITIONED BY SOURCE FILENAME and written with
+    // dynamic partition overwrite: the manifest append (below)
+    // happens after the data write, so a crash between the two
+    // leaves the file un-manifested — and the re-run then
+    // OVERWRITES that file's partition instead of duplicating its
+    // rows. Per-file reprocessing also gets partition pruning.
+    Sdf.filterNotNull(
+        read.select(Seq(col("src_file")) ++
+          layout.columns.map(c => Sdf.extractColumn(col("sdf"), c)): _*),
+        layout)
+      .withColumn("src_filename", element_at(split(col("src_file"), "/"), -1))
+      .drop("src_file")
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("src_filename")
+      .parquet(compoundsDir(warehouseDir))
+    // Every PROCESSED file gets a manifest row — even one whose
+    // rows were all NOT_NULL-filtered (n_compounds = 0). Otherwise
+    // such a file would be re-read on every ingest, forever.
+    val dataDir = new Path(compoundsDir(warehouseDir))
+    val rows = todo.map(basename).map { f =>
+      val written = try graft.Tables.footers(spark, partitionDir(dataDir, f).toString)
+        catch { case _: java.io.FileNotFoundException => Nil }
+      val (lo, hi, _) = graft.Tables.columnStats(written, pk.name)
+      Row(f, lo.orNull, hi.orNull, written.map(_.rows).sum)
+    }
+    val schema = StructType(Seq(StructField("filename", StringType),
+      StructField("lowest_cid", pk.sparkType), StructField("highest_cid", pk.sparkType),
+      StructField("n_compounds", LongType, nullable = false)))
+    spark.createDataFrame(rows.asJava, schema)
+      .withColumn("date_added", date_format(current_date(), "yyyy-MM-dd"))
+      .select("filename", "lowest_cid", "highest_cid", "date_added", "n_compounds")
+      .coalesce(1)
+      .write.mode("append").parquet(manifestDir(warehouseDir))
+    IngestResult(todo.map(basename), rows.map(_.getLong(3)).sum)
   }
 
   /** The live compounds table. src_filename is pinned to string at
@@ -583,7 +527,13 @@ object Warehouse {
     * Sizing is driven by a driver-side file listing (a metadata op,
     * O(#files)): partitions get ceil(bytes/target) output files via
     * a salted repartition, so a hot partition still splits while
-    * small ones collapse to one file. Returns the new file count. */
+    * small ones collapse to one file. Before the swap, the rewrite's
+    * parquet footers must count the source's rows in every partition
+    * (read on the driver, [[graft.Tables.footers]]; the source's are
+    * mostly memo hits from the ingests that wrote them): a rewrite that
+    * lost a row or moved one across partitions aborts with both
+    * directories intact. The write is the only Spark work. Returns the
+    * new file count. */
   def compact(spark: SparkSession, warehouseDir: String,
               targetFileBytes: Long = 128L * 1024 * 1024): Long =
     // same lease as ingest: the swap and the crash-recovery renames
@@ -642,17 +592,10 @@ object Warehouse {
     }
     if (fs.exists(tmp)) fs.delete(tmp, true)
     if (!fs.exists(dir)) return 0L
-    // bytes per partition directory (src_filename=<escaped value>) —
-    // names must be UNESCAPED before matching against column VALUES
-    // (Spark percent-escapes special chars in partition paths; a raw
-    // compare would orphan those partitions' rows)
-    val partSizes = fs.listStatus(dir).filter(_.isDirectory).map { st =>
-      val name = st.getPath.getName
-      val bytes = fs.listStatus(st.getPath).filter(_.isFile).map(_.getLen).sum
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName(name.substring(name.indexOf('=') + 1)) -> bytes
-    }.toSeq
-    if (partSizes.isEmpty) return 0L
+    val source = partitions(fs, dir)
+    if (source.isEmpty) return 0L
+    val partSizes = source.map { case (value, _, files) => value -> files.filter(_.isFile).map(_.getLen).sum }
+    val rowsBefore = partitionRows(spark, source)
     val nOut = partSizes
       .map { case (p, b) => (p, math.max(1L, (b + targetFileBytes - 1) / targetFileBytes)) }
     val targets = nOut.toDF("src_filename", "n_out")
@@ -675,10 +618,15 @@ object Warehouse {
       .drop("__salt", "n_out")
       .write.mode("overwrite").partitionBy("src_filename").parquet(tmp.toString)
     // row-preservation gate BEFORE the destructive swap: a rewrite
-    // that lost rows (a future join/escape bug) must abort with both
-    // directories intact, never replace the table
-    val (nOld, nNew) = (data.count(), spark.read.parquet(tmp.toString).count())
-    require(nOld == nNew, s"compact: rewrite has $nNew rows, source has $nOld — aborting, no swap")
+    // that lost rows, or moved one to another partition (a future
+    // join/escape bug), must abort with both directories intact, never
+    // replace the table. The footers' row counts answer it with no job.
+    val rowsAfter = partitionRows(spark, partitions(fs, tmp))
+    val differ = (rowsBefore.keySet ++ rowsAfter.keySet).filter(p => rowsBefore.get(p) != rowsAfter.get(p))
+    require(differ.isEmpty, s"compact: rewrite has ${rowsAfter.values.sum} rows, source has " +
+      s"${rowsBefore.values.sum}; ${differ.size} partitions differ (${differ.min}: " +
+      s"${rowsAfter.getOrElse(differ.min, 0L)} rows, source ${rowsBefore.getOrElse(differ.min, 0L)})" +
+      " — aborting, no swap")
     require(fs.rename(dir, old), s"compact: could not stage $dir aside")
     require(fs.rename(tmp, dir), s"compact: could not swap in $tmp")
     fs.delete(old, true)
@@ -686,6 +634,27 @@ object Warehouse {
       .map(p => fs.listStatus(p.getPath).count(s => s.isFile && s.getPath.getName.endsWith(".parquet")))
       .sum
   }
+
+  /** The partition directories (src_filename=<escaped value>) of the
+    * table at `root`: each one's value, path and listing. Values are
+    * UNESCAPED, as they must be before matching column VALUES (Spark
+    * percent-escapes special chars in partition paths; a raw compare
+    * would orphan those partitions' rows). */
+  private def partitions(fs: FileSystem, root: Path): Seq[(String, Path, Seq[FileStatus])] =
+    fs.listStatus(root).toSeq.filter(s => s.isDirectory && !graft.Tables.hidden(s.getPath.getName))
+      .map { st =>
+        val name = st.getPath.getName
+        (org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(
+          name.substring(name.indexOf('=') + 1)), st.getPath, fs.listStatus(st.getPath).toSeq)
+      }
+
+  /** Rows per partition value, from the parquet footers of each
+    * partition's listing; partitions with no row are left out. */
+  private def partitionRows(spark: SparkSession,
+                            parts: Seq[(String, Path, Seq[FileStatus])]): Map[String, Long] =
+    parts.map { case (value, path, files) =>
+      value -> graft.Tables.footers(spark, path.toString, files).map(_.rows).sum
+    }.filter(_._2 > 0).toMap
 
   final case class RetractResult(partitionsRewritten: Seq[String],
                                  partitionsDropped: Seq[String],

@@ -159,15 +159,17 @@ object ZOrder {
   val BoxDateLo = "1997-01-01"
   val BoxDateHi = "1997-06-30"
 
-  /** Scratch dir for the published layout: keyed on PID as well as
-    * the corpus dir, so two concurrent harness JVMs on the same
-    * corpus never race mode("overwrite") against each other's
-    * read-back (same hazard the SdfQueries StagePath comment
-    * documents). Stable within a JVM so repeated invocations reuse
-    * one path instead of leaking a dir per call. */
+  /** Scratch dir for the published layout, under the process's stage
+    * dir ([[graft.Staged.at]]) with the rest of its staged state, and
+    * swept with it (SdfQueries' stale-stage sweep): keyed
+    * on PID as well as the corpus dir, so two concurrent harness JVMs
+    * on the same corpus (under a shared pinned stage dir) never race
+    * mode("overwrite") against each other's read-back (same hazard the
+    * SdfQueries StagePath comment documents). Stable within a JVM so
+    * repeated invocations reuse one path instead of leaking a dir per
+    * call. */
   private def zDir(dir: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_zorder_" +
-      s"${ProcessHandle.current().pid()}_${Integer.toHexString(dir.hashCode)}"
+    graft.Staged.at(s"graft_zorder_${ProcessHandle.current().pid()}_${Integer.toHexString(dir.hashCode)}")
 
   /** Publish orders z-ordered on (o_totalprice, o_orderdate) and run
     * the box aggregation over the PUBLISHED table. The values cannot

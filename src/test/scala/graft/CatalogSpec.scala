@@ -7,13 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * the SAME relations the Scala API returns — a user who switches
   * from the reference's "query the local database" UX to
   * `spark.sql` over these views gets the API's rows and plans. */
-class CatalogSpec extends AnyFunSuite {
+class CatalogSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   val dir = "/root/testdata/sf0.001"
   val sdfDir = sources.SdfQueries.TestSdfDir
 
   test("catalog views: SQL over warehouse views equals the API, base tables registered") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_cat_wh").toString
+    val wh = tempDir("graft_cat_wh").toString
     sinks.Warehouse.ingest(spark, s"$sdfDir/*.sdf", wh)
     val views = Catalog.registerAll(spark, dir, Some(wh))
     assert(views.contains(Catalog.CompoundsView) && views.contains(Catalog.ManifestView))
@@ -39,7 +39,7 @@ class CatalogSpec extends AnyFunSuite {
 
     // only tables present under sfDir register (sf100-style partial
     // corpora must not fail registration)
-    val tmpSf = java.nio.file.Files.createTempDirectory("graft_cat_sf").toString
+    val tmpSf = tempDir("graft_cat_sf").toString
     Tables.documents(spark, dir).limit(5).write.mode("overwrite")
       .parquet(s"$tmpSf/documents.parquet")
     val partial = Catalog.registerAll(spark, tmpSf)

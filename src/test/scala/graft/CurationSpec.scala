@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
-class CurationSpec extends AnyFunSuite {
+class CurationSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   val dir = "/root/testdata/sf0.001"
   import operators.Curation
@@ -280,7 +280,7 @@ class CurationSpec extends AnyFunSuite {
         staged(streaming.Streams.StreamDocPairs.path)
       },
       "dedupClusters" -> rows(Curation.dedupClusters(spark, d)))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_rewrite")
+    val tmp = tempDir("graft_rewrite")
     val corpus = tmp.resolve("corpus")
     val docs = corpus.resolve("documents.parquet")
     java.nio.file.Files.createDirectories(corpus)
@@ -375,7 +375,7 @@ class CurationSpec extends AnyFunSuite {
     val docs = (0 until 16).map(i => (i.toLong, s"a $i", "aa")) ++
       (16 until 20).map(i => (i.toLong, s"b $i", "bb")) ++
       Seq((20L, "c 20", "cc"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mix").toString
+    val tmp = tempDir("graft_mix").toString
     docs.toDF("doc_id", "text", "lang")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val out = Curation.sampleMixture(spark, tmp).collect()
@@ -410,7 +410,7 @@ class CurationSpec extends AnyFunSuite {
     val docs = (0 until 1000).map(i => (i.toLong, s"a $i", "aa")) ++
       (1000 until 1500).map(i => (i.toLong, s"b $i", "bb")) ++
       (1500 until 1600).map(i => (i.toLong, s"c $i", "cc"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mix_bf").toString
+    val tmp = tempDir("graft_mix_bf").toString
     docs.toDF("doc_id", "text", "lang")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val out = Curation.sampleMixture(spark, tmp).collect()
@@ -458,7 +458,7 @@ class CurationSpec extends AnyFunSuite {
     // constructed corpus: fresh slice floods one term — it must rank first
     val docs = ((0L to 8L).map(i => (i, "alpha beta gamma")) :+
       (10000L, "zzzflood zzzflood zzzflood zzzflood alpha")).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_drift").toString
+    val tmp = tempDir("graft_drift").toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val out = operators.Curation.corpusDrift(spark, tmp).collect()
     assert(out.head.getString(0) == "zzzflood",
@@ -483,7 +483,7 @@ class CurationSpec extends AnyFunSuite {
       (2L, "beta common"),
       (3L, "gamma common common")).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_tfidf").toString
+    val tmp = tempDir("graft_tfidf").toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val top = Curation.tfidfTopTerms(spark, tmp).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getLong(3)))
@@ -515,7 +515,7 @@ class CurationSpec extends AnyFunSuite {
       10L -> "an uncontaminated benchmark question about other topics"))
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_decon").toString
+    val tmp = tempDir("graft_decon").toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val out = Curation.textDecontaminate(spark, tmp).collect()
     assert(out.map(_.getLong(0)).toSeq == Seq(2L), s"flagged: ${out.mkString(", ")}")
@@ -569,7 +569,7 @@ class CurationSpec extends AnyFunSuite {
     val docs = Seq((0L, "solo words here")).toDF("doc_id", "text")
       .withColumn("n_chars", length(col("text")))
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
-    val tmp = java.nio.file.Files.createTempDirectory("drift0").toString
+    val tmp = tempDir("drift0").toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val out = operators.Curation.corpusDrift(spark, tmp).collect()
     assert(out.nonEmpty)

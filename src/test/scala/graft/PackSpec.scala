@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class PackSpec extends AnyFunSuite {
+class PackSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   val dir = "/root/testdata/sf0.001"
   import operators.Pack
@@ -47,7 +47,7 @@ class PackSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val tmp = java.nio.file.Files.createTempDirectory("packspec").toString
+    val tmp = tempDir("packspec").toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val out = Pack.packSequences(spark, tmp).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))

@@ -8,7 +8,7 @@ object SparkTestSession {
   lazy val spark: SparkSession = GraftSession.local(4)
 }
 
-class RelationalSpec extends AnyFunSuite {
+class RelationalSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   val dir = "/root/testdata/sf0.001"
 
@@ -135,7 +135,7 @@ class RelationalSpec extends AnyFunSuite {
     // (5.000000000000114). The old abs()<=eps predicate dropped it.
     val a = 1023.13; val b = 1028.13
     assert(b - a > operators.Relational.BandEps) // the trap is real
-    val tmpDir = java.nio.file.Files.createTempDirectory("graft_band")
+    val tmpDir = tempDir("graft_band")
     try {
       val tmp = tmpDir.toString
       spark.createDataFrame(Seq((1L, a), (2L, b), (3L, 500.0)))
@@ -188,7 +188,7 @@ class RelationalSpec extends AnyFunSuite {
     // buffer the whole corpus in one task. The max gate must route
     // to the join form; with the ceiling lifted, the kernel must
     // still equal the join form on the same skewed data.
-    val tmpDir = java.nio.file.Files.createTempDirectory("graft_band_skew")
+    val tmpDir = tempDir("graft_band_skew")
     try {
       val tmp = tmpDir.toString
       val hot = (1L to 900L).map(k => (k, 100.0 + (k % 7) * 0.5))

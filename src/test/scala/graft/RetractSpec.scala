@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Retraction correctness: the repaired persisted state tables must
@@ -11,21 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * graph case the incremental merge path cannot (component SPLIT),
   * and split sides must stay sticky (delete-only) without ever
   * creating a cross-side near-dup pair. */
-class RetractSpec extends AnyFunSuite with BeforeAndAfterAll {
+class RetractSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
 
-  @volatile private var fixtureTmp: Option[String] = None
-  override def afterAll(): Unit = {
-    import scala.jdk.CollectionConverters._
-    fixtureTmp.foreach { tmp =>
-      val root = java.nio.file.Paths.get(tmp)
-      if (java.nio.file.Files.exists(root))
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-    super.afterAll()
-  }
   val dir = "/root/testdata/sf0.001"
   import operators.{Curation, Dedup, Pack, Retract, TextOps}
 
@@ -79,8 +66,7 @@ class RetractSpec extends AnyFunSuite with BeforeAndAfterAll {
     val maxAll = docs.agg(max(col("doc_id"))).head.getLong(0)
     assert(maxRetracted != maxAll,
       "fixture invalid: the max doc_id is in the takedown set, the reduced corpus would shift the split")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_retract").toString
-    fixtureTmp = Some(tmp)
+    val tmp = tempDir("graft_retract").toString
     docs.filter(!Retract.takedownPred)
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     (repaired, cms, tmp)

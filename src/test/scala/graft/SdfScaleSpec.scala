@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * read as MANY partitions, and `$$$$` delimiters land arbitrarily
   * relative to split boundaries. Every record must be parsed exactly
   * once regardless of where the splits fall. */
-class SdfScaleSpec extends AnyFunSuite {
+class SdfScaleSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
 
   private val NumMols = 2000
@@ -15,7 +15,7 @@ class SdfScaleSpec extends AnyFunSuite {
   /** ~3 MB synthetic SDF: records of varying size so boundaries hit
     * headers, data blocks, and terminators. */
   private lazy val bigSdf: String = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sdf_scale")
+    val tmp = tempDir("graft_sdf_scale")
     val f = tmp.resolve("big.sdf")
     val sb = new StringBuilder
     for (cid <- 1 to NumMols) {
@@ -71,7 +71,7 @@ class SdfScaleSpec extends AnyFunSuite {
     // semantics, idempotent re-ingest, and compaction preserving
     // both rows and lookup results
     import graft.sinks.Warehouse
-    val root = java.nio.file.Files.createTempDirectory("sdf_lifecycle").toString
+    val root = tempDir("sdf_lifecycle").toString
     val glob = SdfScaleBench.generate(root, nFiles = 4, molsPerFile = 1500)
     val wh = s"$root/wh"
     val res = Warehouse.ingest(spark, glob, wh)

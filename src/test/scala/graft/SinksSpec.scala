@@ -4,12 +4,12 @@ import graft.sinks.{JdbcSink, Warehouse}
 import graft.sources.{ColumnSpec, LayoutSpec, Sdf}
 import org.scalatest.funsuite.AnyFunSuite
 
-class SinksSpec extends AnyFunSuite {
+class SinksSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   val sdfDir = sources.SdfQueries.TestSdfDir
 
   test("warehouse ingest is incremental and idempotent") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh_spec").toString
+    val wh = tempDir("graft_wh_spec").toString
 
     val first = Warehouse.ingest(spark, s"$sdfDir/cmps_00_02.sdf", wh)
     assert(first.filesLoaded == Seq("cmps_00_02.sdf") && first.rowsLoaded == 3)
@@ -35,9 +35,9 @@ class SinksSpec extends AnyFunSuite {
 
   test("streaming SDF ingest == batch ingest; fresh-checkpoint re-run and mixed batch/stream are manifest no-ops") {
     import org.apache.spark.sql.functions.col
-    def ck() = java.nio.file.Files.createTempDirectory("graft_stream_ck").toString
-    val whB = java.nio.file.Files.createTempDirectory("graft_wh_b").toString
-    val whS = java.nio.file.Files.createTempDirectory("graft_wh_s").toString
+    def ck() = tempDir("graft_stream_ck").toString
+    val whB = tempDir("graft_wh_b").toString
+    val whS = tempDir("graft_wh_s").toString
     Warehouse.ingest(spark, s"$sdfDir/*.sdf", whB)
     val loaded = Warehouse.ingestStream(spark, s"$sdfDir/*.sdf", whS, ck())
     assert(loaded.sorted == Seq("cmps_00_02.sdf", "cmps_03_05.sdf", "cmps_06_07.sdf"))
@@ -54,7 +54,7 @@ class SinksSpec extends AnyFunSuite {
     assert(rows(whS) == rows(whB))
     // mixed lifecycle: batch-ingest one file, stream the full glob —
     // the stream must load exactly the two files the manifest lacks
-    val whM = java.nio.file.Files.createTempDirectory("graft_wh_m").toString
+    val whM = tempDir("graft_wh_m").toString
     Warehouse.ingest(spark, s"$sdfDir/cmps_00_02.sdf", whM)
     val mixed = Warehouse.ingestStream(spark, s"$sdfDir/*.sdf", whM, ck())
     assert(mixed.sorted == Seq("cmps_03_05.sdf", "cmps_06_07.sdf"))
@@ -69,14 +69,14 @@ class SinksSpec extends AnyFunSuite {
     // n_compounds = 0 manifest row and every fresh-checkpoint run
     // would re-read it, breaking stream == batch manifest equality.
     import org.apache.spark.sql.functions.col
-    def ck() = java.nio.file.Files.createTempDirectory("graft_stream_ck").toString
-    val src = java.nio.file.Files.createTempDirectory("graft_cidless_src")
+    def ck() = tempDir("graft_stream_ck").toString
+    val src = tempDir("graft_cidless_src")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sdfDir/cmps_00_02.sdf"), src.resolve("cmps_00_02.sdf"))
     java.nio.file.Files.write(src.resolve("no_cids.sdf"),
       "mol-without-cid\n\n\nM  END\n$$$$\n".getBytes("UTF-8"))
-    val whB = java.nio.file.Files.createTempDirectory("graft_wh_cidless_b").toString
-    val whS = java.nio.file.Files.createTempDirectory("graft_wh_cidless_s").toString
+    val whB = tempDir("graft_wh_cidless_b").toString
+    val whS = tempDir("graft_wh_cidless_s").toString
     Warehouse.ingest(spark, s"$src/*.sdf", whB)
     val loaded = Warehouse.ingestStream(spark, s"$src/*.sdf", whS, ck())
     assert(loaded.sorted == Seq("cmps_00_02.sdf", "no_cids.sdf"))
@@ -98,12 +98,12 @@ class SinksSpec extends AnyFunSuite {
     // 'src_filename=00123'. The explicit-schema stage read (and the
     // pinned compounds() read) must keep the lexical form.
     import org.apache.spark.sql.functions.col
-    val src = java.nio.file.Files.createTempDirectory("graft_digit_src")
+    val src = tempDir("graft_digit_src")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sdfDir/cmps_00_02.sdf"), src.resolve("00123"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sdfDir/cmps_03_05.sdf"), src.resolve("00999"))
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh_digit_spec").toString
+    val wh = tempDir("graft_wh_digit_spec").toString
     Warehouse.ingest(spark, s"$src/*", wh)
     val res = Warehouse.retract(spark, wh, Seq(31038L))
     assert(res.partitionsRewritten == Seq("00123") && res.rowsRetracted == 1L)
@@ -124,7 +124,7 @@ class SinksSpec extends AnyFunSuite {
 
   test("warehouse retract: partition-scoped repair, manifest spans valid, untouched bytes identical") {
     import org.apache.spark.sql.functions.col
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh_retract_spec").toString
+    val wh = tempDir("graft_wh_retract_spec").toString
     Warehouse.ingest(spark, s"$sdfDir/*.sdf", wh)
 
     def partFiles(f: String): Seq[(String, Long, Long)] = {
@@ -185,7 +185,7 @@ class SinksSpec extends AnyFunSuite {
 
   test("warehouse point lookup: manifest-span prune, partition + pk filters, miss is empty") {
     import org.apache.spark.sql.functions.col
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh_lookup_spec").toString
+    val wh = tempDir("graft_wh_lookup_spec").toString
     Warehouse.ingest(spark, s"$sdfDir/*.sdf", wh)
     // hit: exactly the reference row
     val hit = Warehouse.lookup(spark, wh, 34517L).collect()
@@ -211,7 +211,7 @@ class SinksSpec extends AnyFunSuite {
 
   test("secondary-index lookup: bucket pruning selects one bucket, hit and miss correct") {
     import org.apache.spark.sql.functions.col
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh_ik_spec").toString
+    val wh = tempDir("graft_wh_ik_spec").toString
     Warehouse.ingest(spark, s"$sdfDir/*.sdf", wh)
     Warehouse.publishBucketed(spark, wh, "graft_ik_spec_table", buckets = 4, key = "InChIKey")
     val key = "WATMWPCOBBVOBS-UHFFFAOYSA-N"
@@ -250,7 +250,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("reset drops compounds, manifest, AND published tables (reference reset=True)") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh_reset").toString
+    val wh = tempDir("graft_wh_reset").toString
     Warehouse.ingest(spark, s"$sdfDir/cmps_00_02.sdf", wh)
     assert(Warehouse.compounds(spark, wh).count() == 3)
     Warehouse.publishBucketed(spark, wh, "graft_reset_probe", buckets = 2)
@@ -263,7 +263,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("re-ingest after a crash between data write and manifest append does not duplicate rows") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh_crash").toString
+    val wh = tempDir("graft_wh_crash").toString
     Warehouse.ingest(spark, s"$sdfDir/cmps_00_02.sdf", wh)
     assert(Warehouse.compounds(spark, wh).count() == 3)
     // simulate the crash window: data landed, manifest append lost
@@ -281,7 +281,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("bucketed publish: key-equi self-join plans with no shuffle") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh_bucket").toString
+    val wh = tempDir("graft_wh_bucket").toString
     Warehouse.ingest(spark, s"$sdfDir/*.sdf", wh)
     Warehouse.publishBucketed(spark, wh, "graft_compounds_bucketed", buckets = 4)
     val a = spark.table("graft_compounds_bucketed")
@@ -305,7 +305,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("compaction collapses small files, preserves rows, and leaves ingest idempotent") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh_compact").toString
+    val wh = tempDir("graft_wh_compact").toString
     // three separate ingests → three partitions, each with its own file set
     Warehouse.ingest(spark, s"$sdfDir/cmps_00_02.sdf", wh)
     Warehouse.ingest(spark, s"$sdfDir/cmps_03_05.sdf", wh)
@@ -331,7 +331,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("compact recovers from a crash between the two swap renames") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh_midswap").toString
+    val wh = tempDir("graft_wh_midswap").toString
     Warehouse.ingest(spark, s"$sdfDir/*.sdf", wh)
     val before = Warehouse.compounds(spark, wh).collect().map(_.toString).sorted
     val conf = spark.sparkContext.hadoopConfiguration
@@ -352,7 +352,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("compact refuses the ambiguous state where an ingest re-created the table mid-crash") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh_ambiguous").toString
+    val wh = tempDir("graft_wh_ambiguous").toString
     Warehouse.ingest(spark, s"$sdfDir/*.sdf", wh)
     val conf = spark.sparkContext.hadoopConfiguration
     val dir = new org.apache.hadoop.fs.Path(Warehouse.compoundsDir(wh))
@@ -372,7 +372,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("compact discards a stale rewrite when the canonical table is intact") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh_staletmp").toString
+    val wh = tempDir("graft_wh_staletmp").toString
     Warehouse.ingest(spark, s"$sdfDir/*.sdf", wh)
     val before = Warehouse.compounds(spark, wh).collect().map(_.toString).sorted
     val conf = spark.sparkContext.hadoopConfiguration
@@ -389,7 +389,7 @@ class SinksSpec extends AnyFunSuite {
 
   test("a manifest past the collect bound switches to the distributed anti-join path") {
     import org.apache.spark.sql.functions.{col, concat, lit}
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh_bigmanifest").toString
+    val wh = tempDir("graft_wh_bigmanifest").toString
     // seed a manifest larger than ManifestCollectMax with unrelated
     // filenames — the skip set must NOT be collected to the driver,
     // and none of these rows may block the real files
@@ -448,8 +448,8 @@ class SinksSpec extends AnyFunSuite {
       .select(col("id"),
         (col("id") * 7919 % 10000).as("x"),   // co-prime stride: uniform, decorrelated
         (col("id") * 104729 % 10000).as("y"))
-    val zdir = java.nio.file.Files.createTempDirectory("graft_zspec_z").toString
-    val ldir = java.nio.file.Files.createTempDirectory("graft_zspec_l").toString
+    val zdir = tempDir("graft_zspec_z").toString
+    val ldir = tempDir("graft_zspec_l").toString
     ZOrder.publishZOrdered(df, "x", "y", zdir, files = 64)
     df.repartitionByRange(64, col("x")).sortWithinPartitions(col("x"))
       .write.mode("overwrite").parquet(ldir)
@@ -501,7 +501,7 @@ class SinksSpec extends AnyFunSuite {
         (col("id") * 104729 % 10000).as("y"))
     val base = df.filter(col("id") < (n * 9 / 10))
     val slice = df.filter(col("id") >= (n * 9 / 10))
-    val dir = java.nio.file.Files.createTempDirectory("graft_zspec_app").toString
+    val dir = tempDir("graft_zspec_app").toString
     try {
       ZOrder.publishZOrdered(base, "x", "y", dir, files = 58)
       ZOrder.appendZOrdered(slice, "x", "y", dir, files = 6)
@@ -581,5 +581,124 @@ class SinksSpec extends AnyFunSuite {
       .collect()
     assert(got.map(_.toString).toSeq == want.map(_.toString).toSeq,
       "z-ordered read-back disagrees with querying the source directly")
+  }
+
+  // ---- footer bookkeeping, on generated inputs ----
+
+  /** A generated source dir of `n` files of 40 records (cids 1..40n). */
+  private def generated(n: Int): java.nio.file.Path = {
+    val root = tempDir("graft_wh_gen")
+    SdfScaleBench.generate(root.toString, nFiles = n, molsPerFile = 40)
+    root.resolve("sdf")
+  }
+
+  private def manifestRows(wh: String): Seq[org.apache.spark.sql.Row] =
+    Warehouse.manifest(spark, wh).orderBy("filename").collect().toSeq
+
+  private def compoundRows(wh: String): Seq[String] =
+    Warehouse.compounds(spark, wh).orderBy("cid").collect().map(_.toString).toSeq
+
+  test("ingest's footer-read manifest rows and row count equal the aggregate route's, in at most 2 jobs") {
+    import java.nio.file.Files
+    val src = generated(3)
+    // every record loses its NOT_NULL InChI: n_compounds 0, a null span
+    Files.writeString(src.resolve("all_dropped.sdf"), Files.readString(src.resolve("Compound_00000.sdf"))
+      .replaceAll("> <PUBCHEM_IUPAC_INCHI>\n[^\n]*\n\n", ""))
+    // a name Spark escapes in the partition path, and an all-digit name
+    Files.move(src.resolve("Compound_00001.sdf"), src.resolve("cmp=1.sdf"))
+    Files.move(src.resolve("Compound_00002.sdf"), src.resolve("00123"))
+    val wh = tempDir("graft_wh_footer").toString
+    val todo = Warehouse.listSdfFiles(spark, s"$src/*")
+    val (want, wantRows) = WarehouseReference.aggregateManifest(spark, Sdf.read(spark, todo), todo)
+    assert(want.length == 4 && wantRows == 120L)
+    val (r, jobs) = LookupSpec.jobsOf(spark)(Warehouse.ingest(spark, s"$src/*", wh))
+    assert(jobs <= 2, s"an ingest of ${todo.length} files ran $jobs jobs")
+    assert(r.rowsLoaded == wantRows)
+    assert(r.filesLoaded.sorted == Seq("00123", "Compound_00000.sdf", "all_dropped.sdf", "cmp=1.sdf"))
+    assert(manifestRows(wh) == want)
+    assert(new java.io.File(Warehouse.manifestDir(wh)).listFiles.count(_.getName.endsWith(".parquet")) == 1,
+      "the manifest append is one single-part write")
+    val dropped = want.find(_.getString(0) == "all_dropped.sdf").get
+    assert(dropped.isNullAt(1) && dropped.isNullAt(2) && dropped.getLong(4) == 0L, dropped)
+    assert(new java.io.File(s"${Warehouse.compoundsDir(wh)}/src_filename=cmp%3D1.sdf").isDirectory)
+    // the no-op re-ingest and the manifest read-back run no job, and
+    // the read-back has the scan's schema
+    val (again, againJobs) = LookupSpec.jobsOf(spark)(Warehouse.ingest(spark, s"$src/*", wh))
+    assert(again == Warehouse.IngestResult(Nil, 0L) && againJobs == 0, s"$againJobs jobs")
+    val (m, mJobs) = LookupSpec.jobsOf(spark)(Warehouse.manifest(spark, wh).collect())
+    assert(mJobs == 0 && m.toSeq.sortBy(_.getString(0)) == want, s"$mJobs jobs")
+    assert(Warehouse.manifest(spark, wh).schema ==
+      Tables.parquetCached(spark, Warehouse.manifestDir(wh)).schema)
+    assert(Warehouse.lookup(spark, wh, 50L).collect().map(_.getAs[String]("src_filename")).toSeq == Seq("cmp=1.sdf"))
+    assert(Warehouse.lookup(spark, wh, 100L).collect().map(_.getAs[String]("src_filename")).toSeq == Seq("00123"))
+  }
+
+  test("ingestStream's footer-read manifest rows equal the aggregate route's") {
+    val src = generated(3)
+    val wh = tempDir("graft_wh_footer_stream").toString
+    val loaded = Warehouse.ingestStream(spark, s"$src/*.sdf", wh, tempDir("graft_stream_ck").toString)
+    val todo = Warehouse.listSdfFiles(spark, s"$src/*.sdf")
+    val (want, wantRows) = WarehouseReference.aggregateManifest(spark, Sdf.read(spark, todo), todo)
+    assert(loaded.sorted == Seq("Compound_00000.sdf", "Compound_00001.sdf", "Compound_00002.sdf"))
+    assert(manifestRows(wh) == want && Warehouse.compounds(spark, wh).count() == wantRows)
+  }
+
+  test("a re-run after a crash between the data write and the manifest append overwrites the partition") {
+    import org.apache.spark.sql.functions.col
+    val src = generated(2)
+    val wh = tempDir("graft_wh_footer_crash").toString
+    Warehouse.ingest(spark, s"$src/*.sdf", wh)
+    val (rows, manifest) = (compoundRows(wh), manifestRows(wh))
+    // the crash window for Compound_00001.sdf: its data landed, its
+    // manifest row did not
+    Warehouse.manifest(spark, wh).filter(col("filename") === "Compound_00000.sdf")
+      .write.mode("overwrite").parquet(Warehouse.manifestDir(wh))
+    val again = Warehouse.ingest(spark, s"$src/*.sdf", wh)
+    assert(again == Warehouse.IngestResult(Seq("Compound_00001.sdf"), 40L))
+    assert(compoundRows(wh) == rows, "rows duplicated after crash recovery")
+    assert(manifestRows(wh) == manifest)
+  }
+
+  test("compact keeps every row in its partition, in at most 5 jobs") {
+    val src = generated(3)
+    val wh = tempDir("graft_wh_footer_compact").toString
+    (0 until 3).foreach(i => Warehouse.ingest(spark, f"$src/Compound_$i%05d.sdf", wh))
+    Warehouse.ingest(spark, s"$src/*.sdf", wh)
+    val rows = compoundRows(wh)
+    val (files, jobs) = LookupSpec.jobsOf(spark)(Warehouse.compact(spark, wh))
+    assert(jobs <= 5, s"compact ran $jobs jobs")
+    assert(files == 3L && compoundRows(wh) == rows)
+    assert(Warehouse.ingest(spark, s"$src/*.sdf", wh).filesLoaded.isEmpty)
+  }
+
+  test("past the manifest collect bound, ingest stays idempotent and the manifest stays a scan") {
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    val wh = tempDir("graft_wh_footer_big").toString
+    spark.range(Warehouse.ManifestCollectMax + 1L)
+      .select(concat(lit("fake_"), col("id"), lit(".sdf")).as("filename"),
+        col("id").as("lowest_cid"), col("id").as("highest_cid"),
+        lit("2026-01-01").as("date_added"), lit(1L).as("n_compounds"))
+      .write.mode("overwrite").parquet(Warehouse.manifestDir(wh))
+    val src = generated(2)
+    assert(Warehouse.ingest(spark, s"$src/*.sdf", wh) ==
+      Warehouse.IngestResult(Seq("Compound_00000.sdf", "Compound_00001.sdf"), 80L))
+    assert(Warehouse.ingest(spark, s"$src/*.sdf", wh) == Warehouse.IngestResult(Nil, 0L))
+    val m = Warehouse.manifest(spark, wh)
+    assert(!LookupSpec.isLocal(m) && m.count() == Warehouse.ManifestCollectMax + 3L)
+    assert(Warehouse.lookup(spark, wh, 60L).collect().map(_.getAs[Long]("cid")).toSeq == Seq(60L))
+  }
+
+  test("ingest over a glob that matches no file: loud on a fresh warehouse, a no-op on an existing one") {
+    val root = tempDir("graft_wh_nomatch").toString
+    val glob = s"$root/dump/*.sdf.gz"
+    val wh = s"$root/wh"
+    val e = intercept[IllegalArgumentException](Warehouse.ingest(spark, glob, wh))
+    assert(e.getMessage.contains(glob) && e.getMessage.contains(wh), e.getMessage)
+    assert(!new java.io.File(wh).exists(), "the failed ingest wrote a warehouse")
+    Warehouse.ingest(spark, s"${generated(1)}/*.sdf", wh)
+    val m = manifestRows(wh)
+    // an empty nightly dump against a built warehouse
+    assert(Warehouse.ingest(spark, glob, wh) == Warehouse.IngestResult(Nil, 0L))
+    assert(manifestRows(wh) == m)
   }
 }

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * yield the SAME TimestampType instants, and fail with one clear
   * contract error on anything else.
   */
-class TablesSpec extends AnyFunSuite {
+class TablesSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -57,7 +57,7 @@ class TablesSpec extends AnyFunSuite {
     // Write the two encodings to parquet and run them through the real
     // loader path. Spark can't WRITE TIMESTAMP(NANOS), so the nanos leg
     // writes the long column the nanosAsLong conf would deliver.
-    val tmp = java.nio.file.Files.createTempDirectory("tables-spec").toString
+    val tmp = tempDir("tables-spec").toString
     val rows = Seq((1L, us), (2L, us + 1500000L))
     rows.toDF("event_id", "u")
       .select(col("event_id"), (col("u") * 1000L).as("ts"))
@@ -95,14 +95,48 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("collectCached reads once per listing key, re-reads after a write; a vanished file has 1 row group") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_collect_cached").toString + "/t"
+    val dir = tempDir("graft_collect_cached").toString + "/t"
     Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(dir)
-    val first = Tables.collectCached(spark, dir, Seq("k"), 10).get
-    assert(first.map(_.getLong(0)).sorted == Seq(1L, 2L))
-    assert(Tables.collectCached(spark, dir, Seq("k"), 10).get eq first, "a memo hit must not re-read")
+    val first = Tables.collectCached(spark, dir, 10).get
+    assert(first.rows.map(_.getLong(0)).sorted == Seq(1L, 2L))
+    assert(Tables.collectCached(spark, dir, 10).get eq first, "a memo hit must not re-read")
     Seq((3L, "c")).toDF("k", "v").write.mode("append").parquet(dir)
-    assert(Tables.collectCached(spark, dir, Seq("k"), 10).get.map(_.getLong(0)).sorted == Seq(1L, 2L, 3L))
-    assert(Tables.collectCached(spark, dir, Seq("k"), 2).isEmpty, "a table past the bound is not held")
+    assert(Tables.collectCached(spark, dir, 10).get.rows.map(_.getLong(0)).sorted == Seq(1L, 2L, 3L))
+    assert(Tables.collectCached(spark, dir, 2).isEmpty, "a table past the bound is not held")
     assert(Tables.rowGroupCount(spark, s"$dir/no-such-file.parquet") == 1)
+  }
+
+  test("collectCached reads on the driver with the scan's schema and rows, and runs no job") {
+    val dir = tempDir("graft_collect_driver").toString + "/t"
+    Seq((1L, "a", 0.5), (2L, null, 1.5)).toDF("k", "v", "d").write.parquet(dir)
+    Seq((3L, "c", Double.NaN)).toDF("k", "v", "d").write.mode("append").parquet(dir)
+    val (snap, jobs) = LookupSpec.jobsOf(spark)(Tables.collectCached(spark, dir, 10).get)
+    assert(jobs == 0, s"$jobs jobs")
+    val scan = spark.read.parquet(dir)
+    assert(snap.schema == scan.schema, s"${snap.schema} != ${scan.schema}")
+    assert(snap.rows.map(_.toString).sorted == scan.collect().map(_.toString).toSeq.sorted)
+    // a column the driver reader does not decode keeps the scan route
+    val dated = tempDir("graft_collect_dated").toString + "/t"
+    Seq((1L, java.sql.Date.valueOf("2026-01-01"))).toDF("k", "day").write.parquet(dated)
+    assert(Tables.collectCached(spark, dated, 10).isEmpty)
+  }
+
+  test("footers hold each file's row count and column statistics, and follow a rewrite") {
+    val dir = tempDir("graft_footers").toString + "/t"
+    Seq((5L, "m", Some(1.0)), (9L, "b", None)).toDF("k", "s", "d").coalesce(1).write.parquet(dir)
+    Seq((2L, "z", Option.empty[Double])).toDF("k", "s", "d").coalesce(1).write.mode("append").parquet(dir)
+    val (files, jobs) = LookupSpec.jobsOf(spark)(Tables.footers(spark, dir))
+    assert(jobs == 0 && files.map(_.rows).sorted == Seq(1L, 2L))
+    assert(Tables.footers(spark, dir) eq files, "a memo hit must not re-read")
+    assert(Tables.columnStats(files, "k") == ((Some(2L), Some(9L), 0L)))
+    assert(Tables.columnStats(files, "s") == ((Some("b"), Some("z"), 0L)))
+    assert(Tables.columnStats(files, "d") == ((Some(1.0), Some(1.0), 2L)))
+    assert(Tables.columnStats(files.filter(_.rows == 1), "d") == ((None, None, 1L)), "an all-null column has no span")
+    assert(Tables.columnStats(Nil, "k") == ((None, None, 0L)))
+    val missing = intercept[IllegalStateException](Tables.columnStats(files, "nope"))
+    assert(missing.getMessage.contains("no parquet statistics for column nope"), missing.getMessage)
+    Seq((7L, "q", Some(3.0))).toDF("k", "s", "d").coalesce(1).write.mode("overwrite").parquet(dir)
+    assert(Tables.columnStats(Tables.footers(spark, dir), "k") == ((Some(7L), Some(7L), 0L)))
+    intercept[java.io.FileNotFoundException](Tables.footers(spark, s"$dir-gone"))
   }
 }

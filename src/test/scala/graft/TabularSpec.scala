@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The layout engine must behave identically whether fields arrive
   * as SDF tag blocks, csv columns, or json keys. */
-class TabularSpec extends AnyFunSuite {
+class TabularSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   val sdfDir = sources.SdfQueries.TestSdfDir
 
@@ -19,7 +19,7 @@ class TabularSpec extends AnyFunSuite {
   /** Round-trip the reference SDF records through csv and json and
     * re-extract — results must equal the direct SDF pipeline. */
   test("csv and json sources produce exactly the SDF pipeline result") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_tabular").toString
+    val tmp = tempDir("graft_tabular").toString
     // export raw tag values (csv/json field name = SD tag name)
     val raw = Sdf.read(spark, s"$sdfDir/*.sdf")
     val asTags = raw.select(

@@ -4,7 +4,7 @@ import graft.functions.Fnv1a64
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class TextOpsSpec extends AnyFunSuite {
+class TextOpsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   val dir = "/root/testdata/sf0.001"
 
@@ -85,7 +85,7 @@ class TextOpsSpec extends AnyFunSuite {
       "see https://example.org/a/b?q=1#frag and http://x.io twice",
       "no pii here, just text with an @ and 12-34 fragments").toDF("text")
       .withColumn("doc_id", org.apache.spark.sql.functions.monotonically_increasing_id())
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pii").toString
+    val tmp = tempDir("graft_pii").toString
     df.select("doc_id", "text").write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val out = operators.TextOps.textPii(spark, tmp).collect()
       .map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -102,7 +102,7 @@ class TextOpsSpec extends AnyFunSuite {
       (2L, "one two one three one two"),// 2x"one two", 3 singletons
       (3L, "solo")                      // no bigram -> no output row
     ).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_rep").toString
+    val tmp = tempDir("graft_rep").toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val out = operators.TextOps.textRepetition(spark, tmp).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3), r.getLong(4)))
@@ -121,7 +121,7 @@ class TextOpsSpec extends AnyFunSuite {
       (2L, "a"),     // sum_cf = 3,          avg 3.0           -> head
       (3L, "")       // no tokens -> no row
     ).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ulm").toString
+    val tmp = tempDir("graft_ulm").toString
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     // df: a=2 b=2 c=1; doc0 sum_df=2*2+1*2=6, doc1 2+1=3, doc2 2;
     // corpus: Σsum_df=11, total=6 -> corpus_avg_df=1.833333
